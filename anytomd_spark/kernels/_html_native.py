@@ -18,6 +18,7 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import threading
 
 _C_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_html_fast.c")
 
@@ -66,17 +67,24 @@ def _get_lib():
     return _lib
 
 
-# reusable scratch out-params: the worker calls this once per document
-# from a single thread, and constructing 7 ctypes objects + 8 byrefs per
-# call measured ~27 us each at bench volume
-_md = ctypes.c_char_p()
-_mdn = ctypes.c_size_t()
-_pl = ctypes.c_char_p()
-_pln = ctypes.c_size_t()
-_ti = ctypes.c_char_p()
-_tin = ctypes.c_size_t()
-_has_ti = ctypes.c_int()
-_ARGS = None
+# reusable scratch out-params, one set per thread: constructing 7
+# ctypes objects + 8 byrefs per call measured ~27 us each at bench
+# volume, and a set shared across threads would let a concurrent call
+# overwrite the result pointers between html_convert and the reads
+_tls = threading.local()
+
+
+def _out_params() -> tuple:
+    params = getattr(_tls, "params", None)
+    if params is None:
+        vals = (
+            ctypes.c_char_p(), ctypes.c_size_t(),
+            ctypes.c_char_p(), ctypes.c_size_t(),
+            ctypes.c_char_p(), ctypes.c_size_t(),
+            ctypes.c_int(),
+        )
+        params = _tls.params = (vals, tuple(ctypes.byref(v) for v in vals))
+    return params
 
 
 def convert_html_native(text: str) -> "dict | None":
@@ -95,19 +103,9 @@ def convert_html_native(text: str) -> "dict | None":
     lib = _get_lib()
     if lib is None:
         return None
-    global _ARGS
-    if _ARGS is None:
-        _ARGS = (
-            ctypes.byref(_md), ctypes.byref(_mdn),
-            ctypes.byref(_pl), ctypes.byref(_pln),
-            ctypes.byref(_ti), ctypes.byref(_tin),
-            ctypes.byref(_has_ti),
-        )
+    (md, mdn, pl, pln, ti, tin, has_ti), args = _out_params()
     data = text.encode("utf-8")
-    md, mdn, pl, pln, ti, tin, has_ti = (
-        _md, _mdn, _pl, _pln, _ti, _tin, _has_ti
-    )
-    rc = lib.html_convert(data, len(data), *_ARGS)
+    rc = lib.html_convert(data, len(data), *args)
     if rc != 0:
         return None  # 1 = oom, 2 = bail -> Python path
     try:

@@ -3,8 +3,9 @@
 Lifecycle (SURVEY.md §3.4):
 
     read transcripts -> anti-join completed lineage buckets (resume)
-      -> salted repartition by hash(conv_id) -> mapInPandas(convert_batch)
-      -> window-ordered output -> idempotent per-bucket overwrite
+      -> (optional) salted repartition -> mapInPandas(convert_batch)
+      -> bucket-keyed shuffle + window-ordered output
+      -> idempotent per-bucket overwrite, one file per bucket
       -> lineage rows (bytes in, chars out, fmt histogram, failures)
 
 Scale notes (designed for 10^12 turns / 1000 executors; validated on
@@ -20,6 +21,12 @@ local[32]):
   * Resume is bucket-granular: output is written partitioned by
     ``bucket = pmod(xxhash64(conv_id), n_buckets)`` with dynamic partition
     overwrite, so a re-run overwrites exactly the buckets it recomputes.
+  * The one post-kernel payload shuffle is keyed on ``bucket`` (a pure
+    function of conv_id, so the per-conversation window is unchanged):
+    its sort ``(bucket, conv_id, turn_idx)`` is the partitioned write's
+    required ordering, so each bucket is written by one task into one
+    file with no second sort. Post-kernel parallelism is therefore at
+    most ``min(n_buckets, spark.sql.shuffle.partitions)``.
 """
 
 from __future__ import annotations
@@ -36,16 +43,32 @@ from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
 CONVERTED_SCHEMA = f"{TRANSCRIPTS_SCHEMA}, {OUTPUT_SPARK_SCHEMA}"
 
 
-def build_session(
-    master: str | None = None,
-    app_name: str = "anytomd-spark",
+def driver_memory(meminfo: str = "/proc/meminfo") -> str | None:
+    """Driver heap for ``build_session``: half of ``MemAvailable`` in
+    whole GiB, between 1g and 16g; ``None`` (Spark's own default) when
+    available memory cannot be read. 16g is the ceiling because the
+    suite runs ~60 queries in one long-lived local JVM and an 8g heap
+    spent measurable wall time in GC late in the session; the other half
+    of memory is left to the Python workers, which hold the payload
+    batches."""
+    try:
+        with open(meminfo) as f:
+            kib = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemAvailable:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return None
+    half_gib = (kib >> 20) // 2
+    return f"{max(1, min(16, half_gib))}g"
+
+
+def session_conf(
     shuffle_partitions: int = 32,
     arrow_batch_rows: int = 4096,
     extra_conf: dict | None = None,
-) -> SparkSession:
-    builder = SparkSession.builder.appName(app_name)
-    if master:
-        builder = builder.master(master)
+) -> dict:
+    """The Spark settings ``build_session`` applies; ``extra_conf`` wins."""
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         "spark.sql.adaptive.enabled": "true",
@@ -58,20 +81,34 @@ def build_session(
         # payloads are fat strings: smaller splits -> >=2 tasks/core so
         # heterogeneous per-row conversion cost doesn't leave stragglers
         "spark.sql.files.maxPartitionBytes": "32m",
-        # 16g: the suite runs ~60 queries in one long-lived local JVM —
-        # the old 8g heap spent measurable wall time in GC once the
-        # session accumulated codegen classes + block-manager state
-        # (every query ran ~0.5 s slower late-session than isolated).
-        # Driver-side only; executors-on-cluster size independently.
-        "spark.driver.memory": "16g",
         # headless batch runs: the UI listener processes every task
         # event on the driver for a UI nobody opens here; opt back in
         # via extra_conf when debugging interactively (guide §7.1)
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
     }
+    # sized to the host (driver-side only; executors on a cluster size
+    # independently)
+    heap = driver_memory()
+    if heap is not None:
+        conf["spark.driver.memory"] = heap
     conf.update(extra_conf or {})
-    for k, v in conf.items():
+    return conf
+
+
+def build_session(
+    master: str | None = None,
+    app_name: str = "anytomd-spark",
+    shuffle_partitions: int = 32,
+    arrow_batch_rows: int = 4096,
+    extra_conf: dict | None = None,
+) -> SparkSession:
+    builder = SparkSession.builder.appName(app_name)
+    if master:
+        builder = builder.master(master)
+    for k, v in session_conf(
+        shuffle_partitions, arrow_batch_rows, extra_conf
+    ).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _ship_package(spark)
@@ -322,13 +359,14 @@ def ordered_output(
     driver-side scalar job on (conv_id, turn_idx) only — payloads never
     move. Pass ``adaptive=False`` to pin the two-level plan (tests,
     known-skewed inputs).
+
+    When ``converted`` carries a ``bucket`` column (see
+    :func:`bucketed`), the single-window path shuffles on ``bucket`` so
+    the ordering is also the partitioned write's clustering (see
+    :func:`_single_window`); ``turn_seq`` is the same either way.
     """
     if turns is None:
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        return (
-            converted.withColumn("turn_seq", F.row_number().over(w))
-            .sortWithinPartitions("conv_id", "turn_idx")
-        )
+        return _single_window(converted)
     bkt = F.floor(
         F.coalesce(F.col("turn_idx"), F.lit(0)) / F.lit(seq_bucket)
     ).cast("long")
@@ -345,11 +383,7 @@ def ordered_output(
             .collect()[0][0]
         )
         if biggest is None or biggest < seq_bucket:
-            w = Window.partitionBy("conv_id").orderBy("turn_idx")
-            return (
-                converted.withColumn("turn_seq", F.row_number().over(w))
-                .sortWithinPartitions("conv_id", "turn_idx")
-            )
+            return _single_window(converted)
     w_off = Window.partitionBy("conv_id").orderBy("_seq_bkt")
     offsets = counts.select(
         "conv_id", "_seq_bkt",
@@ -379,6 +413,28 @@ def ordered_output(
     )
 
 
+def _single_window(converted: DataFrame) -> DataFrame:
+    """One window over whole conversations. With a ``bucket`` column
+    (a pure function of conv_id, see :func:`bucketed`) the payload
+    shuffle is keyed on ``bucket`` and the window's sort
+    ``(bucket, conv_id, turn_idx)`` is the partitioned write's required
+    ordering: each bucket lands in one task, which writes one file and
+    needs no second sort. The window groups, hence ``turn_seq``, are the
+    same either way."""
+    if "bucket" not in converted.columns:
+        w = Window.partitionBy("conv_id").orderBy("turn_idx")
+        return (
+            converted.withColumn("turn_seq", F.row_number().over(w))
+            .sortWithinPartitions("conv_id", "turn_idx")
+        )
+    w = Window.partitionBy("bucket", "conv_id").orderBy("turn_idx")
+    return (
+        converted.repartition("bucket")
+        .withColumn("turn_seq", F.row_number().over(w))
+        .sortWithinPartitions("bucket", "conv_id", "turn_idx")
+    )
+
+
 # --------------------------------------------------------------------------
 # lineage sidecar + resumable run
 # --------------------------------------------------------------------------
@@ -398,24 +454,26 @@ def bucketed(df: DataFrame, n_buckets: int = 64) -> DataFrame:
 
 def compute_lineage(converted_with_bucket: DataFrame, run_id: str) -> DataFrame:
     """Per-bucket extraction metrics incl. a format histogram map
-    (SURVEY.md §2.5). Two partial-aggregable passes; no collect."""
-    base = converted_with_bucket.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_rows"),
+    (SURVEY.md §2.5). One partial-aggregable pass per (bucket, fmt),
+    rolled up per bucket; no join, no collect."""
+    per_fmt = converted_with_bucket.groupBy("bucket", "fmt").agg(
+        F.count(F.lit(1)).alias("n"),
         F.sum("bytes_in").alias("bytes_in"),
         F.sum("chars_out").alias("chars_out"),
         F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_failures"),
-        F.sum("n_warnings").cast("long").alias("n_warnings"),
-    )
-    hist = (
-        converted_with_bucket.groupBy("bucket", "fmt")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .groupBy("bucket")
-        .agg(F.map_from_entries(
-            F.collect_list(F.struct(F.coalesce("fmt", F.lit("unknown")), "n"))
-        ).alias("fmt_hist"))
+        F.sum("n_warnings").alias("n_warnings"),
     )
     return (
-        base.join(hist, "bucket", "left")
+        per_fmt.groupBy("bucket").agg(
+            F.sum("n").alias("n_rows"),
+            F.sum("bytes_in").alias("bytes_in"),
+            F.sum("chars_out").alias("chars_out"),
+            F.sum("n_failures").alias("n_failures"),
+            F.sum("n_warnings").cast("long").alias("n_warnings"),
+            F.map_from_entries(
+                F.collect_list(F.struct(F.coalesce("fmt", F.lit("unknown")), "n"))
+            ).alias("fmt_hist"),
+        )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("status", F.lit("done"))
         .withColumn("ts", F.lit(time.time()))
@@ -494,6 +552,16 @@ def run_pipeline(
     that dominate the bytes (at 100 TB output this is ~1-2% extra read,
     and it buys the durability property: lineage describes the rows
     actually committed, not the rows we believe we wrote).
+
+    The conversion+write job shuffles the payload ONCE, keyed on
+    ``bucket``; that shuffle's sort also satisfies the write, so every
+    written bucket is one file from one task (the lineage read scans
+    one file per bucket). The price is post-kernel parallelism of at
+    most ``min(n_buckets, spark.sql.shuffle.partitions)`` tasks; the
+    kernel itself runs before the shuffle at input-split parallelism.
+    Inputs with a conversation of at least ``seq_bucket`` turns take
+    ``ordered_output``'s two-level plan instead, which shuffles on
+    ``(conv_id, _seq_bkt)`` and sorts again for the write.
     """
     from pyspark.sql import Observation
 
@@ -529,11 +597,13 @@ def run_pipeline(
         strict=strict, max_input_bytes=max_input_bytes,
     )
     # bucket is a pure function of conv_id — recompute it post-kernel
-    # (mapInPandas declares a fixed output schema without it). The slim
-    # pre-kernel projection feeds the skew-safe turn_seq counts.
-    ordered = bucketed(
-        ordered_output(converted, turns=df.select("conv_id", "turn_idx")),
-        n_buckets,
+    # (it stays off the Arrow crossing) and BEFORE ordering, so the
+    # ordering shuffle is the write's clustering: one task and one file
+    # per bucket, no second sort. The slim pre-kernel projection feeds
+    # the skew-safe turn_seq counts.
+    ordered = ordered_output(
+        bucketed(converted, n_buckets),
+        turns=df.select("conv_id", "turn_idx"),
     )
 
     # run totals + the set of buckets actually written ride on the write

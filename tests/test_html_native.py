@@ -81,6 +81,33 @@ class TestNativeDifferential:
             ref = convert_html(data, fast=False)
             assert fast == ref
 
+    def test_concurrent_calls_get_their_own_results(self):
+        """The out-parameters are per thread: html_convert releases the
+        GIL, so two threads converting different documents at once must
+        each read back their own document's Markdown."""
+        import threading
+
+        from anytomd_spark.transcripts import build_html
+
+        docs = [build_html(random.Random(seed)) * 4 for seed in (1, 2)]
+        want = [convert_html_native(d) for d in docs]
+        assert None not in want and want[0] != want[1]
+        start = threading.Barrier(2)
+        bad = [0, 0]
+
+        def work(i):
+            start.wait()
+            for _ in range(1500):
+                if convert_html_native(docs[i]) != want[i]:
+                    bad[i] += 1
+
+        threads = [threading.Thread(target=work, args=(i,)) for i in (0, 1)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert bad == [0, 0]
+
     _SOUP = (
         "<p>", "</p>", "<div>", "</div>", "<span>", "</span>",
         "<strong>", "</strong>", "<em>", "</em>", "<li>", "</li>",

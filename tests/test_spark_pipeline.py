@@ -24,6 +24,7 @@ from anytomd_spark.pipeline import (  # noqa: E402
     run_pipeline,
 )
 from anytomd_spark.transcripts import (  # noqa: E402
+    TRANSCRIPTS_SCHEMA,
     fixture_transcripts,
     generate_transcripts,
 )
@@ -41,6 +42,32 @@ GOLDEN_NAMES = [
     "sample.txt", "sample.py", "sample.ipynb", "sample.docx",
     "sample.pptx", "sample.xlsx", "sample.xls", "sample_unicode.xls",
 ]
+
+
+def test_driver_memory_follows_available_memory(tmp_path, monkeypatch):
+    """The driver heap is half of MemAvailable in whole GiB, 1g..16g;
+    unreadable meminfo leaves Spark's default; extra_conf still wins."""
+    from anytomd_spark import pipeline
+
+    def meminfo(kib):
+        path = tmp_path / f"meminfo_{kib}"
+        path.write_text(
+            f"MemTotal:       {kib * 2} kB\nMemAvailable:   {kib} kB\n"
+        )
+        return str(path)
+
+    gib = 1 << 20
+    assert pipeline.driver_memory(meminfo(15 * gib)) == "7g"
+    assert pipeline.driver_memory(meminfo(64 * gib)) == "16g"
+    assert pipeline.driver_memory(meminfo(gib)) == "1g"
+    assert pipeline.driver_memory(str(tmp_path / "absent")) is None
+
+    monkeypatch.setattr(pipeline, "driver_memory", lambda: "7g")
+    assert pipeline.session_conf()["spark.driver.memory"] == "7g"
+    conf = pipeline.session_conf(extra_conf={"spark.driver.memory": "2g"})
+    assert conf["spark.driver.memory"] == "2g"
+    monkeypatch.setattr(pipeline, "driver_memory", lambda: None)
+    assert "spark.driver.memory" not in pipeline.session_conf()
 
 
 def test_fixture_conversation_golden_equality(spark):
@@ -254,13 +281,136 @@ def test_lineage_read_is_metric_columns_only(spark, tmp_path):
 
 
 def test_compute_lineage_histogram(spark):
-    df = spark.createDataFrame(fixture_transcripts())
+    """Per-bucket lineage equals a pandas groupby of the converted rows:
+    counts, sums and the format histogram, with LINEAGE_SCHEMA's column
+    order and types."""
+    from anytomd_spark.pipeline import LINEAGE_SCHEMA
+
+    # failing rows, one with no fmt at all (-> the "unknown" key)
+    bad = spark.createDataFrame(
+        [("bad-conv", 0, "user", "%PDF-1.7 x", "pdf", None),
+         ("bad-conv", 1, "user", None, None, None)],
+        schema=TRANSCRIPTS_SCHEMA,
+    )
+    df = generate_transcripts(spark, n_convs=40, seed=17, mega_every=0,
+                              partitions=2).unionByName(bad)
     converted = bucketed(convert_transcripts(df), n_buckets=4)
-    lin = compute_lineage(converted, "t").collect()
-    total = sum(r.n_rows for r in lin)
-    assert total == len(GOLDEN_NAMES)
-    hist_total = sum(sum(r.fmt_hist.values()) for r in lin if r.fmt_hist)
-    assert hist_total == len(GOLDEN_NAMES)
+    lin = compute_lineage(converted, "t")
+    # storage is added by run_pipeline
+    want = spark.createDataFrame([], LINEAGE_SCHEMA).drop("storage")
+    assert [(f.name, f.dataType.simpleString()) for f in lin.schema] \
+        == [(f.name, f.dataType.simpleString()) for f in want.schema]
+
+    pdf = converted.select(
+        "bucket", "fmt", "bytes_in", "chars_out", "error", "n_warnings"
+    ).toPandas()
+    pdf["failed"] = pdf["error"].notna().astype("int64")
+    sums = pdf.groupby("bucket").agg(
+        n_rows=("fmt", "size"), bytes_in=("bytes_in", "sum"),
+        chars_out=("chars_out", "sum"), n_failures=("failed", "sum"),
+        n_warnings=("n_warnings", "sum"),
+    )
+    hists = pdf.fillna({"fmt": "unknown"}).groupby(["bucket", "fmt"]).size()
+    got = {r.bucket: r for r in lin.collect()}
+    assert sorted(got) == sorted(sums.index)
+    for bucket, want in sums.iterrows():
+        row = got[bucket]
+        assert (row.n_rows, row.bytes_in, row.chars_out, row.n_failures,
+                row.n_warnings) == tuple(int(v) for v in want)
+        assert row.fmt_hist == {
+            fmt: int(n) for fmt, n in hists.loc[bucket].items()
+        }
+        assert (row.run_id, row.status) == ("t", "done")
+    assert sum(r.n_rows for r in got.values()) == df.count()
+    assert sum(r.n_failures for r in got.values()) >= 2
+    assert any("unknown" in r.fmt_hist for r in got.values())
+
+
+def _final_write_plan(spark, output_path: str) -> list[str]:
+    """Node lines of the final (post-AQE) plan of the latest partitioned
+    write into ``output_path``, read from the session's SQL status store
+    (kept with the UI disabled)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(execs.size())):
+        plan = execs.apply(i).physicalPlanDescription()
+        if "WriteFiles" in plan and f"{output_path}, false, [bucket" in plan:
+            final = plan.split("== Final Plan ==")[1].split("== Initial Plan")[0]
+            return [
+                ln.lstrip(" +-*").split(" (")[0]
+                for ln in final.splitlines() if ln.strip()
+            ]
+    raise AssertionError(f"no write into {output_path} in the status store")
+
+
+def test_run_pipeline_bucket_aligned_plan_matches_old_composition(
+    spark, tmp_path
+):
+    """run_pipeline keys its ordering shuffle on ``bucket``: the rows it
+    writes (turn_seq included) equal the old composition
+    ``bucketed(ordered_output(convert_transcripts(df), turns=...))``, each
+    bucket directory holds exactly one file, and the write's final plan
+    has one Exchange and no Sort between CollectMetrics and WriteFiles.
+    Covers a multi-file input, null conv_ids, a mega-conversation and a
+    resume run over partly done buckets. Partition coalescing is off so
+    every post-shuffle task is a real task: without bucket-aligned
+    shuffling each of them would write into every bucket."""
+    import glob
+
+    n_buckets = 8
+    gen = generate_transcripts(spark, n_convs=40, seed=23, mega_every=20,
+                               mega_size=300, partitions=2)
+    first = gen.select("conv_id").first().conv_id
+    nulls = gen.filter(F.col("conv_id") == first).withColumn(
+        "conv_id", F.lit(None).cast("string"))
+    inp = str(tmp_path / "in")
+    gen.unionByName(nulls).repartition(3).write.parquet(inp)
+    src = spark.read.parquet(inp)
+    assert len(glob.glob(os.path.join(inp, "*.parquet"))) == 3
+    megas = [r[0] for r in src.groupBy("conv_id").count().collect()
+             if r[1] >= 300]
+    assert megas and src.filter(F.col("conv_id").isNull()).count() > 1
+
+    key = lambda r: (r["conv_id"] or "", r["turn_idx"])  # noqa: E731
+    want = sorted(
+        (r.asDict() for r in bucketed(
+            ordered_output(convert_transcripts(src),
+                           turns=src.select("conv_id", "turn_idx")),
+            n_buckets,
+        ).collect()),
+        key=key,
+    )
+    all_buckets = {r["bucket"] for r in want}
+    early = set(sorted(all_buckets)[: len(all_buckets) // 2])
+    assert early and all_buckets - early
+
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(conf, "false")
+    try:
+        r1 = run_pipeline(
+            spark, bucketed(src, n_buckets).filter(
+                F.col("bucket").isin(sorted(early))).drop("bucket"),
+            out, lin, run_id="early", n_buckets=n_buckets,
+        )
+        assert r1["buckets"] == len(early)
+        r2 = run_pipeline(spark, src, out, lin, run_id="rest",
+                          n_buckets=n_buckets)
+        assert r2["buckets"] == len(all_buckets - early)
+        plan = _final_write_plan(spark, out)
+    finally:
+        spark.conf.unset(conf)
+
+    got = sorted(
+        (r.asDict() for r in spark.read.parquet(out).collect()), key=key
+    )
+    assert got == want
+    for d in glob.glob(os.path.join(out, "bucket=*")):
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    assert len(glob.glob(os.path.join(out, "bucket=*"))) == len(all_buckets)
+
+    assert sum(node == "Exchange" for node in plan) == 1, plan
+    write = plan.index("WriteFiles")
+    assert plan[write + 1] == "CollectMetrics", plan
 
 
 def test_verify_against_expected(spark):
