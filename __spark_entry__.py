@@ -383,7 +383,7 @@ def _q_sim_ann_lsh(spark, sf):
     """Multiprobe SRP-LSH ANN (similarity.lsh_ann_topk, n_probes>0): each
     query also probes the Hamming-1 buckets of its signature — measured
     4.5x recall@10 vs probe-less at the same table count on random unit
-    vectors (scripts/ann_recall.py; see BENCH/BASELINE.md). The oracle
+    vectors (BENCH/BASELINE.md, "Round-6: ANN recall@k"). The oracle
     recomputes signatures, XOR probes, bucket join, and exact-cosine
     re-rank in DuckDB."""
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")

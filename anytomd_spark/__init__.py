@@ -10,7 +10,7 @@ per-turn map pipeline over a table of multi-turn conversation transcripts:
 Layout:
     kernels/   pure-Python conversion kernels (no Spark imports)
     batch.py   Arrow-batched pandas kernel: DataFrame -> DataFrame
-    pipeline.py Spark job: scan -> repartition -> mapInPandas -> ordered write
+    pipeline.py Spark job: scan -> mapInPandas -> bucketed, ordered write
     analysis/  large-scale training-data operators (dedup, ANN, text quality)
 """
 

@@ -64,12 +64,13 @@ def classify_formats(text: pd.Series, tool: pd.Series) -> pd.Series:
     magic -> %PDF -> tool hint -> JSON heuristic -> markup).
 
     One positional Python pass. The previous pandas ``.str``-chain version
-    (kept below as :func:`_classify_formats_pandas`, the reference
-    implementation for the differential test) cost ~7 object-dtype series
-    passes — each a per-row lambda map — plus full-string ``lstrip``
-    copies of megabyte payloads on the JSON-heuristic step; the loop form
-    touches at most a 256-char slice per unhinted row and memoizes hint
-    normalization per distinct hint string.
+    (kept in tests/test_chaos.py as ``_classify_formats_pandas``, the
+    reference for ``test_classify_loop_matches_pandas_reference``) cost
+    ~7 object-dtype series passes — each a per-row lambda map — plus
+    full-string ``lstrip`` copies of megabyte payloads on the
+    JSON-heuristic step; the loop form touches at most a 256-char slice
+    per unhinted row and memoizes hint normalization per distinct hint
+    string.
     """
     n = len(text)
     tvals = text.to_numpy(dtype=object)
@@ -137,67 +138,6 @@ def classify_formats(text: pd.Series, tool: pd.Series) -> pd.Series:
         elif low.startswith("<?xml") or (low.startswith("<") and ">" in low):
             out[i] = "xml"
     return pd.Series(out, index=text.index, dtype=object)
-
-
-def _classify_formats_pandas(text: pd.Series, tool: pd.Series) -> pd.Series:
-    """Reference implementation of :func:`classify_formats` (the original
-    vectorized pandas form), retained ONLY as the differential-test oracle
-    — see tests/test_chaos.py."""
-    n = len(text)
-    # work on a RangeIndex internally: the masked-subset passes below
-    # assign BY LABEL, which would over-assign under duplicate index
-    # labels (e.g. a concat'ed frame); the caller's index is restored
-    # on return
-    orig_index = text.index
-    t = text.fillna("").reset_index(drop=True)
-    tool = tool.reset_index(drop=True)
-    fmt = pd.Series([None] * n, dtype=object)
-
-    # 1. magic prefixes
-    is_zip = t.str.startswith("UEsDB")
-    is_ole = t.str.startswith("0M8R")
-    is_pdf = t.str.startswith("%PDF")
-    fmt[is_zip] = "zipb64"  # refined per-row below (needs ZIP introspection)
-    fmt[is_ole] = "xls"
-    fmt[is_pdf & fmt.isna()] = "pdf"
-
-    # 2. tool hint
-    hints = tool.fillna("").str.strip().str.lstrip(".").str.lower()
-    hinted = hints.map(_HINT_TO_FMT)
-    take_hint = fmt.isna() & hinted.notna()
-    fmt[take_hint] = hinted[take_hint]
-
-    # steps 3-4 run ONLY over still-unresolved rows: hinted batches skip
-    # the (object-dtype-expensive) lstrip/lower/regex passes entirely
-    todo = fmt.isna()
-    if not todo.any():
-        fmt.index = orig_index
-        return fmt
-    sub = t[todo]
-
-    # 3. JSON heuristic: first non-ws char is { or [
-    head = sub.str.replace("﻿", "", n=1).str.lstrip(" \t\r\n\x0b\x0c").str[:1]
-    fmt[head.index[head.isin(("{", "["))]] = "json"
-
-    # 4. markup fallback for hint-less turns
-    sub = t[fmt.isna()]
-    low = sub.str.lstrip(" \t\r\n\x0b\x0c").str[:256].str.lower()
-    html_like = (
-        low.str.startswith("<!doctype html")
-        | low.str.startswith("<html")
-        | low.str.contains(
-            r"<head|<body|<div|<p>|<p |<table|<h1|<ul|<span|<br",
-            regex=True,
-        )
-    )
-    fmt[low.index[html_like]] = "html"
-    sub = low[~html_like]
-    xml_like = sub.str.startswith("<?xml") | (
-        sub.str.startswith("<") & sub.str.contains(">", regex=False)
-    )
-    fmt[sub.index[xml_like]] = "xml"
-    fmt.index = orig_index
-    return fmt
 
 
 def _convert_one(

@@ -12,8 +12,8 @@ Scale notes (designed for 10^12 turns / 1000 executors; validated on
 local[32]):
   * The only JVM<->Python crossing is the Arrow-batched ``mapInPandas``;
     everything else is Catalyst-planned (scan pruning, AQE coalescing).
-  * Payloads are fat strings, so Arrow batches are kept small
-    (``spark.sql.execution.arrow.maxRecordsPerBatch`` = 512).
+  * Arrow batches carry ``ARROW_BATCH_ROWS`` = 4096 rows
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``).
   * Skewed mega-conversations are split by a turn-derived salt BEFORE the
     shuffle: the kernel is per-row, so rows of one conversation do not need
     to be co-located for conversion — only the final per-conversation
@@ -42,6 +42,10 @@ from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
 
 CONVERTED_SCHEMA = f"{TRANSCRIPTS_SCHEMA}, {OUTPUT_SPARK_SCHEMA}"
 
+# rows per Arrow batch across the mapInPandas crossing
+# (spark.sql.execution.arrow.maxRecordsPerBatch; extra_conf may override)
+ARROW_BATCH_ROWS = 4096
+
 
 def driver_memory(meminfo: str = "/proc/meminfo") -> str | None:
     """Driver heap for ``build_session``: half of ``MemAvailable`` in
@@ -65,7 +69,6 @@ def driver_memory(meminfo: str = "/proc/meminfo") -> str | None:
 
 def session_conf(
     shuffle_partitions: int = 32,
-    arrow_batch_rows: int = 4096,
     extra_conf: dict | None = None,
 ) -> dict:
     """The Spark settings ``build_session`` applies; ``extra_conf`` wins."""
@@ -75,7 +78,7 @@ def session_conf(
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(arrow_batch_rows),
+        "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_BATCH_ROWS),
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
         "spark.sql.parquet.compression.codec": "zstd",
         # payloads are fat strings: smaller splits -> >=2 tasks/core so
@@ -100,15 +103,12 @@ def build_session(
     master: str | None = None,
     app_name: str = "anytomd-spark",
     shuffle_partitions: int = 32,
-    arrow_batch_rows: int = 4096,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
-    for k, v in session_conf(
-        shuffle_partitions, arrow_batch_rows, extra_conf
-    ).items():
+    for k, v in session_conf(shuffle_partitions, extra_conf).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     _ship_package(spark)
@@ -153,24 +153,14 @@ def _ship_package(spark: SparkSession) -> None:
     sc._anytomd_shipped = True
 
 
-def _salted_repartition(
-    df: DataFrame, partitions: int | None, salt_buckets: int
-) -> DataFrame:
-    """Split mega-conversations across tasks before the kernel: the salted
-    key (hash(conv_id), pmod(turn_idx, salt)) — shared by both kernel
-    bindings so the salting scheme cannot drift between them."""
-    n = partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    return df.repartition(
-        int(n),
-        F.xxhash64("conv_id"),
-        F.pmod(F.col("turn_idx"), F.lit(salt_buckets)),
-    )
+# salt width of convert_transcripts' repartition: a mega-conversation is
+# spread over up to this many tasks
+SALT_BUCKETS = 16
 
 
 def convert_transcripts(
     df: DataFrame,
     partitions: int | None = None,
-    salt_buckets: int = 16,
     repartition: bool = False,
     strict: bool = False,
     max_input_bytes: int | None = None,
@@ -184,13 +174,22 @@ def convert_transcripts(
 
     Set ``repartition=True`` when the source layout is conv-clustered
     (e.g. an Iceberg table partitioned by conversation): then the salted
-    key ``(hash(conv_id), pmod(turn_idx, salt))`` splits mega-conversations
-    so no task inherits a whole one — payload-byte skew that AQE's
-    row-count heuristics can miss. The hash(conv_id) partitioning the
-    north rule requires for output ordering happens in ``ordered_output``'s
-    window shuffle regardless.
+    key ``(hash(conv_id), pmod(turn_idx, SALT_BUCKETS))`` splits
+    mega-conversations so no task inherits a whole one — payload-byte
+    skew that AQE's row-count heuristics can miss. The per-conversation
+    output ordering is ``ordered_output``'s job regardless (in
+    ``run_pipeline`` its shuffle is keyed on ``bucket``).
     """
-    out = _salted_repartition(df, partitions, salt_buckets) if repartition else df
+    out = df
+    if repartition:
+        n = partitions or df.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions"
+        )
+        out = df.repartition(
+            int(n),
+            F.xxhash64("conv_id"),
+            F.pmod(F.col("turn_idx"), F.lit(SALT_BUCKETS)),
+        )
     # passthrough columns survive the kernel: output schema = input + outputs
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
@@ -206,126 +205,10 @@ def convert_transcripts(
     )
 
 
-def convert_transcripts_distinct(
-    df: DataFrame,
-    partitions: int | None = None,
-    strict: bool = False,
-    max_input_bytes: int | None = None,
-) -> DataFrame:
-    """Convert each DISTINCT (text, tool) payload once and join the
-    results back — the cluster-scale form of convert_batch's
-    within-batch memoization.
-
-    When to consider it: corpora with a high payload duplication factor
-    (boilerplate attachments, templated documents, re-crawled pages —
-    the Common-Crawl-style dedup-before-extract pattern). The plan is
-    dedup (one payload shuffle on a 256-bit content key) -> map-only
-    kernel over the ~distinct set -> hash join back (second shuffle).
-
-    Measured trade (scripts/convert_distinct_bench.py, BENCH/BASELINE.md
-    round-6): on local[32] this variant only reaches PARITY with
-    :func:`convert_transcripts` even at a 400x duplication factor —
-    convert_batch's within-batch memoization already collapses
-    duplicates that co-occur inside an Arrow batch at zero shuffle
-    cost — and on an all-unique corpus it is ~2x slower (two payload
-    shuffles for nothing). Its genuine niche is a multi-executor
-    cluster where (a) the duplication factor is high, (b) the distinct
-    pool is far larger than an Arrow batch so batch locality cannot
-    capture it, and (c) per-payload kernel cost outweighs network
-    shuffle cost (real-world OOXML is ~100x heavier than the bench
-    fixtures). Default to map-only; measure before switching. Output
-    rows and values are identical either way (equivalence-tested).
-
-    Caveat shared with every multi-scan Spark plan: ``df`` is scanned
-    TWICE (dedup branch + probe side), so its content must be stable
-    across scans — cache/checkpoint a non-deterministic source first,
-    or rows whose recomputed key finds no partner silently left-join to
-    null outputs.
-
-    The content key is md5(text)||md5(tool) (128+128 bits) rather than
-    xxhash64: at 10^12 turns a 64-bit key would see birthday collisions,
-    which for THIS operator would silently attach the wrong Markdown to
-    a turn.
-    """
-    # null-safe without sentinel collisions: a null/non-null flag char
-    # per column sits alongside the md5 of the coalesced value
-    key = F.concat(
-        F.md5(F.coalesce(F.col("text"), F.lit(""))),
-        F.when(F.col("text").isNull(), F.lit("N")).otherwise(F.lit("T")),
-        F.md5(F.coalesce(F.col("tool"), F.lit(""))),
-        F.when(F.col("tool").isNull(), F.lit("N")).otherwise(F.lit("T")),
-    ).alias("_content_key")
-
-    reps = (
-        df.select(key, "text", "tool")
-        .dropDuplicates(["_content_key"])
-    )
-    if partitions:
-        reps = reps.repartition(partitions, "_content_key")
-
-    def _convert_iter(iterator):
-        for pdf in iterator:
-            out = convert_batch(
-                pdf, strict=strict, max_input_bytes=max_input_bytes
-            )
-            yield out.drop(columns=["text", "tool"])
-
-    converted = reps.mapInPandas(
-        _convert_iter,
-        schema=f"_content_key string, {OUTPUT_SPARK_SCHEMA}",
-    )
-    return df.withColumn("_content_key", key).join(
-        converted, on="_content_key", how="left"
-    ).drop("_content_key")
-
-
-def convert_transcripts_struct(
-    df: DataFrame,
-    partitions: int | None = None,
-    salt_buckets: int = 16,
-    repartition: bool = False,
-    strict: bool = False,
-    max_input_bytes: int | None = None,
-) -> DataFrame:
-    """Same kernel as :func:`convert_transcripts`, bound as a
-    STRUCT-returning scalar pandas UDF over (text, tool) instead of
-    mapInPandas over whole rows.
-
-    Why it exists: mapInPandas ships EVERY column across the Arrow
-    boundary in both directions — the kernel reads only text+tool, so
-    conv_id/role/ts/turn_idx make two pointless Arrow crossings per
-    turn. The scalar UDF keeps passthrough columns JVM-side entirely;
-    only the payload goes to Python and only the outputs come back.
-    Output schema and values are identical (equivalence-tested); see
-    PLANS.md round-3 for the measured comparison.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    out = _salted_repartition(df, partitions, salt_buckets) if repartition else df
-
-    @pandas_udf(OUTPUT_SPARK_SCHEMA)
-    def _conv(text, tool):
-        import pandas as pd
-
-        batch = pd.DataFrame({"text": text, "tool": tool})
-        res = convert_batch(
-            batch, strict=strict, max_input_bytes=max_input_bytes
-        )
-        return res[[
-            "markdown", "plain_text", "title", "fmt", "error",
-            "n_warnings", "warning_codes", "bytes_in", "chars_out",
-        ]]
-
-    return out.withColumn("_conv", _conv("text", "tool")).select(
-        "*", "_conv.*"
-    ).drop("_conv")
-
-
 def ordered_output(
     converted: DataFrame,
     turns: DataFrame | None = None,
     seq_bucket: int = 1 << 20,
-    adaptive: bool = True,
 ) -> DataFrame:
     """Stable (conv_id, turn_idx) ordering (north rule: per-turn equality
     under stable turn ordering): assigns ``turn_seq`` = rank of turn_idx
@@ -348,17 +231,16 @@ def ordered_output(
     single-window path runs — fine when no conversation exceeds
     ~``seq_bucket`` turns.
 
-    ``adaptive`` (default): before committing to the two-level plan,
-    one tiny aggregate over the SLIM counts side computes the largest
-    per-conversation row count; when every conversation fits in a
-    single bucket the legacy single-window path runs instead — the
-    common small-conversation case skips the composite-key join + extra
-    aggregate entirely (it paid ~+50% on the sf0.1 bench for skew
-    safety it didn't need), while any conversation ≥ ``seq_bucket``
-    rows keeps the bounded-task guarantee. The check itself is an eager
-    driver-side scalar job on (conv_id, turn_idx) only — payloads never
-    move. Pass ``adaptive=False`` to pin the two-level plan (tests,
-    known-skewed inputs).
+    Before committing to the two-level plan, one tiny aggregate over the
+    SLIM counts side computes the largest per-conversation row count;
+    when every conversation fits in a single bucket the legacy
+    single-window path runs instead — the common small-conversation case
+    skips the composite-key join + extra aggregate entirely (it paid
+    ~+50% on the sf0.1 bench for skew safety it didn't need), while any
+    conversation ≥ ``seq_bucket`` rows keeps the bounded-task guarantee.
+    The check itself is an eager driver-side scalar job on
+    (conv_id, turn_idx) only — payloads never move. A small
+    ``seq_bucket`` forces the two-level plan on small inputs.
 
     When ``converted`` carries a ``bucket`` column (see
     :func:`bucketed`), the single-window path shuffles on ``bucket`` so
@@ -375,15 +257,14 @@ def ordered_output(
         .groupBy("conv_id", "_seq_bkt")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    if adaptive:
-        biggest = (
-            counts.groupBy("conv_id")
-            .agg(F.sum("_n").alias("_t"))
-            .agg(F.max("_t"))
-            .collect()[0][0]
-        )
-        if biggest is None or biggest < seq_bucket:
-            return _single_window(converted)
+    biggest = (
+        counts.groupBy("conv_id")
+        .agg(F.sum("_n").alias("_t"))
+        .agg(F.max("_t"))
+        .collect()[0][0]
+    )
+    if biggest is None or biggest < seq_bucket:
+        return _single_window(converted)
     w_off = Window.partitionBy("conv_id").orderBy("_seq_bkt")
     offsets = counts.select(
         "conv_id", "_seq_bkt",
@@ -513,10 +394,6 @@ def verify_against_expected(converted: DataFrame, expected: DataFrame) -> dict:
         "mismatched": row.mismatched or 0,
         "ok": not (row.missing or row.extra or row.mismatched),
     }
-
-
-def compute_fmt_histogram(converted: DataFrame) -> DataFrame:
-    return converted.groupBy("fmt").agg(F.count(F.lit(1)).alias("n"))
 
 
 def run_pipeline(

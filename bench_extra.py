@@ -1,9 +1,12 @@
 """Extra benchmarks for the optimization round (bench.py is frozen).
 
-Isolates single declared queries under the exact bench.py session
-configuration: noop sink (guide §1.4), job descriptions (§1.5), N
-timed samples, and optional ``.explain("formatted")`` capture to a
-file (the plans/r07 evidence).
+Re-measures single declared queries under the exact bench.py session
+configuration: noop sink (guide §1.4), job descriptions (§1.5), one
+untimed warm-up pass over the named queries (JIT, Arrow, Python workers,
+page cache), then ``--n`` interleaved rounds, each running every named
+query once in order so slow host drift spreads over all of them. Prints
+one JSON line with every sample and the per-query median. Optional
+``.explain("formatted")`` capture to a file (the plans/r07 evidence).
 
 Usage:
     python bench_extra.py QUERY [QUERY ...] [--n 3] [--explain-dir plans/r07] [--suffix before]
@@ -15,6 +18,7 @@ import argparse
 import io
 import json
 import os
+import statistics
 import sys
 import time
 from contextlib import redirect_stdout
@@ -36,6 +40,11 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from anytomd_spark.pipeline import build_session
 
+    qs = entrymod.queries()
+    unknown = [name for name in args.queries if name not in qs]
+    if unknown:
+        ap.error(f"unknown queries: {unknown}")
+
     spark = build_session(
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS * 2,
@@ -46,30 +55,40 @@ def main() -> None:
     # same worker warmup as bench.py
     spark.range(0, CPUS, 1, CPUS).mapInPandas(lambda it: it, "id long").count()
 
-    qs = entrymod.queries()
-    out: dict[str, list[float]] = {}
+    def run(name: str) -> None:
+        qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
     for name in args.queries:
-        q = qs[name]
-        samples = []
-        for i in range(args.n):
+        spark.sparkContext.setJobDescription(f"{name}#warmup")
+        run(name)
+    samples: dict[str, list[float]] = {name: [] for name in args.queries}
+    for i in range(args.n):
+        for name in args.queries:
             spark.sparkContext.setJobDescription(f"{name}#{i}")
             t0 = time.time()
-            q(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            samples.append(round(time.time() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        out[name] = samples
-        if args.explain_dir:
-            os.makedirs(args.explain_dir, exist_ok=True)
+            run(name)
+            samples[name].append(round(time.time() - t0, 3))
+    spark.sparkContext.setJobDescription(None)
+
+    if args.explain_dir:
+        os.makedirs(args.explain_dir, exist_ok=True)
+        for name in args.queries:
             buf = io.StringIO()
             with redirect_stdout(buf):
-                q(spark, SF_DIR).explain("formatted")
+                qs[name](spark, SF_DIR).explain("formatted")
             path = os.path.join(
                 args.explain_dir, f"{name}_{args.suffix}.txt"
             )
             with open(path, "w") as f:
                 f.write(buf.getvalue())
-    print(json.dumps(out))
     spark.stop()
+    print(json.dumps({
+        "sf_dir": SF_DIR, "cpus": CPUS, "rounds": args.n,
+        "note": "1 untimed warmup pass, then interleaved rounds",
+        "samples": samples,
+        "medians": {name: round(statistics.median(v), 3)
+                    for name, v in samples.items()},
+    }))
 
 
 if __name__ == "__main__":

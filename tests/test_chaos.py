@@ -9,7 +9,7 @@ import base64
 import pandas as pd
 import pytest
 
-from anytomd_spark.batch import convert_batch
+from anytomd_spark.batch import _HINT_TO_FMT, convert_batch
 from anytomd_spark.kernels.convert import convert_payload
 
 CORRUPT_CASES = [
@@ -262,6 +262,67 @@ class TestImageConverterParity:
         assert "image description failed for 'image.png'" in w["message"]
 
 
+def _classify_formats_pandas(text: pd.Series, tool: pd.Series) -> pd.Series:
+    """Reference implementation of ``batch.classify_formats`` (the original
+    vectorized pandas form), retained ONLY as the differential-test oracle
+    of ``TestBatchMemoization.test_classify_loop_matches_pandas_reference``."""
+    n = len(text)
+    # work on a RangeIndex internally: the masked-subset passes below
+    # assign BY LABEL, which would over-assign under duplicate index
+    # labels (e.g. a concat'ed frame); the caller's index is restored
+    # on return
+    orig_index = text.index
+    t = text.fillna("").reset_index(drop=True)
+    tool = tool.reset_index(drop=True)
+    fmt = pd.Series([None] * n, dtype=object)
+
+    # 1. magic prefixes
+    is_zip = t.str.startswith("UEsDB")
+    is_ole = t.str.startswith("0M8R")
+    is_pdf = t.str.startswith("%PDF")
+    fmt[is_zip] = "zipb64"  # refined per-row below (needs ZIP introspection)
+    fmt[is_ole] = "xls"
+    fmt[is_pdf & fmt.isna()] = "pdf"
+
+    # 2. tool hint
+    hints = tool.fillna("").str.strip().str.lstrip(".").str.lower()
+    hinted = hints.map(_HINT_TO_FMT)
+    take_hint = fmt.isna() & hinted.notna()
+    fmt[take_hint] = hinted[take_hint]
+
+    # steps 3-4 run ONLY over still-unresolved rows: hinted batches skip
+    # the (object-dtype-expensive) lstrip/lower/regex passes entirely
+    todo = fmt.isna()
+    if not todo.any():
+        fmt.index = orig_index
+        return fmt
+    sub = t[todo]
+
+    # 3. JSON heuristic: first non-ws char is { or [
+    head = sub.str.replace("﻿", "", n=1).str.lstrip(" \t\r\n\x0b\x0c").str[:1]
+    fmt[head.index[head.isin(("{", "["))]] = "json"
+
+    # 4. markup fallback for hint-less turns
+    sub = t[fmt.isna()]
+    low = sub.str.lstrip(" \t\r\n\x0b\x0c").str[:256].str.lower()
+    html_like = (
+        low.str.startswith("<!doctype html")
+        | low.str.startswith("<html")
+        | low.str.contains(
+            r"<head|<body|<div|<p>|<p |<table|<h1|<ul|<span|<br",
+            regex=True,
+        )
+    )
+    fmt[low.index[html_like]] = "html"
+    sub = low[~html_like]
+    xml_like = sub.str.startswith("<?xml") | (
+        sub.str.startswith("<") & sub.str.contains(">", regex=False)
+    )
+    fmt[sub.index[xml_like]] = "xml"
+    fmt.index = orig_index
+    return fmt
+
+
 class TestBatchMemoization:
     """convert_batch converts each distinct (fmt, hint, payload) ONCE per
     batch; the memoized output must be row-identical to an unmemoized
@@ -282,6 +343,9 @@ class TestBatchMemoization:
         (None, ""),
         ("unique one", "txt"),
         ("plain words here", "md"),           # same text, DIFFERENT hint
+        (None, None),                         # null payload, null tool
+        ("<p>shared</p>", None),              # null tool
+        ("<p>shared</p>", None),              # dup under a null tool
     ]
 
     def _unmemoized(self, pdf):
@@ -325,8 +389,8 @@ class TestBatchMemoization:
         pdf = pd.DataFrame(self.MIXED_ROWS, columns=["text", "tool"])
         convert_batch(pdf)
         assert len(calls) == len(set(calls))
-        # 14 rows, but only the distinct convertible keys hit the kernel
-        assert len(calls) == 6
+        # 17 rows, but only the distinct convertible keys hit the kernel
+        assert len(calls) == 7
 
     def test_memo_keys_include_hint(self):
         # same payload under txt vs md hints: both dispatch as plain text
@@ -362,10 +426,7 @@ class TestBatchMemoization:
         # shapes, magic-vs-hint priority, and non-string cells
         import random
 
-        from anytomd_spark.batch import (
-            _classify_formats_pandas,
-            classify_formats,
-        )
+        from anytomd_spark.batch import classify_formats
 
         pool = [
             ("UEsDBxyzzy", ""), ("0M8Rabc", ""), ("%PDF-1.4", ""),

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from anytomd_spark.pipeline import (  # noqa: E402
     build_session,
     bucketed,
-    compute_fmt_histogram,
     compute_lineage,
     convert_transcripts,
     ordered_output,
@@ -35,6 +34,16 @@ def spark():
     s = build_session(master="local[2]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+def _plan(df) -> str:
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(True)
+    return buf.getvalue()
 
 
 GOLDEN_NAMES = [
@@ -92,7 +101,8 @@ def test_fmt_histogram(spark):
     df = spark.createDataFrame(fixture_transcripts())
     hist = {
         r.fmt: r.n
-        for r in compute_fmt_histogram(convert_transcripts(df)).collect()
+        for r in convert_transcripts(df).groupBy("fmt").count()
+        .withColumnRenamed("count", "n").collect()
     }
     assert hist["html"] == 1
     assert hist["docx"] == 1
@@ -438,8 +448,7 @@ def test_salted_equals_unsalted_on_skewed_input(spark):
         spark, n_convs=12, seed=13, mega_every=6, mega_size=120, partitions=3
     )
     plain = convert_transcripts(df, repartition=False)
-    salted = convert_transcripts(df, partitions=4, salt_buckets=4,
-                                 repartition=True)
+    salted = convert_transcripts(df, partitions=4, repartition=True)
     key = lambda r: (r.conv_id, r.turn_idx)  # noqa: E731
     rows_a = sorted(plain.collect(), key=key)
     rows_b = sorted(salted.collect(), key=key)
@@ -455,9 +464,6 @@ def test_ordered_output_mega_conversation_two_level(spark):
     exact rank values, and the payload-side window partitions on
     (conv_id, _seq_bkt) — a whole conversation never lands on one task
     (VERDICT r2 'What's wrong #2')."""
-    import contextlib
-    import io
-
     n = 1_000_000
     turns = spark.range(n).select(
         F.lit("megaconv").alias("conv_id"),
@@ -470,10 +476,7 @@ def test_ordered_output_mega_conversation_two_level(spark):
     out = ordered_output(converted, turns=turns, seq_bucket=65536)
     assert out.filter(F.col("turn_seq") != F.col("turn_idx") + 1).count() == 0
 
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain(True)
-    plan = buf.getvalue()
+    plan = _plan(out)
     # the two-level path is active: bucket key present in the plan, and
     # every row_number window spec includes it next to conv_id
     assert "_seq_bkt" in plan
@@ -487,9 +490,6 @@ def test_ordered_output_adaptive_small_convs_take_legacy_plan(spark):
     must fall back to the legacy single-window plan — no composite-key
     join, no _seq_bkt anywhere (VERDICT r3 #5: the small-conv common
     case paid the two-level cost unconditionally)."""
-    import contextlib
-    import io
-
     df = spark.createDataFrame(
         [("a", 0), ("a", 1), ("b", 0)], "conv_id string, turn_idx int"
     ).withColumn("payload", F.lit("p"))
@@ -497,10 +497,7 @@ def test_ordered_output_adaptive_small_convs_take_legacy_plan(spark):
     out = ordered_output(df, turns=turns, seq_bucket=64)
     got = {(r.conv_id, r.turn_idx): r.turn_seq for r in out.collect()}
     assert got == {("a", 0): 1, ("a", 1): 2, ("b", 0): 1}
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain(True)
-    assert "_seq_bkt" not in buf.getvalue()
+    assert "_seq_bkt" not in _plan(out)
 
 
 def test_ordered_output_sparse_turn_idx_matches_legacy(spark):
@@ -520,12 +517,12 @@ def test_ordered_output_sparse_turn_idx_matches_legacy(spark):
         (r.conv_id, r.turn_idx): r.turn_seq
         for r in ordered_output(df).collect()
     }
-    two_level = {
-        (r.conv_id, r.turn_idx): r.turn_seq
-        for r in ordered_output(df, turns=turns, seq_bucket=65536,
-                                adaptive=False).collect()
-    }
+    # seq_bucket=2: conversation "a" has 4 rows, so the probe picks the
+    # two-level plan
+    out = ordered_output(df, turns=turns, seq_bucket=2)
+    two_level = {(r.conv_id, r.turn_idx): r.turn_seq for r in out.collect()}
     assert two_level == legacy
+    assert "_seq_bkt" in _plan(out)
 
 
 def test_catalog_table_source(spark, tmp_path):
@@ -554,21 +551,6 @@ def test_catalog_table_source(spark, tmp_path):
         assert got.filter("markdown is null").count() == 0
     finally:
         spark.sql("DROP TABLE IF EXISTS transcripts_tbl")
-
-
-def test_struct_udf_binding_equivalent(spark):
-    """convert_transcripts_struct (scalar struct pandas_udf over
-    text+tool) must produce byte-identical rows to the mapInPandas
-    binding — the measured A/B and the prunability property live in
-    PLANS.md round-3."""
-    from anytomd_spark.pipeline import convert_transcripts_struct
-
-    df = generate_transcripts(spark, n_convs=25, seed=21, mega_every=0,
-                              partitions=3)
-    key = lambda r: (r.conv_id, r.turn_idx)  # noqa: E731
-    a = sorted(convert_transcripts(df).collect(), key=key)
-    b = sorted(convert_transcripts_struct(df).collect(), key=key)
-    assert a == b
 
 
 def test_run_pipeline_empty_input(spark, tmp_path):
@@ -626,43 +608,13 @@ def test_ordered_output_null_conv_id_not_dropped(spark):
     df = spark.createDataFrame(pdf, "conv_id string, turn_idx int") \
         .withColumn("payload", F.lit("p"))
     turns = df.select("conv_id", "turn_idx")
-    rows = ordered_output(df, turns=turns, seq_bucket=64,
-                          adaptive=False).collect()
+    # seq_bucket=2: the null conversation's 2 rows force the two-level plan
+    out = ordered_output(df, turns=turns, seq_bucket=2)
+    assert "_seq_bkt" in _plan(out)
+    rows = out.collect()
     assert len(rows) == 3
     got = {(r.conv_id, r.turn_idx): r.turn_seq for r in rows}
     assert got[(None, 0)] == 1 and got[(None, 1)] == 2 and got[("c", 0)] == 1
-
-
-def test_convert_distinct_equals_maponly(spark):
-    """convert_transcripts_distinct (dedup-before-convert) must produce
-    exactly the same rows as the shuffle-free map-only path, including
-    error rows, null payloads, and the duplicate-payload fast path."""
-    from anytomd_spark.pipeline import convert_transcripts_distinct
-
-    df = generate_transcripts(
-        spark, n_convs=30, seed=21, mega_every=0, partitions=3
-    )
-    # graft duplicates and edge rows onto the generated corpus
-    extra = spark.createDataFrame(
-        [
-            ("dup-conv", 0, "user", "<p>shared</p>", "", None),
-            ("dup-conv", 1, "user", "<p>shared</p>", "", None),
-            ("dup-conv", 2, "user", "<p>shared</p>", "html", None),
-            ("dup-conv", 3, "user", None, "", None),
-            ("dup-conv", 4, "user", None, None, None),
-            ("dup-conv", 5, "user", "%PDF-1.7 x", "pdf", None),
-            ("dup-conv", 6, "user", "%PDF-1.7 x", "pdf", None),
-        ],
-        schema=("conv_id string, turn_idx int, role string, text string, "
-                "tool string, ts timestamp"),
-    )
-    df = df.unionByName(extra)
-    key = lambda r: (r.conv_id, r.turn_idx)  # noqa: E731
-    rows_a = sorted(convert_transcripts(df).collect(), key=key)
-    rows_b = sorted(
-        convert_transcripts_distinct(df, partitions=4).collect(), key=key
-    )
-    assert [r.asDict() for r in rows_a] == [r.asDict() for r in rows_b]
 
 
 def test_job_spark_submit_py_files(spark, tmp_path):
