@@ -11,6 +11,13 @@
 thin submit target that imports this module from the --py-files zip.
 ``python -m anytomd_spark.job`` also works for local runs.)
 
+JIT mode: ``build_session`` makes the driver JVM C1-only
+(``pipeline.DRIVER_JAVA_OPTIONS``), which ``python -m anytomd_spark.job``
+gets on its own because that call starts the JVM. Under spark-submit the
+driver JVM already exists when ``build_session`` runs, so the default
+cannot apply; pass ``--driver-java-options "-XX:TieredStopAtLevel=1"``
+to get the same mode.
+
 Reads the transcripts table (parquet; an Iceberg table resolves through
 ``spark.read.table`` when a catalog is configured — pass --table instead
 of --input), converts every turn, writes bucket-partitioned output with

@@ -27,6 +27,21 @@ local[32]):
     required ordering, so each bucket is written by one task into one
     file with no second sort. Post-kernel parallelism is therefore at
     most ``min(n_buckets, spark.sql.shuffle.partitions)``.
+  * The driver JVM runs on the C1 JIT tier only (``DRIVER_JAVA_OPTIONS``
+    = ``-XX:TieredStopAtLevel=1``). In local mode every task runs in that
+    JVM, and a batch run lives for a few passes. CPU seconds on a 4-core
+    VM over 40k turns: C2's compile threads took 6.9-7.7 s of a 16.4-19.0 s
+    first warm pass and were still 2.7-2.9 s of the sixth; C1-only code
+    costs the executor tasks ~0.9 s more a pass, and the warm pass drops
+    to 11.8-12.2 s. Over six warm passes C1 stays ahead in total (70 vs
+    79-91 s). On a 120k-turn input the first pass drops 47.9 -> 31.8 s
+    and the first warm pass 29.0 -> 23.9 s; from the second warm pass
+    the two are even (24.5/23.7 s C2 vs 25.3/24.3 s C1). A long session
+    over a large input can return to C2 with
+    ``extra_conf={"spark.driver.extraJavaOptions": ""}``. No executor
+    option is set, so executors on a cluster keep C2; under
+    ``spark-submit`` the driver JVM already exists, so pass
+    ``--driver-java-options`` there instead.
 """
 
 from __future__ import annotations
@@ -45,6 +60,10 @@ CONVERTED_SCHEMA = f"{TRANSCRIPTS_SCHEMA}, {OUTPUT_SPARK_SCHEMA}"
 # rows per Arrow batch across the mapInPandas crossing
 # (spark.sql.execution.arrow.maxRecordsPerBatch; extra_conf may override)
 ARROW_BATCH_ROWS = 4096
+
+# JVM options of the driver, which in local mode is also the executor
+# (spark.driver.extraJavaOptions; extra_conf may override): C1 only
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
 def driver_memory(meminfo: str = "/proc/meminfo") -> str | None:
@@ -89,6 +108,13 @@ def session_conf(
         # via extra_conf when debugging interactively (guide §7.1)
         "spark.ui.enabled": "false",
         "spark.ui.showConsoleProgress": "false",
+        # short-lived batch JVM: C2's compile threads cost more CPU than
+        # its faster code saves until a session has run several passes
+        # over a large input (measured trade-off in the module
+        # docstring); extra_conf {"spark.driver.extraJavaOptions": ""}
+        # restores C2. pyspark hands this to the launcher, so it only
+        # applies when this call starts the JVM
+        "spark.driver.extraJavaOptions": DRIVER_JAVA_OPTIONS,
     }
     # sized to the host (driver-side only; executors on a cluster size
     # independently)

@@ -61,12 +61,14 @@ def run_leg(cpus: int, transcripts_path: str) -> dict:
 import sys, time, json, glob
 sys.path.insert(0, {REPO!r})
 from pyspark.sql import functions as F
-from anytomd_spark.pipeline import build_session, convert_transcripts
+from anytomd_spark.pipeline import (
+    DRIVER_JAVA_OPTIONS, build_session, convert_transcripts)
 spark = build_session(master="local[{cpus}]", shuffle_partitions={cpus * 2},
                       app_name="scaling-{cpus}",
                       extra_conf={{
                           "spark.driver.memory": "16g",
-                          "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
+                          "spark.driver.extraJavaOptions":
+                              f"{{DRIVER_JAVA_OPTIONS}} -XX:+UseParallelGC",
                           "spark.sql.files.maxPartitionBytes": "4m",
                       }})
 spark.sparkContext.setLogLevel("WARN")

@@ -79,6 +79,24 @@ def test_driver_memory_follows_available_memory(tmp_path, monkeypatch):
     assert "spark.driver.memory" not in pipeline.session_conf()
 
 
+def test_driver_jvm_runs_c1_only(spark):
+    """The driver JVM is C1-only by default, extra_conf replaces the
+    option, and the running JVM really carries it (a launch path that
+    drops spark.driver.extraJavaOptions fails here)."""
+    from anytomd_spark import pipeline
+
+    key = "spark.driver.extraJavaOptions"
+    assert pipeline.session_conf()[key] == pipeline.DRIVER_JAVA_OPTIONS
+    conf = pipeline.session_conf(extra_conf={key: "-XX:+UseParallelGC"})
+    assert conf[key] == "-XX:+UseParallelGC"
+
+    jvm = spark._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert hotspot.getVMOption("TieredStopAtLevel").getValue() == "1"
+
+
 def test_fixture_conversation_golden_equality(spark):
     """Port of the reference golden e2e suite through the Spark pipeline:
     each turn's markdown must match the golden under stable ordering.
@@ -152,6 +170,34 @@ def test_lineage_and_resume(spark, tmp_path):
     # output readable and ordered
     out_df = spark.read.parquet(out)
     assert out_df.count() == r1["rows"]
+
+
+def test_warm_run_pipeline_reuses_generated_code(spark, tmp_path):
+    """A second identical run_pipeline call compiles at most one new
+    class. Spark caches generated code by its source text, so a per-run
+    literal spliced into a hot stage (an output path, a run id, a
+    timestamp) would recompile that stage on every pass. The one known
+    miss is compute_lineage's ``F.lit(time.time())``: a double literal is
+    written into the generated source, so each pass's ``ts`` compiles one
+    new class (with a frozen clock, none)."""
+    inp = str(tmp_path / "in")
+    generate_transcripts(
+        spark, n_convs=30, seed=29, mega_every=0, partitions=2
+    ).write.parquet(inp)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run(name):
+        return run_pipeline(
+            spark, spark.read.parquet(inp), str(tmp_path / name / "out"),
+            str(tmp_path / name / "lineage"), n_buckets=8,
+        )
+
+    first = run("a")
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    second = run("b")
+    new_classes = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
+    assert second["rows"] == first["rows"] > 0
+    assert new_classes <= 1, new_classes
 
 
 def test_storage_probe_and_lineage_mode(spark, tmp_path):
