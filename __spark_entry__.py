@@ -829,11 +829,7 @@ def _q_stream_windowed_metrics(spark, sf):
     import os
     import tempfile
 
-    from anytomd_spark.streaming import (
-        convert_stream,
-        metrics_stream,
-        read_transcripts_stream,
-    )
+    from anytomd_spark.streaming import metrics_stream, read_transcripts_stream
 
     base = tempfile.mkdtemp(prefix="anytomd_stream_met_")
     ckpt = os.path.join(base, "ckpt")
@@ -847,7 +843,9 @@ def _q_stream_windowed_metrics(spark, sf):
     ).select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     inp = _stream_input_once(t, "metrics", sf, n_files=1)
 
-    met = metrics_stream(convert_stream(read_transcripts_stream(spark, inp)))
+    met = metrics_stream(
+        convert_transcripts(read_transcripts_stream(spark, inp))
+    )
     with _stream_shuffle(spark):
         q = (
             met.writeStream.foreachBatch(
@@ -882,7 +880,7 @@ def _q_stream_quality_gate(spark, sf):
     import tempfile
 
     from anytomd_spark.analysis.text_quality import punct_ratio, token_count
-    from anytomd_spark.streaming import convert_stream, read_transcripts_stream
+    from anytomd_spark.streaming import read_transcripts_stream
 
     base = tempfile.mkdtemp(prefix="anytomd_stream_qg_")
     ckpt = os.path.join(base, "ckpt")
@@ -891,7 +889,7 @@ def _q_stream_quality_gate(spark, sf):
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
     inp = _stream_input_once(t, "qualgate", sf, n_files=2)
-    gated = convert_stream(read_transcripts_stream(spark, inp)).select(
+    gated = convert_transcripts(read_transcripts_stream(spark, inp)).select(
         "conv_id", "turn_idx", "fmt",
         token_count("markdown").cast("int").alias("n_tokens"),
         (

@@ -1,17 +1,17 @@
 """Arrow-batched conversion kernel: pandas DataFrame -> pandas DataFrame.
 
-This is the single JVM<->Python crossing of the pipeline (SURVEY.md §3.4).
-Format resolution is vectorized with pandas string ops over the whole batch
-(the reference's per-file ``detect_format`` priority, detection.rs:18-48,
-re-expressed as column masks); the per-format kernels then run over each
-format's sub-frame. No per-row Python dispatch happens on the driver.
+This is the single JVM<->Python crossing of the pipeline (SURVEY.md §3.4)
+and the one definition of how a turn payload is detected
+(:func:`classify_formats`, the reference's ``detect_format`` priority,
+detection.rs:18-48) and converted (:func:`_convert_one`, its dispatch,
+lib.rs:95-209). The batch job, the stream and the fixture generator all
+convert turns through :func:`convert_batch`.
 """
 
 from __future__ import annotations
 
 import base64 as _b64
 import binascii as _ba
-import re as _re
 
 import numpy as np
 import pandas as pd
@@ -37,49 +37,32 @@ OUTPUT_SPARK_SCHEMA = (
     "bytes_in long, chars_out long"
 )
 
-# tool-column hint -> format, precomputed from the detection tables
-_HINT_TO_FMT: dict[str, str] = {}
-for _ext in list(sniff.CODE_EXTS):
-    _HINT_TO_FMT[_ext] = "code"
-for _ext in ("html", "htm"):
-    _HINT_TO_FMT[_ext] = "html"
-for _ext in ("docx", "pptx", "xlsx", "xls", "csv", "ipynb", "json", "pdf", "xml"):
-    _HINT_TO_FMT[_ext] = _ext
-for _ext in ("txt", "text", "log", "md", "markdown", "rst", "ini", "cfg",
-             "conf", "toml", "yaml", "yml"):
-    _HINT_TO_FMT[_ext] = "txt"
-for _ext in sniff._IMAGE_EXTS:
-    _HINT_TO_FMT[_ext] = "image"
-
-
-_WS_SET = frozenset(" \t\r\n\x0b\x0c")
-_MARKUP_RE = _re.compile(
-    r"<head|<body|<div|<p>|<p |<table|<h1|<ul|<span|<br"
-)
 _MISSING = object()
 
 
 def classify_formats(text: pd.Series, tool: pd.Series) -> pd.Series:
-    """Format resolution over a batch (detection priority: base64 binary
-    magic -> %PDF -> tool hint -> JSON heuristic -> markup).
+    """Format resolution over a batch: the one definition of the
+    reference's ``detect_format`` priority (detection.rs:18-48) for turn
+    payloads — base64 binary magic (``zipb64``, refined by ZIP
+    introspection in :func:`_convert_one`; ``xls``) -> ``%PDF`` -> tool
+    hint (``sniff.detect_by_extension`` of the stripped, lowercased hint
+    with every leading dot removed) -> ``sniff.sniff_text`` (JSON
+    heuristic, then markup). None when nothing matches.
 
     One positional Python pass. The previous pandas ``.str``-chain version
     (kept in tests/test_chaos.py as ``_classify_formats_pandas``, the
     reference for ``test_classify_loop_matches_pandas_reference``) cost
-    ~7 object-dtype series passes — each a per-row lambda map — plus
-    full-string ``lstrip`` copies of megabyte payloads on the
-    JSON-heuristic step; the loop form touches at most a 256-char slice
-    per unhinted row and memoizes hint normalization per distinct hint
-    string.
+    ~7 object-dtype series passes; the loop form touches at most a
+    256-char slice per unhinted row and memoizes hint normalization per
+    distinct hint string.
     """
     n = len(text)
     tvals = text.to_numpy(dtype=object)
     hvals = tool.to_numpy(dtype=object)
     out: list = [None] * n
     hint_memo: dict[str, str | None] = {}
-    hint_get = _HINT_TO_FMT.get
-    ws = _WS_SET
-    search = _MARKUP_RE.search
+    by_ext = sniff.detect_by_extension
+    sniff_text = sniff.sniff_text
     for i in range(n):
         s = tvals[i]
         if not isinstance(s, str):  # None/NaN -> "" (fillna semantics)
@@ -103,40 +86,13 @@ def classify_formats(text: pd.Series, tool: pd.Series) -> pd.Series:
         if isinstance(h, str) and h:
             f = hint_memo.get(h, _MISSING)
             if f is _MISSING:
-                f = hint_get(h.strip().lstrip(".").lower())
+                f = by_ext(h.strip().lstrip(".").lower())
                 hint_memo[h] = f
             if f is not None:
                 out[i] = f
                 continue
-        # 3. JSON heuristic: first non-ws char (skipping one BOM) is { or [
-        j = 0
-        ln = len(s)
-        seen_bom = False
-        while j < ln:
-            ch = s[j]
-            if ch in ws:
-                j += 1
-            elif ch == "﻿" and not seen_bom:
-                seen_bom = True
-                j += 1
-            else:
-                break
-        if j < ln:
-            ch = s[j]
-            if ch == "{" or ch == "[":
-                out[i] = "json"
-                continue
-        # 4. markup fallback over the 256-char lowered prefix (BOM kept:
-        # only ASCII whitespace lstrips, matching the reference heuristic)
-        k = 0
-        while k < ln and s[k] in ws:
-            k += 1
-        low = s[k:k + 256].lower()
-        if (low.startswith("<!doctype html") or low.startswith("<html")
-                or search(low)):
-            out[i] = "html"
-        elif low.startswith("<?xml") or (low.startswith("<") and ">" in low):
-            out[i] = "xml"
+        # 3 + 4. JSON heuristic, then markup
+        out[i] = sniff_text(s)
     return pd.Series(out, index=text.index, dtype=object)
 
 
@@ -148,9 +104,12 @@ def _convert_one(
     kw: dict,
 ) -> tuple:
     """One turn -> (markdown, plain_text, title, fmt, error, n_warnings,
-    warning_codes, bytes_in, chars_out). Pure function of its arguments
-    (for fixed strict / max_input_bytes), which is what makes the
-    within-batch memoization in :func:`convert_batch` sound."""
+    warning_codes, bytes_in, chars_out): the one dispatch of a classified
+    turn (the reference's lib.rs:95-209). ``hint`` is the normalized tool
+    hint for code/txt/image rows and "" otherwise, as keyed by
+    :func:`convert_batch`. Pure function of its arguments (for fixed
+    strict / max_input_bytes), which is what makes the within-batch
+    memoization in :func:`convert_batch` sound."""
     if row_fmt is None:
         return (None, None, None, None, "unsupported format",
                 0, None, len(payload.encode("utf-8")), 0)
@@ -182,12 +141,9 @@ def _convert_one(
     if row_fmt == "pdf":
         return (None, None, None, "pdf", "unsupported format: pdf",
                 0, None, n_bytes, 0)
-    ext = row_fmt
-    if row_fmt in ("code", "txt", "image"):
-        # keep the concrete extension (language tag / image filename)
-        h = hint.strip().lstrip(".").lower()
-        if h and h != row_fmt:
-            ext = h
+    # code/txt/image keep the concrete extension (language tag / image
+    # filename); ``hint`` is already normalized, "" for other formats
+    ext = hint if hint and hint != row_fmt else row_fmt
     try:
         result = convert_bytes(data, ext, strict=strict, **kw)
     except Exception as e:  # noqa: BLE001 best-effort row semantics
@@ -252,7 +208,7 @@ def convert_batch(
         key = (row_fmt, key_hint, text_arr[i])
         row = memo.get(key)
         if row is None:
-            row = _convert_one(text_arr[i], row_fmt, h, strict, kw)
+            row = _convert_one(text_arr[i], row_fmt, key_hint, strict, kw)
             memo[key] = row
         (markdown[i], plain[i], title[i], out_fmt[i], error[i],
          n_warnings[i], warning_codes[i], bytes_in[i], chars_out[i]) = row

@@ -1,18 +1,16 @@
-"""Per-turn conversion dispatcher.
+"""Per-document conversion: extension dispatch over raw bytes.
 
-Mirrors ``/root/reference/src/lib.rs``: ``convert_file`` detection priority
-(:95-139), ``convert_bytes`` dispatch (:142-209 — size guard, PDF rejection,
-code special-case, ordered converter chain), ``enforce_strict_mode``
-(:211-231), and extension normalization (:233-238).
-
-The pipeline generalizes per-document errors into best-effort per-row
-results: ``convert_payload`` never raises; failures land in ``error``.
+Mirrors the reference's ``src/lib.rs``: ``convert_bytes`` dispatch
+(:142-209 — size guard, PDF rejection, code special-case, ordered
+converter chain), ``enforce_strict_mode`` (:211-231) and, for real files,
+``convert_file`` (:95-139). Turn payloads are detected and converted by
+``batch.convert_batch``, which calls :func:`convert_bytes` once per
+distinct classified payload and turns exceptions into per-row errors.
 """
 
 from __future__ import annotations
 
 from anytomd_spark.kernels import sniff
-from anytomd_spark.kernels.decode import UNSUPPORTED_FEATURE
 from anytomd_spark.kernels.docx_conv import convert_docx
 from anytomd_spark.kernels.html_conv import convert_html
 from anytomd_spark.kernels.ooxml import InputTooLarge
@@ -36,10 +34,6 @@ _PDF_REASON = (
     "PDF is intentionally unsupported — Gemini, ChatGPT, and Claude "
     "handle PDF natively"
 )
-
-
-class ConversionResult(dict):
-    """Dict result with keys markdown/plain_text/title/warnings/fmt/error."""
 
 
 DEFAULT_MAX_IMAGE_BYTES = 4 << 30  # ConversionOptions default (mod.rs:120)
@@ -171,64 +165,6 @@ def convert_bytes(
     return result
 
 
-def convert_payload(
-    payload: str,
-    ext_hint: str | None = None,
-    strict: bool = False,
-    max_input_bytes: int = DEFAULT_MAX_INPUT_BYTES,
-    max_zip_bytes: int = DEFAULT_MAX_ZIP_BYTES,
-) -> dict:
-    """Best-effort conversion of one transcript turn. Never raises.
-
-    Returns a dict with markdown/plain_text/title/warnings plus:
-    ``fmt`` (resolved format or None), ``error`` (message or None),
-    ``bytes_in``, ``chars_out``.
-    """
-    fmt, binary = sniff.sniff_format(payload, ext_hint)
-    data = binary if binary is not None else payload.encode("utf-8")
-    bytes_in = len(data)
-
-    if fmt is None:
-        return {
-            "markdown": None, "plain_text": None, "title": None,
-            "warnings": [], "fmt": None,
-            "error": f"unsupported format (hint={ext_hint!r})",
-            "bytes_in": bytes_in, "chars_out": 0,
-        }
-
-    # code formats keep the concrete extension for the language tag
-    ext = fmt
-    if fmt == "code" and ext_hint:
-        ext = sniff.normalize_extension(ext_hint)
-    elif fmt == "txt" and ext_hint:
-        ext = sniff.normalize_extension(ext_hint)
-    elif fmt == "html":
-        ext = "html"
-
-    try:
-        result = convert_bytes(
-            data, ext, strict=strict,
-            max_input_bytes=max_input_bytes, max_zip_bytes=max_zip_bytes,
-        )
-        return {
-            "markdown": result["markdown"],
-            "plain_text": result["plain_text"],
-            "title": result["title"],
-            "warnings": result["warnings"],
-            "fmt": fmt,
-            "error": None,
-            "bytes_in": bytes_in,
-            "chars_out": len(result["markdown"] or ""),
-        }
-    except Exception as e:  # noqa: BLE001 - best-effort row semantics
-        return {
-            "markdown": None, "plain_text": None, "title": None,
-            "warnings": [], "fmt": fmt,
-            "error": f"{type(e).__name__}: {e}",
-            "bytes_in": bytes_in, "chars_out": 0,
-        }
-
-
 def detect_format_path(path: str, header: bytes) -> str | None:
     """detection.rs:18-48 for real files: magic -> extension -> JSON
     heuristic. Returns "zip" for ZIP magic (caller introspects)."""
@@ -294,10 +230,3 @@ def convert_file(
         max_input_bytes=max_input_bytes, max_zip_bytes=max_zip_bytes,
         max_image_bytes=max_image_bytes,
     )
-
-
-class ConvertErr(Exception):
-    pass
-
-
-_ = UNSUPPORTED_FEATURE

@@ -16,6 +16,7 @@ from __future__ import annotations
 import base64
 import binascii
 import io
+import re
 import zipfile
 
 # detection.rs:90-98 extension tables
@@ -129,21 +130,39 @@ def maybe_base64_binary(payload: str) -> bytes | None:
     return None
 
 
-def _sniff_text_content(payload: str) -> str | None:
-    """Textual content heuristics shared by :func:`sniff_format` (turn
-    payloads) and :func:`sniff_bytes` (archive members): the JSON
-    heuristic of detection.rs:38-46, then html-ish / xml-ish markup."""
-    stripped = payload[1:] if payload.startswith("﻿") else payload
-    head = stripped.lstrip(" \t\r\n\x0b\x0c")
-    if head[:1] in ("{", "["):
+# ASCII whitespace the JSON and markup heuristics skip (a BOM is not)
+_WS = frozenset(" \t\r\n\x0b\x0c")
+_MARKUP_RE = re.compile(r"<head|<body|<div|<p>|<p |<table|<h1|<ul|<span|<br")
+
+
+def sniff_text(s: str) -> str | None:
+    """Textual content heuristics for hint-less turn payloads
+    (``batch.classify_formats``) and archive members (:func:`sniff_bytes`).
+
+    JSON when the first char after ASCII whitespace and at most one BOM
+    is ``{`` or ``[`` (detection.rs:38-46); else markup over the 256-char
+    lowered prefix after ASCII whitespace, BOM kept: html-ish tags, then
+    ``<?xml`` or a ``<`` closed by a ``>`` inside that prefix. Reads a
+    bounded prefix only; never copies the whole payload.
+    """
+    ws = _WS
+    ln = len(s)
+    k = 0
+    while k < ln and s[k] in ws:
+        k += 1
+    c = s[k:k + 1]
+    if c == "\ufeff":
+        j = k + 1
+        while j < ln and s[j] in ws:
+            j += 1
+        c = s[j:j + 1]
+    if c == "{" or c == "[":
         return "json"
-    low = head[:256].lower()
-    if low.startswith("<!doctype html") or low.startswith("<html"):
+    low = s[k:k + 256].lower()
+    if (low.startswith("<!doctype html") or low.startswith("<html")
+            or _MARKUP_RE.search(low)):
         return "html"
-    for tag in ("<head", "<body", "<div", "<p>", "<p ", "<table", "<h1", "<ul", "<span", "<br"):
-        if tag in low:
-            return "html"
-    if low.startswith("<?xml") or (head[:1] == "<" and ">" in head):
+    if low.startswith("<?xml") or (low.startswith("<") and ">" in low):
         return "xml"
     return None
 
@@ -164,34 +183,4 @@ def sniff_bytes(data: bytes) -> str | None:
         return "xls"
     if data[:4] == b"%PDF":
         return "pdf"
-    return _sniff_text_content(data[:4096].decode("utf-8", errors="replace"))
-
-
-def sniff_format(payload: str, ext_hint: str | None) -> tuple[str | None, bytes | None]:
-    """Resolve the format of one turn payload.
-
-    Returns (format, binary_bytes|None). Priority mirrors convert_file
-    (lib.rs:95-139): magic -> ZIP introspection -> extension hint -> JSON
-    heuristic; plus a content fallback for hint-less transcript turns
-    (documented extension beyond the reference, which requires a filename).
-    """
-    # 1. Magic bytes (textual or base64-carried binary)
-    binary = maybe_base64_binary(payload)
-    if binary is not None:
-        if binary.startswith(b"PK\x03\x04"):
-            fmt = detect_zip_format(binary)
-            return (fmt, binary) if fmt else (None, binary)
-        if binary.startswith(b"\xd0\xcf\x11\xe0"):
-            return "xls", binary
-    if payload.startswith("%PDF"):
-        return "pdf", None
-
-    # 2. Extension hint (the `tool` column)
-    if ext_hint:
-        fmt = detect_by_extension(normalize_extension(ext_hint))
-        if fmt is not None:
-            return fmt, None
-
-    # 3 + 4. Shared textual heuristics (JSON, then markup fallback)
-    fmt = _sniff_text_content(payload)
-    return (fmt, None) if fmt else (None, None)
+    return sniff_text(data[:4096].decode("utf-8", errors="replace"))

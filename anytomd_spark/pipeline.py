@@ -53,9 +53,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from anytomd_spark.batch import OUTPUT_SPARK_SCHEMA, convert_batch
-from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
-
-CONVERTED_SCHEMA = f"{TRANSCRIPTS_SCHEMA}, {OUTPUT_SPARK_SCHEMA}"
 
 # rows per Arrow batch across the mapInPandas crossing
 # (spark.sql.execution.arrow.maxRecordsPerBatch; extra_conf may override)

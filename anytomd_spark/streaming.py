@@ -5,7 +5,7 @@ The reference is a batch CLI (no streaming), but the transcripts table at
 Arrow-batched kernel run incrementally:
 
     readStream (file source over the transcripts directory)
-      -> mapInPandas(convert_batch)          # same kernel as batch
+      -> pipeline.convert_transcripts        # same binding as batch
       -> writeStream (parquet sink, checkpointed, exactly-once files)
 
 plus a windowed extraction-metrics stream (events-per-format with
@@ -17,15 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from anytomd_spark.batch import OUTPUT_SPARK_SCHEMA, convert_batch
+from anytomd_spark.pipeline import convert_transcripts
 from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
-
-STREAM_OUTPUT_SCHEMA = f"{TRANSCRIPTS_SCHEMA}, {OUTPUT_SPARK_SCHEMA}"
-
-
-def _convert_iter(iterator):
-    for pdf in iterator:
-        yield convert_batch(pdf)
 
 
 def read_transcripts_stream(
@@ -38,11 +31,6 @@ def read_transcripts_stream(
     )
 
 
-def convert_stream(stream_df: DataFrame) -> DataFrame:
-    """Same per-turn kernel, incremental execution."""
-    return stream_df.mapInPandas(_convert_iter, schema=STREAM_OUTPUT_SCHEMA)
-
-
 def start_conversion_stream(
     spark: SparkSession,
     input_path: str,
@@ -53,7 +41,9 @@ def start_conversion_stream(
     """Checkpointed file-to-file conversion stream. ``trigger_once`` runs
     one incremental catch-up pass (the batch-resume analogue); otherwise
     it micro-batches continuously."""
-    converted = convert_stream(read_transcripts_stream(spark, input_path))
+    converted = convert_transcripts(
+        read_transcripts_stream(spark, input_path)
+    )
     writer = (
         converted.writeStream.format("parquet")
         .option("path", output_path)

@@ -1,6 +1,9 @@
 """Generate anytomd_spark/binfixtures.py: fixed base64 payloads for the
 five binary formats (DOCX/PPTX/XLSX/XLS/IPYNB) plus their expected
-Markdown, captured from the conversion kernels themselves.
+Markdown, captured from the production kernel (``batch.convert_batch``)
+and written next to the imported ``anytomd_spark`` package.
+
+    python scripts/gen_binary_fixtures.py
 
 The payloads are deterministic in-memory documents (fixed ZIP timestamps,
 stored compression) exercising real converter features — headings, bold
@@ -15,13 +18,17 @@ from __future__ import annotations
 
 import base64
 import io
+import os
 import struct
 import sys
 import zipfile
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from anytomd_spark.kernels.convert import convert_payload  # noqa: E402
+import pandas as pd  # noqa: E402
+
+import anytomd_spark  # noqa: E402
+from anytomd_spark.batch import convert_batch  # noqa: E402
 
 W = ('xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main" '
      'xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships"')
@@ -242,26 +249,25 @@ IPYNB = """{
 
 
 def main() -> None:
+    cases = [
+        ("docx", base64.b64encode(build_docx()).decode("ascii"), None),
+        ("pptx", base64.b64encode(build_pptx()).decode("ascii"), None),
+        ("xlsx", base64.b64encode(build_xlsx()).decode("ascii"), None),
+        ("xls", base64.b64encode(build_xls()).decode("ascii"), None),
+        ("ipynb", IPYNB, "ipynb"),
+    ]
+    # the production kernel: binary formats are sniffed from base64 magic
+    out = convert_batch(pd.DataFrame(
+        [(payload, hint) for _, payload, hint in cases],
+        columns=["text", "tool"],
+    ))
     fixtures = {}
-    for fmt, payload, hint in (
-        ("docx", build_docx(), None),
-        ("pptx", build_pptx(), None),
-        ("xlsx", build_xlsx(), None),
-        ("xls", build_xls(), None),
-    ):
-        b64 = base64.b64encode(payload).decode("ascii")
-        out = convert_payload(b64, hint)
-        assert out["error"] is None, (fmt, out["error"])
-        assert out["fmt"] == fmt, (fmt, out["fmt"])
-        assert not out["warnings"], (fmt, out["warnings"])
-        fixtures[fmt] = (b64, out["markdown"], len(payload))
-        print(f"{fmt}: {len(payload)} bytes, md {len(out['markdown'])} chars")
-
-    out = convert_payload(IPYNB, "ipynb")
-    assert out["error"] is None, out["error"]
-    assert out["fmt"] == "ipynb"
-    fixtures["ipynb"] = (IPYNB, out["markdown"], len(IPYNB.encode()))
-    print(f"ipynb: md {len(out['markdown'])} chars")
+    for (fmt, payload, _), row in zip(cases, out.itertuples()):
+        assert row.error is None, (fmt, row.error)
+        assert row.fmt == fmt, (fmt, row.fmt)
+        assert row.n_warnings == 0, (fmt, row.warning_codes)
+        fixtures[fmt] = (payload, row.markdown, int(row.bytes_in))
+        print(f"{fmt}: {row.bytes_in} bytes, md {len(row.markdown)} chars")
 
     lines = [
         '"""Fixed binary-format fixtures for the driver correctness gate.',
@@ -281,7 +287,8 @@ def main() -> None:
         lines.append(f"        {nbytes},")
         lines.append("    ),")
     lines.append("}")
-    path = "/root/repo/anytomd_spark/binfixtures.py"
+    path = os.path.join(os.path.dirname(anytomd_spark.__file__),
+                        "binfixtures.py")
     with open(path, "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote {path}")

@@ -8,7 +8,7 @@ JVM peak RSS (VmHWM).
 Legs:
   * stateful: ``stateful_turn_dedup`` (applyInPandasWithState, one
     state row per conversation, bounded FIFO hash set per row).
-  * windowed: ``convert_stream`` -> ``metrics_stream`` (watermarked
+  * windowed: ``convert_transcripts`` -> ``metrics_stream`` (watermarked
     5-minute windows x fmt — state bounded by the window span, NOT by
     input size).
 
@@ -49,9 +49,8 @@ def run_leg(leg: str, mult: int) -> None:
     import tempfile
 
     import bench
-    from anytomd_spark.pipeline import build_session
+    from anytomd_spark.pipeline import build_session, convert_transcripts
     from anytomd_spark.streaming import (
-        convert_stream,
         metrics_stream,
         read_transcripts_stream,
         stateful_turn_dedup,
@@ -80,7 +79,7 @@ def run_leg(leg: str, mult: int) -> None:
         out_df = stateful_turn_dedup(stream)
         mode = "update"
     else:
-        out_df = metrics_stream(convert_stream(stream))
+        out_df = metrics_stream(convert_transcripts(stream))
         mode = "complete"
 
     t0 = time.time()

@@ -9,27 +9,66 @@ import base64
 import pandas as pd
 import pytest
 
-from anytomd_spark.batch import _HINT_TO_FMT, convert_batch
-from anytomd_spark.kernels.convert import convert_payload
+from anytomd_spark.batch import convert_batch
+from anytomd_spark.kernels import sniff
+from anytomd_spark.kernels.convert import convert_bytes
+from anytomd_spark.kernels.ooxml import InputTooLarge
 
+
+def _zip_bytes(members: dict[str, str | bytes]) -> bytes:
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        for name, body in members.items():
+            zf.writestr(name, body)
+    return buf.getvalue()
+
+
+def _convert_rows(rows, **kw) -> pd.DataFrame:
+    """(text, tool) rows through the production kernel."""
+    return convert_batch(pd.DataFrame(rows, columns=["text", "tool"]), **kw)
+
+
+# (name, payload, hint, pinned fmt, pinned error prefix)
 CORRUPT_CASES = [
-    ("truncated-zip-docx", base64.b64encode(b"PK\x03\x04garbage").decode(), ""),
-    ("truncated-ole-xls", base64.b64encode(b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 64).decode(), ""),
-    ("invalid-json", '{"unterminated": ', "json"),
-    ("invalid-xml", "<a><b></a>", "xml"),
-    ("empty-xml", "   ", "xml"),
-    ("pdf", "%PDF-1.7 binary", "pdf"),
-    ("invalid-ipynb", '{"cells": "not-a-list"}', "ipynb"),
-    ("bad-base64-zip", "UEsDB!!!not-base64!!!", ""),
+    ("truncated-zip-docx", base64.b64encode(b"PK\x03\x04garbage").decode(), "",
+     "zip", "unsupported format: unrecognized ZIP"),
+    ("truncated-ole-xls", base64.b64encode(b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 64).decode(), "",
+     "xls", "error: "),
+    ("invalid-json", '{"unterminated": ', "json",
+     "json", "MalformedDocument: invalid JSON"),
+    ("invalid-xml", "<a><b></a>", "xml",
+     "xml", "MalformedDocument: invalid XML"),
+    ("empty-xml", "   ", "xml", "xml", "MalformedDocument: empty XML input"),
+    ("pdf", "%PDF-1.7 binary", "pdf", "pdf", "unsupported format: pdf"),
+    ("invalid-ipynb", '{"cells": "not-a-list"}', "ipynb",
+     "ipynb", "MalformedDocument: notebook missing"),
+    ("bad-base64-zip", "UEsDB!!!not-base64!!!", "",
+     None, "invalid base64 binary payload"),
+    # a well-formed ZIP with no OOXML part
+    ("unrecognized-zip",
+     base64.b64encode(_zip_bytes({"notes/readme.txt": "hi"})).decode(), "",
+     "zip", "unsupported format: unrecognized ZIP"),
+    # binary magic outranks the hint, and an undecodable body stays an error
+    ("bad-base64-zip-txt-hint", "UEsDB!!!not-base64!!!", "txt",
+     None, "invalid base64 binary payload"),
+    ("pdf-txt-hint", "%PDF-1.7 binary", "txt",
+     "pdf", "unsupported format: pdf"),
+    ("unknown-hint", "hello world", "xyz", None, "unsupported format"),
 ]
 
 
-@pytest.mark.parametrize("name,payload,hint", CORRUPT_CASES,
+@pytest.mark.parametrize("name,payload,hint,fmt,error", CORRUPT_CASES,
                          ids=[c[0] for c in CORRUPT_CASES])
-def test_corrupt_payload_yields_error_row(name, payload, hint):
-    out = convert_payload(payload, hint or None)
-    assert out["error"] is not None, name
-    assert out["markdown"] is None
+def test_corrupt_payload_yields_error_row(name, payload, hint, fmt, error):
+    out = _convert_rows([(payload, hint)])
+    assert out["error"][0] is not None, name
+    assert out["error"][0].startswith(error), out["error"][0]
+    assert out["fmt"][0] == fmt
+    assert out["markdown"][0] is None
+    assert out["chars_out"][0] == 0
 
 
 def test_batch_mixes_good_and_bad_rows():
@@ -58,52 +97,44 @@ def test_batch_mixes_good_and_bad_rows():
 def test_encoding_fallback_payloads():
     # cp1252-ish content arrives as a str already (Spark string column);
     # at the bytes level the decoder falls back with a warning
-    out = convert_payload("Name,City\nAlice,Montréal\n", "csv")
-    assert out["error"] is None
-    assert "Montréal" in out["markdown"]
-
-    # UTF-16LE BOM carried via base64? Not a ZIP/OLE magic -> treated as
-    # opaque text; the txt path passes it through unchanged
-    out2 = convert_payload("plain text with BOM ﻿ inside", "txt")
-    assert out2["error"] is None
+    out = _convert_rows([
+        ("Name,City\nAlice,Montréal\n", "csv"),
+        # UTF-16LE BOM carried via base64? Not a ZIP/OLE magic -> treated
+        # as opaque text; the txt path passes it through unchanged
+        ("plain text with BOM \ufeff inside", "txt"),
+    ])
+    assert out["error"].isna().all()
+    assert "Montréal" in out["markdown"][0]
 
 
 def test_huge_payload_rejected_by_size_guard():
-    out = convert_payload("x" * 1000, "txt", max_input_bytes=100)
-    assert out["error"] is not None and "exceeds limit" in out["error"]
+    out = _convert_rows([("x" * 1000, "txt")], max_input_bytes=100)
+    assert out["fmt"][0] == "txt" and out["bytes_in"][0] == 1000
+    assert out["error"][0].startswith("InputTooLarge: ")
+    assert "exceeds limit" in out["error"][0]
 
 
 def test_zip_budget_guard():
-    import io
-    import zipfile
-
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("word/document.xml", "A" * 100_000)  # compresses tiny
-    payload = base64.b64encode(buf.getvalue()).decode()
-    out = convert_payload(payload, None, max_zip_bytes=1000)
-    assert out["error"] is not None and "exceeds limit" in out["error"]
+    # the ZIP budget lives in convert_bytes (the batch kernel keeps its
+    # default); the declared uncompressed size alone trips it
+    data = _zip_bytes({"word/document.xml": "A" * 100_000})  # compresses tiny
+    with pytest.raises(InputTooLarge, match="exceeds limit"):
+        convert_bytes(data, "docx", max_zip_bytes=1000)
 
 def test_adversarial_zip_rejected_without_decompression():
     """A 256 MB-uncompressed / ~KB-file zip bomb must be rejected from the
     central directory alone (TECH_SPEC.md:842 'abort ZIP-based parsing if
     uncompressed size exceeds budget'): the rejection has to be near-
     instant — decompressing first would take seconds and 256 MB of RAM."""
-    import io
     import time
-    import zipfile
 
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("word/document.xml", b"\x00" * (256 << 20))
-    data = buf.getvalue()
+    data = _zip_bytes({"word/document.xml": b"\x00" * (256 << 20)})
     assert len(data) < (1 << 20)  # ~250KB file claiming 256MB
 
-    payload = base64.b64encode(data).decode()
     t0 = time.perf_counter()
-    out = convert_payload(payload, None, max_zip_bytes=64 << 20)
+    with pytest.raises(InputTooLarge, match="exceeds limit"):
+        convert_bytes(data, "docx", max_zip_bytes=64 << 20)
     dt = time.perf_counter() - t0
-    assert out["error"] is not None and "exceeds limit" in out["error"]
     assert dt < 0.5, f"rejection took {dt:.2f}s — central dir not used?"
 
 
@@ -169,8 +200,8 @@ def test_near_limit_turn_in_memory_capped_worker():
 
 
 def test_batch_image_hint_dispatch():
-    """tool='png' in the pipeline path matches convert_payload's image
-    dispatch (both paths emit the reference's empty-alt stub)."""
+    """tool='png' dispatches to the image converter, which emits the
+    reference's empty-alt stub."""
     png = base64.b64encode(
         b"\x89PNG\r\n\x1a\n" + b"\x00" * 16
     ).decode()
@@ -286,7 +317,7 @@ def _classify_formats_pandas(text: pd.Series, tool: pd.Series) -> pd.Series:
 
     # 2. tool hint
     hints = tool.fillna("").str.strip().str.lstrip(".").str.lower()
-    hinted = hints.map(_HINT_TO_FMT)
+    hinted = hints.map(sniff.detect_by_extension)
     take_hint = fmt.isna() & hinted.notna()
     fmt[take_hint] = hinted[take_hint]
 
@@ -353,9 +384,14 @@ class TestBatchMemoization:
         fmt = B.classify_formats(
             pdf["text"].astype(object).fillna(""), pdf["tool"]
         )
+        # _convert_one takes the normalized hint for code/txt/image rows
+        # and "" otherwise
         rows = [
             B._convert_one(
-                t if t is not None else "", f, h, False, {}
+                t if t is not None else "", f,
+                h.strip().lstrip(".").lower()
+                if f in ("code", "txt", "image") else "",
+                False, {},
             )
             for t, f, h in zip(
                 pdf["text"].fillna(""), fmt, pdf["tool"].fillna("")

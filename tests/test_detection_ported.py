@@ -1,16 +1,26 @@
-"""Port of the reference detection test suite
-(/root/reference/src/detection.rs tests), mapped onto the transcript-turn
-sniffing API: ``detect_by_extension`` mirrors the extension table,
-``sniff_format(payload, hint)`` mirrors detect_format's magic/heuristic
-priority (binary magics arrive base64-encoded in a text column)."""
+"""Port of the reference detection test suite (the reference's
+src/detection.rs tests), mapped onto the transcript-turn detection API:
+``detect_by_extension`` mirrors the extension table; a one-row
+``batch.classify_formats`` mirrors detect_format's magic/heuristic
+priority (binary magics arrive base64-encoded in a text column, so ZIP
+magic classifies as ``zipb64`` and is introspected at conversion)."""
 
 from __future__ import annotations
 
 import base64
 
+import pandas as pd
 import pytest
 
+from anytomd_spark.batch import classify_formats
 from anytomd_spark.kernels import sniff
+
+
+def _classify(payload: str, hint: str | None) -> str | None:
+    """One turn through the pipeline's format resolution."""
+    return classify_formats(
+        pd.Series([payload], dtype=object), pd.Series([hint], dtype=object)
+    )[0]
 
 
 class TestDetectByExtension:
@@ -52,41 +62,53 @@ class TestSniffPriority:
     def test_zip_magic_overrides_extension(self):
         # a base64 ZIP in a turn hinted csv still resolves by introspection
         payload = base64.b64encode(b"PK\x03\x04junk").decode()
-        fmt, binary = sniff.sniff_format(payload, "csv")
-        assert binary is not None
-        assert fmt != "csv"
+        assert _classify(payload, "csv") == "zipb64"
+        assert sniff.maybe_base64_binary(payload).startswith(b"PK\x03\x04")
 
     def test_pdf_magic_overrides_extension(self):
-        fmt, _ = sniff.sniff_format("%PDF-1.7 content", "txt")
-        assert fmt == "pdf"
+        assert _classify("%PDF-1.7 content", "txt") == "pdf"
 
     def test_json_heuristic_object(self):
-        fmt, _ = sniff.sniff_format('  { "key": "value" }', None)
-        assert fmt == "json"
+        assert _classify('  { "key": "value" }', None) == "json"
 
     def test_json_heuristic_array(self):
-        fmt, _ = sniff.sniff_format("[1, 2, 3]", None)
-        assert fmt == "json"
+        assert _classify("[1, 2, 3]", None) == "json"
 
     def test_txt_hint_beats_json_heuristic(self):
-        fmt, _ = sniff.sniff_format("{ this is just a text file }", "txt")
-        assert fmt == "txt"
+        assert _classify("{ this is just a text file }", "txt") == "txt"
 
     def test_csv_hint_beats_bracket_heuristic(self):
-        fmt, _ = sniff.sniff_format("[header1],header2\nval1,val2", "csv")
-        assert fmt == "csv"
+        assert _classify("[header1],header2\nval1,val2", "csv") == "csv"
 
     def test_json_heuristic_with_utf8_bom(self):
-        fmt, _ = sniff.sniff_format('﻿{"key":"value"}', None)
-        assert fmt == "json"
+        assert _classify('\ufeff{"key":"value"}', None) == "json"
 
     def test_ipynb_hint_not_caught_by_json_heuristic(self):
-        fmt, _ = sniff.sniff_format('{ "cells": [] }', "ipynb")
-        assert fmt == "ipynb"
+        assert _classify('{ "cells": [] }', "ipynb") == "ipynb"
 
     def test_ole_magic_is_xls(self):
         payload = base64.b64encode(
             b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 8
         ).decode()
-        fmt, binary = sniff.sniff_format(payload, None)
-        assert fmt == "xls" and binary is not None
+        assert _classify(payload, None) == "xls"
+        assert sniff.maybe_base64_binary(payload) is not None
+
+
+class TestTextHeuristicSharedByArchiveMembers:
+    """Archive members (``sniff_bytes``) and hint-less turns
+    (``classify_formats``) run the same textual heuristic."""
+
+    @pytest.mark.parametrize("head", [
+        '\ufeff{"k": 1}',
+        ' \ufeff[1, 2]',
+        "<!doctype html><title>t</title>",
+        "\ufeff<html>hi</html>",
+        "\ufeff<?xml version='1.0'?><r/>",
+        "some words then <p>a paragraph</p>",
+        "<?xml version='1.0'?><r/>",
+        "plain text",
+        "<" + "a" * 300 + ">",
+    ], ids=["json-bom", "ws-bom-json", "doctype", "bom-html", "bom-xml", "p-mid",
+            "xml-decl", "plain", "late-gt"])
+    def test_sniff_bytes_matches_hintless_classify(self, head):
+        assert sniff.sniff_bytes(head.encode()) == _classify(head, None)

@@ -11,9 +11,10 @@ from __future__ import annotations
 import base64
 import os
 
+import pandas as pd
 import pytest
 
-from anytomd_spark.kernels.convert import convert_payload
+from anytomd_spark.batch import convert_batch
 from anytomd_spark.kernels.docx_conv import convert_docx
 from anytomd_spark.kernels.html_conv import convert_html
 from anytomd_spark.kernels.pptx_conv import convert_pptx
@@ -75,6 +76,14 @@ _BINARY = {"sample.docx", "sample.pptx", "sample.xlsx", "sample.xls",
            "sample_unicode.xls"}
 
 
+def _dispatch(payload: str, hint: str | None, **kw):
+    """One turn through the production kernel (``convert_batch``)."""
+    out = convert_batch(
+        pd.DataFrame([(payload, hint)], columns=["text", "tool"]), **kw
+    )
+    return next(out.itertuples())
+
+
 @pytest.mark.parametrize("name,fn,byte_exact", CASES, ids=[c[0] for c in CASES])
 def test_dispatch_payload(name, fn, byte_exact):
     data, expected = _load(name)
@@ -84,41 +93,41 @@ def test_dispatch_payload(name, fn, byte_exact):
     else:
         payload = data.decode("utf-8")
         hint = name.rsplit(".", 1)[-1]
-    out = convert_payload(payload, hint)
-    assert out["error"] is None, out["error"]
-    assert normalize(out["markdown"]) == normalize(expected)
-    assert out["chars_out"] == len(out["markdown"])
+    out = _dispatch(payload, hint)
+    assert out.error is None, out.error
+    assert normalize(out.markdown) == normalize(expected)
+    assert out.chars_out == len(out.markdown)
 
 
 def test_dispatch_pdf_rejected():
-    out = convert_payload("%PDF-1.4 fake", "pdf")
-    assert out["fmt"] == "pdf"
-    assert out["error"] is not None and "unsupported" in out["error"]
+    out = _dispatch("%PDF-1.4 fake", "pdf")
+    assert out.fmt == "pdf"
+    assert out.error is not None and "unsupported" in out.error
 
 
 def test_dispatch_unknown_format():
-    out = convert_payload("hello world", None)
-    assert out["fmt"] is None
-    assert out["error"] is not None
+    out = _dispatch("hello world", None)
+    assert out.fmt is None
+    assert out.error is not None
 
 
 def test_dispatch_json_heuristic_no_hint():
-    out = convert_payload('  {"b": 1, "a": 2}', None)
-    assert out["fmt"] == "json"
-    assert '"a": 2' in out["markdown"]
+    out = _dispatch('  {"b": 1, "a": 2}', None)
+    assert out.fmt == "json"
+    assert '"a": 2' in out.markdown
 
 
 def test_dispatch_html_sniff_no_hint():
-    out = convert_payload("<html><body><h1>Hi</h1></body></html>", None)
-    assert out["fmt"] == "html"
-    assert out["markdown"] == "# Hi\n"
+    out = _dispatch("<html><body><h1>Hi</h1></body></html>", None)
+    assert out.fmt == "html"
+    assert out.markdown == "# Hi\n"
 
 
 def test_dispatch_strict_mode():
     # cp1252 payload decodes with a warning -> strict converts it to error
     payload = b"Name,City\nAlice,Montr\xe9al\n".decode("cp1252")
-    ok = convert_payload(payload, "csv", strict=False)
-    assert ok["error"] is None
+    ok = _dispatch(payload, "csv", strict=False)
+    assert ok.error is None
     # the payload re-encodes to valid UTF-8, so no warning fires here; strict
     # semantics are exercised at the bytes level instead
     from anytomd_spark.kernels.convert import convert_bytes

@@ -150,11 +150,8 @@ def test_metrics_stream_windows_and_watermark(spark, tmp_path):
     DROPPED (state stays bounded at 10^12-turn scale)."""
     import pandas as pd
 
-    from anytomd_spark.streaming import (
-        convert_stream,
-        metrics_stream,
-        read_transcripts_stream,
-    )
+    from anytomd_spark.pipeline import convert_transcripts
+    from anytomd_spark.streaming import metrics_stream, read_transcripts_stream
     from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
 
     inp = str(tmp_path / "in")
@@ -172,7 +169,7 @@ def test_metrics_stream_windows_and_watermark(spark, tmp_path):
 
     def run_pass():
         met = metrics_stream(
-            convert_stream(read_transcripts_stream(spark, inp))
+            convert_transcripts(read_transcripts_stream(spark, inp))
         )
         q = (met.writeStream.format("parquet").option("path", out)
              .outputMode("append").option("checkpointLocation", ckpt)
