@@ -936,21 +936,22 @@ def _q_media_frames(spark, sf):
     block-constant JPEG round-trip pixels) — the fake-frame path is
     retired for both containers."""
     from anytomd_spark.analysis.multimodal import (
+        avi_video_payloads,
+        gif_video_payloads,
+        media_table,
+        mp4_video_payloads,
         sample_frames,
-        synthesize_avi_video_media,
-        synthesize_gif_video_media,
-        synthesize_mp4_video_media,
     )
 
     media = (
-        synthesize_gif_video_media(spark, n=12)
+        media_table(spark, "video", gif_video_payloads(12))
         .union(
-            synthesize_avi_video_media(spark, n=12).withColumn(
+            media_table(spark, "video", avi_video_payloads(12)).withColumn(
                 "media_id", F.col("media_id") + 100
             )
         )
         .union(
-            synthesize_mp4_video_media(spark, n=12).withColumn(
+            media_table(spark, "video", mp4_video_payloads(12)).withColumn(
                 "media_id", F.col("media_id") + 200
             )
         )
@@ -976,11 +977,12 @@ def _q_media_image_features(spark, sf):
     media_resized."""
     from anytomd_spark.analysis.multimodal import (
         gif_features,
+        gif_media_payloads,
         jpeg_features,
+        jpeg_media_payloads,
+        media_table,
         png_features,
-        synthesize_gif_media,
-        synthesize_jpeg_media,
-        synthesize_png_media,
+        png_media_payloads,
     )
 
     # coalesce each synth BEFORE its feature kernel, never after: a
@@ -990,15 +992,13 @@ def _q_media_image_features(spark, sf):
     # serial runner setup); pre-kernel coalesce gives 4 parallel
     # runner tasks per leg and the same packed output
     parts = (
-        ("png", png_features(synthesize_png_media(spark, n=24).coalesce(4)),
-         "channels", 0),
-        ("gif", gif_features(synthesize_gif_media(spark, n=24).coalesce(4)),
-         "n_frames", 100),
-        ("jpeg", jpeg_features(synthesize_jpeg_media(spark, n=24).coalesce(4)),
-         "n_components", 200),
+        ("png", png_features, png_media_payloads, "channels", 0),
+        ("gif", gif_features, gif_media_payloads, "n_frames", 100),
+        ("jpeg", jpeg_features, jpeg_media_payloads, "n_components", 200),
     )
     out = None
-    for fmt, df, depth_col, off in parts:
+    for fmt, features, payloads, depth_col, off in parts:
+        df = features(media_table(spark, "image", payloads(24)).coalesce(4))
         d = df.select(
             (F.col("media_id") + off).alias("media_id"),
             F.lit(fmt).alias("fmt"),
@@ -1018,49 +1018,29 @@ def _q_media_resized(spark, sf):
     resample of the ORIGINAL truth pixels, so a bug in any decoder, the
     index arithmetic, or the PNG writer hash-mismatches."""
     from anytomd_spark.analysis.multimodal import (
+        bmp_media_payloads,
+        gif_media_payloads,
+        jpeg_media_payloads,
+        media_table,
         png_features,
+        png_media_payloads,
         resize_images,
-        synthesize_bmp_media,
-        synthesize_gif_media,
-        synthesize_jpeg_media,
-        synthesize_png_media,
-        synthesize_tiff_media,
-        synthesize_webp_media,
+        tiff_media_payloads,
+        webp_media_payloads,
     )
 
-    media = (
-        synthesize_png_media(spark, n=8)
-        .union(
-            synthesize_gif_media(spark, n=8).withColumn(
-                "media_id", F.col("media_id") + 100
-            )
+    gens = (png_media_payloads, gif_media_payloads, jpeg_media_payloads,
+            bmp_media_payloads, webp_media_payloads, tiff_media_payloads)
+    media = None
+    for off, payloads in enumerate(gens):
+        df = media_table(spark, "image", payloads(8)).withColumn(
+            "media_id", F.col("media_id") + 100 * off
         )
-        .union(
-            synthesize_jpeg_media(spark, n=8).withColumn(
-                "media_id", F.col("media_id") + 200
-            )
-        )
-        .union(
-            synthesize_bmp_media(spark, n=8).withColumn(
-                "media_id", F.col("media_id") + 300
-            )
-        )
-        .union(
-            synthesize_webp_media(spark, n=8).withColumn(
-                "media_id", F.col("media_id") + 400
-            )
-        )
-        .union(
-            synthesize_tiff_media(spark, n=8).withColumn(
-                "media_id", F.col("media_id") + 500
-            )
-        )
-        # 6 local-relation unions inherit ~32 partitions each; 48 rows
-        # across ~192 tasks is pure scheduler overhead for two
-        # mapInPandas stages — pack them
-        .coalesce(4)
-    )
-    resized = resize_images(media, width=6, height=5)
+        media = df if media is None else media.union(df)
+    # 6 local-relation unions inherit ~32 partitions each; 48 rows
+    # across ~192 tasks is pure scheduler overhead for two
+    # mapInPandas stages — pack them
+    resized = resize_images(media.coalesce(4), width=6, height=5)
     return png_features(resized.select("media_id", "payload")).select(
         "media_id", "width", "height", "channels", "pixel_md5"
     )
@@ -1075,13 +1055,14 @@ def _q_media_wav_features(spark, sf):
     signal stats — frames, duration, RMS, peak — as literals; FLAC is
     lossless, so its stats are exact integers-in, integers-out."""
     from anytomd_spark.analysis.multimodal import (
-        synthesize_flac_media,
-        synthesize_wav_media,
+        flac_media_payloads,
+        media_table,
         wav_audio_features,
+        wav_media_payloads,
     )
 
-    media = synthesize_wav_media(spark, n=24).union(
-        synthesize_flac_media(spark, n=24).withColumn(
+    media = media_table(spark, "audio", wav_media_payloads(24)).union(
+        media_table(spark, "audio", flac_media_payloads(24)).withColumn(
             "media_id", F.col("media_id") + 100
         )
     # pre-kernel coalesce: 8 parallel Python-runner tasks instead of 48

@@ -1,10 +1,11 @@
 """Arrow-batched numpy kernel for the SimHash bit-majority step.
 
 Input: one array<bigint> column of per-token xxhash64 values (computed
-JVM-side). Output: the 64-bit signature as a signed long, bit-identical
-to the pure-JVM fold in ``dedup.simhash64_hof``: bit b is set iff
-sum over tokens of ((hash >> b) & 1) * 2 - 1 is strictly positive,
-i.e. iff 2 * count_of_set_bits_b > n_tokens.
+JVM-side). Output: the 64-bit signature as a signed long: bit b is set
+iff sum over tokens of ((hash >> b) & 1) * 2 - 1 is strictly positive,
+i.e. iff 2 * count_of_set_bits_b > n_tokens. One numpy matrix reduction
+per Arrow batch is ~10× faster than interpreted HOF folds of the same
+sums through Spark ``aggregate()`` lambdas.
 """
 
 from __future__ import annotations

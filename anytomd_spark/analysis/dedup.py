@@ -197,7 +197,8 @@ def minhash_lsh_candidates(
     Buckets larger than ``max_bucket`` are dropped: a band value shared by
     that many documents is degenerate (boilerplate), and emitting its
     O(k^2) pairs would dominate the job — the standard web-dedup guard.
-    Dropped buckets are observable via the ``lsh_bucket_stats`` helper.
+    Dropped buckets are observable via :func:`bucket_stats_from_banded`
+    over the :func:`minhash_banded` table.
     """
     banded = _banded(docs, id_col, text_col, num_hashes, bands, shingle_n)
     return _bucket_pairs(banded, ["band", "band_hash"], id_col, max_bucket)
@@ -288,20 +289,6 @@ def minhash_banded(
     downstream of it (bucket stats, candidate pairs) is hash-free
     relational logic an independent engine can recompute."""
     return _banded(docs, id_col, text_col, num_hashes, bands, shingle_n)
-
-
-def lsh_bucket_stats(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Bucket-size distribution per band — the observability hook for the
-    ``max_bucket`` guard (how much was dropped, not silently)."""
-    banded = _banded(docs, id_col, text_col, num_hashes, bands, shingle_n)
-    return bucket_stats_from_banded(banded)
 
 
 def bucket_stats_from_banded(banded: DataFrame) -> DataFrame:
@@ -589,18 +576,6 @@ def dedup_cluster_survivors(
     return docs.join(losers, id_col, "left_anti")
 
 
-def _sig_from_bit_sums(bit_sums) -> "F.Column":
-    """Pack 64 signed bit-sums into one signed long signature."""
-    sig = None
-    for b, s in enumerate(bit_sums):
-        bit = F.when(s > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = bit * F.lit(1 << b).cast("long") if b < 63 else F.when(
-            s > 0, F.lit(-(1 << 63)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sig = term if sig is None else sig + term
-    return sig
-
-
 def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """64-bit SimHash per document, map-side only (no shuffle).
 
@@ -609,11 +584,11 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 
     Hybrid execution, chosen by measurement: tokenize + xxhash64 run
     JVM-side (one transform pass), then the 64 bit-majority sums run in
-    an Arrow-batched numpy kernel. The all-JVM alternative
-    (``simhash64_hof``) folds the hash array 64 times through
-    ``aggregate()`` lambdas, which Spark evaluates interpreted (HOF
-    lambdas are outside whole-stage codegen) at ~15 µs/step — the numpy
-    matrix reduction is ~10× faster end-to-end and bit-identical.
+    an Arrow-batched numpy kernel. An all-JVM version would fold the
+    hash array 64 times through ``aggregate()`` lambdas, which Spark
+    evaluates interpreted (HOF lambdas are outside whole-stage codegen)
+    at ~15 µs/step — the numpy matrix reduction is ~10× faster than
+    interpreted HOF folds end-to-end and bit-identical.
     """
     from anytomd_spark.analysis._simhash_udf import simhash_from_hashes
 
@@ -621,32 +596,6 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return docs.select(
         F.col(id_col), simhash_from_hashes(hashes).alias("simhash")
     )
-
-
-def simhash64_hof(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Pure-JVM SimHash (no Python at execution time): same signature as
-    :func:`simhash64`, kept for environments where Python workers are
-    undesirable. The token-hash array is bound ONCE via a single-element
-    transform() lambda before the 64 per-bit folds reference it —
-    Catalyst does not reliably CSE a repeated subexpression across 64
-    aggregate() calls."""
-    hashes = F.transform(tokenize(text_col), lambda t: F.xxhash64(t))
-
-    def _sig(th):
-        def _bit_sum(b: int):
-            # exactly-two-parameter lambda: aggregate() would bind a third
-            # parameter as another lambda variable (see _seeded_rehash)
-            return F.aggregate(
-                th,
-                F.lit(0).cast("long"),
-                lambda acc, h: acc
-                + (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1),
-            )
-
-        return _sig_from_bit_sums([_bit_sum(b) for b in range(64)])
-
-    sig = F.get(F.transform(F.array(hashes), _sig), 0)
-    return docs.select(F.col(id_col), sig.alias("simhash"))
 
 
 def simhash_near_dups(

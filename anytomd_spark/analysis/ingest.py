@@ -51,8 +51,6 @@ ARCHIVE_DOCS_SCHEMA = (
     "shard_id long, member string, fmt string, n_bytes long, "
     "n_warnings int, markdown string, error string"
 )
-# legacy alias (pre-r6 name, kept for external callers)
-TAR_DOCS_SCHEMA = ARCHIVE_DOCS_SCHEMA
 
 _COLUMNS = ["shard_id", "member", "fmt", "n_bytes", "n_warnings",
             "markdown", "error"]

@@ -1,16 +1,18 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns.
 
 PNG, GIF, baseline JPEG, BMP, lossless-WebP and TIFF images, RIFF/PCM
-audio, and animated-GIF + MJPEG-AVI video decode FOR REAL via the
-pure-stdlib codecs in :mod:`anytomd_spark.kernels`
-(png/gif/jpeg/bmp/webp/tiff/wav/avi) — see :func:`extract_features`,
-:func:`real_resize` and :func:`sample_frames`. The container has no
-imaging libraries, so the remaining formats (lossy-VP8 WebP,
-h264/hevc bitstreams, HEIC, ...) are a deterministic fake behind
-``FAKE_DECODE`` (clearly
-marked; swap in a real decoder on a cluster with PIL/ffmpeg). Everything Spark-side —
-schema, partition-friendly batching, Arrow UDF signatures, batch shapes
-— is real and tested.
+and FLAC audio, and animated-GIF + MJPEG-AVI/MP4 video decode FOR REAL
+via the pure-stdlib codecs in :mod:`anytomd_spark.kernels`, each picked
+by magic bytes in ONE dispatch per media family (:func:`_decode_image`,
+:func:`_decode_audio`, :func:`_decode_video`) that feature extraction,
+resizing and frame sampling share. SVG is parsed as text for vector
+features. The container has no imaging libraries, so a payload no codec
+recognizes (HEIC, raw h264/hevc bitstreams, ...) gets a deterministic
+stand-in (:func:`_fake_features`, :func:`_fake_resize`,
+:func:`_fake_frame`); a recognized container holding an unsupported
+codec (lossy-VP8 WebP, h264 MP4 samples) fails loudly. Everything
+Spark-side — schema, partition-friendly batching, Arrow UDF signatures,
+batch shapes — is real and tested.
 
 Design: media rows are (media_id long, kind string, payload binary,
 meta struct<width:int, height:int, sample_rate:int, duration_ms:int>).
@@ -21,6 +23,7 @@ resizing are expressed as batch transforms over the payload bytes.
 
 from __future__ import annotations
 
+import bisect
 import hashlib
 import zlib
 
@@ -41,7 +44,9 @@ FEATURES_SCHEMA = (
     "features array<float>, decode_error string"
 )
 
-FAKE_DECODE = True  # no image/audio libs in this container (PNG is real)
+_GIF_MAGIC = (b"GIF87a", b"GIF89a")
+
+_B62 = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 
 
 def _fake_features(payload: bytes, dim: int = 16) -> list[float]:
@@ -53,40 +58,102 @@ def _fake_features(payload: bytes, dim: int = 16) -> list[float]:
     return rng.standard_normal(dim).astype(np.float32).tolist()
 
 
-def _real_decode(payload: bytes, kind: str):
-    """The real-decoder seam. PNG images decode for real via the
-    pure-stdlib codec (:mod:`anytomd_spark.kernels.png` — zlib inflate +
-    scanline unfilter); RIFF/PCM audio decodes for real via
-    :mod:`anytomd_spark.kernels.wav`; every other (kind, format) still
-    requires PIL/ffmpeg and fails loudly — swap in on a real cluster."""
-    if kind == "image" and payload[:8] == png.MAGIC:
-        return png.decode_png(payload)
-    if kind == "image" and payload[:6] in (b"GIF87a", b"GIF89a"):
-        return gif.decode_gif(payload)
-    if kind == "image" and payload[:3] == jpeg.MAGIC:
-        return jpeg.decode_jpeg(payload)
-    if kind == "image" and payload[:2] == bmp.MAGIC:
-        return bmp.decode_bmp(payload)
-    if kind == "image" and payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        return webp.decode_webp(payload)
-    if kind == "image" and payload[:4] in (tiff.MAGIC_LE, tiff.MAGIC_BE):
-        return tiff.decode_tiff(payload)
-    if kind == "image" and svg.looks_like_svg(payload):
-        return svg.svg_features(payload)
-    if kind == "audio" and payload[:4] == b"RIFF":
-        return wav.decode_wav(payload)
-    if kind == "audio" and payload[:4] == flac.MAGIC:
-        return flac.decode_flac(payload)
-    if kind == "video" and payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return avi.decode_avi_frames(payload)
-    if kind == "video" and payload[4:8] == b"ftyp":
-        return mp4.decode_mp4_frames(payload)
-    raise NotImplementedError(
-        "real media decoding beyond PNG/GIF/JPEG/BMP/WEBP-lossless/TIFF/"
-        "WAV/MJPEG-AVI requires "
-        "PIL/ffmpeg, not present in this container — enable on a real "
-        "cluster and set FAKE_DECODE = False"
-    )
+def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
+    """Deterministic stand-in for decode->resize->encode (no PIL in this
+    container): derives width*height/16 printable bytes from the payload
+    hash. Swap for a real resampler on a cluster with imaging libs; the
+    Spark plumbing (binary in/out, meta rewrite, Arrow batching) is what
+    this module actually exercises."""
+    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big")
+    rng = np.random.default_rng(seed ^ (width << 16) ^ height)
+    idx = rng.integers(0, 62, size=max(16, width * height // 16))
+    return "".join(_B62[j] for j in idx).encode("ascii")
+
+
+def _fake_frame(payload: bytes, frame_idx: int) -> bytes:
+    """Deterministic printable frame bytes derived from (payload, idx)."""
+    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big")
+    rng = np.random.default_rng(seed + frame_idx)
+    idx = rng.integers(0, 62, size=48)
+    return "".join(_B62[j] for j in idx).encode("ascii")
+
+
+def _decode_image(data: bytes):
+    """The one still-image dispatch: ``(decoded, channels)`` for a PNG,
+    GIF, JPEG, BMP, lossless-WebP or TIFF payload picked by magic, or
+    ``None`` when no codec recognizes it. A corrupt body raises the
+    codec's error. GIF decodes to RGB; JPEG reports ``n_components``."""
+    if data[:8] == png.MAGIC:
+        img = png.decode_png(data)
+    elif data[:6] in _GIF_MAGIC:
+        return gif.decode_gif(data), 3
+    elif data[:3] == jpeg.MAGIC:
+        img = jpeg.decode_jpeg(data)
+        return img, img["n_components"]
+    elif data[:2] == bmp.MAGIC:
+        img = bmp.decode_bmp(data)
+    elif data[:4] == b"RIFF" and data[8:12] == b"WEBP":
+        img = webp.decode_webp(data)
+    elif data[:4] in (tiff.MAGIC_LE, tiff.MAGIC_BE):
+        img = tiff.decode_tiff(data)
+    else:
+        return None
+    return img, img["channels"]
+
+
+def _decode_audio(data: bytes):
+    """The one audio dispatch: RIFF/PCM or native FLAC features by magic,
+    ``None`` for anything else."""
+    if data[:4] == b"RIFF":
+        return wav.wav_features(data)
+    if data[:4] == flac.MAGIC:
+        return flac.flac_features(data)
+    return None
+
+
+def _decode_video(data: bytes):
+    """The one video dispatch: animated GIF, MJPEG AVI or MJPEG MP4 by
+    magic, decoded to ``{"width", "height", "duration_ms", "frames"}``
+    with per-frame ``ts_ms`` + ``pixels``; ``None`` for anything else."""
+    if data[:6] in _GIF_MAGIC:
+        return gif.decode_gif_frames(data)
+    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
+        return avi.decode_avi_frames(data)
+    if data[4:8] == b"ftyp":
+        return mp4.decode_mp4_frames(data)
+    return None
+
+
+def _mean_sample(pixels: bytes) -> float:
+    return float(round(float(np.frombuffer(pixels, np.uint8).mean()), 6))
+
+
+def _features(kind: str, payload: bytes, dim: int) -> list[float]:
+    """Per-family feature vector: images (w, h, channels, mean sample),
+    SVG (w, h, element census, text length — vector, not raster),
+    audio (rate, channels, duration_ms, rms), video (w, h, n_frames,
+    duration_ms); the stand-in for payloads no codec recognizes."""
+    if kind == "image":
+        decoded = _decode_image(payload)
+        if decoded is not None:
+            img, channels = decoded
+            return [float(img["width"]), float(img["height"]),
+                    float(channels), _mean_sample(img["pixels"])]
+        if svg.looks_like_svg(payload):
+            sv = svg.svg_features(payload)
+            return [float(sv["width"]), float(sv["height"]),
+                    float(sv["n_elements"]), float(len(sv["text"]))]
+    elif kind == "audio":
+        wf = _decode_audio(payload)
+        if wf is not None:
+            return [float(wf["sample_rate"]), float(wf["channels"]),
+                    float(wf["duration_ms"]), wf["rms"]]
+    elif kind == "video":
+        mv = _decode_video(payload)
+        if mv is not None:
+            return [float(mv["width"]), float(mv["height"]),
+                    float(len(mv["frames"])), float(mv["duration_ms"])]
+    return _fake_features(payload, dim)
 
 
 def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
@@ -101,113 +168,11 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
                 payload = bytes(payload) if payload is not None else b""
                 err = None
                 try:
-                    if kind == "image" and payload[:8] == png.MAGIC:
-                        # PNG decodes for REAL regardless of FAKE_DECODE
-                        # (that flag marks the decoders this container
-                        # lacks): features = dims + per-image mean sample
-                        img = png.decode_png(payload)
-                        px = np.frombuffer(img["pixels"], np.uint8)
-                        feats = [
-                            float(img["width"]), float(img["height"]),
-                            float(img["channels"]),
-                            float(round(float(px.mean()), 6)),
-                        ]
-                    elif kind == "image" and payload[:6] in (
-                            b"GIF87a", b"GIF89a"):
-                        img = gif.decode_gif(payload)
-                        px = np.frombuffer(img["pixels"], np.uint8)
-                        feats = [
-                            float(img["width"]), float(img["height"]),
-                            3.0, float(round(float(px.mean()), 6)),
-                        ]
-                    elif kind == "image" and payload[:3] == jpeg.MAGIC:
-                        # baseline JPEG decodes for REAL (kernels/jpeg.py)
-                        img = jpeg.decode_jpeg(payload)
-                        px = np.frombuffer(img["pixels"], np.uint8)
-                        feats = [
-                            float(img["width"]), float(img["height"]),
-                            float(img["n_components"]),
-                            float(round(float(px.mean()), 6)),
-                        ]
-                    elif kind == "image" and payload[:2] == bmp.MAGIC:
-                        # uncompressed DIBs decode for REAL (kernels/bmp.py)
-                        img = bmp.decode_bmp(payload)
-                        px = np.frombuffer(img["pixels"], np.uint8)
-                        feats = [
-                            float(img["width"]), float(img["height"]),
-                            float(img["channels"]),
-                            float(round(float(px.mean()), 6)),
-                        ]
-                    elif (kind == "image" and payload[:4] == b"RIFF"
-                          and payload[8:12] == b"WEBP"):
-                        # lossless VP8L decodes for REAL (kernels/webp.py)
-                        img = webp.decode_webp(payload)
-                        px = np.frombuffer(img["pixels"], np.uint8)
-                        feats = [
-                            float(img["width"]), float(img["height"]),
-                            float(img["channels"]),
-                            float(round(float(px.mean()), 6)),
-                        ]
-                    elif kind == "image" and payload[:4] in (
-                            tiff.MAGIC_LE, tiff.MAGIC_BE):
-                        # baseline TIFF decodes for REAL (kernels/tiff.py)
-                        img = tiff.decode_tiff(payload)
-                        px = np.frombuffer(img["pixels"], np.uint8)
-                        feats = [
-                            float(img["width"]), float(img["height"]),
-                            float(img["channels"]),
-                            float(round(float(px.mean()), 6)),
-                        ]
-                    elif kind == "image" and svg.looks_like_svg(payload):
-                        # SVG is text: REAL stdlib-expat parse — vector
-                        # features are (size, element census, text len),
-                        # not raster stats (kernels/svg.py)
-                        sv = svg.svg_features(payload)
-                        feats = [
-                            float(sv["width"]), float(sv["height"]),
-                            float(sv["n_elements"]),
-                            float(len(sv["text"])),
-                        ]
-                    elif kind == "audio" and payload[:4] == b"RIFF":
-                        # RIFF/PCM audio is REAL too (kernels/wav.py)
-                        wf = wav.wav_features(payload)
-                        feats = [
-                            float(wf["sample_rate"]), float(wf["channels"]),
-                            float(wf["duration_ms"]), wf["rms"],
-                        ]
-                    elif kind == "audio" and payload[:4] == flac.MAGIC:
-                        # FLAC decodes for REAL too (kernels/flac.py)
-                        wf = flac.flac_features(payload)
-                        feats = [
-                            float(wf["sample_rate"]), float(wf["channels"]),
-                            float(wf["duration_ms"]), wf["rms"],
-                        ]
-                    elif kind == "video" and (
-                            payload[:6] in (b"GIF87a", b"GIF89a")
-                            or (payload[:4] == b"RIFF"
-                                and payload[8:12] == b"AVI ")
-                            or payload[4:8] == b"ftyp"):
-                        # all three real containers: features are
-                        # (width, height, n_frames, duration_ms)
-                        if payload[:6] in (b"GIF87a", b"GIF89a"):
-                            mv = gif.decode_gif_frames(payload)
-                        elif payload[:4] == b"RIFF":
-                            mv = avi.decode_avi_frames(payload)
-                        else:
-                            mv = mp4.decode_mp4_frames(payload)
-                        feats = [
-                            float(mv["width"]), float(mv["height"]),
-                            float(len(mv["frames"])),
-                            float(mv["duration_ms"]),
-                        ]
-                    elif FAKE_DECODE:
-                        feats = _fake_features(payload, dim)
-                    else:
-                        feats = _real_decode(payload, kind)
-                except (NotImplementedError, png.PngError, gif.GifError,
-                        jpeg.JpegError, bmp.BmpError, webp.WebpError,
-                        tiff.TiffError, svg.SvgError, wav.WavError,
-                        flac.FlacError, avi.AviError, mp4.Mp4Error) as e:
+                    feats = _features(kind, payload, dim)
+                except (png.PngError, gif.GifError, jpeg.JpegError,
+                        bmp.BmpError, webp.WebpError, tiff.TiffError,
+                        svg.SvgError, wav.WavError, flac.FlacError,
+                        avi.AviError, mp4.Mp4Error) as e:
                     feats, err = [], str(e)
                 out_rows.append((
                     int(media_id), kind, len(payload),
@@ -222,6 +187,45 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
     return media.mapInPandas(run, schema=FEATURES_SCHEMA)
 
 
+def _row_features(media: DataFrame, schema: str, featurize,
+                  errors) -> DataFrame:
+    """The one per-row decode loop behind the codec feature tables:
+    ``featurize(data)`` returns the columns between ``media_id`` and
+    ``decode_error``; a codec error in ``errors`` nulls them and lands
+    in ``decode_error`` instead of failing the job — per-row error
+    capture, same contract as the conversion kernel."""
+    columns = [field.split()[0] for field in schema.split(", ")]
+    nulls = (None,) * (len(columns) - 2)
+
+    def run(iterator):
+        for pdf in iterator:
+            rows = []
+            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
+                data = bytes(payload) if payload is not None else b""
+                try:
+                    values, err = featurize(data), None
+                except errors as e:
+                    values, err = nulls, str(e)
+                rows.append((int(media_id), *values, err))
+            yield pd.DataFrame(rows, columns=columns)
+
+    return media.select("media_id", "payload").mapInPandas(run, schema=schema)
+
+
+def _pixel_features(media: DataFrame, schema: str, decode, error,
+                    depth: str) -> DataFrame:
+    """(width, height, ``depth``, md5 over the raw decoded samples, mean
+    sample) per payload through one codec's ``decode``."""
+
+    def featurize(data):
+        img = decode(data)
+        return (img["width"], img["height"], img[depth],
+                hashlib.md5(img["pixels"]).hexdigest(),
+                _mean_sample(img["pixels"]))
+
+    return _row_features(media, schema, featurize, error)
+
+
 PNG_FEATURES_SCHEMA = (
     "media_id long, width int, height int, channels int, "
     "pixel_md5 string, mean_lum double, decode_error string"
@@ -234,36 +238,9 @@ def png_features(media: DataFrame) -> DataFrame:
     output carries the recovered dimensions, an md5 over the raw decoded
     samples (palette images expanded to RGB), and the mean sample value.
     Non-PNG / corrupt payloads land in ``decode_error`` instead of
-    failing the job — per-row error capture, same contract as the
-    conversion kernel."""
-
-    def run(iterator):
-        for pdf in iterator:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    img = png.decode_png(data)
-                except png.PngError as e:
-                    rows.append((int(media_id), None, None, None, None,
-                                 None, str(e)))
-                    continue
-                px = np.frombuffer(img["pixels"], np.uint8)
-                rows.append((
-                    int(media_id), img["width"], img["height"],
-                    img["channels"],
-                    hashlib.md5(img["pixels"]).hexdigest(),
-                    float(round(float(px.mean()), 6)), None,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "channels",
-                         "pixel_md5", "mean_lum", "decode_error"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=PNG_FEATURES_SCHEMA
-    )
+    failing the job."""
+    return _pixel_features(media, PNG_FEATURES_SCHEMA, png.decode_png,
+                           png.PngError, "channels")
 
 
 def png_media_payloads(n: int = 24, seed: int = 11) -> list[dict]:
@@ -308,18 +285,6 @@ def png_media_payloads(n: int = 24, seed: int = 11) -> list[dict]:
     return rows
 
 
-def synthesize_png_media(spark, n: int = 24, seed: int = 11) -> DataFrame:
-    """Spark table of the deterministic PNG payloads (binary column)."""
-    rows = [
-        (r["media_id"], "image", bytearray(r["payload"]),
-         {"width": r["width"], "height": r["height"],
-          "sample_rate": None, "duration_ms": None})
-        for r in png_media_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
 GIF_FEATURES_SCHEMA = (
     "media_id long, width int, height int, n_frames int, "
     "pixel_md5 string, mean_lum double, decode_error string"
@@ -329,34 +294,8 @@ GIF_FEATURES_SCHEMA = (
 def gif_features(media: DataFrame) -> DataFrame:
     """REAL GIF decode (stdlib LZW + palette) per Arrow batch — the GIF
     twin of :func:`png_features`."""
-
-    def run(iterator):
-        for pdf in iterator:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    img = gif.decode_gif(data)
-                except gif.GifError as e:
-                    rows.append((int(media_id), None, None, None, None,
-                                 None, str(e)))
-                    continue
-                px = np.frombuffer(img["pixels"], np.uint8)
-                rows.append((
-                    int(media_id), img["width"], img["height"],
-                    img["n_frames"],
-                    hashlib.md5(img["pixels"]).hexdigest(),
-                    float(round(float(px.mean()), 6)), None,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_frames",
-                         "pixel_md5", "mean_lum", "decode_error"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=GIF_FEATURES_SCHEMA
-    )
+    return _pixel_features(media, GIF_FEATURES_SCHEMA, gif.decode_gif,
+                           gif.GifError, "n_frames")
 
 
 def gif_media_payloads(n: int = 24, seed: int = 31) -> list[dict]:
@@ -384,17 +323,6 @@ def gif_media_payloads(n: int = 24, seed: int = 31) -> list[dict]:
     return rows
 
 
-def synthesize_gif_media(spark, n: int = 24, seed: int = 31) -> DataFrame:
-    rows = [
-        (r["media_id"], "image", bytearray(r["payload"]),
-         {"width": r["width"], "height": r["height"],
-          "sample_rate": None, "duration_ms": None})
-        for r in gif_media_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
 WAV_FEATURES_SCHEMA = (
     "media_id long, sample_rate int, channels int, bit_depth int, "
     "n_frames int, duration_ms int, rms double, peak double, "
@@ -406,37 +334,16 @@ def wav_audio_features(media: DataFrame) -> DataFrame:
     """REAL audio decode over an opaque binary column: RIFF/PCM or
     native FLAC by magic, + shallow features (duration, RMS, peak) per
     Arrow batch, with per-row error capture — the audio twin of
-    :func:`png_features`."""
+    :func:`png_features`. A payload neither codec recognizes gets the
+    WAV decoder's error."""
 
-    def run(iterator):
-        for pdf in iterator:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    if data[:4] == flac.MAGIC:
-                        f = flac.flac_features(data)
-                    else:
-                        f = wav.wav_features(data)
-                except (wav.WavError, flac.FlacError) as e:
-                    rows.append((int(media_id), None, None, None, None,
-                                 None, None, None, str(e)))
-                    continue
-                rows.append((
-                    int(media_id), f["sample_rate"], f["channels"],
-                    f["bit_depth"], f["n_frames"], f["duration_ms"],
-                    f["rms"], f["peak"], None,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "sample_rate", "channels",
-                         "bit_depth", "n_frames", "duration_ms", "rms",
-                         "peak", "decode_error"],
-            )
+    def featurize(data):
+        f = _decode_audio(data) or wav.wav_features(data)
+        return (f["sample_rate"], f["channels"], f["bit_depth"],
+                f["n_frames"], f["duration_ms"], f["rms"], f["peak"])
 
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=WAV_FEATURES_SCHEMA
-    )
+    return _row_features(media, WAV_FEATURES_SCHEMA, featurize,
+                         (wav.WavError, flac.FlacError))
 
 
 def wav_media_payloads(n: int = 24, seed: int = 29) -> list[dict]:
@@ -476,17 +383,6 @@ def wav_media_payloads(n: int = 24, seed: int = 29) -> list[dict]:
     return rows
 
 
-def synthesize_wav_media(spark, n: int = 24, seed: int = 29) -> DataFrame:
-    rows = [
-        (r["media_id"], "audio", bytearray(r["payload"]),
-         {"width": None, "height": None, "sample_rate": r["sample_rate"],
-          "duration_ms": r["duration_ms"]})
-        for r in wav_media_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
 JPEG_FEATURES_SCHEMA = (
     "media_id long, width int, height int, n_components int, "
     "pixel_md5 string, mean_lum double, decode_error string"
@@ -499,34 +395,8 @@ def jpeg_features(media: DataFrame) -> DataFrame:
     the JPEG twin of :func:`png_features`. JPEG is the dominant image
     format of a real crawl corpus and the reference's MIME table treats
     it as first-class (src/converter/mod.rs:200-235)."""
-
-    def run(iterator):
-        for pdf in iterator:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    img = jpeg.decode_jpeg(data)
-                except jpeg.JpegError as e:
-                    rows.append((int(media_id), None, None, None, None,
-                                 None, str(e)))
-                    continue
-                px = np.frombuffer(img["pixels"], np.uint8)
-                rows.append((
-                    int(media_id), img["width"], img["height"],
-                    img["n_components"],
-                    hashlib.md5(img["pixels"]).hexdigest(),
-                    float(round(float(px.mean()), 6)), None,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_components",
-                         "pixel_md5", "mean_lum", "decode_error"],
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=JPEG_FEATURES_SCHEMA
-    )
+    return _pixel_features(media, JPEG_FEATURES_SCHEMA, jpeg.decode_jpeg,
+                           jpeg.JpegError, "n_components")
 
 
 def flac_media_payloads(n: int = 24, seed: int = 53) -> list[dict]:
@@ -565,17 +435,6 @@ def flac_media_payloads(n: int = 24, seed: int = 53) -> list[dict]:
             "peak": float(round(float(np.max(np.abs(q))), 6)),
         })
     return rows
-
-
-def synthesize_flac_media(spark, n: int = 24, seed: int = 53) -> DataFrame:
-    rows = [
-        (r["media_id"], "audio", bytearray(r["payload"]),
-         {"width": None, "height": None, "sample_rate": r["sample_rate"],
-          "duration_ms": r["duration_ms"]})
-        for r in flac_media_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
 
 
 def jpeg_media_payloads(n: int = 24, seed: int = 17) -> list[dict]:
@@ -668,17 +527,6 @@ def bmp_media_payloads(n: int = 24, seed: int = 13) -> list[dict]:
     return rows
 
 
-def synthesize_bmp_media(spark, n: int = 24, seed: int = 13) -> DataFrame:
-    rows = [
-        (r["media_id"], "image", bytearray(r["payload"]),
-         {"width": r["width"], "height": r["height"],
-          "sample_rate": None, "duration_ms": None})
-        for r in bmp_media_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
 def webp_media_payloads(n: int = 24, seed: int = 19) -> list[dict]:
     """Deterministic lossless-WebP media rows + ground truth, mirroring
     :func:`png_media_payloads`: RGBA pixels FIRST, encode with the
@@ -714,17 +562,6 @@ def webp_media_payloads(n: int = 24, seed: int = 19) -> list[dict]:
     return rows
 
 
-def synthesize_webp_media(spark, n: int = 24, seed: int = 19) -> DataFrame:
-    rows = [
-        (r["media_id"], "image", bytearray(r["payload"]),
-         {"width": r["width"], "height": r["height"],
-          "sample_rate": None, "duration_ms": None})
-        for r in webp_media_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
 def tiff_media_payloads(n: int = 24, seed: int = 43) -> list[dict]:
     """Deterministic TIFF media rows + ground truth, mirroring
     :func:`png_media_payloads`: pixels FIRST, encode with the minimal
@@ -756,28 +593,6 @@ def tiff_media_payloads(n: int = 24, seed: int = 43) -> list[dict]:
     return rows
 
 
-def synthesize_tiff_media(spark, n: int = 24, seed: int = 43) -> DataFrame:
-    rows = [
-        (r["media_id"], "image", bytearray(r["payload"]),
-         {"width": r["width"], "height": r["height"],
-          "sample_rate": None, "duration_ms": None})
-        for r in tiff_media_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
-def synthesize_jpeg_media(spark, n: int = 24, seed: int = 17) -> DataFrame:
-    rows = [
-        (r["media_id"], "image", bytearray(r["payload"]),
-         {"width": r["width"], "height": r["height"],
-          "sample_rate": None, "duration_ms": None})
-        for r in jpeg_media_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
 RESIZED_SCHEMA = (
     "media_id long, kind string, payload binary, "
     "meta struct<width:int, height:int, sample_rate:int, duration_ms:int>"
@@ -786,18 +601,6 @@ RESIZED_SCHEMA = (
 FRAMES_SCHEMA = (
     "media_id long, frame_idx int, ts_ms int, frame binary, n_bytes long"
 )
-
-
-def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
-    """Deterministic stand-in for decode->resize->encode (no PIL in this
-    container): derives width*height/16 printable bytes from the payload
-    hash. Swap for a real resampler on a cluster with imaging libs; the
-    Spark plumbing (binary in/out, meta rewrite, Arrow batching) is what
-    this module actually exercises."""
-    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big")
-    rng = np.random.default_rng(seed ^ (width << 16) ^ height)
-    idx = rng.integers(0, 62, size=max(16, width * height // 16))
-    return "".join(_B62[j] for j in idx).encode("ascii")
 
 
 def _nearest_resample(px: np.ndarray, width: int, height: int) -> np.ndarray:
@@ -810,48 +613,37 @@ def _nearest_resample(px: np.ndarray, width: int, height: int) -> np.ndarray:
     return px[ys][:, xs]
 
 
-def real_resize(data: bytes, width: int, height: int) -> bytes:
-    """Decode (PNG/GIF/JPEG by magic) -> nearest-neighbor resample ->
-    re-encode as PNG (lossless, so the resampled samples survive
-    byte-exactly for downstream verification). Raises the codec's error
-    for undecodable payloads."""
-    if data[:8] == png.MAGIC:
-        img = png.decode_png(data)
-        ch = img["channels"]
-    elif data[:6] in (b"GIF87a", b"GIF89a"):
-        img = gif.decode_gif(data)
-        ch = 3
-    elif data[:3] == jpeg.MAGIC:
-        img = jpeg.decode_jpeg(data)
-        ch = img["n_components"]
-    elif data[:2] == bmp.MAGIC:
-        img = bmp.decode_bmp(data)
-        ch = img["channels"]
-    elif data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        img = webp.decode_webp(data)
-        ch = img["channels"]
-    elif data[:4] in (tiff.MAGIC_LE, tiff.MAGIC_BE):
-        img = tiff.decode_tiff(data)
-        ch = img["channels"]
-    else:
-        raise NotImplementedError(
-            "resize beyond PNG/GIF/JPEG/BMP/WEBP-lossless/TIFF requires "
-            "PIL — enable on a real cluster and set FAKE_DECODE = False"
-        )
+def _resample_to_png(img: dict, channels: int, width: int,
+                     height: int) -> bytes:
     px = np.frombuffer(img["pixels"], np.uint8).reshape(
-        img["height"], img["width"], ch
+        img["height"], img["width"], channels
     )
     out = _nearest_resample(px, width, height)
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
+    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
     return png.encode_png(width, height, out.tobytes(), color_type=color_type)
+
+
+def real_resize(data: bytes, width: int, height: int) -> bytes:
+    """Decode (any :func:`_decode_image` format) -> nearest-neighbor
+    resample -> re-encode as PNG (lossless, so the resampled samples
+    survive byte-exactly for downstream verification). Raises the
+    codec's error for a corrupt payload and NotImplementedError for one
+    no codec recognizes."""
+    decoded = _decode_image(data)
+    if decoded is None:
+        raise NotImplementedError(
+            "unsupported format: resize decodes PNG/GIF/JPEG/BMP/"
+            "WEBP-lossless/TIFF"
+        )
+    return _resample_to_png(*decoded, width, height)
 
 
 def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFrame:
     """Resize every image row (other kinds pass through untouched),
     Arrow batch at a time; meta.width/height reflect the new size.
-    PNG/GIF/JPEG payloads decode + resample + re-encode (PNG out) for
-    REAL; only unrecognized formats fall to the fake under
-    ``FAKE_DECODE``."""
+    Payloads :func:`_decode_image` recognizes decode + resample +
+    re-encode (PNG out) for REAL, and a corrupt one raises; any other
+    payload gets the deterministic :func:`_fake_resize` stand-in."""
 
     def run(iterator):
         for pdf in iterator:
@@ -865,18 +657,11 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFr
                     metas.append(meta)
                     continue
                 data = bytes(payload) if payload is not None else b""
-                if (data[:8] == png.MAGIC
-                        or data[:6] in (b"GIF87a", b"GIF89a")
-                        or data[:3] == jpeg.MAGIC
-                        or data[:2] == bmp.MAGIC
-                        or data[:4] in (tiff.MAGIC_LE, tiff.MAGIC_BE)
-                        or (data[:4] == b"RIFF"
-                            and data[8:12] == b"WEBP")):
-                    resized = real_resize(data, width, height)
-                elif FAKE_DECODE:
+                decoded = _decode_image(data)
+                if decoded is None:
                     resized = _fake_resize(data, width, height)
-                else:  # pragma: no cover - needs PIL
-                    resized = _real_decode(data, kind)
+                else:
+                    resized = _resample_to_png(*decoded, width, height)
                 meta = dict(meta or {})
                 meta["width"], meta["height"] = width, height
                 payloads.append(bytearray(resized))
@@ -890,18 +675,14 @@ def resize_images(media: DataFrame, width: int = 32, height: int = 32) -> DataFr
 
 def sample_frames(media: DataFrame, every_ms: int = 250) -> DataFrame:
     """Video rows -> one output row per sampled instant at ``every_ms``
-    intervals (non-video rows emit nothing). Animated-GIF payloads
-    decode for REAL (:func:`kernels.gif.decode_gif_frames` — LZW, GCE
-    delay timeline), and MJPEG AVI payloads decode for REAL too
-    (:func:`kernels.avi.decode_avi_frames` — RIFF walk + per-frame
-    baseline JPEG under the strh constant-rate timeline): the emitted
-    ``frame`` is the raw pixel bytes of the frame active at that
-    instant, exercising genuine multi-frame containers end-to-end.
-    MJPEG MP4s decode via the ISO-BMFF walker (kernels/mp4.py). Other
-    video codecs (h264/hevc bitstreams) still require ffmpeg:
-    deterministic fake under ``FAKE_DECODE``, loud NotImplementedError
-    otherwise."""
-    import bisect
+    intervals (non-video rows emit nothing). Animated GIF (LZW, GCE
+    delay timeline), MJPEG AVI (RIFF walk + per-frame baseline JPEG
+    under the strh constant-rate timeline) and MJPEG MP4 (ISO-BMFF
+    walker) payloads decode for REAL through :func:`_decode_video`: the
+    emitted ``frame`` is the raw pixel bytes of the frame active at that
+    instant, and a corrupt payload raises. Any other payload (h264/hevc
+    bitstreams need ffmpeg) gets deterministic :func:`_fake_frame`
+    stand-ins over ``meta.duration_ms``."""
 
     def run(iterator):
         for pdf in iterator:
@@ -912,55 +693,22 @@ def sample_frames(media: DataFrame, every_ms: int = 250) -> DataFrame:
                 if kind != "video":
                     continue
                 data = bytes(payload) if payload is not None else b""
-                if data[:6] in (b"GIF87a", b"GIF89a"):
-                    anim = gif.decode_gif_frames(data)
-                    starts = [f["ts_ms"] for f in anim["frames"]]
-                    n_samples = max(1, anim["duration_ms"] // every_ms)
-                    for i in range(n_samples):
-                        ts = i * every_ms
-                        j = max(0, bisect.bisect_right(starts, ts) - 1)
-                        frame = anim["frames"][j]["pixels"]
-                        rows.append((
-                            int(media_id), i, ts, bytearray(frame),
-                            len(frame),
-                        ))
-                    continue
-                if data[4:8] == b"ftyp":
-                    mov = mp4.decode_mp4_frames(data)
+                mov = _decode_video(data)
+                if mov is None:
+                    duration = int((meta or {}).get("duration_ms") or 0)
+                    frames = [_fake_frame(data, i)
+                              for i in range(max(1, duration // every_ms))]
+                else:
                     starts = [f["ts_ms"] for f in mov["frames"]]
-                    n_samples = max(1, mov["duration_ms"] // every_ms)
-                    for i in range(n_samples):
-                        ts = i * every_ms
-                        j = max(0, bisect.bisect_right(starts, ts) - 1)
-                        frame = mov["frames"][j]["pixels"]
-                        rows.append((
-                            int(media_id), i, ts, bytearray(frame),
-                            len(frame),
-                        ))
-                    continue
-                if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-                    mov = avi.decode_avi_frames(data)
-                    starts = [f["ts_ms"] for f in mov["frames"]]
-                    n_samples = max(1, mov["duration_ms"] // every_ms)
-                    for i in range(n_samples):
-                        ts = i * every_ms
-                        j = max(0, bisect.bisect_right(starts, ts) - 1)
-                        frame = mov["frames"][j]["pixels"]
-                        rows.append((
-                            int(media_id), i, ts, bytearray(frame),
-                            len(frame),
-                        ))
-                    continue
-                duration = int((meta or {}).get("duration_ms") or 0)
-                n_frames = max(1, duration // every_ms)
-                for i in range(n_frames):
-                    ts = i * every_ms
-                    if FAKE_DECODE:
-                        frame = _fake_frame(data, i)
-                    else:  # pragma: no cover - needs ffmpeg
-                        frame = _real_decode(data, kind)
+                    frames = [
+                        mov["frames"][max(0, bisect.bisect_right(
+                            starts, i * every_ms) - 1)]["pixels"]
+                        for i in range(max(1, mov["duration_ms"] // every_ms))
+                    ]
+                for i, frame in enumerate(frames):
                     rows.append((
-                        int(media_id), i, ts, bytearray(frame), len(frame)
+                        int(media_id), i, i * every_ms, bytearray(frame),
+                        len(frame),
                     ))
             yield pd.DataFrame(
                 rows,
@@ -1011,17 +759,6 @@ def gif_video_payloads(n: int = 12, seed: int = 23,
             "duration_ms": duration, "samples": samples,
         })
     return rows
-
-
-def synthesize_gif_video_media(spark, n: int = 12, seed: int = 23) -> DataFrame:
-    rows = [
-        (r["media_id"], "video", bytearray(r["payload"]),
-         {"width": r["width"], "height": r["height"],
-          "sample_rate": None, "duration_ms": r["duration_ms"]})
-        for r in gif_video_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
 
 
 def _mjpeg_video_payloads(build, n: int, seed: int,
@@ -1095,37 +832,18 @@ def mp4_video_payloads(n: int = 12, seed: int = 61,
     )
 
 
-def synthesize_mp4_video_media(spark, n: int = 12, seed: int = 61) -> DataFrame:
-    rows = [
-        (r["media_id"], "video", bytearray(r["payload"]),
-         {"width": r["width"], "height": r["height"],
-          "sample_rate": None, "duration_ms": r["duration_ms"]})
-        for r in mp4_video_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
+def media_table(spark, kind: str, rows: list[dict]) -> DataFrame:
+    """Spark table (``MEDIA_SCHEMA``) of one ``kind`` over any
+    ``*_payloads`` generator's rows; ``meta`` carries whichever of
+    width / height / sample_rate / duration_ms each row has."""
+    pdf = pd.DataFrame(
+        [(r["media_id"], kind, bytearray(r["payload"]),
+          {f: r.get(f) for f in ("width", "height", "sample_rate",
+                                 "duration_ms")})
+         for r in rows],
+        columns=["media_id", "kind", "payload", "meta"],
+    )
     return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
-def synthesize_avi_video_media(spark, n: int = 12, seed: int = 37) -> DataFrame:
-    rows = [
-        (r["media_id"], "video", bytearray(r["payload"]),
-         {"width": r["width"], "height": r["height"],
-          "sample_rate": None, "duration_ms": r["duration_ms"]})
-        for r in avi_video_payloads(n, seed)
-    ]
-    pdf = pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)
-
-
-def _fake_frame(payload: bytes, frame_idx: int) -> bytes:
-    """Deterministic printable frame bytes derived from (payload, idx)."""
-    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big")
-    rng = np.random.default_rng(seed + frame_idx)
-    idx = rng.integers(0, 62, size=48)
-    return "".join(_B62[j] for j in idx).encode("ascii")
-
-
-_B62 = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 
 
 def media_payloads(n: int = 64, seed: int = 42) -> list[tuple[int, str, bytes]]:

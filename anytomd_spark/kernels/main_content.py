@@ -40,7 +40,6 @@ BLOCK_TAGS = frozenset((
     "tfoot", "th", "thead", "tr", "ul",
 ))
 SKIP_TAGS = frozenset(("script", "style", "template", "noscript", "svg"))
-_VOID = frozenset(("br", "hr", "img", "input", "meta", "link"))
 
 
 @dataclass

@@ -26,10 +26,6 @@ class Mp4Error(ValueError):
     """Not an ISO-BMFF file or unsupported layout."""
 
 
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"dinf",
-               b"edts", b"udta", b"mvex"}
-
-
 def _boxes(data: bytes, pos: int, end: int):
     """Yield (fourcc, body_start, body_end) for each box in range."""
     while pos + 8 <= end:

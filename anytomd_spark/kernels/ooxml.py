@@ -48,12 +48,6 @@ def read_zip_bytes(zf: zipfile.ZipFile, path: str) -> bytes | None:
         return None
 
 
-def local_name(tag: str) -> str:
-    """``w:p`` -> ``p`` (quick-xml ``local_name`` equivalent)."""
-    # rfind returns -1 when there is no prefix, so +1 yields the full tag
-    return tag[tag.rfind(":") + 1:]
-
-
 def parse_xml_events(xml: str, start, end, text) -> None:
     """Stream SAX events through the given callbacks.
 

@@ -407,10 +407,6 @@ def _decode_image_stream(br: _BitReader, w: int, h: int, level0: bool,
 # inverse transforms
 # --------------------------------------------------------------------------
 
-def _avg2(a, b):
-    return ((a >> 1) + (b >> 1) + (a & b & 0x01010101)) & 0xFFFFFFFF
-
-
 def _channels(px: int) -> tuple[int, int, int, int]:
     return (px >> 24) & 0xFF, (px >> 16) & 0xFF, (px >> 8) & 0xFF, px & 0xFF
 

@@ -527,14 +527,15 @@ def test_png_features_real_decode_matches_generator_truth(spark):
     (all five filter types, all five color types) inside Arrow batches
     and must recover the generator's original pixels exactly."""
     from anytomd_spark.analysis.multimodal import (
+        media_table,
         png_features,
         png_media_payloads,
-        synthesize_png_media,
     )
 
-    truth = {r["media_id"]: r for r in png_media_payloads(24)}
+    rows = png_media_payloads(24)
+    truth = {r["media_id"]: r for r in rows}
     got = {r.media_id: r
-           for r in png_features(synthesize_png_media(spark, 24)).collect()}
+           for r in png_features(media_table(spark, "image", rows)).collect()}
     assert set(got) == set(truth)
     for mid, t in truth.items():
         g = got[mid]
@@ -566,8 +567,8 @@ def test_png_features_corrupt_payload_per_row_error(spark):
 
 def test_extract_features_png_branch_is_real(spark):
     """extract_features routes PNG-magic image payloads through the real
-    decoder (features = [w, h, channels, mean]) while non-PNG media keep
-    the FAKE_DECODE stand-in."""
+    decoder (features = [w, h, channels, mean]) while payloads no codec
+    recognizes keep the deterministic stand-in."""
     import pandas as pd
 
     from anytomd_spark.analysis.multimodal import (
@@ -1303,79 +1304,97 @@ def test_real_resize_png_gif_jpeg():
 
 
 def test_extract_features_mixed_format_dispatch(spark):
-    """Every real codec family through ONE extract_features pass: the
-    magic-byte dispatch must route each payload to its decoder with
-    zero decode errors and format-correct leading features."""
+    """Every codec family through ONE extract_features pass: the
+    magic-byte dispatch must route each payload to its decoder, and every
+    row's full feature vector must match its generator — images (w, h,
+    channels, mean sample), SVG (w, h, element count, text length), audio
+    (rate, channels, duration_ms, rms), video (w, h, frame count,
+    duration_ms). A payload no codec recognizes gets the 16-float
+    deterministic stand-in; a corrupt one lands in decode_error."""
+    import numpy as np
     from pyspark.sql import functions as F
 
-    from anytomd_spark.analysis.multimodal import (
-        synthesize_mp4_video_media,
-        synthesize_avi_video_media,
-        synthesize_bmp_media,
-        synthesize_flac_media,
-        synthesize_gif_media,
-        synthesize_jpeg_media,
-        synthesize_png_media,
-        synthesize_gif_video_media,
-        synthesize_tiff_media,
-        synthesize_wav_media,
-        synthesize_webp_media,
-    )
+    from anytomd_spark.analysis import multimodal as MM
+    from anytomd_spark.kernels import svg
+
+    def pixels(depth):
+        return lambda r: [r["width"], r["height"],
+                          r[depth] if isinstance(depth, str) else depth,
+                          r["mean_lum"]]
+
+    def audio(r):
+        return [r["sample_rate"], r["channels"], r["duration_ms"], r["rms"]]
+
+    def video(r):
+        # every video generator cycles its frame count as 2 + i % 3
+        return [r["width"], r["height"], 2 + r["media_id"] % 3,
+                r["duration_ms"]]
+
+    svg_rows = []
+    for i in range(4):
+        shapes = ["rect", "circle", "path"][: i % 3 + 1]
+        texts = ["hello", "vector world"][: i % 3]
+        svg_rows.append({
+            "media_id": i, "width": 10 + i, "height": 20 + i,
+            "payload": svg.build_svg(10 + i, 20 + i, shapes, texts),
+            "features": [10 + i, 20 + i, 1 + len(shapes) + len(texts),
+                         len(" ".join(texts))],
+        })
 
     n = 4
-    parts = [
-        ("png", synthesize_png_media(spark, n=n)),
-        ("gif", synthesize_gif_media(spark, n=n)),
-        ("jpeg", synthesize_jpeg_media(spark, n=n)),
-        ("bmp", synthesize_bmp_media(spark, n=n)),
-        ("webp", synthesize_webp_media(spark, n=n)),
-        ("tiff", synthesize_tiff_media(spark, n=n)),
-        ("wav", synthesize_wav_media(spark, n=n)),
-        ("flac", synthesize_flac_media(spark, n=n)),
-        ("gifv", synthesize_gif_video_media(spark, n=n)),
-        ("avi", synthesize_avi_video_media(spark, n=n)),
-        ("mp4", synthesize_mp4_video_media(spark, n=n)),
+    png_rows, wav_rows = MM.png_media_payloads(n), MM.wav_media_payloads(n)
+    avi_rows = MM.avi_video_payloads(n)
+    families = [
+        ("image", png_rows, pixels("channels")),
+        ("image", MM.gif_media_payloads(n), pixels(3)),
+        ("image", MM.jpeg_media_payloads(n), pixels("n_components")),
+        ("image", MM.bmp_media_payloads(n), pixels("channels")),
+        ("image", MM.webp_media_payloads(n), pixels("channels")),
+        ("image", MM.tiff_media_payloads(n), pixels("channels")),
+        ("image", svg_rows, lambda r: r["features"]),
+        ("audio", wav_rows, audio),
+        ("audio", MM.flac_media_payloads(n), audio),
+        ("video", MM.gif_video_payloads(n), video),
+        ("video", avi_rows, video),
+        ("video", MM.mp4_video_payloads(n), video),
     ]
-    media = None
-    for off, (_, df) in enumerate(parts):
-        df = df.withColumn("media_id", F.col("media_id") + 100 * off)
-        media = df if media is None else media.union(df)
-    out = {r["media_id"]: r for r in extract_features(media).collect()}
-    assert len(out) == 11 * n
-    assert all(r["decode_error"] is None for r in out.values())
-    # leading features: (w, h, ...) for images, (rate, channels, ...)
-    # for audio — spot-check one row per family against its generator
-    from anytomd_spark.analysis.multimodal import (
-        avi_video_payloads,
-        bmp_media_payloads,
-        flac_media_payloads,
-        gif_media_payloads,
-        gif_video_payloads,
-        mp4_video_payloads,
-        jpeg_media_payloads,
-        png_media_payloads,
-        tiff_media_payloads,
-        wav_media_payloads,
-        webp_media_payloads,
-    )
+    unrecognized = [
+        (kind, {"media_id": 0, "payload": b"no codec knows this " + kind.encode()})
+        for kind in ("image", "audio", "video")
+    ]
+    corrupt = [
+        ("image", {"media_id": 0, "payload": png_rows[0]["payload"][:40]}),
+        ("image", {"media_id": 1, "payload": b"<svg><rect></svg>"}),
+        ("audio", {"media_id": 0, "payload": wav_rows[0]["payload"][:20]}),
+        ("video", {"media_id": 0, "payload": avi_rows[0]["payload"][:60]}),
+    ]
 
-    gens = [png_media_payloads(n), gif_media_payloads(n),
-            jpeg_media_payloads(n), bmp_media_payloads(n),
-            webp_media_payloads(n), tiff_media_payloads(n),
-            wav_media_payloads(n), flac_media_payloads(n),
-            gif_video_payloads(n), avi_video_payloads(n),
-            mp4_video_payloads(n)]
-    for off, rows in enumerate(gens):
-        r0 = rows[0]
-        feats = out[100 * off]["features"]
-        if "duration_ms" in r0 and "width" in r0:   # video rows
-            assert feats[0] == r0["width"] and feats[1] == r0["height"]
-            assert feats[3] == r0["duration_ms"]
-        elif "width" in r0:
-            assert feats[0] == r0["width"] and feats[1] == r0["height"]
+    media, expected = None, {}
+    parts = (families
+             + [(kind, [row], None) for kind, row in unrecognized]
+             + [(kind, [row], []) for kind, row in corrupt])
+    for off, (kind, rows, feats) in enumerate(parts):
+        for r in rows:
+            mid = 100 * off + r["media_id"]
+            if feats is None:  # the 16-float deterministic stand-in
+                expected[mid] = MM._fake_features(r["payload"], 16)
+            elif callable(feats):
+                expected[mid] = [float(np.float32(x)) for x in feats(r)]
+            else:
+                expected[mid] = feats
+        df = MM.media_table(spark, kind, rows).withColumn(
+            "media_id", F.col("media_id") + 100 * off)
+        media = df if media is None else media.union(df)
+
+    out = {r["media_id"]: r for r in extract_features(media).collect()}
+    assert set(out) == set(expected)
+    for mid, want in expected.items():
+        r = out[mid]
+        assert list(r["features"]) == want, mid
+        if want:
+            assert r["decode_error"] is None, (mid, r["decode_error"])
         else:
-            assert feats[0] == r0["sample_rate"]
-            assert feats[1] == r0["channels"]
+            assert r["decode_error"], mid
 
 
 def test_cross_codec_differential_consistency():
