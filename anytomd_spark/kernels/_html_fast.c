@@ -309,11 +309,12 @@ typedef struct {
     int oom;
 } walker_t;
 
-static void row_init(row_t *r) {
-    buf_init(&r->cells, 64);
+static int row_init(row_t *r) {
+    int ok = buf_init(&r->cells, 64);
     r->offs = (size_t *)malloc(8 * sizeof(size_t));
     r->n = 0;
     r->cap = 8;
+    return ok && r->offs != NULL;
 }
 
 static void row_free(row_t *r) {
@@ -452,18 +453,19 @@ static void handle_text(walker_t *w, const char *raw, size_t n) {
             break;
         }
     }
-    buf_t scratch;
+    buf_t scratch = {0};
     const char *col = raw;
     size_t coln = n;
     if (needs) {
         if (!buf_init(&scratch, n)) { w->oom = 1; return; }
         size_t i = 0;
         while (i < n) {
+            /* collapsing only shrinks: scratch never grows past n */
             if (is_collapse_ws((unsigned char)raw[i])) {
-                buf_pushc(&scratch, ' ');
+                scratch.d[scratch.len++] = ' ';
                 while (i < n && is_collapse_ws((unsigned char)raw[i])) i++;
             } else {
-                buf_pushc(&scratch, raw[i]);
+                scratch.d[scratch.len++] = raw[i];
                 i++;
             }
         }
@@ -526,24 +528,26 @@ static void format_heading(walker_t *w, int level, const char *s, size_t n) {
     md_push(w, "\n", 1);
 }
 
-/* escape_cell into dst */
-static void escape_cell(buf_t *dst, const char *s, size_t n) {
+/* escape_cell into dst; 0 on allocation failure */
+static int escape_cell(buf_t *dst, const char *s, size_t n) {
     int needs = 0;
     for (size_t i = 0; i < n; i++) {
         char c = s[i];
         if (c == '\\' || c == '|' || c == '\n' || c == '\r') { needs = 1; break; }
     }
-    if (!needs) { buf_push(dst, s, n); return; }
-    for (size_t i = 0; i < n; i++) {
+    if (!needs) return buf_push(dst, s, n);
+    int ok = 1;
+    for (size_t i = 0; i < n && ok; i++) {
         char c = s[i];
-        if (c == '\\') buf_push(dst, "\\\\", 2);
-        else if (c == '|') buf_push(dst, "\\|", 2);
+        if (c == '\\') ok = buf_push(dst, "\\\\", 2);
+        else if (c == '|') ok = buf_push(dst, "\\|", 2);
         else if (c == '\r') {
-            if (i + 1 < n && s[i + 1] == '\n') { buf_push(dst, "<br>", 4); i++; }
+            if (i + 1 < n && s[i + 1] == '\n') { ok = buf_push(dst, "<br>", 4); i++; }
             /* lone \r dropped */
-        } else if (c == '\n') buf_push(dst, "<br>", 4);
-        else buf_pushc(dst, c);
+        } else if (c == '\n') ok = buf_push(dst, "<br>", 4);
+        else ok = buf_pushc(dst, c);
     }
+    return ok;
 }
 
 /* ------------------------------------------------------------------ */
@@ -576,7 +580,7 @@ static void open_handler(walker_t *w, int id, const char *href, size_t hrefn,
     case T_A:
         w->pl_active = 1;
         w->pl_href.len = 0;
-        buf_push(&w->pl_href, href ? href : "", href ? hrefn : 0);
+        CHECK(w, buf_push(&w->pl_href, href ? href : "", href ? hrefn : 0));
         w->pl_start = w->out.len;
         break;
     case T_IMG: {
@@ -713,50 +717,58 @@ static void render_table(walker_t *w) {
     size_t nc = headers->n;
     if (nc == 0) { free(rows); return; }
 
+/* a failed allocation leaves the table unrendered and the walk OOM */
+#define TRY(x) do { if (!(x)) goto oom; } while (0)
+    buf_t md = {0}, pl = {0};
     /* markdown table */
-    buf_t md;
-    buf_init(&md, 256);
-    buf_push(&md, "| ", 2);
+    TRY(buf_init(&md, 256));
+    TRY(buf_push(&md, "| ", 2));
     for (size_t i = 0; i < nc; i++) {
-        if (i) buf_push(&md, " | ", 3);
+        if (i) TRY(buf_push(&md, " | ", 3));
         const char *c = row_get(headers, i);
-        escape_cell(&md, c, strlen(c));
+        TRY(escape_cell(&md, c, strlen(c)));
     }
-    buf_push(&md, " |\n|", 4);
-    for (size_t i = 0; i < nc; i++) buf_push(&md, "---|", 4);
-    buf_pushc(&md, '\n');
+    TRY(buf_push(&md, " |\n|", 4));
+    for (size_t i = 0; i < nc; i++) TRY(buf_push(&md, "---|", 4));
+    TRY(buf_pushc(&md, '\n'));
     for (size_t r = 0; r < nrows; r++) {
         row_t *row = rows[r];
-        buf_push(&md, "| ", 2);
+        TRY(buf_push(&md, "| ", 2));
         for (size_t i = 0; i < nc; i++) {
-            if (i) buf_push(&md, " | ", 3);
+            if (i) TRY(buf_push(&md, " | ", 3));
             const char *c = i < row->n ? row_get(row, i) : "";
-            escape_cell(&md, c, strlen(c));
+            TRY(escape_cell(&md, c, strlen(c)));
         }
-        buf_push(&md, " |\n", 3);
+        TRY(buf_push(&md, " |\n", 3));
     }
     md_push(w, md.d, md.len);
     free(md.d);
+    md.d = NULL;
 
     /* plain table */
-    buf_t pl;
-    buf_init(&pl, 256);
+    TRY(buf_init(&pl, 256));
     for (size_t i = 0; i < nc; i++) {
-        if (i) buf_pushc(&pl, '\t');
+        if (i) TRY(buf_pushc(&pl, '\t'));
         const char *c = row_get(headers, i);
-        buf_push(&pl, c, strlen(c));
+        TRY(buf_push(&pl, c, strlen(c)));
     }
-    buf_pushc(&pl, '\n');
+    TRY(buf_pushc(&pl, '\n'));
     for (size_t r = 0; r < nrows; r++) {
         row_t *row = rows[r];
         for (size_t i = 0; i < nc; i++) {
-            if (i) buf_pushc(&pl, '\t');
+            if (i) TRY(buf_pushc(&pl, '\t'));
             const char *c = i < row->n ? row_get(row, i) : "";
-            buf_push(&pl, c, strlen(c));
+            TRY(buf_push(&pl, c, strlen(c)));
         }
-        buf_pushc(&pl, '\n');
+        TRY(buf_pushc(&pl, '\n'));
     }
     pl_push(w, pl.d, pl.len);
+    goto done;
+#undef TRY
+oom:
+    w->oom = 1;
+done:
+    free(md.d);
     free(pl.d);
     free(rows);
 }
@@ -872,7 +884,7 @@ static void close_handler(walker_t *w, int id) {
                     w->tbl_rowcap = nc;
                 }
                 row_t *dst = &w->tbl_rows[w->tbl_nrows++];
-                row_init(dst);
+                if (!row_init(dst)) { w->oom = 1; return; }
                 for (size_t i = 0; i < w->tbl_currow.n; i++) {
                     const char *c = row_get(&w->tbl_currow, i);
                     if (!row_add(dst, c, strlen(c))) { w->oom = 1; return; }
@@ -945,7 +957,7 @@ static void handle_close_tag(walker_t *w, int id, const char *name,
             u_strip(w->ti_cap.d, w->ti_cap.len, &a, &b2);
             if (b2 > a && !w->ti_done) {
                 w->ti_text.len = 0;
-                buf_push(&w->ti_text, w->ti_cap.d + a, b2 - a);
+                CHECK(w, buf_push(&w->ti_text, w->ti_cap.d + a, b2 - a));
                 w->ti_done = 1;
             }
             w->ti_active = 0;
@@ -955,7 +967,7 @@ static void handle_close_tag(walker_t *w, int id, const char *name,
             u_strip(w->h1_cap.d, w->h1_cap.len, &a, &b2);
             if (b2 > a && !w->h1_done) {
                 w->h1_text.len = 0;
-                buf_push(&w->h1_text, w->h1_cap.d + a, b2 - a);
+                CHECK(w, buf_push(&w->h1_text, w->h1_cap.d + a, b2 - a));
                 w->h1_done = 1;
             }
             w->h1_active = 0;
@@ -1260,18 +1272,17 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
     const unsigned char *s = (const unsigned char *)input;
     walker_t w;
     memset(&w, 0, sizeof(w));
-    buf_init(&w.out, n + 64);
-    buf_init(&w.plain, n + 64);
-    buf_init(&w.pl_href, 32);
-    buf_init(&w.tbl_cell, 64);
-    row_init(&w.tbl_headers);
-    row_init(&w.tbl_currow);
+    *md_out = *pl_out = *ti_out = NULL;
+    *has_title = 0;
+    /* & not &&: every buffer gets initialised, so all can be freed */
+    int ok = buf_init(&w.out, n + 64) & buf_init(&w.plain, n + 64) &
+             buf_init(&w.pl_href, 32) & buf_init(&w.tbl_cell, 64) &
+             row_init(&w.tbl_headers) & row_init(&w.tbl_currow) &
+             buf_init(&w.ti_cap, 32) & buf_init(&w.h1_cap, 32) &
+             buf_init(&w.ti_text, 32) & buf_init(&w.h1_text, 32);
     w.tbl_rows = (row_t *)malloc(8 * sizeof(row_t));
     w.tbl_rowcap = 8;
-    buf_init(&w.ti_cap, 32);
-    buf_init(&w.h1_cap, 32);
-    buf_init(&w.ti_text, 32);
-    buf_init(&w.h1_text, 32);
+    if (!ok || !w.tbl_rows) w.oom = 1;
 
     size_t pos = 0;
     while (pos < n && !w.bail && !w.oom) {
@@ -1466,10 +1477,17 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
                 }
             } else {
                 *has_title = 0;
-                *ti_out = NULL;
                 *ti_len = 0;
             }
         }
+    }
+    if (rc != 0) {
+        /* no partial result survives an error */
+        free(*md_out);
+        free(*pl_out);
+        free(*ti_out);
+        *md_out = *pl_out = *ti_out = NULL;
+        *has_title = 0;
     }
     free(w.out.d);
     free(w.plain.d);

@@ -16,11 +16,10 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import pkgutil
 import subprocess
 import tempfile
 import threading
-
-_C_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_html_fast.c")
 
 _lib = None
 _tried = False
@@ -28,8 +27,9 @@ _tried = False
 
 def _build() -> "ctypes.CDLL | None":
     try:
-        with open(_C_SRC, "rb") as f:
-            src = f.read()
+        # through the package loader, so the source is found when the
+        # package is imported from a zip (--py-files, the shipped zip)
+        src = pkgutil.get_data(__package__, "_html_fast.c")
         token = hashlib.md5(src).hexdigest()[:16]
         so_path = os.path.join(
             tempfile.gettempdir(), f"anytomd_html_fast_{token}.so"
@@ -37,7 +37,8 @@ def _build() -> "ctypes.CDLL | None":
         if not os.path.exists(so_path):
             tmp = so_path + f".build{os.getpid()}"
             subprocess.run(
-                ["cc", "-O2", "-fPIC", "-shared", "-o", tmp, _C_SRC],
+                ["cc", "-O2", "-fPIC", "-shared", "-o", tmp, "-x", "c", "-"],
+                input=src,
                 check=True,
                 capture_output=True,
                 timeout=120,

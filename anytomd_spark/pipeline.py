@@ -42,6 +42,19 @@ local[32]):
     option is set, so executors on a cluster keep C2; under
     ``spark-submit`` the driver JVM already exists, so pass
     ``--driver-java-options`` there instead.
+  * The conversion binding drops the worker's cached ``zipimporter``s
+    before its first batch (``_drop_zip_importers``). pyspark calls
+    ``importlib.invalidate_caches()`` at every task start, and on
+    CPython 3.11 each cached ``zipimporter`` then re-reads its archive's
+    whole directory: on a 4-core VM with Spark 4.1.2, 17 reads a task,
+    mostly ``pyspark.zip`` (1,328 entries, 12 times) and ``spark-core``'s
+    jar (5,359 entries, twice), about 0.19 CPU-s per Python task
+    whatever its size. On a warm 6k-turn web pass (32 Python tasks) that
+    was 6.1 of the workers' 14.1 CPU-s, nearly as much as the
+    ``mapInPandas`` generator itself (6.3). The drop sits in the one
+    conversion binding, so ``run_pipeline``, ``job.py`` and the stream
+    all get it, and every conversion task after a worker's first skips
+    the re-reads.
 """
 
 from __future__ import annotations
@@ -150,7 +163,13 @@ def build_session(
 
 def _ship_package(spark: SparkSession) -> None:
     """Ship anytomd_spark to the Python workers (the --py-files analogue
-    for library/driver-side use; idempotent per session)."""
+    for library/driver-side use; idempotent per session).
+
+    The zip holds the package's ``.py`` files and the native walker's C
+    source. It is rebuilt on every ship, under a temporary name and then
+    moved onto ``anytomd_spark_<pid>.zip`` in the temp dir, so a file
+    that an earlier process with the same pid left there is never
+    shipped."""
     sc = spark.sparkContext
     if getattr(sc, "_anytomd_shipped", False):
         return
@@ -164,16 +183,41 @@ def _ship_package(spark: SparkSession) -> None:
     zip_path = os.path.join(
         tempfile.gettempdir(), f"anytomd_spark_{os.getpid()}.zip"
     )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
+    fd, tmp = tempfile.mkstemp(
+        suffix=".zip.tmp", dir=os.path.dirname(zip_path)
+    )
+    try:
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for name in files:
-                    if name.endswith(".py"):
+                    if name.endswith((".py", ".c")):
                         full = os.path.join(root, name)
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         zf.write(full, rel)
+        os.replace(tmp, zip_path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     sc.addPyFile(zip_path)
     sc._anytomd_shipped = True
+
+
+def _drop_zip_importers() -> None:
+    """Forget the cached ``zipimporter`` of every zip on the import path.
+
+    A Python worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, and on CPython 3.11 each cached ``zipimporter`` then
+    re-reads its archive's whole directory. Dropping them is safe: the
+    path hook rebuilds a finder from ``zipimport._zip_directory_cache``
+    without reading the archive again, modules already imported keep
+    their own loaders, and a newly shipped zip has a new path."""
+    import sys
+    import zipimport
+
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
 
 
 # salt width of convert_transcripts' repartition: a mega-conversation is
@@ -218,6 +262,8 @@ def convert_transcripts(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
     def _convert_iter(iterator):
+        # runs in the worker: later tasks there skip the zip re-reads
+        _drop_zip_importers()
         for pdf in iterator:
             yield convert_batch(
                 pdf, strict=strict, max_input_bytes=max_input_bytes

@@ -11,7 +11,11 @@ assert that equivalence.
 
 from __future__ import annotations
 
+import json
+import pkgutil
 import random
+import subprocess
+import sys
 
 import pytest
 from hypothesis import given, settings
@@ -147,3 +151,146 @@ class TestNativeDifferential:
     @settings(max_examples=200 * _FUZZ_MULT, deadline=2000)
     def test_arbitrary_text_native_differential(self, s):
         _assert_native_matches(s)
+
+
+# Force-included ahead of _html_fast.c: allocation number k fails (and,
+# when sticky, every one after it), and every live allocation is counted
+# so a leak shows.
+_BUDGET_H = r"""
+#define _GNU_SOURCE
+#include <stdlib.h>
+static long fail_at = -1, n_calls, n_live;
+static int sticky;
+static int budget_spent(void) {
+    n_calls++;
+    return fail_at >= 0 &&
+           (n_calls == fail_at + 1 || (sticky && n_calls > fail_at));
+}
+static void *budget_malloc(size_t n) {
+    void *p = budget_spent() ? NULL : malloc(n);
+    if (p) n_live++;
+    return p;
+}
+static void *budget_realloc(void *q, size_t n) {
+    void *p = budget_spent() ? NULL : realloc(q, n);
+    if (p && !q) n_live++;
+    return p;
+}
+static void budget_free(void *p) {
+    if (p) n_live--;
+    free(p);
+}
+void budget_set(long k, int all_after) {
+    fail_at = k;
+    sticky = all_after;
+    n_calls = 0;
+}
+long budget_calls(void) { return n_calls; }
+long budget_live(void) { return n_live; }
+#define malloc budget_malloc
+#define realloc budget_realloc
+#define free budget_free
+"""
+
+# Runs in a child process, so a crash fails the test instead of the run.
+_SWEEP = r"""
+import ctypes, json, sys
+lib = ctypes.CDLL(sys.argv[1])
+doc = open(sys.argv[2], "rb").read()
+P = ctypes.POINTER
+lib.html_convert.restype = ctypes.c_int
+lib.html_convert.argtypes = (
+    [ctypes.c_char_p, ctypes.c_size_t]
+    + [P(ctypes.c_char_p), P(ctypes.c_size_t)] * 3 + [P(ctypes.c_int)])
+lib.html_free.restype = None
+lib.html_free.argtypes = [ctypes.c_char_p]
+lib.budget_set.restype = None
+lib.budget_set.argtypes = [ctypes.c_long, ctypes.c_int]
+lib.budget_calls.restype = lib.budget_live.restype = ctypes.c_long
+out = [ctypes.c_char_p(), ctypes.c_size_t(), ctypes.c_char_p(),
+       ctypes.c_size_t(), ctypes.c_char_p(), ctypes.c_size_t(),
+       ctypes.c_int()]
+
+def run(k, sticky=0):
+    lib.budget_set(k, sticky)
+    rc = lib.html_convert(doc, len(doc), *[ctypes.byref(v) for v in out])
+    live = lib.budget_live()
+    got = None
+    if rc == 0:
+        md, mdn, pl, pln, ti, tin, has_ti = out
+        got = [ctypes.string_at(md, mdn.value).decode(),
+               ctypes.string_at(pl, pln.value).decode(),
+               ctypes.string_at(ti, tin.value).decode()
+               if has_ti.value else None]
+        for p in (md, pl, ti):
+            lib.html_free(p)
+    return rc, got, live, lib.budget_live()
+
+rc, want, _, left = run(-1)
+n_allocs = lib.budget_calls()
+runs = [run(k, sticky) for sticky in (0, 1) for k in range(n_allocs + 1)]
+print(json.dumps({"rc": rc, "want": want, "left": left,
+                  "n_allocs": n_allocs, "runs": runs}))
+"""
+
+
+def _table_heavy_doc() -> str:
+    rows = "".join(
+        f"<tr><td>r{r} a|b</td><td>back\\slash {r}</td>"
+        f"<td>line\none\r\ntwo</td>"
+        + "".join(f"<td>c{c}</td>" for c in range(10)) + "</tr>"
+        for r in range(12)
+    )
+    head = "<thead><tr>" + "".join(
+        f"<th>h{c}</th>" for c in range(13)) + "</tr></thead>"
+    return (
+        # title, h1 and href outgrow their 32-byte starting buffers
+        "<html><head><title>Quarterly tables, with every cell escaped"
+        "</title></head><body><h1>Report on the quarterly tables, in full"
+        "</h1><p>Intro <a href='/reports/2024/quarterly/tables.html'>"
+        "link</a> and <b>bold</b>.</p>"
+        f"<table>{head}<tbody>{rows}</tbody></table>"
+        "<ul><li>one</li><li>two</li></ul>"
+        f"<table>{rows}</table><pre>x  y\n z</pre>"
+        "<blockquote><p>quoted</p></blockquote><table><tr><td>open"
+    )
+
+
+@needs_native
+def test_allocation_failures_return_oom_or_identical_output(tmp_path):
+    """Every allocation of a table-heavy document is failed in turn, alone
+    and with all later ones: the walker either returns 0 with the
+    unbudgeted output or returns 1, never crashes, and an error leaves no
+    allocation behind."""
+    header = tmp_path / "budget.h"
+    header.write_text(_BUDGET_H)
+    lib = tmp_path / "html_fast_budget.so"
+    subprocess.run(
+        ["cc", "-O2", "-fPIC", "-shared", "-include", str(header),
+         "-o", str(lib), "-x", "c", "-"],
+        input=pkgutil.get_data("anytomd_spark.kernels", "_html_fast.c"),
+        check=True, capture_output=True, timeout=120,
+    )
+    doc = tmp_path / "doc.html"
+    doc.write_text(_table_heavy_doc())
+    child = subprocess.run(
+        [sys.executable, "-c", _SWEEP, str(lib), str(doc)],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert child.returncode == 0, child.stderr[-2000:]
+    res = json.loads(child.stdout)
+    assert res["rc"] == 0 and res["left"] == 0
+    assert res["want"][0].count("|---|") >= 2  # the tables rendered
+    assert res["n_allocs"] > 50
+    codes = set()
+    for k, (rc, got, live, left) in enumerate(res["runs"]):
+        codes.add(rc)
+        assert rc in (0, 1), k
+        if rc == 0:
+            assert got == res["want"], k
+            assert left == 0, k
+        else:
+            assert live == 0, k
+    assert codes == {0, 1}
+    # the unbudgeted document is what the product walker returns
+    assert convert_html_native(_table_heavy_doc())["markdown"] == res["want"][0]

@@ -685,7 +685,7 @@ def test_job_spark_submit_py_files(spark, tmp_path):
         pkg = os.path.join(repo, "anytomd_spark")
         for root, _dirs, files in os.walk(pkg):
             for name in files:
-                if name.endswith(".py"):
+                if name.endswith((".py", ".c")):
                     full = os.path.join(root, name)
                     zf.write(full, os.path.relpath(full, repo))
 
