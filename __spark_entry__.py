@@ -50,14 +50,12 @@ _CORRECTNESS_SF = _os.environ.get(
 
 def _code_token() -> str:
     """Version token for oracle-input paths: a hash of the source files
-    that define the persisted signature semantics. Both the Spark query
-    (writer) and the oracle SQL string (reader) embed it, so an oracle
-    can never silently read stale parquet left by an EARLIER run of
-    DIFFERENT code — a changed kernel changes the path, and a missing
-    path fails loudly in DuckDB ('No files found') instead of
-    hash-mismatching mysteriously. Deterministic across processes of
-    the same checkout (the driver may collect oracle strings and run
-    queries in separate phases)."""
+    that define the persisted signature semantics. The writers embed it,
+    so a query never reuses stale parquet left by an EARLIER run of
+    DIFFERENT code — a changed kernel changes the path — and the oracle
+    aliases are repointed at the path the current code wrote.
+    Deterministic across processes of the same checkout (the driver may
+    collect oracle strings and run queries in separate phases)."""
     import hashlib
 
     import anytomd_spark.analysis.dedup as _dd
@@ -70,35 +68,52 @@ def _code_token() -> str:
     return h.hexdigest()[:10]
 
 
-# PINNED for the r7 optimization round: the token is embedded in the
-# dedup_simhash / dedup_lsh_bucket_stats oracle SQL (the read_parquet
-# path), and the optimization-round contract freezes oracle SQL text —
-# an auto-derived token would change those two strings whenever ANY
-# byte of dedup.py / derive.py / this file changes, even for
-# value-identical optimizations (r7 changed word_shingles' physical
-# form; every signature VALUE is unchanged and oracle-verified). The
-# pinned value is the round-start token, so the oracle text is
-# byte-identical to the round-start fingerprint and the parquet a prior
-# checkout wrote at this path has identical content by construction.
-# If a future change ALTERS signature semantics, bump this constant
-# (or restore `_code_token()`) — tests/test_entry_oracles.py's
-# simhash/lsh rows will hash-mismatch loudly if it is forgotten.
-_CODE_TOKEN = "ea4b64158f"
+# The token in the paths the oracle SQL reads. Those paths are aliases
+# (symlinks) that _write_sig_once points at the current _code_token()
+# directory, so the oracle text stays the same when the source changes.
+_ORACLE_ALIAS_TOKEN = "ea4b64158f"
 
 
-def _sig_path(kind: str, sf_dir: str) -> str:
+def _sig_path(kind: str, sf_dir: str, token: str | None = None) -> str:
+    """Oracle-input directory of ``kind`` at ``sf_dir``, under the
+    source-derived token unless ``token`` is given: a changed dedup.py,
+    derive.py or this file writes to a new directory, so no query
+    reuses parquet that an earlier run of different code left behind."""
     base = _os.path.basename(sf_dir.rstrip("/"))
-    return f"{ORACLE_INPUTS}/{kind}_{base}_{_CODE_TOKEN}"
+    return f"{ORACLE_INPUTS}/{kind}_{base}_{token or _code_token()}"
 
 
-def _write_sig_once(df: "DataFrame", path: str) -> None:
-    """Materialize a deterministic oracle-input parquet exactly once:
-    the path is content-addressed (code-version token + sf dir), so a
-    complete prior write (_SUCCESS present) is byte-equivalent to a
-    rewrite — skipping it saves one Spark job per repeat run of the
-    simhash / lsh-bucket queries."""
+def _oracle_alias(kind: str, sf_dir: str) -> str:
+    return _sig_path(kind, sf_dir, _ORACLE_ALIAS_TOKEN)
+
+
+def _write_sig_once(df: "DataFrame", kind: str, sf_dir: str) -> str:
+    """Materialize a deterministic oracle-input parquet exactly once and
+    return its path: the path is content-addressed (code-version token +
+    sf dir), so a complete prior write (_SUCCESS present) is
+    byte-equivalent to a rewrite — skipping it saves one Spark job per
+    repeat run of the simhash / lsh-bucket queries. The oracle's alias
+    path is then repointed at it if it names anything else (a symlink
+    swapped in by ``os.replace``; a directory an older checkout wrote
+    under the alias name is removed first)."""
+    path = _sig_path(kind, sf_dir)
     if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
         df.write.mode("overwrite").parquet(path)
+    alias = _oracle_alias(kind, sf_dir)
+    target = _os.path.basename(path)
+    if alias != path and not (
+        _os.path.islink(alias) and _os.readlink(alias) == target
+    ):
+        tmp = f"{alias}.{_os.getpid()}.tmp"
+        if _os.path.lexists(tmp):
+            _os.unlink(tmp)
+        _os.symlink(target, tmp)
+        if _os.path.isdir(alias) and not _os.path.islink(alias):
+            import shutil
+
+            shutil.rmtree(alias)
+        _os.replace(tmp, alias)
+    return path
 
 
 def _stream_input_once(df: "DataFrame", variant: str, sf: str,
@@ -330,8 +345,7 @@ def _q_dedup_simhash(spark, sf):
     (bit_count(xor)) in DuckDB — value-level for everything except the
     xxhash64 primitive itself."""
     docs = _docs(spark, sf)
-    path = _sig_path("simhash_sigs", sf)
-    _write_sig_once(DD.simhash64(docs), path)
+    path = _write_sig_once(DD.simhash64(docs), "simhash_sigs", sf)
     sigs = spark.read.parquet(path)
     return DD.simhash_pairs_from_sigs(sigs, max_hamming=3)
 
@@ -738,8 +752,9 @@ def _q_dedup_lsh_bucket_stats(spark, sf):
     recomputes the bucket-size stats from the same rows (value-level for
     the derived logic; the band hash itself is xxhash64-bound)."""
     docs = _docs(spark, sf)
-    path = _sig_path("minhash_banded", sf)
-    _write_sig_once(DD.minhash_banded(docs, num_hashes=16, bands=4), path)
+    path = _write_sig_once(
+        DD.minhash_banded(docs, num_hashes=16, bands=4), "minhash_banded", sf
+    )
     return DD.bucket_stats_from_banded(spark.read.parquet(path))
 
 
@@ -2112,7 +2127,7 @@ def _simhash_oracle(max_hamming: int = 3, blocks: int = 4,
     return f"""
         WITH sigs AS (
             SELECT doc_id, simhash
-            FROM read_parquet('{_sig_path("simhash_sigs", _CORRECTNESS_SF)}/*.parquet')
+            FROM read_parquet('{_oracle_alias("simhash_sigs", _CORRECTNESS_SF)}/*.parquet')
         ), blocked AS (
             SELECT doc_id, blk,
                    ((simhash >> (blk * {width})) & {mask}) AS blk_val
@@ -2189,7 +2204,7 @@ def _fingerprints_oracle() -> str:
 _LSH_BUCKET_STATS_ORACLE = f"""
     WITH bucket_sizes AS (
         SELECT band, band_hash, count(*) AS bucket_size
-        FROM read_parquet('{_sig_path("minhash_banded", _CORRECTNESS_SF)}/*.parquet')
+        FROM read_parquet('{_oracle_alias("minhash_banded", _CORRECTNESS_SF)}/*.parquet')
         GROUP BY band, band_hash
     )
     SELECT band, count(*) AS n_buckets,

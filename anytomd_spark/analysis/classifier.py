@@ -158,7 +158,8 @@ def train_logreg(feat: DataFrame, dim: int = DIM, epochs: int = EPOCHS,
     materialization of ~one 65-float row per partition per epoch.
 
     Expressed this way rather than as dim+1 SUM columns against
-    literal weights (see :func:`_train_logreg_expr`) because the
+    literal weights (``_train_logreg_expr``, kept as the parity oracle in
+    tests/test_classifier.py) because the
     literal-weights plan re-pays ~0.3-0.4 s of Catalyst analysis +
     codegen per epoch for its 66-expression aggregate (the weights
     change every epoch, so nothing caches), which dominates the whole
@@ -217,30 +218,6 @@ def train_logreg(feat: DataFrame, dim: int = DIM, epochs: int = EPOCHS,
         n = float(sum(r["n"] for r in parts))
         w = w - lr * g / n
     return [float(v) for v in w]
-
-
-def _train_logreg_expr(feat: DataFrame, dim: int = DIM,
-                       epochs: int = EPOCHS,
-                       lr: float = LEARNING_RATE) -> list[float]:
-    """Pure-expression twin of :func:`train_logreg` (no Python
-    workers): sigmoid error against the literal current weights, then
-    ``dim+2`` partially-aggregated SUM/COUNT columns collapsing to one
-    driver row per epoch. Kept as the no-Python-worker option and the
-    parity oracle for the Arrow path (same role as the retained HOF
-    forms in similarity.py)."""
-    w = [0.0] * (dim + 1)
-    for _ in range(epochs):
-        err = (_sigmoid(_margin(F.col("x"), w))
-               - F.col("label").cast("double"))
-        staged = feat.select("x", err.alias("_err"))
-        row = staged.agg(
-            *[F.sum(F.col("_err") * F.col("x")[j]).alias(f"g{j}")
-              for j in range(dim + 1)],
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        n = float(row["n"])
-        w = [w[j] - lr * float(row[f"g{j}"]) / n for j in range(dim + 1)]
-    return w
 
 
 def score_documents(feat: DataFrame, weights: list[float],

@@ -1,7 +1,7 @@
 """Similarity search over an embedding column (array<float>).
 
-* brute-force cosine top-k: broadcast the (small) query set, zip_with dot
-  products JVM-side, window top-k — the exact baseline.
+* brute-force cosine top-k: broadcast the (small) query set, Arrow-batched
+  numpy cosine, window top-k — the exact baseline.
 * LSH-bucketed ANN: sign-random-projection signatures bucket the corpus;
   candidates = same-bucket rows; exact cosine re-ranks. The hyperplanes
   are a deterministic function of the seed, materialized as literal
@@ -22,34 +22,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
 from anytomd_spark.analysis.dedup import _bucket_pairs
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, v: acc + v * v)
-    )
-
-
-def cosine(a, b):
-    """All-JVM cosine (HOF expressions). Retained as the no-Python-worker
-    form and the parity oracle for :func:`cosine_np`; the fold lambdas
-    evaluate INTERPRETED (~15 us/step, ~192 steps per 64-dim pair — see
-    PLANS.md round-2), so the hot paths use the Arrow form instead.
-
-    Parity scope: FINITE vectors. On a NaN component this form yields
-    NaN (which Spark orders above every real value in a desc sort) where
-    cosine_np yields NULL (excluded by the operators' degraded-row
-    filter) — the Arrow behavior is the contract; don't rank on raw
-    NaN-bearing data with this form."""
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _rows(col: "pd.Series") -> "np.ndarray":
@@ -102,7 +74,8 @@ def _cosine_batch(pa: "pd.Series", pb: "pd.Series") -> "pd.Series":
 
 def cosine_np(a, b):
     """Arrow-batched exact cosine. One JVM<->Python hop per batch, numpy
-    row ops inside — measured 1.8x the interpreted HOF form on a
+    row ops inside — measured 1.8x the interpreted HOF form (``cosine``,
+    kept as the parity oracle in tests/test_analysis.py) on a
     100k-pair re-rank at local[1] (the stage's marginal CPU gain is
     larger; the measurement includes the join/write floor). It is also
     the CLOSER match to the DuckDB oracles, which cast float->double
@@ -115,9 +88,9 @@ def cosine_np(a, b):
 def srp_signatures_np(vec_col, tables: list) -> "F.Column":
     """All SRP table signatures in ONE Arrow hop: array<long>, entry t =
     the n_planes-bit signature under table t's hyperplanes (bit i = 1
-    iff v . plane_i >= 0, weight 1<<i — same convention as
-    :func:`srp_signature`, parity-tested: 0/2000 mismatches on the real
-    vectors; parity scope is FINITE vectors — on a NaN component numpy's
+    iff v . plane_i >= 0, weight 1<<i — same convention as the all-JVM
+    ``srp_signature`` in tests/test_analysis.py, parity-tested: 0/2000
+    mismatches on the real vectors; parity scope is FINITE vectors — on a NaN component numpy's
     nan>=0 is False (bit 0) where Spark's NaN-ordering makes the HOF bit
     1, so mixed JVM/Arrow deployments must not persist signatures of
     NaN-bearing data). The HOF form pays n_tables*n_planes interpreted 64-step
@@ -165,7 +138,8 @@ def srp_signatures_np(vec_col, tables: list) -> "F.Column":
 def _ivf_dists_np(vec_col, cents: "np.ndarray") -> "F.Column":
     """Per-centroid squared-distance surrogate ||c||^2 - 2 v.c as
     array<double> (the common ||v||^2 term is dropped), one Arrow hop —
-    replaces n_clusters interpreted fold-dots per row."""
+    replaces n_clusters interpreted fold-dots per row (the all-JVM
+    ``_cluster_expr`` parity oracle in tests/test_analysis.py)."""
     cents64 = np.asarray(cents, dtype=np.float64)
     c2 = (cents64 * cents64).sum(axis=1)
 
@@ -231,16 +205,6 @@ def brute_force_topk(
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def srp_signature(vec_col, planes: list[list[float]]):
-    """Sign-random-projection bit signature as a long (JVM-side)."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(_dot(vec_col, lit_plane) >= 0, F.lit(1)).otherwise(F.lit(0))
-        sig = sig + bit.cast("long") * F.lit(1 << i).cast("long")
-    return sig
 
 
 def lsh_ann_topk(
@@ -361,22 +325,6 @@ def ivf_centroids(
             break
         cents = new
     return cents
-
-
-def _cluster_expr(vec_col, cents: "np.ndarray"):
-    """1-based index of the nearest centroid, as column expressions:
-    argmin over ||v||^2 - 2 v.c + ||c||^2 (the ||v||^2 term is common to
-    all clusters and dropped). All-JVM form retained as the parity
-    oracle for the live :func:`_ivf_dists_np` + array_position path
-    (tests/test_analysis.py::TestArrowVectorParity) and for clusters
-    that must avoid Python workers."""
-    dists = []
-    for c in cents:
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        c2 = float((c * c).sum())
-        dists.append(F.lit(c2) - 2.0 * _dot(vec_col, lit))
-    arr = F.array(*dists)
-    return F.array_position(arr, F.array_min(arr))
 
 
 def ivf_ann_topk(

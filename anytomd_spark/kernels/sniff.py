@@ -132,7 +132,9 @@ def maybe_base64_binary(payload: str) -> bytes | None:
 
 # ASCII whitespace the JSON and markup heuristics skip (a BOM is not)
 _WS = frozenset(" \t\r\n\x0b\x0c")
-_MARKUP_RE = re.compile(r"<head|<body|<div|<p>|<p |<table|<h1|<ul|<span|<br")
+# html-ish tag names, each ended by whitespace, '>' or '/' so that
+# XML elements such as <heading> or <paragraph> do not count
+_MARKUP_RE = re.compile(r"<(?:head|body|div|p|table|h1|ul|span|br)[\s>/]")
 
 
 def sniff_text(s: str) -> str | None:

@@ -85,8 +85,8 @@ def format_float(f: float) -> str:
 def excel_serial_to_datetime(serial: float) -> _dt.datetime | None:
     """1900 date system; serial 1 = 1900-01-01 (base 1899-12-30 after the
     Lotus leap bug for serials >= 60, matching calamine's as_datetime)."""
-    # NaN/inf serials: int() would raise (found by the fast-scan
-    # Hypothesis battery); treat as non-dates -> format_float fallback
+    # NaN/inf serials: int() would raise (found by the worksheet
+    # Hypothesis soup); treat as non-dates -> format_float fallback
     if serial < 0 or serial != serial or serial == float("inf"):
         return None
     base = _dt.datetime(1899, 12, 30)
@@ -116,11 +116,10 @@ def _format_datetime(serial: float) -> str:
 def parse_shared_strings(xml: str) -> list[str]:
     """sharedStrings.xml -> list of strings (rich-text runs concatenated).
 
-    Deliberately expat-only: a worksheet-style single-regex fast scan
-    was built and interleaved-A/B'd at 0.81x (sst has ~5 expat events
-    per string vs ~8+attr-dicts per sheet row, so the guard battery +
-    120k match objects cost more than the callbacks they remove) —
-    see PLANS.md round-6 negative result."""
+    Expat only: a single-regex fast scan was built and
+    interleaved-A/B'd at 0.81x (sst has ~5 expat events per string, so
+    the guard battery + 120k match objects cost more than the callbacks
+    they remove) — see PLANS.md round-6 negative result."""
     strings: list[str] = []
     st = {"in_si": False, "in_t": False, "parts": [], "in_rph": 0}
 
@@ -186,290 +185,6 @@ def parse_date_styles(styles_xml: str) -> set[int]:
     return date_styles
 
 
-# ---- fast worksheet scanner --------------------------------------------
-#
-# Machine-generated sheet XML is overwhelmingly regular: unprefixed
-# <row>/<c>/<v>/<is>/<t> elements, double-quoted attributes, no DTD /
-# CDATA / comments / PIs. On that shape a single-regex cell-level scan
-# replaces ~8 expat->Python callback crossings per row with one regex
-# match per row/cell (~2.6x on the 10 MB latency sheet). Equivalence
-# with the expat path is guaranteed by construction: the document is
-# first WELL-FORMEDNESS-checked by a handler-less native expat parse
-# (malformed input falls back to the expat path, preserving its
-# silent-truncation-at-error semantics, xlsx.rs Err(_) => break), and
-# every construct the scan does not model — '<!'-markup, extra PIs,
-# prefixed hot elements, single-quoted/entity-bearing attributes,
-# markup inside <v>/<t> text — is detected by cheap guards or by the
-# row/cell count self-check and falls back. Locked by
-# tests/test_xlsx_fast_scan.py differential battery.
-
-_ROW_ANY = re.compile(r"<row[\s/>]")
-_C_ANY = re.compile(r"<c[\s/>]")
-_T_ANY = re.compile(r"<t[\s/>]")
-_V_ANY = re.compile(r"<v[\s/>]")
-# a namespace-prefixed hot element anywhere disqualifies the fast scan
-_PREFIXED_HOT = re.compile(r"<[A-Za-z_][\w.-]*:(?:row|c|v|is|t)[\s/>]")
-_ATTRS = r'((?:\s+[A-Za-z_][\w:.-]*="[^"<>]*")*)\s*'
-# The hot token regex captures r/s/t attributes IN the match (standard
-# writer order r, s, t — Excel's own order); any other attribute, a
-# different order, or a nonstandard value falls into the "leftover"
-# group, whose markers route the cell to the generic per-cell path.
-# Groups: 1 "row" literal | 2 row r | 3 row leftover ||
-#         4 cell r | 5 cell s | 6 cell t | 7 cell leftover | 8 body
-_SHEET_TOKEN = re.compile(
-    r'<(row)(?:\s+r="([0-9]{1,7})")?'
-    rf"{_ATTRS}/?>"
-    r'|<c(?:\s+r="([A-Z]{1,3}[0-9]{1,7})")?'
-    r'(?:\s+s="([0-9]+)")?(?:\s+t="([a-zA-Z]+)")?'
-    rf"{_ATTRS}(?:/>|>(.*?)</c\s*>)",
-    re.DOTALL,
-)
-# any-whitespace-separated r/s/t attr in a leftover group (XML allows
-# tab/newline separators, not just a single space). May false-positive
-# on a value containing ' r="'-ish text — that only routes the cell to
-# the generic path, where _attr_value's structural parse is exact.
-_LEFTOVER_RST = re.compile(r'\s[rst]="')
-# one attribute pair as _ATTRS captured it: leftover is exactly a
-# concatenation of these, so finditer cannot desync into a value
-_ATTR_PAIR = re.compile(r'\s+([A-Za-z_][\w:.-]*)="([^"<>]*)"')
-_T_INNER = re.compile(rf"<t{_ATTRS}(?:/>|>(.*?)</t\s*>)", re.DOTALL)
-_V_INNER = re.compile(rf"<v{_ATTRS}(?:/>|>(.*?)</v\s*>)", re.DOTALL)
-
-# the fast scan only engages above this size: the fixed guard scans +
-# well-formedness parse don't amortize on small parts (measured ~5%
-# slower at ~1 KB, 1.35x faster at 10 MB)
-_FAST_SCAN_MIN_BYTES = 65536
-
-_ENT = {"amp": "&", "lt": "<", "gt": ">", "quot": '"', "apos": "'"}
-_ENT_RE = re.compile(r"&(?:(amp|lt|gt|quot|apos)|#(?:x([0-9a-fA-F]+)|([0-9]+)));")
-
-
-def _decode_text(s: str) -> str:
-    """Expat-equivalent text: newline-normalize then expand references
-    (charref-produced \\r stays literal, exactly like expat)."""
-    if "\r" in s:
-        s = s.replace("\r\n", "\n").replace("\r", "\n")
-    if "&" not in s:
-        return s
-    return _ENT_RE.sub(_ent_repl, s)
-
-
-def _ent_repl(m: re.Match) -> str:
-    g1 = m.group(1)
-    if g1:
-        return _ENT[g1]
-    g2 = m.group(2)
-    if g2:
-        return chr(int(g2, 16))
-    return chr(int(m.group(3)))
-
-
-def _attr_value(attrs_s: str, name: str) -> str | None:
-    """Extract a double-quoted attribute by name from an _ATTRS-captured
-    leftover group (attribute pairs separated by any XML whitespace),
-    with expat's attribute-value normalization (literal whitespace ->
-    space, charref whitespace kept literally: normalize then decode).
-    Walks the pair structure rather than substring-searching, so a value
-    that CONTAINS ``r="``-like text can never be misread as the attr."""
-    for m in _ATTR_PAIR.finditer(attrs_s):
-        if m.group(1) != name:
-            continue
-        val = m.group(2)
-        if "\r" in val or "\n" in val or "\t" in val:
-            val = val.replace("\r", " ").replace("\n", " ").replace("\t", " ")
-        if "&" in val:
-            val = _ENT_RE.sub(_ent_repl, val)
-        return val
-    return None
-
-
-def _fast_sheet_cells(
-    xml: str, shared: list[str], date_styles: set[int]
-) -> tuple[dict[int, str], dict[int, str]] | None:
-    """Fast-scan a worksheet; ``None`` means use the expat path."""
-    from xml.parsers import expat as _expat
-
-    # '<!' covers DOCTYPE (DTD-defined entities), comments and CDATA in
-    # one C-speed scan; extra '<?' beyond the leading declaration = PIs
-    if "<!" in xml:
-        return None
-    if xml.count("<?") != (1 if xml.startswith("<?") else 0):
-        return None
-    if _PREFIXED_HOT.search(xml):
-        return None
-    parser = _expat.ParserCreate()
-    try:
-        parser.Parse(xml, True)
-    except _expat.ExpatError:
-        return None  # expat path truncates at the error, identically
-
-    n_rows = len(_ROW_ANY.findall(xml))
-    n_cells = len(_C_ANY.findall(xml))
-    cells: dict[int, str] = {}
-    errors: dict[int, str] = {}
-    row, next_col = 0, 0
-    n_shared = len(shared)
-    seen_rows = seen_cells = 0
-    cell_ref_match = _CELL_REF.match
-
-    for m in _SHEET_TOKEN.finditer(xml):
-        g = m.group
-        if g(1) is not None:  # row
-            seen_rows += 1
-            r = g(2)
-            if r is None:
-                leftover = g(3)
-                r = _attr_value(leftover, "r") if leftover else None
-                row = (
-                    int(r) - 1
-                    if r and r.isdigit() and len(r) <= 7
-                    and 0 < int(r) <= 1048576
-                    else row + 1
-                )
-            else:  # regex-guaranteed 1-7 digits
-                ri = int(r)
-                row = ri - 1 if 0 < ri <= 1048576 else row + 1
-            next_col = 0
-            continue
-        seen_cells += 1
-        ref, sref, t, leftover, body = g(4, 5, 6, 7, 8)
-        if leftover and _LEFTOVER_RST.search(leftover):
-            # nonstandard attribute order / value: generic extraction for
-            # whichever of r/s/t the positional groups missed
-            if ref is None:
-                ref = _attr_value(leftover, "r")
-                if ref:
-                    rm = cell_ref_match(ref)
-                    if rm and len(rm.group(1)) <= 3 and len(rm.group(2)) <= 7:
-                        col = _col_index(rm.group(1))
-                        row = int(rm.group(2)) - 1
-                    else:
-                        col = next_col
-                else:
-                    col = next_col
-            else:
-                col = _col_index(ref.rstrip("0123456789"))
-                row = int(ref.lstrip("ABCDEFGHIJKLMNOPQRSTUVWXYZ")) - 1
-            if sref is None:
-                sref = _attr_value(leftover, "s")
-                if sref is not None and not sref.isdigit():
-                    sref = None
-            if t is None:
-                t = _attr_value(leftover, "t")
-        elif ref is not None:
-            # regex-guaranteed [A-Z]{1,3}[0-9]{1,7}: split at the first digit
-            if "A" <= ref[1] <= "Z":
-                if "A" <= ref[2] <= "Z":
-                    col = ((ord(ref[0]) - 64) * 26 + ord(ref[1]) - 64) * 26 \
-                        + ord(ref[2]) - 65
-                    row = int(ref[3:]) - 1
-                else:
-                    col = (ord(ref[0]) - 64) * 26 + ord(ref[1]) - 65
-                    row = int(ref[2:]) - 1
-            else:
-                col = ord(ref[0]) - 65
-                row = int(ref[1:]) - 1
-        else:
-            col = next_col
-        next_col = col + 1
-        s = int(sref) if sref is not None else None
-
-        key = (row << 32) | col
-        if t == "inlineStr":
-            if body:
-                if body.startswith("<is><t>") and body.endswith("</t></is>") \
-                        and "<" not in (inner := body[7:-9]):
-                    if "&" in inner or "\r" in inner:
-                        inner = _decode_text(inner)
-                    cells[key] = inner
-                else:
-                    tms = _T_INNER.findall(body)
-                    if len(tms) != len(_T_ANY.findall(body)):
-                        return None  # un-modeled <t ...> form in this cell
-                    parts = []
-                    for _ta, ttext in tms:
-                        if ttext:
-                            if "<" in ttext:
-                                return None  # markup inside <t>
-                            parts.append(_decode_text(ttext))
-                    cells[key] = "".join(parts)
-            else:
-                cells[key] = ""
-            if errors:
-                errors.pop(key, None)
-            continue
-        # value types read from <v> text
-        if body:
-            if body.startswith("<v>") and body.endswith("</v>") \
-                    and "<" not in (raw := body[3:-4]):
-                if "&" in raw or "\r" in raw:
-                    raw = _decode_text(raw)
-            elif "<v" not in body:
-                raw = ""  # e.g. formula-only cell: <f>...</f>
-            else:
-                vms = _V_INNER.findall(body)
-                if len(vms) != len(_V_ANY.findall(body)):
-                    return None
-                raw = "".join(vtext for _va, vtext in vms if vtext)
-                if "<" in raw:
-                    return None  # markup inside <v>
-                raw = _decode_text(raw)
-        else:
-            raw = ""
-        if t == "s":
-            if raw.isdigit():
-                idx = int(raw)
-                if idx < n_shared:
-                    cells[key] = shared[idx]
-                    if errors:
-                        errors.pop(key, None)
-        elif t == "str":
-            cells[key] = raw
-            if errors:
-                errors.pop(key, None)
-        elif t == "b":
-            if raw:
-                cells[key] = (
-                    "TRUE" if raw.strip() in ("1", "true", "TRUE")
-                    else "FALSE"
-                )
-                if errors:
-                    errors.pop(key, None)
-        elif t == "e":
-            if raw:
-                err = raw.strip()
-                cells[key] = err
-                errors[key] = err
-        else:  # "n" or unknown explicit type: numeric
-            if raw:
-                # plain small integer (no sign/point/exponent/leading
-                # zero): float->int->str round-trips to raw itself —
-                # skip the conversions for the dominant cell type
-                # isascii guard: isdigit() alone accepts e.g.
-                # Arabic-Indic digits, which float() parses but which
-                # would NOT round-trip back to raw
-                if raw.isascii() and raw.isdigit() and raw[0] != "0" \
-                        and len(raw) <= 15 \
-                        and (s is None or s not in date_styles):
-                    cells[key] = raw
-                else:
-                    try:
-                        f = float(raw)
-                    except ValueError:
-                        cells[key] = raw
-                    else:
-                        if s is not None and s in date_styles:
-                            cells[key] = _format_datetime(f)
-                        else:
-                            cells[key] = format_float(f)
-                if errors:
-                    errors.pop(key, None)
-
-    if seen_rows != n_rows or seen_cells != n_cells:
-        return None  # some row/cell didn't match the strict token shape
-    return cells, errors
-
-
 def parse_sheet_cells(
     xml: str, shared: list[str], date_styles: set[int]
 ) -> tuple[dict[int, str], dict[int, str]]:
@@ -488,16 +203,9 @@ def parse_sheet_cells(
     write to the same cell ref clears any earlier error there (last
     write wins, exactly like the single-map design).
     """
-    # Below ~64 KB the expat callback cost is small and the fast scan's
-    # fixed costs (guard scans + validation parse) don't amortize —
-    # measured ~5% SLOWER on ~1 KB corpus sheets, 1.35x faster at 10 MB
-    if len(xml) >= _FAST_SCAN_MIN_BYTES:
-        fast = _fast_sheet_cells(xml, shared, date_styles)
-        if fast is not None:
-            return fast
-    # expat path: the semantic definition — one handler call per XML
-    # event — nonlocal scalars instead of a state dict, branches ordered
-    # by event frequency (c/v/t dominate; row is 1-per-row)
+    # one handler call per XML event: nonlocal scalars instead of a
+    # state dict, branches ordered by event frequency (c/v/t dominate;
+    # row is 1-per-row)
     cells: dict[int, str] = {}
     errors: dict[int, str] = {}
     row, col, next_col = 0, -1, 0
@@ -576,7 +284,9 @@ def parse_sheet_cells(
         elif local == "c":
             raw = "".join(v)
             key = (row << 32) | col  # packed key: ~80B/cell cheaper than a tuple
-            if t == "n":  # numeric: the default type, checked first
+            # numeric: "n" (the default type, checked first) or any
+            # unknown explicit type
+            if t == "n" or t not in {"s", "inlineStr", "str", "b", "e"}:
                 if raw:
                     try:
                         f = float(raw)
@@ -617,19 +327,6 @@ def parse_sheet_cells(
                     err = raw.strip()
                     cells[key] = err
                     errors[key] = err
-            else:  # numeric ("n" or unknown explicit type)
-                if raw:
-                    try:
-                        f = float(raw)
-                    except ValueError:
-                        cells[key] = raw
-                    else:
-                        if s is not None and s in date_styles:
-                            cells[key] = _format_datetime(f)
-                        else:
-                            cells[key] = format_float(f)
-                    if errors:
-                        errors.pop(key, None)
         elif local == "t":
             in_is_t = False
 
@@ -821,7 +518,7 @@ def convert_xlsx(
             # build_table_plain). Output is byte-identical to those
             # emitters for the equal-width rows a bounding box yields
             # (padding/truncation is a no-op); locked by the goldens and
-            # test_xlsx_fast_scan's integration check.
+            # test_xlsx_fast_scan's large-sheet Markdown check.
             get = cells.get
             empty = ""
             cols = range(min_col, max_col + 1)

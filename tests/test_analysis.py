@@ -1442,6 +1442,64 @@ def test_cross_codec_differential_consistency():
     assert np.abs(got_q - sig).max() <= 1  # within 1 LSB of the source
 
 
+# ---- all-JVM (HOF) twins of the Arrow vector kernels ------------------
+# Parity oracles for similarity.cosine_np, srp_signatures_np and the
+# _ivf_dists_np assignment; nothing in the package uses them.
+
+
+def _dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0.0).cast("double"),
+        lambda acc, v: acc + v,
+    )
+
+
+def _norm(a):
+    return F.sqrt(
+        F.aggregate(a, F.lit(0.0).cast("double"), lambda acc, v: acc + v * v)
+    )
+
+
+def cosine(a, b):
+    """All-JVM cosine (HOF expressions), the parity oracle for
+    ``similarity.cosine_np``; the fold lambdas evaluate INTERPRETED
+    (~15 us/step, ~192 steps per 64-dim pair — see PLANS.md round-2), so
+    the hot paths use the Arrow form instead.
+
+    Parity scope: FINITE vectors. On a NaN component this form yields
+    NaN (which Spark orders above every real value in a desc sort) where
+    cosine_np yields NULL (excluded by the operators' degraded-row
+    filter) — the Arrow behavior is the contract; don't rank on raw
+    NaN-bearing data with this form."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def srp_signature(vec_col, planes: list[list[float]]):
+    """Sign-random-projection bit signature as a long (JVM-side)."""
+    sig = F.lit(0).cast("long")
+    for i, plane in enumerate(planes):
+        lit_plane = F.array(*[F.lit(float(x)) for x in plane])
+        bit = F.when(_dot(vec_col, lit_plane) >= 0, F.lit(1)).otherwise(F.lit(0))
+        sig = sig + bit.cast("long") * F.lit(1 << i).cast("long")
+    return sig
+
+
+def _cluster_expr(vec_col, cents: "np.ndarray"):
+    """1-based index of the nearest centroid, as column expressions:
+    argmin over ||v||^2 - 2 v.c + ||c||^2 (the ||v||^2 term is common to
+    all clusters and dropped). All-JVM parity oracle for the live
+    ``similarity._ivf_dists_np`` + array_position path
+    (TestArrowVectorParity)."""
+    dists = []
+    for c in cents:
+        lit = F.array(*[F.lit(float(x)) for x in c])
+        c2 = float((c * c).sum())
+        dists.append(F.lit(c2) - 2.0 * _dot(vec_col, lit))
+    arr = F.array(*dists)
+    return F.array_position(arr, F.array_min(arr))
+
+
 class TestArrowVectorParity:
     """The Arrow-batched vector kernels must agree with the all-JVM HOF
     forms they replaced: signatures bit-exactly, cosine to within
@@ -1456,7 +1514,7 @@ class TestArrowVectorParity:
         tables = [SIM._hyperplanes(64, 6, 42 + 1000 * t) for t in range(4)]
         hof = emb.select(
             "vec_id",
-            *[SIM.srp_signature(F.col("embedding"), tables[t]).alias(f"s{t}")
+            *[srp_signature(F.col("embedding"), tables[t]).alias(f"s{t}")
               for t in range(4)],
         ).orderBy("vec_id").collect()
         arw = emb.select(
@@ -1475,7 +1533,6 @@ class TestArrowVectorParity:
         import numpy as np
 
         from anytomd_spark.analysis.similarity import (
-            _cluster_expr,
             _ivf_dists_np,
             ivf_centroids,
         )
@@ -1592,7 +1649,7 @@ class TestArrowVectorParity:
         maxdiff = (
             emb.crossJoin(F.broadcast(q))
             .select(F.max(F.abs(
-                SIM.cosine(F.col("qvec"), F.col("embedding"))
+                cosine(F.col("qvec"), F.col("embedding"))
                 - SIM.cosine_np(F.col("qvec"), F.col("embedding"))
             )).alias("d"))
             .collect()[0]["d"]

@@ -340,7 +340,7 @@ def _classify_formats_pandas(text: pd.Series, tool: pd.Series) -> pd.Series:
         low.str.startswith("<!doctype html")
         | low.str.startswith("<html")
         | low.str.contains(
-            r"<head|<body|<div|<p>|<p |<table|<h1|<ul|<span|<br",
+            r"<(?:head|body|div|p|table|h1|ul|span|br)[\s>/]",
             regex=True,
         )
     )

@@ -10,6 +10,7 @@ import re
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tests.conftest import *  # noqa: F401,F403  (sys.path side effect)
@@ -19,6 +20,8 @@ from anytomd_spark.analysis.classifier import (  # noqa: E402
     LEARNING_RATE,
     MAX_HASH_CHARS,
     POWS,
+    _margin,
+    _sigmoid,
     hash_index,
     score_documents,
     train_logreg,
@@ -28,6 +31,29 @@ from anytomd_spark.analysis.classifier import (  # noqa: E402
 from anytomd_spark.pipeline import build_session  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+
+
+def _train_logreg_expr(feat: DataFrame, dim: int = DIM,
+                       epochs: int = EPOCHS,
+                       lr: float = LEARNING_RATE) -> list[float]:
+    """Pure-expression twin of :func:`train_logreg` (no Python
+    workers): sigmoid error against the literal current weights, then
+    ``dim+2`` partially-aggregated SUM/COUNT columns collapsing to one
+    driver row per epoch. The parity oracle for the Arrow path (same
+    role as the HOF twins in tests/test_analysis.py)."""
+    w = [0.0] * (dim + 1)
+    for _ in range(epochs):
+        err = (_sigmoid(_margin(F.col("x"), w))
+               - F.col("label").cast("double"))
+        staged = feat.select("x", err.alias("_err"))
+        row = staged.agg(
+            *[F.sum(F.col("_err") * F.col("x")[j]).alias(f"g{j}")
+              for j in range(dim + 1)],
+            F.count(F.lit(1)).alias("n"),
+        ).collect()[0]
+        n = float(row["n"])
+        w = [w[j] - lr * float(row[f"g{j}"]) / n for j in range(dim + 1)]
+    return w
 
 
 @pytest.fixture(scope="module")
@@ -160,8 +186,6 @@ class TestTraining:
         """The Arrow-batched gradient (mapInPandas matmul partials)
         against the pure-expression twin: same model up to
         summation-order float noise."""
-        from anytomd_spark.analysis.classifier import _train_logreg_expr
-
         w_arrow = train_logreg(corpus_feat)
         w_expr = _train_logreg_expr(corpus_feat)
         np.testing.assert_allclose(w_arrow, w_expr, atol=1e-9)

@@ -112,3 +112,34 @@ class TestTextHeuristicSharedByArchiveMembers:
             "xml-decl", "plain", "late-gt"])
     def test_sniff_bytes_matches_hintless_classify(self, head):
         assert sniff.sniff_bytes(head.encode()) == _classify(head, None)
+
+
+class TestMarkupTagBoundary:
+    """The html tag list matches whole tag names only: XML elements
+    that start with a listed name (``<heading>``, ``<paragraph>``,
+    ``<division>``) leave a document ``xml``."""
+
+    def test_generated_xml_documents_are_xml(self):
+        import random
+
+        from anytomd_spark.transcripts import build_xml
+
+        docs = [build_xml(random.Random(seed)) for seed in range(40)]
+        assert all("<heading>" in d for d in docs)
+        fmts = classify_formats(
+            pd.Series(docs, dtype=object), pd.Series([""] * 40, dtype=object)
+        )
+        assert list(fmts) == ["xml"] * 40
+
+    @pytest.mark.parametrize("head,fmt", [
+        ("<doc><head>t</head></doc>", "html"),
+        ("<doc><head\n>t</head></doc>", "html"),
+        ("<x><br/></x>", "html"),
+        ("<x><p class='a'>t</p></x>", "html"),
+        ("<x><p>t</p></x>", "html"),
+        ("<x><division>t</division><paragraph/></x>", "xml"),
+        ("<x><header>t</header><spans/><ulist/><tables/></x>", "xml"),
+    ])
+    def test_tag_names_end_at_a_boundary(self, head, fmt):
+        assert _classify(head, None) == fmt
+        assert sniff.sniff_bytes(head.encode()) == fmt

@@ -122,3 +122,41 @@ def test_rows_only_queries_run(spark, name):
     assert n >= 0
     if name in ("text_fingerprints", "media_features", "sim_ann_lsh"):
         assert n > 0
+
+
+def test_signature_cache_follows_the_code_token(spark, tmp_path, monkeypatch):
+    """A signature table lands under the source-derived token and the
+    oracle's alias path points at it. Under a new token (changed source)
+    the table is written again and the alias follows; the oracle SQL
+    reads the alias, never the token."""
+    monkeypatch.setattr(entrymod, "ORACLE_INPUTS", str(tmp_path))
+    sf, kind = "/data/sf0.01", "simhash_sigs"
+    alias = entrymod._oracle_alias(kind, sf)
+    # a table an older checkout wrote straight under the alias name
+    os.makedirs(alias)
+    open(os.path.join(alias, "_SUCCESS"), "w").close()
+
+    def rows_via_alias():
+        return duckdb.sql(
+            f"SELECT count(*) FROM read_parquet('{alias}/*.parquet')"
+        ).fetchone()[0]
+
+    first = entrymod._write_sig_once(spark.range(3), kind, sf)
+    assert first == entrymod._sig_path(kind, sf) != alias
+    assert first.endswith("_" + entrymod._code_token())
+    assert os.path.realpath(alias) == first and rows_via_alias() == 3
+    # same token: the complete table is reused, not rewritten
+    assert entrymod._write_sig_once(spark.range(5), kind, sf) == first
+    assert rows_via_alias() == 3
+
+    monkeypatch.setattr(entrymod, "_code_token", lambda: "0123456789")
+    second = entrymod._write_sig_once(spark.range(5), kind, sf)
+    assert second == f"{tmp_path}/{kind}_sf0.01_0123456789"
+    assert os.path.realpath(alias) == second and rows_via_alias() == 5
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        os.path.basename(p) for p in (alias, first, second)
+    )
+
+    oracle = entrymod.oracle_sql()["dedup_simhash"]
+    assert entrymod._oracle_alias(kind, entrymod._CORRECTNESS_SF) in oracle
+    assert "0123456789" not in oracle

@@ -4,6 +4,7 @@ determinism. Runs on local[2] to keep CI fast."""
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pytest
@@ -116,17 +117,42 @@ def test_fixture_conversation_golden_equality(spark):
 
 
 def test_fmt_histogram(spark):
-    df = spark.createDataFrame(fixture_transcripts())
+    """The fmt column counts every format exactly, over the committed
+    binary fixtures (hint-less: ZIP and OLE magic) and generated
+    html/code/txt/xml turns."""
+    import random
+
+    from anytomd_spark.binfixtures import BIN_FIXTURES
+    from anytomd_spark.transcripts import (
+        build_code,
+        build_html,
+        build_txt,
+        build_xml,
+    )
+
+    rng = random.Random(5)
+    turns = [(BIN_FIXTURES[f][0], "") for f in ("docx", "pptx", "xlsx")]
+    turns += [(BIN_FIXTURES["xls"][0], "")] * 2
+    turns.append((BIN_FIXTURES["ipynb"][0], "ipynb"))
+    turns += [(build_html(rng), "") for _ in range(3)]
+    turns += [build_code(rng) for _ in range(2)]
+    turns += [build_txt(rng) for _ in range(4)]
+    turns += [(build_xml(rng), "") for _ in range(2)]
+    ts = datetime.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [("c", i, "user", text, tool, ts)
+         for i, (text, tool) in enumerate(turns)],
+        schema=TRANSCRIPTS_SCHEMA,
+    )
+    converted = convert_transcripts(df)
     hist = {
         r.fmt: r.n
-        for r in convert_transcripts(df).groupBy("fmt").count()
+        for r in converted.groupBy("fmt").count()
         .withColumnRenamed("count", "n").collect()
     }
-    assert hist["html"] == 1
-    assert hist["docx"] == 1
-    assert hist["xls"] == 2
-    assert hist["code"] == 1
-    assert hist["txt"] == 1
+    assert hist == {"docx": 1, "pptx": 1, "xlsx": 1, "xls": 2, "ipynb": 1,
+                    "html": 3, "code": 2, "txt": 4, "xml": 2}
+    assert converted.filter(F.col("error").isNotNull()).count() == 0
 
 
 def test_generated_transcripts_deterministic(spark):

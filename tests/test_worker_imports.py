@@ -1,7 +1,8 @@
 """What a Python worker imports: the package zip the driver ships, the
 native walker built from inside that zip, and the zip importers the
 conversion binding drops so later tasks stop re-reading archives.
-No Spark session: the session is a stub that records ``addPyFile``."""
+Most tests use a stub session that records ``addPyFile``; one starts a
+real local session in a subprocess outside the checkout."""
 
 from __future__ import annotations
 
@@ -120,3 +121,48 @@ def test_native_walker_builds_from_the_shipped_zip(tmp_path, monkeypatch):
     assert [f for f in os.listdir(so_dir) if f.endswith(".so")]
     want = convert_html_native(doc)
     assert want is not None and got["out"] == want
+
+
+_SESSION_PROBE = r"""
+import json, sys
+sys.path.insert(0, sys.argv[1])  # the driver imports the checkout
+from anytomd_spark.pipeline import build_session
+
+def probe(batches):
+    import pandas as pd
+    from pyspark import SparkFiles
+    import anytomd_spark
+    from anytomd_spark.kernels._html_native import _get_lib
+    for _ in batches:
+        yield pd.DataFrame({
+            "file": [anytomd_spark.__file__],
+            "user_files": [SparkFiles.getRootDirectory()],
+            "lib": [_get_lib() is not None],
+        })
+
+spark = build_session(master="local[1]",
+                      extra_conf={"spark.driver.memory": "1g"})
+row = spark.range(1, numPartitions=1).mapInPandas(
+    probe, "file string, user_files string, lib boolean").collect()[0]
+print(json.dumps(row.asDict()))
+spark.stop()
+"""
+
+
+def test_worker_imports_the_shipped_zip_outside_the_checkout(tmp_path):
+    """A session started from a directory outside the checkout: its
+    Python worker imports the package from the zip in Spark's
+    ``userFiles`` directory, and the native walker loads there."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    child = subprocess.run(
+        [sys.executable, "-c", _SESSION_PROBE, repo], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert child.returncode == 0, child.stderr[-2000:]
+    got = json.loads(child.stdout.strip().splitlines()[-1])
+    archive, _, inner = got["file"].partition(".zip" + os.sep)
+    assert inner == os.path.join("anytomd_spark", "__init__.py")
+    assert os.path.dirname(archive) == got["user_files"]
+    assert os.path.basename(got["user_files"]).startswith("userFiles-")
+    assert got["lib"]

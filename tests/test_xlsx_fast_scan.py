@@ -1,10 +1,10 @@
-"""Differential battery for the fast worksheet scanner.
+"""Pinned-value battery for ``parse_sheet_cells``, the worksheet parser.
 
-``_fast_sheet_cells`` must either return EXACTLY what the expat path
-(`parse_sheet_cells` with the fast path bypassed) returns, or return
-``None`` (fall back). Every test asserts that contract; several also pin
-WHICH side of it a construct lands on, so a silent fallback regression
-(fast path never engaging) would be caught too.
+Every test pins the ``(cells, errors)`` maps the expat parse yields for
+one sheet shape. The class names are kept from when a size-gated regex
+scanner sat beside the expat parse: ``TestFastPathEngages`` holds the
+regular shapes that scanner took, ``TestFallsBack`` the constructs it
+declined (markup, DTDs, prefixes, malformed XML).
 """
 
 from __future__ import annotations
@@ -35,178 +35,179 @@ def sheet(body: str, ns: str = _X_NS) -> str:
     )
 
 
-def expat_cells(xml, shared=(), date_styles=frozenset()):
-    orig = X._fast_sheet_cells
-    X._fast_sheet_cells = lambda *a: None
-    try:
-        return X.parse_sheet_cells(xml, list(shared), set(date_styles))
-    finally:
-        X._fast_sheet_cells = orig
+def cells(xml, shared=(), date_styles=frozenset()):
+    return X.parse_sheet_cells(xml, list(shared), set(date_styles))
 
 
-def check(xml, shared=(), date_styles=frozenset(), expect_fast=None):
-    """Assert the equivalence contract; optionally pin fast vs fallback."""
-    fast = X._fast_sheet_cells(xml, list(shared), set(date_styles))
-    slow = expat_cells(xml, shared, date_styles)
-    if fast is not None:
-        assert fast == slow, f"fast/expat divergence on: {xml[:200]!r}"
-    if expect_fast is True:
-        assert fast is not None, f"expected fast path on: {xml[:200]!r}"
-    if expect_fast is False:
-        assert fast is None, f"expected fallback on: {xml[:200]!r}"
-    return slow
+def key(row: int, col: int) -> int:
+    """0-based (row, col) -> parse_sheet_cells' packed key."""
+    return (row << 32) | col
 
 
 class TestFastPathEngages:
     def test_plain_numeric(self):
-        out = check(sheet(
+        out = cells(sheet(
             '<row r="1"><c r="A1"><v>1.5</v></c><c r="B1"><v>2</v></c></row>'
-        ), expect_fast=True)
-        assert out[0] == {0: "1.5", 1: "2"}
+        ))
+        assert out == ({0: "1.5", 1: "2"}, {})
 
     def test_inline_str(self):
-        out = check(sheet(
+        out = cells(sheet(
             '<row r="1"><c r="A1" t="inlineStr"><is><t>hello</t></is></c>'
             "</row>"
-        ), expect_fast=True)
-        assert out[0] == {0: "hello"}
+        ))
+        assert out == ({0: "hello"}, {})
 
     def test_shared_strings_and_styles(self):
-        out = check(sheet(
+        out = cells(sheet(
             '<row r="2"><c r="B2" t="s"><v>1</v></c>'
             '<c r="C2" s="0"><v>45000</v></c></row>'
-        ), shared=["zero", "one"], date_styles={0}, expect_fast=True)
+        ), shared=["zero", "one"], date_styles={0})
         assert out[0][(1 << 32) | 1] == "one"
         assert out[0][(1 << 32) | 2] == "2023-03-15"
 
     def test_bool_error_str_types(self):
-        out = check(sheet(
+        out = cells(sheet(
             '<row r="1"><c r="A1" t="b"><v>1</v></c>'
             '<c r="B1" t="e"><v>#DIV/0!</v></c>'
             '<c r="C1" t="str"><v>=A1</v></c></row>'
-        ), expect_fast=True)
+        ))
         assert out[0][0] == "TRUE"
         assert out[0][1] == "#DIV/0!"
         assert out[1] == {1: "#DIV/0!"}
         assert out[0][2] == "=A1"
 
     def test_missing_refs_use_running_position(self):
-        # cells without r=, rows without r=
-        check(sheet(
+        # cells without r=, rows without r=: an r-less row advances the
+        # row counter from its start value 0, so the first row lands on 1
+        out = cells(sheet(
             "<row><c><v>1</v></c><c><v>2</v></c></row>"
             "<row><c><v>3</v></c></row>"
-        ), expect_fast=True)
+        ))
+        assert out == ({key(1, 0): "1", key(1, 1): "2", key(2, 0): "3"}, {})
 
     def test_formula_cells_and_empty(self):
-        check(sheet(
+        # an empty <v/> or a v-less cell writes nothing; a body-less
+        # inlineStr cell writes ""
+        out = cells(sheet(
             '<row r="1"><c r="A1"><f>SUM(B1:C1)</f><v>5</v></c>'
             '<c r="B1"/><c r="C1"><v/></c>'
             '<c r="D1" t="inlineStr"/></row>'
-        ), expect_fast=True)
+        ))
+        assert out == ({0: "5", 3: ""}, {})
 
     def test_entities_and_charrefs(self):
-        out = check(sheet(
+        out = cells(sheet(
             '<row r="1"><c r="A1" t="inlineStr"><is><t>a&amp;b&#65;&#x42;'
             "</t></is></c>"
             '<c r="B1" t="str"><v>&lt;x&gt;</v></c></row>'
-        ), expect_fast=True)
+        ))
         assert out[0][0] == "a&bAB"
         assert out[0][1] == "<x>"
 
     def test_crlf_normalization(self):
         # literal CRLF in text -> \n (expat newline normalization)
-        check(sheet(
+        out = cells(sheet(
             '<row r="1"><c r="A1" t="inlineStr"><is><t>a\r\nb\rc</t></is>'
             "</c></row>"
-        ), expect_fast=True)
+        ))
+        assert out == ({0: "a\nb\nc"}, {})
 
     def test_rich_inline_str_runs(self):
-        out = check(sheet(
+        out = cells(sheet(
             '<row r="1"><c r="A1" t="inlineStr"><is><r><t>a</t></r>'
             "<r><t>b</t></r></is></c></row>"
-        ), expect_fast=True)
+        ))
         assert out[0][0] == "ab"
 
     def test_out_of_order_and_duplicate_refs(self):
         # later write to the same ref wins; huge/invalid refs fall back to
-        # running position (same guards both paths)
-        check(sheet(
+        # the running position
+        out = cells(sheet(
             '<row r="3"><c r="A3"><v>1</v></c></row>'
             '<row r="1"><c r="A1"><v>2</v></c><c r="A3"><v>9</v></c></row>'
             '<row><c r="AAAA1"><v>7</v></c><c r="A99999999"><v>8</v></c>'
             "</row>"
-        ), expect_fast=True)
+        ))
+        assert out == ({key(2, 0): "9", key(0, 0): "2", key(3, 0): "7",
+                        key(3, 1): "8"}, {})
 
     def test_nonstandard_attr_order_still_fast(self):
-        # t before r: positional capture misses, leftover path recovers
-        out = check(sheet(
+        # t before r, s before r
+        out = cells(sheet(
             '<row r="1"><c t="inlineStr" r="A1"><is><t>x</t></is></c>'
             '<c s="0" r="B1"><v>45000</v></c></row>'
-        ), date_styles={0}, expect_fast=True)
+        ), date_styles={0})
         assert out[0][0] == "x"
         assert out[0][1] == "2023-03-15"
 
     def test_extra_attributes(self):
-        check(sheet(
+        out = cells(sheet(
             '<row r="1" spans="1:2" ht="15" customHeight="1">'
             '<c r="A1" cm="1" vm="2"><v>1</v></c></row>'
-        ), expect_fast=True)
+        ))
+        assert out == ({0: "1"}, {})
 
     def test_multiple_v_elements_concatenate(self):
-        check(sheet(
+        out = cells(sheet(
             '<row r="1"><c r="A1" t="str"><v>a</v><v>b</v></c></row>'
-        ), expect_fast=True)
+        ))
+        assert out == ({0: "ab"}, {})
 
     def test_row_counter_interplay_with_cell_refs(self):
         # a cell ref advances the row var; a following r-less row continues
-        # from it (expat start-c sets row from digits)
-        check(sheet(
+        # from it (start-c sets row from the ref's digits)
+        out = cells(sheet(
             '<row r="1"><c r="A5"><v>1</v></c></row>'
             "<row><c><v>2</v></c></row>"
-        ), expect_fast=True)
+        ))
+        assert out == ({key(4, 0): "1", key(5, 0): "2"}, {})
 
     def test_trailing_junk_ref(self):
         # _CELL_REF.match tolerates trailing junk: r="A1B2" parses as A1
-        check(sheet('<row><c r="A1B2"><v>3</v></c></row>'), expect_fast=True)
+        assert cells(sheet('<row><c r="A1B2"><v>3</v></c></row>')) \
+            == ({0: "3"}, {})
 
     def test_xml_space_preserve_t(self):
-        check(sheet(
+        out = cells(sheet(
             '<row r="1"><c r="A1" t="inlineStr"><is>'
             '<t xml:space="preserve"> padded </t></is></c></row>'
-        ), expect_fast=True)
+        ))
+        assert out == ({0: " padded "}, {})
 
 
 class TestFallsBack:
     def test_malformed_truncates_identically(self):
-        # stray close tag: expat truncates at the error; fast path must
-        # decline (well-formedness pre-check)
+        # stray close tag: the parse keeps what it saw before the error
+        # (xlsx.rs Err(_) => break)
         xml = sheet('<row r="1"><c r="A1"><v>1</v></c></extra></row>')
-        check(xml, expect_fast=False)
+        assert cells(xml) == ({0: "1"}, {})
 
     def test_doctype(self):
+        # a DTD-defined entity expands
         xml = (
             '<?xml version="1.0"?><!DOCTYPE worksheet [<!ENTITY e "v">]>'
             f"<worksheet {_X_NS}><sheetData>"
             '<row r="1"><c r="A1" t="str"><v>&e;</v></c></row>'
             "</sheetData></worksheet>"
         )
-        check(xml, expect_fast=False)
+        assert cells(xml) == ({0: "v"}, {})
 
     def test_cdata(self):
-        check(sheet(
+        assert cells(sheet(
             '<row r="1"><c r="A1" t="inlineStr"><is><t><![CDATA[x]]></t>'
             "</is></c></row>"
-        ), expect_fast=False)
+        )) == ({0: "x"}, {})
 
     def test_comment(self):
-        check(sheet(
+        assert cells(sheet(
             '<row r="1"><!-- note --><c r="A1"><v>1</v></c></row>'
-        ), expect_fast=False)
+        )) == ({0: "1"}, {})
 
     def test_processing_instruction(self):
-        check(sheet(
+        assert cells(sheet(
             '<row r="1"><?pi data?><c r="A1"><v>1</v></c></row>'
-        ), expect_fast=False)
+        )) == ({0: "1"}, {})
 
     def test_prefixed_elements(self):
         xml = (
@@ -215,49 +216,95 @@ class TestFallsBack:
             '<x:sheetData><x:row r="1"><x:c r="A1"><x:v>1</x:v></x:c>'
             "</x:row></x:sheetData></x:worksheet>"
         )
-        check(xml, expect_fast=False)
+        assert cells(xml) == ({0: "1"}, {})
 
     def test_single_quoted_attrs(self):
-        # count self-check catches the unmatched strict token shape
-        check(sheet("<row r='1'><c r='A1'><v>1</v></c></row>"),
-              expect_fast=False)
+        assert cells(sheet("<row r='1'><c r='A1'><v>1</v></c></row>")) \
+            == ({0: "1"}, {})
 
     def test_gt_in_attr_value(self):
-        check(sheet(
+        assert cells(sheet(
             '<row r="1"><c r="A1" x="a>b"><v>1</v></c></row>'
-        ), expect_fast=False)
+        )) == ({0: "1"}, {})
 
     def test_markup_inside_v(self):
-        check(sheet(
+        # only character data inside <v> counts; the element is skipped
+        assert cells(sheet(
             '<row r="1"><c r="A1" t="str"><v>a<b/>c</v></c></row>'
-        ), expect_fast=False)
+        )) == ({0: "ac"}, {})
 
     def test_undefined_entity_truncates(self):
-        # &nbsp; is undefined in XML: expat errors mid-parse and the expat
-        # path keeps only what it saw before the error
+        # &nbsp; is undefined in XML: expat errors mid-parse and the parse
+        # keeps only what it saw before the error
         xml = sheet(
             '<row r="1"><c r="A1"><v>1</v></c>'
             '<c r="B1" t="str"><v>&nbsp;</v></c></row>'
         )
-        slow = check(xml, expect_fast=False)
-        assert slow[0] == {0: "1"}  # truncation semantics preserved
+        assert cells(xml) == ({0: "1"}, {})
+
+
+def _grid_markdown(name: str, grid: list[list[str]]) -> str:
+    """Reference Markdown for one sheet: ``## name`` + a pipe table whose
+    first row is the header (xlsx.rs convert_inner), built from the cell
+    strings without the converter."""
+    def line(row):
+        return "| " + " | ".join(
+            v.replace("\\", "\\\\").replace("|", "\\|") for v in row
+        ) + " |\n"
+
+    header, *rest = grid
+    return (f"## {name}\n" + line(header) + "|---" * len(header) + "|\n"
+            + "".join(map(line, rest)))
+
+
+def _xlsx(sheet_xml: str, name: str = "Data") -> bytes:
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("xl/workbook.xml", (
+            f'<?xml version="1.0"?><workbook {_X_NS}><sheets>'
+            f'<sheet name="{name}" sheetId="1" r:id="rId1"/>'
+            "</sheets></workbook>"
+        ))
+        zf.writestr("xl/_rels/workbook.xml.rels", (
+            '<?xml version="1.0"?><Relationships xmlns="http://schemas.'
+            'openxmlformats.org/package/2006/relationships">'
+            '<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/'
+            'officeDocument/2006/relationships/worksheet" '
+            'Target="worksheets/sheet1.xml"/></Relationships>'
+        ))
+        zf.writestr("xl/worksheets/sheet1.xml", sheet_xml)
+    return buf.getvalue()
 
 
 class TestConvertIntegration:
-    def test_large_sheet_uses_fast_scan(self, monkeypatch):
-        """convert_xlsx on a >=64 KB sheet goes through the fast scan and
-        produces the same markdown as the expat path."""
-        rows = "".join(
-            f'<row r="{r}"><c r="A{r}" t="inlineStr"><is><t>v{r}</t></is>'
-            f'</c><c r="B{r}"><v>{r}.5</v></c></row>'
-            for r in range(1, 900)
-        )
-        xml = sheet(rows)
+    def test_large_sheet_markdown_matches_cells(self):
+        """A sheet past 64 KB, with inline strings, escapes, numbers,
+        booleans and error cells, converts to the Markdown built
+        directly from the cells that generated it."""
+        grid, cells_xml = [], []
+        for r in range(1, 1200):
+            row = [f"v{r}|x", f"{r}.5", ("TRUE", "FALSE")[r % 2], "#N/A"]
+            grid.append(row)
+            cells_xml.append(
+                f'<row r="{r}">'
+                f'<c r="A{r}" t="inlineStr"><is><t>v{r}|x</t></is></c>'
+                f'<c r="B{r}"><v>{r}.5</v></c>'
+                f'<c r="C{r}" t="b"><v>{1 - r % 2}</v></c>'
+                f'<c r="D{r}" t="e"><v>#N/A</v></c></row>'
+            )
+        xml = sheet("".join(cells_xml))
         assert len(xml) >= 65536
-        shared: list[str] = []
-        fast = X._fast_sheet_cells(xml, shared, set())
-        assert fast is not None
-        assert fast == expat_cells(xml)
+        out = X.convert_xlsx(_xlsx(xml))
+        assert out["markdown"] == _grid_markdown("Data", grid)
+        assert out["plain_text"] == "Data\n" + "".join(
+            "\t".join(row) + "\n" for row in grid
+        )
+        assert out["title"] is None
+        assert [w["location"] for w in out["warnings"]] \
+            == [f"Data!D{r}" for r in range(1, 1200)]
 
     def test_golden_fixture_unchanged(self):
         import pathlib
@@ -278,6 +325,11 @@ _VALS = ["", "1", "1.5", "0", "true", "#REF!", "abc", "a&amp;b", " x ",
 
 
 class TestSoupDifferential:
+    """Crash freedom over a soup of cell types and values (the battery
+    that found the NaN-date-serial crash in excel_serial_to_datetime):
+    every generated sheet parses, and every key and value is well
+    formed."""
+
     @given(st.lists(st.tuples(
         st.sampled_from(["row", "rowr", "cell"]),
         st.sampled_from(_TYPES),
@@ -298,55 +350,56 @@ class TestSoupDifferential:
             else:
                 body.append(f'<c r="{chr(65 + n)}{n + 1}"{t} s="{n}">'
                             f"<v>{val}</v></c>")
-        xml = sheet("".join(body))
-        check(xml, shared=["s0", "s1"], date_styles={3})
+        got, errors = cells(sheet("".join(body)), shared=["s0", "s1"],
+                            date_styles={3})
+        for k, v in got.items():
+            assert isinstance(k, int) and isinstance(v, str)
+            assert (k >> 32) <= 1048576 and (k & 0xFFFFFFFF) < 16384
+        assert set(errors) <= set(got)
+        assert all(got[k] == v for k, v in errors.items())
 
 
 class TestWhitespaceAttrSeparators:
     """XML allows any whitespace run (tab/newline/CR) between
-    attributes and pretty-printing writers emit them; round-6 review
-    found the positional captures and leftover markers required a
-    single literal space, silently misreading such sheets."""
+    attributes and pretty-printing writers emit them."""
 
     def test_tab_before_type_attr(self):
-        out = check(sheet('<row r="1"><c\tt="s"><v>1</v></c></row>'),
-                    shared=["s0", "s1"], expect_fast=True)
+        out = cells(sheet('<row r="1"><c\tt="s"><v>1</v></c></row>'),
+                    shared=["s0", "s1"])
         assert out[0][0] == "s1"
 
     def test_newline_separated_refs(self):
-        out = check(sheet('<row\nr="7"><c\nr="B7"><v>42</v></c></row>'),
-                    expect_fast=True)
+        out = cells(sheet('<row\nr="7"><c\nr="B7"><v>42</v></c></row>'))
         assert out[0][(6 << 32) | 1] == "42"
 
     @pytest.mark.parametrize("ws", ["\t", "\n", "\t\n ", " \t"])
     def test_every_attr_position(self, ws):
-        out = check(sheet(
+        out = cells(sheet(
             f'<row{ws}r="2"><c{ws}r="A2"{ws}s="3"{ws}t="s"><v>0</v></c>'
             f'<c{ws}t="inlineStr"{ws}r="C2"><is><t>inl</t></is></c></row>'
-        ), shared=["hit"], date_styles={3}, expect_fast=True)
+        ), shared=["hit"], date_styles={3})
         assert out[0][(1 << 32) | 0] == "hit"
         assert out[0][(1 << 32) | 2] == "inl"
 
     def test_leftover_attrs_whitespace_separated(self):
-        # out-of-order AND tab/newline separated: the generic
-        # _attr_value path must find r/s/t through any separator
-        out = check(sheet(
+        # out-of-order AND tab/newline separated
+        out = cells(sheet(
             '<row spans="1:2"\tr="3"><c\tt="s"\nr="A3"><v>0</v></c></row>'
-        ), shared=["hit"], expect_fast=True)
+        ), shared=["hit"])
         assert out[0][(2 << 32) | 0] == "hit"
 
     def test_value_containing_attr_lookalike(self):
         # an attribute VALUE containing ' r="' must not be misread as
-        # the r attribute (structural pair walk, not substring search)
-        out = check(sheet(
+        # the r attribute
+        out = cells(sheet(
             '<row r="1"><c ph="x r=" t="s" r="B1"><v>0</v></c></row>'
-        ), shared=["v0"], expect_fast=True)
+        ), shared=["v0"])
         assert out[0][1] == "v0"
 
     def test_error_cells_with_tab_separator(self):
-        # t="e" behind a tab: errors map must populate identically
-        check(sheet('<row r="1"><c\tt="e"><v>#DIV/0!</v></c></row>'),
-              expect_fast=True)
+        # t="e" behind a tab still populates the errors map
+        out = cells(sheet('<row r="1"><c\tt="e"><v>#DIV/0!</v></c></row>'))
+        assert out == ({0: "#DIV/0!"}, {0: "#DIV/0!"})
 
     @given(st.lists(st.sampled_from([" ", "\t", "\n", " \t", "\n  "]),
                     min_size=4, max_size=4))
@@ -357,9 +410,8 @@ class TestWhitespaceAttrSeparators:
             f'<row{a}r="1"><c{b}r="A1"{c}t="s"><v>1</v></c>'
             f'<c{d}s="0"><v>45000</v></c></row>'
         )
-        out = check(xml, shared=["s0", "s1"], date_styles={0},
-                    expect_fast=True)
-        assert out[0][0] == "s1"
+        out = cells(xml, shared=["s0", "s1"], date_styles={0})
+        assert out == ({0: "s1", 1: "2023-03-15"}, {})
 
 
 _SST_NS = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
@@ -370,9 +422,9 @@ def sst(body: str, ns: str = _SST_NS) -> str:
 
 
 class TestSharedStringsSemantics:
-    """parse_shared_strings is deliberately expat-only (a single-regex
-    fast path measured 0.81x — PLANS.md round-6 negative result); these
-    pin the semantics that experiment's differential battery exercised:
+    """parse_shared_strings is expat only (a single-regex fast path
+    measured 0.81x — PLANS.md round-6 negative result); these pin the
+    semantics that experiment's differential battery exercised:
     phonetic-run exclusion, rich-run concatenation, entity decoding."""
 
     def test_plain_strings(self):
