@@ -87,6 +87,23 @@ def _oracle_alias(kind: str, sf_dir: str) -> str:
     return _sig_path(kind, sf_dir, _ORACLE_ALIAS_TOKEN)
 
 
+def _drop_earlier_tokens(path: str) -> None:
+    """Delete the directories that other code tokens wrote beside the
+    complete oracle input at ``path`` (``{kind}_{sf}_<token>``): without
+    this, every edit to the token's source files leaves a full set
+    behind. Symlinks (the oracle alias) are kept."""
+    import re
+    import shutil
+
+    parent, name = _os.path.split(path)
+    same_kind = re.compile(re.escape(name.rpartition("_")[0]) + "_[0-9a-f]{10}")
+    for other in _os.listdir(parent):
+        old = _os.path.join(parent, other)
+        if (other != name and same_kind.fullmatch(other)
+                and not _os.path.islink(old) and _os.path.isdir(old)):
+            shutil.rmtree(old, ignore_errors=True)
+
+
 def _write_sig_once(df: "DataFrame", kind: str, sf_dir: str) -> str:
     """Materialize a deterministic oracle-input parquet exactly once and
     return its path: the path is content-addressed (code-version token +
@@ -95,7 +112,8 @@ def _write_sig_once(df: "DataFrame", kind: str, sf_dir: str) -> str:
     repeat run of the simhash / lsh-bucket queries. The oracle's alias
     path is then repointed at it if it names anything else (a symlink
     swapped in by ``os.replace``; a directory an older checkout wrote
-    under the alias name is removed first)."""
+    under the alias name is removed first), and the directories of
+    earlier tokens are deleted."""
     path = _sig_path(kind, sf_dir)
     if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
         df.write.mode("overwrite").parquet(path)
@@ -113,6 +131,7 @@ def _write_sig_once(df: "DataFrame", kind: str, sf_dir: str) -> str:
 
             shutil.rmtree(alias)
         _os.replace(tmp, alias)
+    _drop_earlier_tokens(path)
     return path
 
 
@@ -126,10 +145,12 @@ def _stream_input_once(df: "DataFrame", variant: str, sf: str,
     fixed cost (r5 verdict: driver samples swung 2.9-36.5 s for
     identical work). Checkpoints and sinks stay fresh per invocation —
     only the immutable input is shared. ``n_files`` pins the micro-batch
-    layout (one file -> one batch where within-batch order matters)."""
+    layout (one file -> one batch where within-batch order matters).
+    The inputs earlier tokens wrote are deleted."""
     path = _sig_path(f"stream_{variant}", sf)
     if not _os.path.exists(_os.path.join(path, "_SUCCESS")):
         df.coalesce(n_files).write.mode("overwrite").parquet(path)
+    _drop_earlier_tokens(path)
     return path
 
 

@@ -1,20 +1,32 @@
 /* _html_fast.c — native fast path for html_conv.convert_html.
  *
  * A byte-level twin of html_conv._fast_feed + _Walker for the COMMON
- * subset of HTML: plain text (no character references — the caller
- * gates on the absence of '&', which makes html.unescape the identity),
- * simple start tags with whitespace-separated attributes, end tags,
- * self-closing tags, comments / CDATA / doctype / PI swallowing, and
- * raw-text content for script/style/title/textarea.
+ * subset of HTML: text with character references, simple start tags
+ * with whitespace-separated attributes, end tags, self-closing tags,
+ * comments / CDATA / doctype / PI swallowing, and raw-text content for
+ * script/style/title/textarea.
+ *
+ * Character references are decoded exactly where the Python walker
+ * calls html.unescape: text runs, the attribute values the handlers
+ * read (href, alt, src, type) and title/textarea content — never
+ * script/style.  Only three forms decode: '&name;' for a ';'-terminated
+ * key of html.entities.html5, '&#digits;' / '&#xhex;' naming a codepoint
+ * html.unescape returns unchanged, and a bare '&' before \t \n \f space
+ * '<' '&' or the end of the span (kept literally).  This file does not
+ * compile alone: _html_native._c_source() prepends the tables those
+ * forms are checked against (ENTITY_NAME / ENTITY_VALUE, CP_NOT_PLAIN),
+ * generated from the running interpreter's html module.
  *
  * Anything outside the verified envelope makes the walker BAIL
  * (return code 2) and the caller falls back to the pure-Python walker,
  * so this file never has to be right about the long tail — only about
- * the narrow grammar it accepts.  Bails include: non-ASCII bytes or
- * '\v' inside tag markup outside quoted attribute values (Python's \s
- * is Unicode-aware there), '/' used as an attribute separator, tag
- * names containing '<' / non-ASCII / longer than 23 bytes, unquoted
- * attribute values with non-ASCII bytes, and pathological stack depth.
+ * the narrow grammar it accepts.  Bails include: any other character
+ * reference (no ';', unknown or non-alphanumeric name, a codepoint
+ * html.unescape remaps or drops), non-ASCII bytes or '\v' inside tag
+ * markup outside quoted attribute values (Python's \s is Unicode-aware
+ * there), '/' used as an attribute separator, tag names containing '<' /
+ * non-ASCII / longer than 23 bytes, unquoted attribute values with
+ * non-ASCII bytes, and pathological stack depth.
  *
  * Byte-parity with the Python walker over fixtures, the chaos fuzz
  * corpus, and the full bench corpus is locked by
@@ -53,6 +65,7 @@ static int buf_reserve(buf_t *b, size_t extra) {
 }
 
 static int buf_push(buf_t *b, const char *s, size_t n) {
+    if (n == 0) return 1; /* b->d may still be NULL (w->ref) */
     if (!buf_reserve(b, n)) return 0;
     memcpy(b->d + b->len, s, n);
     b->len += n;
@@ -305,6 +318,7 @@ typedef struct {
     buf_t ti_cap, h1_cap;
     int ti_done, h1_done;       /* title_text / first_h1_text set */
     buf_t ti_text, h1_text;
+    buf_t ref;                  /* decoded character references */
     int bail;
     int oom;
 } walker_t;
@@ -512,6 +526,133 @@ static void handle_text(walker_t *w, const char *raw, size_t n) {
     }
     if (pln) pl_push(w, plc, pln);
     if (needs) free(scratch.d);
+}
+
+/* ------------------------------------------------------------------ */
+/* character references: html.unescape on the three accepted forms     */
+
+/* value of the entity named s[0:n] + ';' (s alphanumeric), or NULL */
+static const char *entity_value(const char *s, size_t n) {
+    size_t lo = 0, hi = N_ENTITIES;
+    while (lo < hi) {
+        size_t mid = lo + (hi - lo) / 2;
+        const char *e = ENTITY_NAME[mid];
+        int c = strncmp(e, s, n);
+        if (c == 0 && e[n]) c = 1; /* s is a proper prefix of e */
+        if (c == 0) return ENTITY_VALUE[mid];
+        if (c < 0) lo = mid + 1;
+        else hi = mid;
+    }
+    return NULL;
+}
+
+/* cp (<= 0x10FFFF) is returned as chr(cp) by html.unescape */
+static int plain_codepoint(uint32_t cp) {
+    size_t nr = sizeof(CP_NOT_PLAIN) / sizeof(CP_NOT_PLAIN[0]);
+    for (size_t k = 0; k < nr && cp >= CP_NOT_PLAIN[k][0]; k++)
+        if (cp <= CP_NOT_PLAIN[k][1]) return 0;
+    return 1;
+}
+
+static int push_utf8(buf_t *b, uint32_t cp) {
+    char u[4];
+    size_t n;
+    if (cp < 0x80) {
+        u[0] = (char)cp;
+        n = 1;
+    } else if (cp < 0x800) {
+        u[0] = (char)(0xc0 | (cp >> 6));
+        u[1] = (char)(0x80 | (cp & 0x3f));
+        n = 2;
+    } else if (cp < 0x10000) {
+        u[0] = (char)(0xe0 | (cp >> 12));
+        u[1] = (char)(0x80 | ((cp >> 6) & 0x3f));
+        u[2] = (char)(0x80 | (cp & 0x3f));
+        n = 3;
+    } else {
+        u[0] = (char)(0xf0 | (cp >> 18));
+        u[1] = (char)(0x80 | ((cp >> 12) & 0x3f));
+        u[2] = (char)(0x80 | ((cp >> 6) & 0x3f));
+        u[3] = (char)(0x80 | (cp & 0x3f));
+        n = 4;
+    }
+    return buf_push(b, u, n);
+}
+
+static int digit_value(unsigned char c) {
+    if (c >= '0' && c <= '9') return c - '0';
+    c |= 0x20;
+    return (c >= 'a' && c <= 'f') ? c - 'a' + 10 : 99;
+}
+
+static int is_alnum_ascii(unsigned char c) {
+    return (c >= '0' && c <= '9') || ((c | 0x20) >= 'a' && (c | 0x20) <= 'z');
+}
+
+/* append html.unescape(s[0:n]) to dst.  Returns 1 ok, 0 bail (a
+ * reference outside the accepted forms), -1 allocation failure. */
+static int unescape_into(buf_t *dst, const char *s, size_t n) {
+    size_t i = 0;
+    for (;;) {
+        const char *amp = (const char *)memchr(s + i, '&', n - i);
+        size_t lit = amp ? (size_t)(amp - s) - i : n - i;
+        if (!buf_push(dst, s + i, lit)) return -1;
+        if (!amp) return 1;
+        i += lit + 1;
+        unsigned char c = i < n ? (unsigned char)s[i] : '<';
+        if (c == '\t' || c == '\n' || c == '\f' || c == ' ' || c == '<' ||
+            c == '&') {
+            /* html.unescape's pattern cannot start here: literal '&' */
+            if (!buf_pushc(dst, '&')) return -1;
+            continue;
+        }
+        if (c == '#') {
+            uint32_t base = 10, cp = 0;
+            if (++i < n && ((unsigned char)s[i] | 0x20) == 'x') {
+                base = 16;
+                i++;
+            }
+            size_t start = i;
+            for (; i < n; i++) {
+                uint32_t d = (uint32_t)digit_value((unsigned char)s[i]);
+                if (d >= base) break;
+                cp = cp * base + d;
+                if (cp > 0x10FFFF) return 0;
+            }
+            if (i == start || i == n || s[i] != ';' || !plain_codepoint(cp))
+                return 0;
+            i++;
+            if (!push_utf8(dst, cp)) return -1;
+            continue;
+        }
+        /* every key of html.entities.html5 is [A-Za-z0-9]{1,31} ';' */
+        size_t start = i;
+        while (i < n && i - start < 32 && is_alnum_ascii((unsigned char)s[i]))
+            i++;
+        if (i == start || i - start >= 32 || i == n || s[i] != ';') return 0;
+        const char *v = entity_value(s + start, i - start);
+        if (!v) return 0;
+        i++;
+        if (!buf_push(dst, v, strlen(v))) return -1;
+    }
+}
+
+/* decode s[0:n] onto the end of w->ref; 0 when the walk must stop */
+static int w_unescape(walker_t *w, const char *s, size_t n) {
+    int r = unescape_into(&w->ref, s, n);
+    if (r < 0) w->oom = 1;
+    else if (r == 0) w->bail = 1;
+    return r > 0;
+}
+
+/* handle_text(html.unescape(raw)); a span without '&' is passed as is */
+static void handle_text_unescaped(walker_t *w, const char *raw, size_t n) {
+    if (!memchr(raw, '&', n)) {
+        handle_text(w, raw, n);
+        return;
+    }
+    w->ref.len = 0;
+    if (w_unescape(w, raw, n)) handle_text(w, w->ref.d, w->ref.len);
 }
 
 /* ------------------------------------------------------------------ */
@@ -1148,6 +1289,32 @@ typedef struct {
     size_t n;
 } slice_t;
 
+/* html.unescape the attribute values tag `id` reads (the others never
+ * reach a handler), decoding into w->ref */
+static void unescape_attrs(walker_t *w, int id, slice_t *href, slice_t *alt,
+                           slice_t *src, slice_t *type) {
+    slice_t *read[2];
+    size_t start[2], end[2];
+    int nr = 0, decoded[2] = {0, 0};
+    if (id == T_A) read[nr++] = href;
+    else if (id == T_IMG) { read[nr++] = alt; read[nr++] = src; }
+    else if (id == T_INPUT) read[nr++] = type;
+    w->ref.len = 0;
+    for (int k = 0; k < nr; k++) {
+        if (!read[k]->p || !memchr(read[k]->p, '&', read[k]->n)) continue;
+        start[k] = w->ref.len;
+        if (!w_unescape(w, read[k]->p, read[k]->n)) return;
+        end[k] = w->ref.len;
+        decoded[k] = 1;
+    }
+    /* a later decode may move w->ref, so point into it only now */
+    for (int k = 0; k < nr; k++) {
+        if (!decoded[k]) continue;
+        read[k]->p = w->ref.d + start[k];
+        read[k]->n = end[k] - start[k];
+    }
+}
+
 /* parse a start tag beginning at s[pos] ('<' at pos, letter at pos+1).
  * Returns: 1 = ok (out params set), 0 = not a complete tag (caller
  * emits lone '<'), -1 = bail. */
@@ -1291,7 +1458,7 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
             /* text run [^<]+ */
             size_t e = pos;
             while (e < n && s[e] != '<') e++;
-            handle_text(&w, (const char *)s + pos, e - pos);
+            handle_text_unescaped(&w, (const char *)s + pos, e - pos);
             pos = e;
             continue;
         }
@@ -1396,6 +1563,8 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
                 continue;
             }
             int id = tag_lookup(namebuf, namelen);
+            unescape_attrs(&w, id, &href, &alt, &src, &type);
+            if (w.bail || w.oom) break;
             if (self_closing) {
                 handle_open_tag(&w, id, href.p, href.n, alt.p, alt.n, src.p,
                                 src.n, type.p, type.n, has_checked);
@@ -1413,9 +1582,13 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
                 if (fr < 0) { w.bail = 1; break; }
                 if (fr == 0) { cend = n; res2 = n; }
                 if (cend > pos) {
-                    /* title/textarea content would be unescaped — the
-                     * caller gates '&', so raw == unescaped */
-                    handle_text(&w, (const char *)s + pos, cend - pos);
+                    /* title/textarea content is RCDATA: unescaped;
+                     * script/style content stays raw */
+                    if (id == T_TITLE || id == T_TEXTAREA)
+                        handle_text_unescaped(&w, (const char *)s + pos,
+                                              cend - pos);
+                    else
+                        handle_text(&w, (const char *)s + pos, cend - pos);
                 }
                 edge_endtag(&w, id, namebuf, namelen);
                 pos = res2;
@@ -1501,6 +1674,7 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
     free(w.h1_cap.d);
     free(w.ti_text.d);
     free(w.h1_text.d);
+    free(w.ref.d);
     return rc;
 }
 

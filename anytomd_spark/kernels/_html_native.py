@@ -1,20 +1,26 @@
 """ctypes loader for the native HTML fast path (_html_fast.c).
 
-Compiles the C twin on first import (cached in a temp dir keyed by the
-md5 of the C source, so a changed kernel never reuses a stale .so) and
-exposes :func:`convert_html_native`, which returns ``None`` whenever the
-native walker declines — build unavailable, input contains ``&``
-(html.unescape must run, Python path), or the C side bailed on a
-construct outside its verified envelope.  The caller falls back to the
-pure-Python walker in every ``None`` case, so this module can only make
-conversion faster, never different: byte-parity on the accepted domain
-is locked by tests/test_html_native.py.
+Compiles the C twin on first use: :func:`_c_source` prepends to
+_html_fast.c the character-reference tables generated from the running
+interpreter's ``html`` module (the ``;``-terminated names of
+``html.entities.html5`` and the codepoints ``html.unescape`` remaps or
+drops), and the .so is cached in a temp dir keyed by the md5 of those
+bytes, so a changed kernel or table never reuses a stale library.
+:func:`convert_html_native` returns ``None`` whenever the native walker
+declines — build unavailable, input over 1 MiB, or the C side bailed on
+a construct outside its verified envelope (a character reference it
+cannot decode exactly like ``html.unescape`` among them).  The caller
+falls back to the pure-Python walker in every ``None`` case, so this
+module can only make conversion faster, never different: byte-parity on
+the accepted domain is locked by tests/test_html_native.py.
 """
 
 from __future__ import annotations
 
 import ctypes
 import hashlib
+import html
+import html.entities
 import os
 import pkgutil
 import subprocess
@@ -25,15 +31,66 @@ _lib = None
 _tried = False
 
 
+def _c_source() -> bytes:
+    """The exact bytes compiled into the native walker: the tables its
+    character-reference decode checks against, then _html_fast.c.
+
+    ``ENTITY_NAME``/``ENTITY_VALUE`` hold every ``;``-terminated key of
+    ``html.entities.html5`` (without the ``;``, in byte order for binary
+    search) and its UTF-8 value; ``CP_NOT_PLAIN`` holds the codepoint
+    ranges ``html.unescape`` does not return as ``chr(cp)``: 0, the
+    remapped ``html._invalid_charrefs``, surrogates and the dropped
+    ``html._invalid_codepoints``."""
+    entities = sorted(
+        (name[:-1].encode("ascii"), value.encode("utf-8"))
+        for name, value in html.entities.html5.items()
+        if name.endswith(";")
+    )
+    not_plain = sorted(
+        {0, *html._invalid_charrefs, *range(0xD800, 0xE000),
+         *html._invalid_codepoints}
+    )
+    ranges: list[list[int]] = []
+    for cp in not_plain:
+        if ranges and cp == ranges[-1][1] + 1:
+            ranges[-1][1] = cp
+        else:
+            ranges.append([cp, cp])
+
+    def rows(items: list[str], per_line: int) -> str:
+        return ",\n".join(
+            "    " + ", ".join(items[i:i + per_line])
+            for i in range(0, len(items), per_line)
+        )
+
+    names = [f'"{name.decode()}"' for name, _ in entities]
+    octal = [f"\\{b:03o}" for b in range(256)]
+    values = ['"' + "".join(map(octal.__getitem__, v)) + '"' for _, v in entities]
+    table = (
+        "/* generated by _html_native._c_source() from the html module */\n"
+        f"#define N_ENTITIES {len(entities)}\n"
+        "static const char *const ENTITY_NAME[N_ENTITIES] = {\n"
+        f"{rows(names, 8)}\n}};\n"
+        "static const char *const ENTITY_VALUE[N_ENTITIES] = {\n"
+        f"{rows(values, 8)}\n}};\n"
+        "static const unsigned int CP_NOT_PLAIN[][2] = {\n"
+        f"{rows([f'{{{lo:#x}, {hi:#x}}}' for lo, hi in ranges], 4)}\n}};\n"
+    )
+    # through the package loader, so the source is found when the
+    # package is imported from a zip (--py-files, the shipped zip)
+    return table.encode("ascii") + pkgutil.get_data(__package__, "_html_fast.c")
+
+
+def _so_path(src: bytes) -> str:
+    """Where the library compiled from ``src`` is cached."""
+    token = hashlib.md5(src).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), f"anytomd_html_fast_{token}.so")
+
+
 def _build() -> "ctypes.CDLL | None":
     try:
-        # through the package loader, so the source is found when the
-        # package is imported from a zip (--py-files, the shipped zip)
-        src = pkgutil.get_data(__package__, "_html_fast.c")
-        token = hashlib.md5(src).hexdigest()[:16]
-        so_path = os.path.join(
-            tempfile.gettempdir(), f"anytomd_html_fast_{token}.so"
-        )
+        src = _c_source()
+        so_path = _so_path(src)
         if not os.path.exists(so_path):
             tmp = so_path + f".build{os.getpid()}"
             subprocess.run(
@@ -91,8 +148,6 @@ def _out_params() -> tuple:
 def convert_html_native(text: str) -> "dict | None":
     """Native conversion of ``text`` (BOM already stripped), or ``None``
     when the Python walker must run instead."""
-    if "&" in text:  # html.unescape must apply; identity only without '&'
-        return None
     if len(text) > (1 << 20):
         # the C walker trades memory for speed (growable output buffers
         # with doubling, whole-buffer copies at heading/link close); the

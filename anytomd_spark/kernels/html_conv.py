@@ -939,12 +939,15 @@ def convert_html(data: bytes, fast: bool = True) -> dict:
     """Convert HTML bytes to (markdown, plain, title) per html.rs:22-40.
 
     Three tiers: the native C walker (kernels/_html_fast.c, ~4x) for
-    documents inside its verified envelope (no charrefs, plain tag
-    markup — it BAILS to Python on anything else, so it can only be
-    faster, never different; byte-parity locked by
-    tests/test_html_native.py over fixtures + fuzz + the bench corpus),
-    then the regex fast tokenizer, then the stdlib html.parser path
-    (``fast=False``) kept as the differential oracle."""
+    documents of at most 1 MiB inside its verified envelope (plain tag
+    markup; character references only in the forms it decodes exactly
+    like ``html.unescape`` — ``&name;``, ``&#N;``/``&#xH;`` of a codepoint
+    returned unchanged, a bare ``&`` — it BAILS to Python on anything
+    else, so it can only be faster, never different; byte-parity locked
+    by tests/test_html_native.py over fixtures + fuzz + the bench corpus
+    + the entity sweep of scripts/html_parity_sweep.py), then the regex
+    fast tokenizer, then the stdlib html.parser path (``fast=False``)
+    kept as the differential oracle."""
     text = data.decode("utf-8")  # html.rs:27 errors on invalid UTF-8
     if text.startswith("﻿"):
         text = text[1:]

@@ -148,15 +148,14 @@ def main() -> None:
     for name, inp, peak, ratio, target, ok in rows:
         section += (f"| {name} | {inp:.1f} | {peak:.1f} | {ratio:.2f}x | "
                     f"{target}x | {'PASS' if ok else 'FAIL'} |\n")
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    from ooxml_latency import replace_generated_section
+
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
     with open(path) as f:
-        doc = f.read()
-    start = doc.find(f"\n{header}")
-    if start != -1:
-        nxt = doc.find("\n## ", start + 1)
-        doc = doc[:start] + doc[nxt:] if nxt != -1 else doc[:start]
+        doc = replace_generated_section(f.read(), header, section)
     with open(path, "w") as f:
-        f.write(doc + section)
+        f.write(doc)
 
 
 if __name__ == "__main__":

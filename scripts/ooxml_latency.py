@@ -104,6 +104,31 @@ def big_xlsx(target_mb: float = 10.0) -> bytes:
     })
 
 
+def replace_generated_section(doc: str, header_prefix: str,
+                              section: str) -> str:
+    """``doc`` (BENCH/BASELINE.md) with its generated section replaced by
+    ``section`` (a blank line, a ``## `` header line and a table).
+
+    Only the generated lines are replaced: the first header line starting
+    with ``header_prefix`` and the table right under it. Notes written
+    below the table stay where they are. Without such a header,
+    ``section`` is appended."""
+    lines = doc.splitlines(keepends=True)
+    for i, line in enumerate(lines):
+        if not line.startswith(header_prefix):
+            continue
+        end = i + 1
+        table = end
+        while table < len(lines) and not lines[table].strip():
+            table += 1
+        if table < len(lines) and lines[table].startswith("|"):
+            end = table
+            while end < len(lines) and lines[end].startswith("|"):
+                end += 1
+        return "".join(lines[:i]) + section.lstrip("\n") + "".join(lines[end:])
+    return doc + section
+
+
 def main() -> None:
     results = []
     for name, build, convert in (
@@ -161,13 +186,13 @@ def main() -> None:
     if os.path.exists(path):
         with open(path) as f:
             doc = f.read()
-    start = doc.find(f"\n{header} (reference target TECH_SPEC.md:834-836: "
-                     "<= 2 s; measured ")
-    if start != -1:  # a timestamped (replaceable) section exists
-        nxt = doc.find("\n## ", start + 1)
-        doc = doc[:start] + (doc[nxt:] if nxt != -1 else "")
+    # only the timestamped section is replaceable; the untimestamped
+    # ones above it are history
+    doc = replace_generated_section(
+        doc, f"{header} (reference target TECH_SPEC.md:834-836: "
+        "<= 2 s; measured ", section)
     with open(path, "w") as f:
-        f.write(doc + section)
+        f.write(doc)
 
 
 if __name__ == "__main__":

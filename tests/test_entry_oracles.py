@@ -153,10 +153,32 @@ def test_signature_cache_follows_the_code_token(spark, tmp_path, monkeypatch):
     second = entrymod._write_sig_once(spark.range(5), kind, sf)
     assert second == f"{tmp_path}/{kind}_sf0.01_0123456789"
     assert os.path.realpath(alias) == second and rows_via_alias() == 5
+    # the earlier token's table is deleted once the new one is complete
     assert sorted(os.listdir(tmp_path)) == sorted(
-        os.path.basename(p) for p in (alias, first, second)
+        os.path.basename(p) for p in (alias, second)
     )
 
     oracle = entrymod.oracle_sql()["dedup_simhash"]
     assert entrymod._oracle_alias(kind, entrymod._CORRECTNESS_SF) in oracle
     assert "0123456789" not in oracle
+
+
+def test_stream_input_drops_earlier_token_directories(spark, tmp_path,
+                                                      monkeypatch):
+    """Writing a stream input under the current token deletes the inputs
+    earlier tokens left beside it (the pinned-token name included) and
+    nothing of another kind or scale factor."""
+    monkeypatch.setattr(entrymod, "ORACLE_INPUTS", str(tmp_path))
+    planted = ("stream_metrics_sf0.01_4cd376545b",
+               "stream_metrics_sf0.01_ea4b64158f")
+    kept = ("stream_metrics_sf0.1_4cd376545b",
+            "stream_qualgate_sf0.01_4cd376545b",
+            "simhash_sigs_sf0.01_4cd376545b", "stream_metrics_sf0.01_notes")
+    for name in planted + kept:
+        os.makedirs(tmp_path / name)
+        open(tmp_path / name / "_SUCCESS", "w").close()
+    path = entrymod._stream_input_once(spark.range(4), "metrics",
+                                       "/data/sf0.01", n_files=1)
+    assert path == entrymod._sig_path("stream_metrics", "/data/sf0.01")
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        (os.path.basename(path),) + kept)

@@ -3,16 +3,19 @@
 The native walker may either produce EXACTLY the Python fast walker's
 output or decline (return None -> caller falls back), never a third
 thing.  These tests drive both implementations over the reference
-fixture, the synthetic corpus generator, and adversarial tag soup
-(including the constructs the C side is expected to BAIL on: charrefs,
-unicode whitespace inside tags, slash separators, exotic names) and
-assert that equivalence.
+fixture, the synthetic corpus generator, adversarial tag soup and
+generated entity-bearing documents (including the constructs the C side
+is expected to BAIL on: character references outside the forms it
+decodes, unicode whitespace inside tags, slash separators, exotic names)
+and assert that equivalence.
 """
 
 from __future__ import annotations
 
+import html.entities
+import importlib.util
 import json
-import pkgutil
+import os
 import random
 import subprocess
 import sys
@@ -21,6 +24,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from anytomd_spark.kernels import _html_native
 from anytomd_spark.kernels._html_native import _get_lib, convert_html_native
 from anytomd_spark.kernels.html_conv import _Walker, _fast_feed, convert_html
 
@@ -54,6 +58,15 @@ needs_native = pytest.mark.skipif(
 )
 
 
+def _load_parity_sweep():
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts", "html_parity_sweep.py")
+    spec = importlib.util.spec_from_file_location("_html_parity_sweep", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
 @needs_native
 class TestNativeDifferential:
     def test_fixture(self):
@@ -73,8 +86,51 @@ class TestNativeDifferential:
         # the bench corpus is squarely inside the envelope
         assert accepted >= 290
 
-    def test_charref_declines(self):
-        assert convert_html_native("<p>a &amp; b</p>") is None
+    def test_charrefs_decode_like_html_unescape(self):
+        for text in (
+            "<p>a &amp; b &#65;&#x42;&#X43; &eacute;&hellip;</p>",
+            "<a href='/q?a=1&amp;b=&#50;'>go &gt; on</a>",
+            "<img alt='&quot;A&quot; &amp; B' src='/i?x=1&amp;y=2'>",
+            "<title>Fish &amp; Chips &#8212; menu</title><p>x</p>",
+            "<textarea>&lt;b&gt; &copy;</textarea><p>y</p>",
+            "<p>&lt;b&gt;bold?&lt;/b&gt;</p>",  # decodes to literal <b>
+            "<p>a &nbsp; b&nbsp;</p><h1>&nbsp;Head&nbsp;</h1>",
+            "<p>&NotEqualTilde; &bne; &fjlig;</p>",  # two codepoints each
+            "<p>a & b &<i>c</i> &&amp; &\tx &\n</p> &",  # literal '&'
+            "<pre>a&#10;b&Tab;c</pre><td>&#124;|</td>",
+            "<input type='check&#98;ox' checked> <a href=x&amp;y>z</a>",
+            "<p>&#x1F680; &#xFFFD; &#0065; &#x00041;</p>",
+        ):
+            assert _assert_native_matches(text), text
+
+    def test_charrefs_outside_the_accepted_forms_decline(self):
+        for ref in (
+            "&amp", "&ampx;", "&#128;", "&#0;", "&#xD800;", "&#x110000;",
+            "&#1;", "&#;", "&#" + "1" * 40 + ";", "&" + "a" * 33 + ";",
+            "&é;", "&#13;", "&#x;", "&#65", "&;", "&notit;",
+        ):
+            for text in (f"<p>x {ref} y</p>", f"<a href='{ref}'>l</a>",
+                         f"<title>{ref}</title>"):
+                assert convert_html_native(text) is None, text
+                data = text.encode("utf-8")
+                assert convert_html(data, fast=True) == convert_html(
+                    data, fast=False), text
+
+    def test_charrefs_in_script_and_style_stay_raw(self):
+        # script content inside the first <h1> reaches the title raw
+        text = ("<h1>T <script>a &amp; &bogus &#0;</script></h1>"
+                "<style>p::after { content: '&lt;' }</style><p>&lt;</p>")
+        assert _assert_native_matches(text)
+        assert convert_html_native(text)["title"] == "T a &amp; &bogus &#0;"
+
+    def test_entity_sweep_matches_the_stdlib_parser(self):
+        """A few thousand seeds of the parity sweep script's generator:
+        wherever the native walker accepts, its output is the stdlib
+        parser path's."""
+        sweep = _load_parity_sweep()
+        res = sweep.sweep(0, 3000)
+        assert res["mismatches"] == 0, res
+        assert res["native_accepted"] > 1500, res
 
     def test_convert_html_equal_with_and_without_native(self):
         from anytomd_spark.transcripts import build_html
@@ -131,6 +187,11 @@ class TestNativeDifferential:
         "<![CDATA[x]]>", "<!", "<?", "</", "<", ">", "</ p>", "</junk x>",
         "<p  class=c>", "<p class='q'>", "<p class>", "<p a=1 b=2>",
         "<x<p>", "<p/ >", "<p / >", "&amp;", "&#65;", "&bogus",
+        "&lt;b&gt;", "&nbsp;", "&#x1F680;", "&NotEqualTilde;", "&amp",
+        "&ampx;", "&#128;", "&#0;", "&#xD800;", "&#x110000;", "&#;", "&",
+        "& ", "&#" + "9" * 40 + ";", "&" + "a" * 33 + ";", "&é;",
+        "<a href='?a=1&amp;b=2'>", "<img alt=\"&quot;q&quot;\" src=\"&#47;\">",
+        "<input type=\"check&#98;ox\">",
         " ", "　", "\x0b", "\x85",
         "<p class=x>",  # unicode ws inside tag -> C bails
     )
@@ -244,10 +305,13 @@ def _table_heavy_doc() -> str:
     head = "<thead><tr>" + "".join(
         f"<th>h{c}</th>" for c in range(13)) + "</tr></thead>"
     return (
-        # title, h1 and href outgrow their 32-byte starting buffers
-        "<html><head><title>Quarterly tables, with every cell escaped"
-        "</title></head><body><h1>Report on the quarterly tables, in full"
-        "</h1><p>Intro <a href='/reports/2024/quarterly/tables.html'>"
+        # title, h1 and href outgrow their 32-byte starting buffers; the
+        # references in them and in the text make the decode buffer grow
+        "<html><head><title>Quarterly tables &amp; charts, with every "
+        "cell escaped &#8212; in full</title></head><body><h1>Report on "
+        "the quarterly tables, in full</h1><p>Intro &lt;b&gt; &nbsp; "
+        + "&eacute;&#x1F680;" * 20 + " <a href='/reports/2024/quarterly/"
+        "tables.html?year=2024&amp;q=4&amp;format=&#104;tml'>"
         "link</a> and <b>bold</b>.</p>"
         f"<table>{head}<tbody>{rows}</tbody></table>"
         "<ul><li>one</li><li>two</li></ul>"
@@ -258,17 +322,18 @@ def _table_heavy_doc() -> str:
 
 @needs_native
 def test_allocation_failures_return_oom_or_identical_output(tmp_path):
-    """Every allocation of a table-heavy document is failed in turn, alone
-    and with all later ones: the walker either returns 0 with the
-    unbudgeted output or returns 1, never crashes, and an error leaves no
-    allocation behind."""
+    """Every allocation of a table-heavy, reference-bearing document is
+    failed in turn, alone and with all later ones: the walker either
+    returns 0 with the unbudgeted output or returns 1, never crashes, and
+    an error leaves no allocation behind. The library is built from the
+    same generated source the product build compiles."""
     header = tmp_path / "budget.h"
     header.write_text(_BUDGET_H)
     lib = tmp_path / "html_fast_budget.so"
     subprocess.run(
         ["cc", "-O2", "-fPIC", "-shared", "-include", str(header),
          "-o", str(lib), "-x", "c", "-"],
-        input=pkgutil.get_data("anytomd_spark.kernels", "_html_fast.c"),
+        input=_html_native._c_source(),
         check=True, capture_output=True, timeout=120,
     )
     doc = tmp_path / "doc.html"
@@ -294,3 +359,16 @@ def test_allocation_failures_return_oom_or_identical_output(tmp_path):
     assert codes == {0, 1}
     # the unbudgeted document is what the product walker returns
     assert convert_html_native(_table_heavy_doc())["markdown"] == res["want"][0]
+    assert res["want"][2] == (
+        "Quarterly tables & charts, with every cell escaped \u2014 in full")
+
+
+def test_changed_entity_table_builds_a_different_library(monkeypatch):
+    """The .so is keyed on the generated source, tables included, so a
+    library built against another interpreter's entity table is never
+    loaded for this one."""
+    src = _html_native._c_source()
+    monkeypatch.setitem(html.entities.html5, "zzentity;", "z")
+    changed = _html_native._c_source()
+    assert changed != src and b'"zzentity"' in changed
+    assert _html_native._so_path(changed) != _html_native._so_path(src)
