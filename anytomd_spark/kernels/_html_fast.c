@@ -1,39 +1,42 @@
-/* _html_fast.c — native fast path for html_conv.convert_html.
+/* _html_fast.c — native walker for html_conv.convert_html.
  *
- * A byte-level twin of html_conv._fast_feed + _Walker for the COMMON
- * subset of HTML: text with character references, simple start tags
- * with whitespace-separated attributes, end tags, self-closing tags,
- * comments / CDATA / doctype / PI swallowing, and raw-text content for
- * script/style/title/textarea.
+ * A byte-level twin of the stdlib html.parser walk (_EdgeParser +
+ * _Walker) for the COMMON subset of HTML, at any document size: text
+ * with character references, simple start tags with whitespace-separated
+ * attributes, end tags, self-closing tags, comment / doctype / PI
+ * swallowing, raw-text content for script/style/title/textarea, and
+ * html.parser's reading of unterminated constructs.
  *
- * Character references are decoded exactly where the Python walker
+ * Character references are decoded exactly where the stdlib walk
  * calls html.unescape: text runs, the attribute values the handlers
  * read (href, alt, src, type) and title/textarea content — never
- * script/style.  Only three forms decode: '&name;' for a ';'-terminated
- * key of html.entities.html5, '&#digits;' / '&#xhex;' naming a codepoint
- * html.unescape returns unchanged, and a bare '&' before \t \n \f space
- * '<' '&' or the end of the span (kept literally).  This file does not
- * compile alone: _html_native._c_source() prepends the tables those
- * forms are checked against (ENTITY_NAME / ENTITY_VALUE, CP_NOT_PLAIN),
+ * script/style.  The whole html.unescape grammar decodes: numeric
+ * references with or without ';' (remapped, dropped or U+FFFD where
+ * html.unescape does so), named references matched exactly against
+ * html.entities.html5 and then by longest prefix, and a literal '&'
+ * where nothing matches.  This file does not compile alone:
+ * _html_native._c_source() prepends the tables the decode reads
+ * (ENTITY_NAME / ENTITY_VALUE, CP_REMAP, CP_DROPPED, INT_MAX_STR_DIGITS),
  * generated from the running interpreter's html module.
  *
  * Anything outside the verified envelope makes the walker BAIL
- * (return code 2) and the caller falls back to the pure-Python walker,
+ * (return code 2) and the caller falls back to the stdlib parser walk,
  * so this file never has to be right about the long tail — only about
- * the narrow grammar it accepts.  Bails include: any other character
- * reference (no ';', unknown or non-alphanumeric name, a codepoint
- * html.unescape remaps or drops), non-ASCII bytes or '\v' inside tag
- * markup outside quoted attribute values (Python's \s is Unicode-aware
- * there), '/' used as an attribute separator, tag names containing '<' /
- * non-ASCII / longer than 23 bytes, unquoted attribute values with
- * non-ASCII bytes, and pathological stack depth.
+ * the narrow grammar it accepts.  Bails include: a decimal reference
+ * longer than int() parses (html.unescape raises), non-ASCII bytes
+ * inside tag markup outside tag names and quoted attribute values
+ * (Python's \s is Unicode-aware there), '/' used as an attribute
+ * separator, an attribute without a separator, an unclosed attribute
+ * quote, tag names containing '\v' / '\0' / U+212A or longer than 23
+ * bytes, end-tag names html.parser reads past [-.a-zA-Z0-9:_], marked
+ * sections ('<![', on most of which html.parser raises), and
+ * pathological stack or list depth.
  *
- * Byte-parity with the Python walker over fixtures, the chaos fuzz
- * corpus, and the full bench corpus is locked by
- * tests/test_html_native.py.
+ * Byte-parity with the stdlib parser walk over fixtures, the chaos fuzz
+ * corpus, the full bench corpus and generated reference-bearing
+ * documents is locked by tests/test_html_native.py.
  */
 
-#define _GNU_SOURCE /* memmem */
 #include <stdint.h>
 #include <stdio.h>
 #include <stdlib.h>
@@ -159,9 +162,20 @@ static int is_collapse_ws(unsigned char c) {
     return c == ' ' || c == '\t' || c == '\n' || c == '\r' || c == 0x0c;
 }
 
-/* ASCII \s inside tag markup ([ \t\n\r\f\v]); non-ASCII bails upstream */
+/* ASCII bytes Python's \s matches inside tag markup ([ \t\n\r\f\v] and
+ * \x1c-\x1f); non-ASCII bails upstream */
 static int is_tag_ws(unsigned char c) {
-    return c == ' ' || (c >= 0x09 && c <= 0x0d);
+    return c < 0x80 && py_isspace_cp(c);
+}
+
+/* past Python's \s* (Unicode-aware) at s[i] */
+static size_t skip_py_ws(const unsigned char *s, size_t n, size_t i) {
+    while (i < n) {
+        int adv;
+        if (!py_isspace_cp(u8_next(s + i, n - i, &adv))) break;
+        i += (size_t)adv;
+    }
+    return i;
 }
 
 static char lower_ascii(char c) {
@@ -529,9 +543,10 @@ static void handle_text(walker_t *w, const char *raw, size_t n) {
 }
 
 /* ------------------------------------------------------------------ */
-/* character references: html.unescape on the three accepted forms     */
+/* character references: html.unescape                                */
 
-/* value of the entity named s[0:n] + ';' (s alphanumeric), or NULL */
+/* value of the html5 entity whose name (its ';' included, if it has
+ * one) is s[0:n], or NULL */
 static const char *entity_value(const char *s, size_t n) {
     size_t lo = 0, hi = N_ENTITIES;
     while (lo < hi) {
@@ -544,14 +559,6 @@ static const char *entity_value(const char *s, size_t n) {
         else hi = mid;
     }
     return NULL;
-}
-
-/* cp (<= 0x10FFFF) is returned as chr(cp) by html.unescape */
-static int plain_codepoint(uint32_t cp) {
-    size_t nr = sizeof(CP_NOT_PLAIN) / sizeof(CP_NOT_PLAIN[0]);
-    for (size_t k = 0; k < nr && cp >= CP_NOT_PLAIN[k][0]; k++)
-        if (cp <= CP_NOT_PLAIN[k][1]) return 0;
-    return 1;
 }
 
 static int push_utf8(buf_t *b, uint32_t cp) {
@@ -579,6 +586,20 @@ static int push_utf8(buf_t *b, uint32_t cp) {
     return buf_push(b, u, n);
 }
 
+/* what html.unescape makes of the numeric reference to cp (every value
+ * past 0x10FFFF arrives as 0x110000) */
+static int push_numeric_ref(buf_t *dst, uint32_t cp) {
+    size_t nr = sizeof(CP_REMAP) / sizeof(CP_REMAP[0]);
+    for (size_t k = 0; k < nr && cp >= CP_REMAP[k][0]; k++)
+        if (cp == CP_REMAP[k][0]) return push_utf8(dst, CP_REMAP[k][1]);
+    if ((cp >= 0xD800 && cp <= 0xDFFF) || cp > 0x10FFFF)
+        return push_utf8(dst, 0xFFFD);
+    nr = sizeof(CP_DROPPED) / sizeof(CP_DROPPED[0]);
+    for (size_t k = 0; k < nr && cp >= CP_DROPPED[k][0]; k++)
+        if (cp <= CP_DROPPED[k][1]) return 1;
+    return push_utf8(dst, cp);
+}
+
 static int digit_value(unsigned char c) {
     if (c >= '0' && c <= '9') return c - '0';
     c |= 0x20;
@@ -589,9 +610,17 @@ static int is_alnum_ascii(unsigned char c) {
     return (c >= '0' && c <= '9') || ((c | 0x20) >= 'a' && (c | 0x20) <= 'z');
 }
 
-/* append html.unescape(s[0:n]) to dst.  Returns 1 ok, 0 bail (a
- * reference outside the accepted forms), -1 allocation failure. */
+/* the bytes a named reference's [^\t\n\f <&#;]{1,32} run stops at */
+static int ends_name_run(unsigned char c) {
+    return c == '\t' || c == '\n' || c == '\f' || c == ' ' || c == '<' ||
+           c == '&' || c == '#' || c == ';';
+}
+
+/* append html.unescape(s[0:n]) to dst.  Returns 1 ok, 0 bail (a decimal
+ * reference longer than Python's int() accepts, which html.unescape
+ * raises on), -1 allocation failure. */
 static int unescape_into(buf_t *dst, const char *s, size_t n) {
+    const unsigned char *u = (const unsigned char *)s;
     size_t i = 0;
     for (;;) {
         const char *amp = (const char *)memchr(s + i, '&', n - i);
@@ -599,41 +628,54 @@ static int unescape_into(buf_t *dst, const char *s, size_t n) {
         if (!buf_push(dst, s + i, lit)) return -1;
         if (!amp) return 1;
         i += lit + 1;
-        unsigned char c = i < n ? (unsigned char)s[i] : '<';
-        if (c == '\t' || c == '\n' || c == '\f' || c == ' ' || c == '<' ||
-            c == '&') {
-            /* html.unescape's pattern cannot start here: literal '&' */
-            if (!buf_pushc(dst, '&')) return -1;
-            continue;
-        }
-        if (c == '#') {
+        if (i < n && s[i] == '#') {
+            /* #[0-9]+;? or #[xX][0-9a-fA-F]+;? */
+            size_t j = i + 1, start;
             uint32_t base = 10, cp = 0;
-            if (++i < n && ((unsigned char)s[i] | 0x20) == 'x') {
+            if (j < n && (u[j] | 0x20) == 'x') {
                 base = 16;
-                i++;
+                j++;
             }
-            size_t start = i;
-            for (; i < n; i++) {
-                uint32_t d = (uint32_t)digit_value((unsigned char)s[i]);
+            for (start = j; j < n; j++) {
+                uint32_t d = (uint32_t)digit_value(u[j]);
                 if (d >= base) break;
                 cp = cp * base + d;
-                if (cp > 0x10FFFF) return 0;
+                if (cp > 0x10FFFF) cp = 0x110000;
             }
-            if (i == start || i == n || s[i] != ';' || !plain_codepoint(cp))
-                return 0;
-            i++;
-            if (!push_utf8(dst, cp)) return -1;
-            continue;
+            if (j > start) {
+                if (base == 10 && INT_MAX_STR_DIGITS &&
+                    j - start > INT_MAX_STR_DIGITS)
+                    return 0;
+                if (j < n && s[j] == ';') j++;
+                if (!push_numeric_ref(dst, cp)) return -1;
+                i = j;
+                continue;
+            }
+        } else {
+            /* every entity name is alphanumeric: only the run's
+             * alphanumeric head s[i:i+a] can match, and the whole match
+             * only when the run (<= 32 characters) ends there */
+            size_t a = 0;
+            while (i + a < n && a < 32 && is_alnum_ascii(u[i + a])) a++;
+            int whole = a == 32 || i + a == n || ends_name_run(u[i + a]);
+            const char *v = NULL;
+            size_t m = a;
+            if (a && whole) {
+                size_t full = a + (i + a < n && s[i + a] == ';');
+                v = entity_value(s + i, full);
+                m = v ? full : full - 1;
+            }
+            /* else the longest name of 2+ characters that is a proper
+             * prefix of the match; the rest of the match stays literal */
+            while (!v && m >= 2 && !(v = entity_value(s + i, m))) m--;
+            if (v) {
+                if (!buf_push(dst, v, strlen(v))) return -1;
+                i += m;
+                continue;
+            }
         }
-        /* every key of html.entities.html5 is [A-Za-z0-9]{1,31} ';' */
-        size_t start = i;
-        while (i < n && i - start < 32 && is_alnum_ascii((unsigned char)s[i]))
-            i++;
-        if (i == start || i - start >= 32 || i == n || s[i] != ';') return 0;
-        const char *v = entity_value(s + start, i - start);
-        if (!v) return 0;
-        i++;
-        if (!buf_push(dst, v, strlen(v))) return -1;
+        /* no reference starts here: the '&' is literal */
+        if (!buf_pushc(dst, '&')) return -1;
     }
 }
 
@@ -1252,36 +1294,61 @@ static void edge_endtag(walker_t *w, int id, const char *name, size_t nlen) {
 /* ------------------------------------------------------------------ */
 /* tokenizer                                                           */
 
-/* find case-insensitive "</NAME" + ascii-ws* + '>' starting at pos.
+/* find html.parser's cdata close </\s*NAME\s*> (re.I) from pos.
  * On success: *content_end = start of "</", *resume = after '>'.
  * Returns 1 found, 0 not found (content to EOF), -1 bail. */
 static int find_rawtext_close(const unsigned char *s, size_t n, size_t pos,
                               const char *name, size_t nlen,
                               size_t *content_end, size_t *resume) {
-    size_t i = pos;
-    while (i + 2 + nlen <= n) {
-        if (s[i] == '<' && s[i + 1] == '/') {
-            size_t j = i + 2;
-            size_t k = 0;
-            while (k < nlen && j < n &&
-                   lower_ascii((char)s[j]) == name[k]) {
-                j++;
-                k++;
-            }
-            if (k == nlen) {
-                /* \s* then '>' — Python's \s is unicode: bail on >=0x80 */
-                while (j < n && is_tag_ws(s[j])) j++;
-                if (j < n && s[j] >= 0x80) return -1;
-                if (j < n && s[j] == '>') {
-                    *content_end = i;
-                    *resume = j + 1;
-                    return 1;
-                }
-            }
+    for (size_t i = pos; i + 1 < n; i++) {
+        if (s[i] != '<' || s[i + 1] != '/') continue;
+        size_t j = skip_py_ws(s, n, i + 2);
+        size_t k = 0;
+        while (k < nlen && j < n && lower_ascii((char)s[j]) == name[k]) {
+            j++;
+            k++;
         }
-        i++;
+        if (k < nlen) {
+            /* re.I also folds 'ı' onto i and 'ſ' onto s */
+            if (j < n && s[j] >= 0x80) return -1;
+            continue;
+        }
+        j = skip_py_ws(s, n, j);
+        if (j < n && s[j] == '>') {
+            *content_end = i;
+            *resume = j + 1;
+            return 1;
+        }
     }
     return 0;
+}
+
+/* past the first '--' \s* '>' at or after s[from] (the close of a
+ * comment), or 0 when there is none */
+static size_t comment_close(const unsigned char *s, size_t n, size_t from) {
+    for (size_t i = from; i + 1 < n; i++) {
+        if (s[i] != '-' || s[i + 1] != '-') continue;
+        size_t j = skip_py_ws(s, n, i + 2);
+        if (j < n && s[j] == '>') return j + 1;
+    }
+    return 0;
+}
+
+/* an unterminated construct at s[pos]: html.parser stops there, and at
+ * close() _EdgeParser drops the rest of the input when the first such
+ * construct opens with '<!' or '<?' and no '>' follows it; any other one
+ * is text up to and including the next '>' or, with none, a lone '<'.
+ * Returns where to resume. */
+static size_t unterminated(walker_t *w, const unsigned char *s, size_t n,
+                           size_t pos, int *broke) {
+    const unsigned char *gt =
+        (const unsigned char *)memchr(s + pos + 1, '>', n - pos - 1);
+    int first = !*broke;
+    *broke = 1;
+    if (first && !gt && (s[pos + 1] == '!' || s[pos + 1] == '?')) return n;
+    size_t end = gt ? (size_t)(gt - s) + 1 : pos + 1;
+    handle_text_unescaped(w, (const char *)s + pos, end - pos);
+    return end;
 }
 
 typedef struct {
@@ -1325,13 +1392,18 @@ static int parse_start_tag(const unsigned char *s, size_t n, size_t pos,
                            size_t *resume) {
     size_t i = pos + 1;
     size_t ns = i;
-    /* tag name: [a-zA-Z][^\t\n\r\f />]* ; bail on '<', >=0x80, \v */
+    /* tag name: [a-zA-Z][^\t\n\r\f />]* ; bail on \v, on \0 (where
+     * html.parser ends the name and reads the tag as text) and on U+212A
+     * KELVIN SIGN, the one non-ASCII character str.lower() makes ASCII:
+     * any other non-ASCII name never equals an ASCII one, lowered or not */
     while (i < n) {
         unsigned char c = s[i];
         if (c == '\t' || c == '\n' || c == '\r' || c == 0x0c || c == ' ' ||
             c == '/' || c == '>')
             break;
-        if (c == '<' || c >= 0x80 || c == 0x0b) return -1;
+        if (c == 0x0b || c == 0 ||
+            (c == 0xe2 && n - i >= 3 && memcmp(s + i, "\xe2\x84\xaa", 3) == 0))
+            return -1;
         i++;
     }
     size_t nl = i - ns;
@@ -1352,14 +1424,10 @@ static int parse_start_tag(const unsigned char *s, size_t n, size_t pos,
         if (c >= 0x80) return -1;
         if (c == '>') { *resume = i + 1; return 1; }
         if (c == '/') {
-            /* (/?)\s*> — slash then ws* then '>' = self-closing;
-             * anything else would be a '/' separator: bail */
-            size_t j = i + 1;
-            while (j < n && is_tag_ws(s[j])) j++;
-            if (j < n && s[j] >= 0x80) return -1;
-            if (j < n && s[j] == '>') {
+            /* '/>' self-closes; any other '/' is a separator: bail */
+            if (i + 1 < n && s[i + 1] == '>') {
                 *self_closing = 1;
-                *resume = j + 1;
+                *resume = i + 2;
                 return 1;
             }
             return -1;
@@ -1393,7 +1461,8 @@ static int parse_start_tag(const unsigned char *s, size_t n, size_t pos,
                 unsigned char q = s[i];
                 size_t vs = ++i;
                 while (i < n && s[i] != q) i++;
-                if (i >= n) return 0; /* unterminated quote -> whole tag fails */
+                /* html.parser re-reads an unclosed quote: bail */
+                if (i >= n) return -1;
                 vp = (const char *)s + vs;
                 vn = i - vs;
                 i++; /* past quote */
@@ -1452,6 +1521,7 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
     if (!ok || !w.tbl_rows) w.oom = 1;
 
     size_t pos = 0;
+    int broke = 0; /* met an unterminated construct */
     while (pos < n && !w.bail && !w.oom) {
         unsigned char c = s[pos];
         if (c != '<') {
@@ -1470,82 +1540,67 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
             continue;
         }
         unsigned char c1 = s[pos + 1];
-        if (c1 == '!') {
-            if (pos + 3 < n && s[pos + 2] == '-' && s[pos + 3] == '-') {
-                /* comment to --> or EOF */
-                const unsigned char *f = (const unsigned char *)memmem(
-                    s + pos + 4, n - pos - 4, "-->", 3);
-                pos = f ? (size_t)(f - s) + 3 : n;
-                continue;
+        if (c1 == '!' || c1 == '?') {
+            size_t end = 0;
+            if (c1 == '!' && pos + 3 < n && s[pos + 2] == '-' &&
+                s[pos + 3] == '-') {
+                end = comment_close(s, n, pos + 4);
+            } else if (c1 == '!' && pos + 2 < n && s[pos + 2] == '[') {
+                /* a marked section: html.parser raises on most */
+                w.bail = 1;
+                break;
+            } else {
+                /* doctype, bogus comment or PI: to the next '>' */
+                const unsigned char *f =
+                    (const unsigned char *)memchr(s + pos, '>', n - pos);
+                if (f) end = (size_t)(f - s) + 1;
             }
-            if (pos + 8 < n && memcmp(s + pos + 2, "[CDATA[", 7) == 0) {
-                const unsigned char *f = (const unsigned char *)memmem(
-                    s + pos + 9, n - pos - 9, "]]>", 3);
-                pos = f ? (size_t)(f - s) + 3 : n;
-                continue;
-            }
-            /* <![^>]*>? */
-            const unsigned char *f =
-                (const unsigned char *)memchr(s + pos, '>', n - pos);
-            pos = f ? (size_t)(f - s) + 1 : n;
-            continue;
-        }
-        if (c1 == '?') {
-            const unsigned char *f =
-                (const unsigned char *)memchr(s + pos, '>', n - pos);
-            pos = f ? (size_t)(f - s) + 1 : n;
+            pos = end ? end : unterminated(&w, s, n, pos, &broke);
             continue;
         }
         if (c1 == '/') {
-            /* end tag: </\s*([a-zA-Z][-.a-zA-Z0-9:_]*)[^>]*>  (ASCII ws
-             * only; unicode ws would match Python's \s -> bail) */
-            size_t i = pos + 2;
-            while (i < n && is_tag_ws(s[i])) i++;
-            if (i < n && s[i] >= 0x80) { w.bail = 1; break; }
-            size_t ns = i;
-            if (i < n && ((s[i] >= 'a' && s[i] <= 'z') ||
-                          (s[i] >= 'A' && s[i] <= 'Z'))) {
-                i++;
-                while (i < n) {
-                    unsigned char d = s[i];
-                    if ((d >= 'a' && d <= 'z') || (d >= 'A' && d <= 'Z') ||
-                        (d >= '0' && d <= '9') || d == '-' || d == '.' ||
-                        d == ':' || d == '_')
-                        i++;
-                    else
-                        break;
-                }
-                size_t nl = i - ns;
-                /* swallow [^>]* then '>' */
-                const unsigned char *f =
-                    (const unsigned char *)memchr(s + i, '>', n - i);
-                if (f) {
-                    if (nl > MAX_TAGNAME) { w.bail = 1; break; }
-                    char nb[MAX_TAGNAME + 1];
-                    for (size_t k = 0; k < nl; k++)
-                        nb[k] = lower_ascii((char)s[ns + k]);
-                    nb[nl] = '\0';
-                    int id = tag_lookup(nb, nl);
-                    edge_endtag(&w, id, nb, nl);
-                    pos = (size_t)(f - s) + 1;
-                    continue;
-                }
-                /* no '>': end-tag alternatives fail; bogus-end also
-                 * needs '>'; start alt needs letter after '<' ('/') no;
-                 * -> lone '<' */
-                handle_text(&w, "<", 1);
-                pos++;
-                continue;
-            }
-            /* bogus end tag </[^>]*> (or no '>' -> lone '<') */
             const unsigned char *f =
                 (const unsigned char *)memchr(s + pos, '>', n - pos);
-            if (f) {
-                pos = (size_t)(f - s) + 1; /* swallowed */
-            } else {
-                handle_text(&w, "<", 1);
-                pos++;
+            if (!f) {
+                pos = unterminated(&w, s, n, pos, &broke);
+                continue;
             }
+            size_t gt = (size_t)(f - s);
+            /* </\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*> is an end tag; else,
+             * with the name right after '</' and ending where
+             * html.parser's tolerant name does, an end tag up to the
+             * next '>'; anything else is swallowed to that '>' */
+            size_t ns = skip_py_ws(s, n, pos + 2), i = ns;
+            int named = 0;
+            if (i < gt && ((s[i] | 0x20) >= 'a' && (s[i] | 0x20) <= 'z')) {
+                for (i++; i < gt; i++) {
+                    unsigned char d = s[i];
+                    if (!(is_alnum_ascii(d) || d == '-' || d == '.' ||
+                          d == ':' || d == '_'))
+                        break;
+                }
+                if (skip_py_ws(s, n, i) == gt) {
+                    named = 1;
+                } else if (ns == pos + 2) {
+                    unsigned char d = s[i];
+                    if (!(d == '\t' || d == '\n' || d == '\r' || d == 0x0c ||
+                          d == ' ' || d == '/' || d == 0)) {
+                        w.bail = 1; /* a tolerant name: not mirrored */
+                        break;
+                    }
+                    named = 1;
+                }
+            }
+            if (named) {
+                size_t nl = i - ns;
+                if (nl > MAX_TAGNAME) { w.bail = 1; break; }
+                char nb[MAX_TAGNAME + 1];
+                for (size_t k = 0; k < nl; k++)
+                    nb[k] = lower_ascii((char)s[ns + k]);
+                nb[nl] = '\0';
+                edge_endtag(&w, tag_lookup(nb, nl), nb, nl);
+            }
+            pos = gt + 1;
             continue;
         }
         if ((c1 >= 'a' && c1 <= 'z') || (c1 >= 'A' && c1 <= 'Z')) {
@@ -1558,8 +1613,7 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
                                     &resume);
             if (r < 0) { w.bail = 1; break; }
             if (r == 0) {
-                handle_text(&w, "<", 1);
-                pos++;
+                pos = unterminated(&w, s, n, pos, &broke);
                 continue;
             }
             int id = tag_lookup(namebuf, namelen);
@@ -1580,7 +1634,13 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
                 int fr = find_rawtext_close(s, n, pos, namebuf, namelen,
                                             &cend, &res2);
                 if (fr < 0) { w.bail = 1; break; }
-                if (fr == 0) { cend = n; res2 = n; }
+                /* an unclosed one runs to EOF; html.parser drops its
+                 * content when it already stopped at an earlier
+                 * unterminated construct */
+                if (fr == 0) {
+                    cend = broke ? pos : n;
+                    res2 = n;
+                }
                 if (cend > pos) {
                     /* title/textarea content is RCDATA: unescaped;
                      * script/style content stays raw */

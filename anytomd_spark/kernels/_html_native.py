@@ -1,18 +1,19 @@
-"""ctypes loader for the native HTML fast path (_html_fast.c).
+"""ctypes loader for the native HTML walker (_html_fast.c).
 
-Compiles the C twin on first use: :func:`_c_source` prepends to
+Compiles the C walker on first use: :func:`_c_source` prepends to
 _html_fast.c the character-reference tables generated from the running
-interpreter's ``html`` module (the ``;``-terminated names of
-``html.entities.html5`` and the codepoints ``html.unescape`` remaps or
-drops), and the .so is cached in a temp dir keyed by the md5 of those
-bytes, so a changed kernel or table never reuses a stale library.
-:func:`convert_html_native` returns ``None`` whenever the native walker
-declines — build unavailable, input over 1 MiB, or the C side bailed on
-a construct outside its verified envelope (a character reference it
-cannot decode exactly like ``html.unescape`` among them).  The caller
-falls back to the pure-Python walker in every ``None`` case, so this
-module can only make conversion faster, never different: byte-parity on
-the accepted domain is locked by tests/test_html_native.py.
+interpreter's ``html`` module (every key of ``html.entities.html5`` and
+the codepoints ``html.unescape`` remaps or drops), and the .so is cached
+in a temp dir keyed by the md5 of those bytes, so a changed kernel or
+table never reuses a stale library.  :func:`convert_html_native` returns
+``None`` whenever the native walker declines — build unavailable, an
+allocation failure, or the C side bailed on a construct outside its
+verified envelope (deep lists or stack, non-ASCII bytes in tag markup,
+marked sections; no character reference short of one ``int()`` refuses
+to parse).  The caller then runs the stdlib ``html.parser`` walk, so
+this module can only make conversion faster, never different:
+byte-parity on the accepted domain is locked by
+tests/test_html_native.py.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import html.entities
 import os
 import pkgutil
 import subprocess
+import sys
 import tempfile
 import threading
 
@@ -33,25 +35,25 @@ _tried = False
 
 def _c_source() -> bytes:
     """The exact bytes compiled into the native walker: the tables its
-    character-reference decode checks against, then _html_fast.c.
+    character-reference decode reads, then _html_fast.c.
 
-    ``ENTITY_NAME``/``ENTITY_VALUE`` hold every ``;``-terminated key of
-    ``html.entities.html5`` (without the ``;``, in byte order for binary
-    search) and its UTF-8 value; ``CP_NOT_PLAIN`` holds the codepoint
-    ranges ``html.unescape`` does not return as ``chr(cp)``: 0, the
-    remapped ``html._invalid_charrefs``, surrogates and the dropped
-    ``html._invalid_codepoints``."""
+    ``ENTITY_NAME``/``ENTITY_VALUE`` hold every key of
+    ``html.entities.html5`` (its ``;`` included, in byte order for binary
+    search) and its UTF-8 value; ``CP_REMAP`` holds
+    ``html._invalid_charrefs`` and ``CP_DROPPED`` the ranges of
+    ``html._invalid_codepoints`` it does not remap;
+    ``INT_MAX_STR_DIGITS`` is the longest decimal reference ``int()``
+    parses (0: no limit)."""
     entities = sorted(
-        (name[:-1].encode("ascii"), value.encode("utf-8"))
+        (name.encode("ascii"), value.encode("utf-8"))
         for name, value in html.entities.html5.items()
-        if name.endswith(";")
     )
-    not_plain = sorted(
-        {0, *html._invalid_charrefs, *range(0xD800, 0xE000),
-         *html._invalid_codepoints}
+    remap = sorted(
+        (cp, ord(ch)) for cp, ch in html._invalid_charrefs.items()
     )
     ranges: list[list[int]] = []
-    for cp in not_plain:
+    dropped = set(html._invalid_codepoints) - set(html._invalid_charrefs)
+    for cp in sorted(dropped):
         if ranges and cp == ranges[-1][1] + 1:
             ranges[-1][1] = cp
         else:
@@ -73,8 +75,11 @@ def _c_source() -> bytes:
         f"{rows(names, 8)}\n}};\n"
         "static const char *const ENTITY_VALUE[N_ENTITIES] = {\n"
         f"{rows(values, 8)}\n}};\n"
-        "static const unsigned int CP_NOT_PLAIN[][2] = {\n"
+        "static const unsigned int CP_REMAP[][2] = {\n"
+        f"{rows([f'{{{cp:#x}, {to:#x}}}' for cp, to in remap], 4)}\n}};\n"
+        "static const unsigned int CP_DROPPED[][2] = {\n"
         f"{rows([f'{{{lo:#x}, {hi:#x}}}' for lo, hi in ranges], 4)}\n}};\n"
+        f"#define INT_MAX_STR_DIGITS {sys.get_int_max_str_digits()}\n"
     )
     # through the package loader, so the source is found when the
     # package is imported from a zip (--py-files, the shipped zip)
@@ -145,25 +150,18 @@ def _out_params() -> tuple:
     return params
 
 
-def convert_html_native(text: str) -> "dict | None":
-    """Native conversion of ``text`` (BOM already stripped), or ``None``
-    when the Python walker must run instead."""
-    if len(text) > (1 << 20):
-        # the C walker trades memory for speed (growable output buffers
-        # with doubling, whole-buffer copies at heading/link close); the
-        # Python walker carries the audited marginal-peak bound
-        # (test_chaos::test_near_limit_turn_in_memory_capped_worker), so
-        # multi-MB documents stay on it — the native win is throughput
-        # on the many-small-docs shape, not single-giant-doc latency
-        return None
+def convert_html_native(data: "bytes | str") -> "dict | None":
+    """Native conversion of ``data`` (UTF-8 bytes or text, BOM already
+    stripped), or ``None`` when the stdlib parser walk must run instead."""
     lib = _get_lib()
     if lib is None:
         return None
+    if isinstance(data, str):
+        data = data.encode("utf-8")
     (md, mdn, pl, pln, ti, tin, has_ti), args = _out_params()
-    data = text.encode("utf-8")
     rc = lib.html_convert(data, len(data), *args)
     if rc != 0:
-        return None  # 1 = oom, 2 = bail -> Python path
+        return None  # 1 = oom, 2 = bail -> stdlib parser path
     try:
         markdown = ctypes.string_at(md, mdn.value).decode("utf-8")
         plain = ctypes.string_at(pl, pln.value).decode("utf-8")

@@ -11,6 +11,7 @@ edges so the walker sees an equivalent Open/Close stream).
 
 from __future__ import annotations
 
+from html import unescape as _unescape
 from html.parser import HTMLParser
 
 from anytomd_spark.kernels import markdown as md
@@ -574,9 +575,9 @@ class _Walker:
     #
     # Implied end tags (subset of WHATWG tree construction: html5ever
     # closes unclosed li/p/tr/td; we synthesize the same close edges) and
-    # stack discipline live HERE so the fast tokenizer drives the walker
-    # with no intermediate parser frame; the stdlib html.parser path
-    # adapts through _EdgeParser onto the same methods.
+    # stack discipline live HERE; the stdlib html.parser tokenizer adapts
+    # onto these methods through _EdgeParser, and kernels/_html_fast.c
+    # mirrors them in C.
 
     # The per-event membership probes (void / implied-trigger / p-closer /
     # capture + the open/close dispatch .get) are folded into ONE
@@ -646,11 +647,9 @@ class _Walker:
         # stray end tag with no matching open: ignored
 
     def edge_text(self, data: str) -> None:
-        # RCDATA decode for the stdlib path (html.parser's cdata mode
-        # delivers title/textarea content raw — convert_charrefs does not
-        # apply inside CDATA elements). The fast tokenizer decodes at its
-        # rawtext jump instead: regular text tokens can never arrive
-        # while title/textarea is open there.
+        # RCDATA decode: html.parser's cdata mode delivers title/textarea
+        # content raw, in one piece — convert_charrefs does not apply
+        # inside CDATA elements.
         stack = self.stack
         if stack and stack[-1] in ("title", "textarea") and "&" in data:
             data = _unescape(data)
@@ -749,15 +748,15 @@ class _EdgeParser(HTMLParser):
     """stdlib-tokenizer adapter onto the walker's edge layer.
 
     Tree construction (implied end tags, stack discipline) lives in
-    _Walker.edge_* so both tokenizer paths share one implementation; this
-    class only adapts html.parser's callback shapes and EOF quirks.
+    _Walker.edge_*; this class only adapts html.parser's callback shapes
+    and EOF quirks.
     """
 
     # html.parser only treats script/style as raw text; the WHATWG spec
     # (and html5ever, which the reference uses) also parses title and
     # textarea as RCDATA — '<p>' inside <title> is TEXT, not a tag.
-    # Registering them here keeps the stdlib path equivalent to the fast
-    # tokenizer's raw-text mode (differential-fuzz-found divergence on
+    # Registering them here keeps the stdlib path equivalent to the native
+    # walker's raw-text mode (differential-fuzz-found divergence on
     # unterminated titles).
     CDATA_CONTENT_ELEMENTS = ("script", "style", "title", "textarea")
 
@@ -786,7 +785,7 @@ class _EdgeParser(HTMLParser):
     def close(self) -> None:
         # unterminated markup declaration at EOF ('<!...' / '<?...' with
         # no '>'): the WHATWG bogus-comment state swallows it (html5ever
-        # and the fast tokenizer agree); html.parser would emit it as
+        # and the native walker agree); html.parser would emit it as
         # data — drop the buffered tail instead
         if (not self.cdata_elem and self.rawdata
                 and self.rawdata.startswith(("<!", "<?"))
@@ -794,7 +793,7 @@ class _EdgeParser(HTMLParser):
             self.rawdata = ""
         # unterminated RCDATA/raw-text element at EOF: html.parser's
         # goahead() buffers the tail forever (never emits it), but the
-        # WHATWG spec — and html5ever, and the fast tokenizer — emit the
+        # WHATWG spec — and html5ever, and the native walker — emit the
         # pending content as text. Flush it before closing.
         if self.cdata_elem and self.rawdata:
             elem = self.cdata_elem
@@ -806,165 +805,33 @@ class _EdgeParser(HTMLParser):
         self.walker.edge_eof()
 
 
-# ---- fast tokenizer ----------------------------------------------------
-#
-# A single-regex scan replacing html.parser's goahead loop (which costs
-# ~45% of conversion time via per-token regex dispatch and position
-# bookkeeping). Supports the token shapes the walker consumes: tags with
-# quoted/unquoted attributes, end tags, self-closing tags, comments,
-# doctype/PI, charrefs, and raw-text content for script/style (whose
-# subtrees the walker skips). Equivalence with the stdlib-based parser is
-# locked by a differential test over the synthetic corpus.
-
-_TOKEN_RE = _re.compile(
-    r"<!--.*?(?:-->|$)"                      # comment
-    r"|<!\[CDATA\[.*?(?:\]\]>|$)"            # CDATA (foreign content)
-    r"|<![^>]*>?"                            # doctype / bogus
-    r"|<\?[^>]*>?"                           # processing instruction
-    # tag names per the WHATWG tag-name state (and CPython's tolerant
-    # tagfind): a letter then anything but whitespace / '/' / '>' — which
-    # INCLUDES '<' (so '<X<p>' is one start tag named 'x<p', exactly as
-    # html5ever and html.parser read it; fuzz-found divergence)
-    r"|</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)[^>]*>"  # end tag       (group 1)
-    r"|</[^>]*>"                              # bogus end tag ('</' + junk):
-                                              # swallowed to '>' per the
-                                              # WHATWG bogus-comment state
-
-    r"|<([a-zA-Z][^\t\n\r\f />]*)"           # start tag name (group 2)
-    # attr separator is whitespace OR '/' not followed by '>' (WHATWG
-    # before-attribute-name; same tolerant form as html.parser), so
-    # '<x</p>' reads as tag 'x<' with attribute 'p'. An attr NAME may
-    # begin with '=' (unexpected-equals-sign rule) and '=+' delimits
-    # values, both per html.parser's attrfind_tolerant.
-    r"((?:(?:\s|/(?!>))+[^\s/>][^\s/=>]*(?:\s*=+\s*(?:\"[^\"]*\"|'[^']*'|[^\s>]*))?)*)"  # attrs (3)
-    r"\s*(/?)\s*>"                            # self-closing   (group 4)
-    r"|[^<]+"                                 # text
-    r"|<",                                    # lone '<' -> literal text
-    _re.DOTALL,
-)
-
-_ATTR_RE = _re.compile(
-    r"([^\s/>][^\s/=>]*)(?:\s*=+\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]*)))?"
-)
-
-_RAWTEXT_CLOSE = {
-    "script": _re.compile(r"</script\s*>", _re.IGNORECASE),
-    "style": _re.compile(r"</style\s*>", _re.IGNORECASE),
-    "title": _re.compile(r"</title\s*>", _re.IGNORECASE),
-    "textarea": _re.compile(r"</textarea\s*>", _re.IGNORECASE),
-}
-
-from html import unescape as _unescape
-
-
-def _fast_feed(walker: "_Walker", text: str) -> None:
-    n = len(text)
-    handle_text = walker.handle_text
-    edge_starttag = walker.edge_starttag
-    edge_endtag = walker.edge_endtag
-    rawtext_get = _RAWTEXT_CLOSE.get
-    # finditer iterates the total token regex at C speed (no per-token
-    # Python re-entry / position bookkeeping); the only case that needs a
-    # restart is raw-text content, whose span the token regex must not
-    # scan (a '<!--' inside <script> would swallow past the close tag) —
-    # rawtext elements are rare, so the restart cost is off the hot path
-    pos = 0
-    while True:
-        rawtext_jump = False
-        for m in _TOKEN_RE.finditer(text, pos):
-            # lastindex discriminates token kind without materializing
-            # the group tuple: None = text/comment/doctype/PI/lone-'<',
-            # 1 = end tag, >=2 = start tag (groups 2-4)
-            li = m.lastindex
-            if li is None:
-                token = m.group()
-                if token[0] == "<" and len(token) >= 2:
-                    # every multi-char group-less token opening with '<'
-                    # is swallowed markup: comment, CDATA, doctype, PI, or
-                    # a bogus '</junk>' end tag (lone '<' = 1 char = text)
-                    continue
-                # plain text run, or a lone '<' emitted as literal text.
-                # Straight to handle_text: regular text tokens can never
-                # arrive while title/textarea is open here (their content
-                # flows through the rawtext jump below, which does the
-                # RCDATA decode edge_text would do)
-                if "&" in token:
-                    token = _unescape(token)
-                handle_text(token)
-            elif li >= 2:
-                # one .group call per token instead of three (arg parsing
-                # dominates Match.group at this call volume)
-                tag, attrs_raw, slash = m.group(2, 3, 4)
-                tag = tag.lower()
-                if attrs_raw:
-                    attrs: dict = {}
-                    for am in _ATTR_RE.finditer(attrs_raw):
-                        name, v1, v2, v3 = am.group(1, 2, 3, 4)
-                        val = v1 or v2 or v3
-                        if val is not None and "&" in val:
-                            val = _unescape(val)
-                        attrs[name.lower()] = val
-                else:
-                    attrs = _EMPTY_ATTRS
-                if slash:
-                    walker.handle_open(tag, attrs)
-                    walker.handle_close(tag)
-                else:
-                    edge_starttag(tag, attrs)
-                    closer = rawtext_get(tag)
-                    if closer is not None:
-                        # raw-text content mode: no tags until the close
-                        # tag; title/textarea content is RCDATA (charref
-                        # decode here mirrors _Walker.edge_text)
-                        tpos = m.end()
-                        cm = closer.search(text, tpos)
-                        end = cm.start() if cm else n
-                        if end > tpos:
-                            content = text[tpos:end]
-                            if tag in ("title", "textarea") \
-                                    and "&" in content:
-                                content = _unescape(content)
-                            handle_text(content)
-                        edge_endtag(tag)
-                        pos = cm.end() if cm else n
-                        rawtext_jump = True
-                        break
-            else:
-                edge_endtag(m.group(1).lower())
-        if not rawtext_jump:
-            break
-
-
 def convert_html(data: bytes, fast: bool = True) -> dict:
     """Convert HTML bytes to (markdown, plain, title) per html.rs:22-40.
 
-    Three tiers: the native C walker (kernels/_html_fast.c, ~4x) for
-    documents of at most 1 MiB inside its verified envelope (plain tag
-    markup; character references only in the forms it decodes exactly
-    like ``html.unescape`` — ``&name;``, ``&#N;``/``&#xH;`` of a codepoint
-    returned unchanged, a bare ``&`` — it BAILS to Python on anything
-    else, so it can only be faster, never different; byte-parity locked
-    by tests/test_html_native.py over fixtures + fuzz + the bench corpus
-    + the entity sweep of scripts/html_parity_sweep.py), then the regex
-    fast tokenizer, then the stdlib html.parser path (``fast=False``)
-    kept as the differential oracle."""
-    text = data.decode("utf-8")  # html.rs:27 errors on invalid UTF-8
-    if text.startswith("﻿"):
-        text = text[1:]
+    Two tiers: the native C walker (kernels/_html_fast.c) for documents
+    of any size inside its verified envelope (plain tag markup, every
+    character reference decoded exactly like ``html.unescape``; it BAILS
+    on anything else — deep lists or stack, non-ASCII bytes in tag
+    markup — so it can only be faster, never different: byte-parity
+    locked by tests/test_html_native.py over fixtures + fuzz + the bench
+    corpus + the entity sweep of scripts/html_parity_sweep.py), then the
+    stdlib html.parser walk, which is also the differential oracle
+    (``fast=False`` runs it alone)."""
+    # html.rs:27 errors on invalid UTF-8; once the bytes are known valid,
+    # C reads them as they are, with no decoded copy alive meanwhile
+    data.decode("utf-8")
+    if data.startswith(b"\xef\xbb\xbf"):
+        data = data[3:]
     if fast:
         from anytomd_spark.kernels._html_native import convert_html_native
 
-        native = convert_html_native(text)
+        native = convert_html_native(data)
         if native is not None:
             return native
     walker = _Walker()
-    if fast:
-        _fast_feed(walker, text)
-        walker.edge_eof()
-    else:
-        parser = _EdgeParser(walker)
-        parser.feed(text)
-        parser.close()
+    parser = _EdgeParser(walker)
+    parser.feed(data.decode("utf-8"))
+    parser.close()
 
     out = walker.out.take().strip()
     if out:

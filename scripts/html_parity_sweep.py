@@ -71,7 +71,7 @@ def _ref(rng: random.Random) -> str:
             ("{:x};", "{:X};", "{:06x};")).format(cp)
     if r < 0.96:
         return "&" + rng.choice((" ", "<", "&", "\t", "\n", "\x0c"))
-    # outside the accepted forms: the native walker must decline
+    # semicolon-less, unknown, partly known and over-long references
     return rng.choice((
         "&" + rng.choice(_LEGACY), "&amp", "&ampx;", "&bogus;", "&;",
         "&#;", "&#x;", "&#65", "&#x41", "&#" + "9" * 40 + ";",

@@ -47,9 +47,13 @@ def _run(case_body: str) -> dict:
     script = textwrap.dedent(_PRELUDE.format(repo=REPO)) + textwrap.dedent(
         case_body
     )
+    # a fixed mmap threshold: glibc's dynamic one moves with the
+    # import-time allocation sequence, and with it the marginal VmHWM,
+    # so ratios taken at different commits would not compare
     proc = subprocess.run(
         [sys.executable, "-c", script], capture_output=True, text=True,
         timeout=600, cwd=REPO,
+        env={**os.environ, "MALLOC_MMAP_THRESHOLD_": "131072"},
     )
     if proc.returncode != 0:
         raise RuntimeError(proc.stderr[-2000:])

@@ -175,7 +175,11 @@ def test_near_limit_turn_in_memory_capped_worker():
         base_kb = vm_hwm_kb()
         out = convert_batch(pdf, max_input_bytes=32 << 20)
         peak_kb = vm_hwm_kb()
+        # after the peak is read: the bound covers the native walker,
+        # the path production takes for this page
+        from anytomd_spark.kernels._html_native import convert_html_native
         print(json.dumps({
+            "native": convert_html_native(html) is not None,
             "errors": int(out["error"].notna().sum()),
             "rows": len(out),
             "chars_out": int(out["chars_out"][0]),
@@ -189,6 +193,7 @@ def test_near_limit_turn_in_memory_capped_worker():
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     rep = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert rep["native"], rep
     assert rep["errors"] == 0 and rep["rows"] == 64
     assert rep["chars_out"] > 1 << 20
     # batch-level bound: the Arrow batch model holds input + markdown +

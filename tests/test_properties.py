@@ -173,8 +173,10 @@ class TestConverterInvariants:
 
 
 class TestFastTokenizerDifferential:
-    """The fast single-regex HTML tokenizer must behave exactly like the
-    stdlib-html.parser-based path on the synthetic corpus and fixtures."""
+    """convert_html's default path (the native walker, falling back to
+    the stdlib parser walk) must behave exactly like the stdlib
+    html.parser path alone (``fast=False``) on the synthetic corpus and
+    fixtures."""
 
     def test_corpus_equivalence(self):
         import random
@@ -201,7 +203,7 @@ class TestFastTokenizerDifferential:
     # structured tag soup: random nesting of handled/unhandled/void tags,
     # deliberately mismatched closes, attributes, comments and entities —
     # guards the round-3 hot-path rewrites (set-guarded dispatch,
-    # top-of-stack fast path, open-p counter, lastindex discrimination)
+    # top-of-stack fast path, open-p counter)
     _SOUP_TAGS = ("p", "div", "span", "strong", "em", "li", "ul", "ol",
                   "table", "tr", "td", "th", "h1", "h2", "a", "blockquote",
                   "pre", "code", "title", "dt", "dd", "dl", "section")
