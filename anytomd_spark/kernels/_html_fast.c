@@ -29,7 +29,7 @@
  * separator, an attribute without a separator, an unclosed attribute
  * quote, tag names containing '\v' / '\0' / U+212A or longer than 23
  * bytes, end-tag names html.parser reads past [-.a-zA-Z0-9:_], marked
- * sections ('<![', on most of which html.parser raises), and
+ * sections ('<![', which _EdgeParser reads by keyword), and
  * pathological stack or list depth.
  *
  * Byte-parity with the stdlib parser walk over fixtures, the chaos fuzz
@@ -371,7 +371,7 @@ static const char *row_get(const row_t *r, size_t i) {
 #define BAIL(w) do { (w)->bail = 1; return; } while (0)
 #define CHECK(w, x) do { if (!(x)) { (w)->oom = 1; return; } } while (0)
 
-/* push with trailing-newline bookkeeping (mirrors _Walker.push_str) */
+/* push with trailing-newline bookkeeping (mirrors _StrBuf.push) */
 static void w_push(walker_t *w, buf_t *b, int *tn, const char *s, size_t n) {
     if (n == 0 || w->bail || w->oom) return;
     CHECK(w, buf_push(b, s, n));
@@ -1546,7 +1546,7 @@ int html_convert(const char *input, size_t n, char **md_out, size_t *md_len,
                 s[pos + 3] == '-') {
                 end = comment_close(s, n, pos + 4);
             } else if (c1 == '!' && pos + 2 < n && s[pos + 2] == '[') {
-                /* a marked section: html.parser raises on most */
+                /* a marked section: _EdgeParser reads it by keyword */
                 w.bail = 1;
                 break;
             } else {

@@ -7,10 +7,16 @@ extract_title :44-63) on top of the stdlib ``html.parser`` tokenizer with a
 small WHATWG-ish implied-end-tag layer (html5ever's tree builder closes
 unclosed ``li``/``p``/``tr``/``td`` elements; we synthesize the same close
 edges so the walker sees an equivalent Open/Close stream).
+
+The native C walker (``kernels/_html_fast.c``) converts nearly every
+document; this stdlib walk is the reference it is checked against
+(``convert_html(fast=False)``) and the fallback for the documents it
+declines, so it is written to be read, not to be fast.
 """
 
 from __future__ import annotations
 
+import re
 from html import unescape as _unescape
 from html.parser import HTMLParser
 
@@ -32,94 +38,80 @@ _P_CLOSERS = frozenset(
 _FORMATTING = frozenset(
     "a b i u s em strong code span small big font sub sup mark abbr".split()
 )
+# Other implied end tags: opening tag -> (tags it closes, tags that stop
+# the search down the stack)
+_IMPLIED_END = {
+    "li": (("li",), ("ul", "ol")),
+    "dt": (("dt", "dd"), ("dl",)),
+    "dd": (("dt", "dd"), ("dl",)),
+    "td": (("td", "th"), ("tr", "table")),
+    "th": (("td", "th"), ("tr", "table")),
+    "tr": (("tr",), ("table", "thead", "tbody", "tfoot")),
+    "thead": (("tr",), ("table",)),
+    "tbody": (("tr",), ("table",)),
+    "tfoot": (("tr",), ("table",)),
+}
 _SKIP_TAGS = frozenset(("script", "style", "head"))
-
-# hot-path early-outs: the walker's open/close chains only act on these
-# tags (plus the title/h1 captures and _SKIP_TAGS bookkeeping, which MUST
-# run before the skip check — title lives inside the skipped <head>).
-# Unhandled tags (div, span, section, ...) cost two set probes, not a
-# ~25-branch elif scan.
-_CAPTURE_OR_SKIP = frozenset(("title", "h1")) | _SKIP_TAGS
-_OPEN_TAGS = frozenset((
-    "h1", "h2", "h3", "h4", "h5", "h6", "p", "a", "img", "strong", "b",
-    "em", "i", "code", "pre", "ul", "ol", "li", "table", "thead", "tbody",
-    "tr", "th", "td", "blockquote", "hr", "br", "input",
-))
-_CLOSE_TAGS = frozenset((
-    "h1", "h2", "h3", "h4", "h5", "h6", "p", "a", "strong", "b", "em",
-    "i", "code", "pre", "ul", "ol", "li", "table", "tr", "th", "td",
-    "blockquote",
-))
-# tags that trigger implied-end-tag synthesis beyond the _P_CLOSERS set
-_IMPLIED_TRIGGERS = frozenset(
-    ("li", "dt", "dd", "td", "th", "tr", "thead", "tbody", "tfoot")
-)
+# first non-empty <title>, else first non-empty <h1> (html.rs:44-63)
+_CAPTURE_TAGS = ("title", "h1")
 
 
 class _StrBuf:
-    """Append-mostly string buffer with O(1) length and cheap tail truncation."""
+    """Append-mostly string buffer with O(1) length, cheap tail removal
+    and a count of the newlines it ends with."""
 
-    __slots__ = ("chunks", "length")
+    __slots__ = ("chunks", "length", "trailing_newlines")
 
     def __init__(self) -> None:
         self.chunks: list[str] = []
         self.length = 0
+        self.trailing_newlines = 0
 
     def push(self, s: str) -> None:
-        if s:
-            self.chunks.append(s)
-            self.length += len(s)
+        if not s:
+            return
+        self.chunks.append(s)
+        self.length += len(s)
+        stripped = len(s.rstrip("\n"))
+        if stripped:
+            self.trailing_newlines = len(s) - stripped
+        else:
+            self.trailing_newlines += len(s)
 
-    def tail_from(self, pos: int) -> str:
-        """Return buffer[pos:] without mutating."""
+    def ensure_newline(self) -> None:
+        if self.length and self.trailing_newlines < 1:
+            self.push("\n")
+
+    def ensure_blank_line(self) -> None:
+        if self.length and self.trailing_newlines < 2:
+            self.push("\n" * (2 - self.trailing_newlines))
+
+    def cut(self, pos: int) -> str:
+        """Remove and return buffer[pos:]."""
         if pos >= self.length:
             return ""
-        out: list[str] = []
-        remaining = self.length - pos
-        for chunk in reversed(self.chunks):
-            if remaining <= 0:
-                break
-            if len(chunk) >= remaining:
-                out.append(chunk[len(chunk) - remaining:])
-                remaining = 0
-            else:
-                out.append(chunk)
-                remaining -= len(chunk)
-        return "".join(reversed(out))
-
-    def truncate(self, pos: int) -> None:
-        if pos >= self.length:
-            return
+        chunks = self.chunks
+        tail: list[str] = []
         remove = self.length - pos
-        while remove > 0 and self.chunks:
-            last = self.chunks[-1]
-            if len(last) <= remove:
-                self.chunks.pop()
-                remove -= len(last)
-            else:
-                self.chunks[-1] = last[: len(last) - remove]
-                remove = 0
+        while remove:
+            last = chunks.pop()
+            if len(last) > remove:
+                chunks.append(last[:-remove])
+                last = last[-remove:]
+            tail.append(last)
+            remove -= len(last)
         self.length = pos
-
-    def last_char(self) -> str:
-        for chunk in reversed(self.chunks):
-            if chunk:
-                return chunk[-1]
-        return ""
-
-    def tail_newline_count(self) -> int:
-        count = 0
-        for chunk in reversed(self.chunks):
+        self.trailing_newlines = 0
+        for chunk in reversed(chunks):
             stripped = len(chunk.rstrip("\n"))
-            count += len(chunk) - stripped
+            self.trailing_newlines += len(chunk) - stripped
             if stripped:
                 break
-        return count
+        return "".join(reversed(tail))
 
-    def value(self) -> str:
-        joined = "".join(self.chunks)
-        self.chunks = [joined] if joined else []
-        return joined
+    def last_char(self) -> str:
+        # push and cut never leave an empty chunk
+        return self.chunks[-1][-1] if self.chunks else ""
 
     def take(self) -> str:
         """Join and RELEASE the buffer (terminal read): on multi-MB
@@ -132,24 +124,24 @@ class _StrBuf:
         return joined
 
 
-import re as _re
-
 # Rust u8::is_ascii_whitespace = space, \t, \n, \r, \x0c (NO vertical tab)
-_WS_RUN = _re.compile(r"[ \t\n\r\x0c]+")
+_WS_RUN = re.compile(r"[ \t\n\r\x0c]+")
 
 
 def collapse_whitespace(s: str) -> str:
     """Collapse runs of ASCII whitespace into single spaces (html.rs:648-663).
 
     Only ASCII whitespace collapses (matching Rust's is_ascii_whitespace);
-    unicode spaces pass through untouched. A string whose only ASCII
-    whitespace is isolated single spaces is already collapsed — returned
-    as-is (C-speed containment scans beat the regex rebuild on the hot
-    text path, where most runs are plain prose).
+    unicode spaces pass through untouched.
     """
-    if ("\n" in s or "  " in s or "\t" in s or "\r" in s or "\x0c" in s):
-        return _WS_RUN.sub(" ", s)
-    return s
+    return _WS_RUN.sub(" ", s)
+
+
+def _drop_leading_space(buf: _StrBuf, text: str) -> str:
+    """``text`` without its leading space when ``buf`` ends in one."""
+    if text.startswith(" ") and buf.last_char() in (" ", "\t"):
+        return text[1:]
+    return text
 
 
 class _Walker:
@@ -159,111 +151,41 @@ class _Walker:
         self.out = _StrBuf()
         self.plain = _StrBuf()
         self.stack: list[str] = []  # open-element stack (edge synthesis)
-        self._p_open = 0  # open <p> count: guards the per-tag p-scan
         self.list_stack: list[list] = []  # [ordered, item_count]
         self.in_pre = False
         self.skip_depth = 0
         self.blockquote_depth = 0
-        self.trailing_newlines = 0
-        self.plain_trailing_newlines = 0
         self.pending_heading: tuple[int, int, int] | None = None  # (level, md_pos, plain_pos)
         self.pending_link: tuple[str, int] | None = None  # (href, md_pos)
         self.table: dict | None = None
-        # title extraction (html.rs:44-63): first <title>, fallback first <h1>
-        self.title_text: str | None = None
-        self.first_h1_text: str | None = None
-        self._title_capture: list[str] | None = None
-        self._h1_capture: list[str] | None = None
+        self.captures: dict[str, list[str]] = {}  # open title/h1 captures
+        self.captured: dict[str, str] = {}  # their first non-empty text
 
     # ---- buffer helpers ----
 
-    def push_str(self, s: str) -> None:
-        if not s:
-            return
-        # inlined _StrBuf.push: this + plain_push_str are the two hottest
-        # per-event calls (~450k/doc-batch) — one attribute hop, no frame
-        buf = self.out
-        buf.chunks.append(s)
-        buf.length += len(s)
-        if s[-1] != "\n":  # common case: no trailing newline
-            self.trailing_newlines = 0
-            return
-        stripped = len(s.rstrip("\n"))
-        if stripped == 0:
-            self.trailing_newlines += len(s)
-        else:
-            self.trailing_newlines = len(s) - stripped
-
-    def ensure_newline(self) -> None:
-        if self.trailing_newlines < 1 and self.out.length:
-            self.push_str("\n")
-
-    def ensure_blank_line(self) -> None:
-        if not self.out.length:
-            return
-        if self.blockquote_depth > 0:
-            prefix = "> " * self.blockquote_depth
-            self.ensure_newline()
-            if self.trailing_newlines < 2:
-                self.push_str(prefix)
-                self.push_str("\n")
-        else:
-            need = 2 - self.trailing_newlines
-            if need > 0:  # one batched chunk (buffer value is identical)
-                buf = self.out
-                buf.chunks.append("\n" if need == 1 else "\n\n")
-                buf.length += need
-                self.trailing_newlines = 2
-
-    def plain_push_str(self, s: str) -> None:
-        if not s:
-            return
-        buf = self.plain
-        buf.chunks.append(s)
-        buf.length += len(s)
-        if s[-1] != "\n":
-            self.plain_trailing_newlines = 0
-            return
-        stripped = len(s.rstrip("\n"))
-        if stripped == 0:
-            self.plain_trailing_newlines += len(s)
-        else:
-            self.plain_trailing_newlines = len(s) - stripped
-
-    def plain_ensure_newline(self) -> None:
-        if self.plain_trailing_newlines < 1 and self.plain.length:
-            self.plain_push_str("\n")
-
-    def plain_ensure_blank_line(self) -> None:
-        if not self.plain.length:
-            return
-        need = 2 - self.plain_trailing_newlines
-        if need > 0:
-            buf = self.plain
-            buf.chunks.append("\n" if need == 1 else "\n\n")
-            buf.length += need
-            self.plain_trailing_newlines = 2
-
-    def both_push_str(self, s: str) -> None:
-        self.push_str(s)
-        self.plain_push_str(s)
+    def both_push(self, s: str) -> None:
+        self.out.push(s)
+        self.plain.push(s)
 
     def both_ensure_newline(self) -> None:
-        self.ensure_newline()
-        self.plain_ensure_newline()
+        self.out.ensure_newline()
+        self.plain.ensure_newline()
 
     def both_ensure_blank_line(self) -> None:
-        self.ensure_blank_line()
-        self.plain_ensure_blank_line()
+        # inside a blockquote the Markdown blank line is a "> " line
+        out = self.out
+        if self.blockquote_depth and out.length:
+            out.ensure_newline()
+            if out.trailing_newlines < 2:
+                out.push("> " * self.blockquote_depth + "\n")
+        else:
+            out.ensure_blank_line()
+        self.plain.ensure_blank_line()
 
     def in_table_cell(self) -> bool:
         return self.table is not None and self.table["in_cell"]
 
-    # ---- open edge ----
-
-    # Per-tag open-edge actions (html.rs handle_open :255-420), dict-
-    # dispatched: one hash probe instead of a ~19-branch elif scan per
-    # tag event on the hottest walker path.
+    # ---- open edge (html.rs handle_open :255-420) ----
 
     def _open_heading(self, tag: str, attrs) -> None:
         self.both_ensure_blank_line()
@@ -279,23 +201,23 @@ class _Walker:
     def _open_img(self, tag: str, attrs) -> None:
         alt = attrs.get("alt") or ""
         src = attrs.get("src") or ""
-        self.push_str(f"![{alt}]({src})")
-        self.plain_push_str(alt)
+        self.out.push(f"![{alt}]({src})")
+        self.plain.push(alt)
 
     def _open_strong(self, tag: str, attrs) -> None:
-        self.push_str("**")
+        self.out.push("**")
 
     def _open_em(self, tag: str, attrs) -> None:
-        self.push_str("*")
+        self.out.push("*")
 
     def _open_code(self, tag: str, attrs) -> None:
         if not self.in_pre:
-            self.push_str("`")
+            self.out.push("`")
 
     def _open_pre(self, tag: str, attrs) -> None:
         self.in_pre = True
         self.both_ensure_blank_line()
-        self.push_str("```\n")
+        self.out.push("```\n")
 
     def _open_list(self, tag: str, attrs) -> None:
         if self.list_stack:
@@ -312,8 +234,8 @@ class _Walker:
             prefix = f"{indent}{ctx[1]}. " if ctx[0] else f"{indent}- "
         else:
             prefix = f"{indent}- "
-        self.push_str(prefix)
-        self.plain_push_str(indent)
+        self.out.push(prefix)
+        self.plain.push(indent)
 
     def _open_table(self, tag: str, attrs) -> None:
         self.both_ensure_blank_line()
@@ -341,27 +263,25 @@ class _Walker:
 
     def _open_blockquote(self, tag: str, attrs) -> None:
         self.blockquote_depth += 1
-        self.ensure_newline()
-        self.plain_ensure_newline()
+        self.both_ensure_newline()
 
     def _open_hr(self, tag: str, attrs) -> None:
-        self.ensure_blank_line()
-        self.push_str("---\n")
-        self.plain_ensure_blank_line()
+        self.both_ensure_blank_line()
+        self.out.push("---\n")
 
     def _open_br(self, tag: str, attrs) -> None:
         if self.in_pre:
-            self.both_push_str("\n")
+            self.both_push("\n")
         elif self.in_table_cell():
             pass  # table cells: newline dropped (html.rs:392-394)
         else:
-            self.both_push_str("\n")
+            self.both_push("\n")
             if self.blockquote_depth > 0:
-                self.push_str("> " * self.blockquote_depth)
+                self.out.push("> " * self.blockquote_depth)
 
     def _open_input(self, tag: str, attrs) -> None:
         if (attrs.get("type") or "") == "checkbox":
-            self.push_str("[x] " if "checked" in attrs else "[ ] ")
+            self.out.push("[x] " if "checked" in attrs else "[ ] ")
 
     _OPEN_DISPATCH = {
         "h1": _open_heading, "h2": _open_heading, "h3": _open_heading,
@@ -376,45 +296,32 @@ class _Walker:
         "blockquote": _open_blockquote, "hr": _open_hr, "br": _open_br,
         "input": _open_input,
     }
-    assert frozenset(_OPEN_DISPATCH) == _OPEN_TAGS
 
     def handle_open(self, tag: str, attrs: dict[str, str | None]) -> None:
-        if tag in _CAPTURE_OR_SKIP:
-            if (self._title_capture is None and tag == "title"
-                    and self.title_text is None):
-                self._title_capture = []
-            if (self._h1_capture is None and tag == "h1"
-                    and self.first_h1_text is None):
-                self._h1_capture = []
-            if tag in _SKIP_TAGS:
-                self.skip_depth += 1
-                return
+        # title lives inside the skipped <head>: capture before the skip check
+        if (tag in _CAPTURE_TAGS and tag not in self.captures
+                and tag not in self.captured):
+            self.captures[tag] = []
+        if tag in _SKIP_TAGS:
+            self.skip_depth += 1
+            return
         if self.skip_depth > 0:
             return
         handler = self._OPEN_DISPATCH.get(tag)
         if handler is not None:
             handler(self, tag, attrs)
 
-    # ---- close edge ----
-
-    # Per-tag close-edge actions (html.rs handle_close :422-520), dict-
-    # dispatched like _OPEN_DISPATCH.
+    # ---- close edge (html.rs handle_close :424-548) ----
 
     def _close_heading(self, tag: str) -> None:
         if self.pending_heading is not None:
             level, start, plain_start = self.pending_heading
             self.pending_heading = None
-            text = self.out.tail_from(start)
-            self.out.truncate(start)
-            self.trailing_newlines = self.out.tail_newline_count()
-            self.push_str(md.format_heading(level, text.strip()))
-            plain_text = self.plain.tail_from(plain_start)
-            self.plain.truncate(plain_start)
-            self.plain_trailing_newlines = self.plain.tail_newline_count()
-            trimmed = plain_text.strip()
-            if trimmed:
-                self.plain_push_str(trimmed)
-                self.plain_push_str("\n")
+            text = self.out.cut(start).strip()
+            self.out.push(md.format_heading(level, text))
+            plain_text = self.plain.cut(plain_start).strip()
+            if plain_text:
+                self.plain.push(plain_text + "\n")
 
     def _close_p(self, tag: str) -> None:
         if not self.in_table_cell():
@@ -424,28 +331,22 @@ class _Walker:
         if self.pending_link is not None:
             href, start = self.pending_link
             self.pending_link = None
-            text = self.out.tail_from(start)
-            self.out.truncate(start)
-            self.trailing_newlines = self.out.tail_newline_count()
-            if not href:
-                self.push_str(text.strip())
-            else:
-                self.push_str(f"[{text.strip()}]({href})")
+            text = self.out.cut(start).strip()
+            self.out.push(f"[{text}]({href})" if href else text)
 
     def _close_strong(self, tag: str) -> None:
-        self.push_str("**")
+        self.out.push("**")
 
     def _close_em(self, tag: str) -> None:
-        self.push_str("*")
+        self.out.push("*")
 
     def _close_code(self, tag: str) -> None:
         if not self.in_pre:
-            self.push_str("`")
+            self.out.push("`")
 
     def _close_pre(self, tag: str) -> None:
-        self.ensure_newline()
-        self.push_str("```\n")
-        self.plain_ensure_newline()
+        self.both_ensure_newline()
+        self.out.push("```\n")
         self.in_pre = False
 
     def _close_list(self, tag: str) -> None:
@@ -461,8 +362,8 @@ class _Walker:
         if self.table is not None:
             tc = self.table
             self.table = None
-            self.push_str(_render_table(tc, plain=False))
-            self.plain_push_str(_render_table(tc, plain=True))
+            self.out.push(_render_table(tc, plain=False))
+            self.plain.push(_render_table(tc, plain=True))
 
     def _close_tr(self, tag: str) -> None:
         if self.table is not None:
@@ -496,36 +397,27 @@ class _Walker:
         "th": _close_cell, "td": _close_cell,
         "blockquote": _close_blockquote,
     }
-    assert frozenset(_CLOSE_DISPATCH) == _CLOSE_TAGS
 
     def handle_close(self, tag: str) -> None:
-        if tag in _CAPTURE_OR_SKIP:
-            if tag == "title" and self._title_capture is not None:
-                text = "".join(self._title_capture).strip()
-                if text and self.title_text is None:
-                    self.title_text = text
-                self._title_capture = None
-            if tag == "h1" and self._h1_capture is not None:
-                text = "".join(self._h1_capture).strip()
-                if text and self.first_h1_text is None:
-                    self.first_h1_text = text
-                self._h1_capture = None
-            if tag in _SKIP_TAGS:
-                self.skip_depth = max(0, self.skip_depth - 1)
-                return
+        capture = self.captures.pop(tag, None)
+        if capture is not None:
+            text = "".join(capture).strip()
+            if text:
+                self.captured[tag] = text
+        if tag in _SKIP_TAGS:
+            self.skip_depth = max(0, self.skip_depth - 1)
+            return
         if self.skip_depth > 0:
             return
         handler = self._CLOSE_DISPATCH.get(tag)
         if handler is not None:
             handler(self, tag)
 
-    # ---- text ----
+    # ---- text (html.rs handle_text :552-645) ----
 
     def handle_text(self, raw: str) -> None:
-        if self._title_capture is not None:
-            self._title_capture.append(raw)
-        if self._h1_capture is not None:
-            self._h1_capture.append(raw)
+        for capture in self.captures.values():
+            capture.append(raw)
         if self.skip_depth > 0:
             return
         if self.table is not None:
@@ -533,43 +425,25 @@ class _Walker:
                 self.table["current_cell"].append(raw)
             return  # text between table tags outside cells is dropped
         if self.in_pre:
-            self.both_push_str(raw)
+            self.both_push(raw)
             return
         collapsed = collapse_whitespace(raw)
-        if not collapsed:
-            return
         if collapsed == " ":
-            if self.out.length and self.trailing_newlines == 0:
-                last = self.out.last_char()
-                if last not in (" ", "\t"):
-                    self.push_str(" ")
-            if self.plain.length and self.plain_trailing_newlines == 0:
-                last = self.plain.last_char()
-                if last not in (" ", "\t"):
-                    self.plain_push_str(" ")
+            # a lone space joins words, never starts a line or doubles up
+            for buf in (self.out, self.plain):
+                if (buf.length and not buf.trailing_newlines
+                        and buf.last_char() not in (" ", "\t")):
+                    buf.push(" ")
             return
-        md_collapsed = collapsed
-        if collapsed.startswith(" ") and self.out.length:
-            if self.out.last_char() in (" ", "\t"):
-                md_collapsed = collapsed[1:]
-        plain_collapsed = collapsed
-        if collapsed.startswith(" ") and self.plain.length:
-            if self.plain.last_char() in (" ", "\t"):
-                plain_collapsed = collapsed[1:]
-        if md_collapsed:
-            if self.blockquote_depth > 0:
-                prefix = "> " * self.blockquote_depth
-                if self.trailing_newlines > 0 or not self.out.length:
-                    self.push_str(prefix)
-                for i, line in enumerate(md_collapsed.split("\n")):
-                    if i > 0:
-                        self.push_str("\n")
-                        self.push_str(prefix)
-                    self.push_str(line)
-            else:
-                self.push_str(md_collapsed)
-        if plain_collapsed:
-            self.plain_push_str(plain_collapsed)
+        # collapsed text holds no newline, so one prefix covers it
+        out = self.out
+        md_text = _drop_leading_space(out, collapsed)
+        if md_text:
+            if self.blockquote_depth and (out.trailing_newlines
+                                          or not out.length):
+                out.push("> " * self.blockquote_depth)
+            out.push(md_text)
+        self.plain.push(_drop_leading_space(self.plain, collapsed))
 
     # ---- tree construction (Open/Close edge synthesis) ----
     #
@@ -579,72 +453,25 @@ class _Walker:
     # onto these methods through _EdgeParser, and kernels/_html_fast.c
     # mirrors them in C.
 
-    # The per-event membership probes (void / implied-trigger / p-closer /
-    # capture + the open/close dispatch .get) are folded into ONE
-    # precomputed descriptor lookup: _TAG_INFO[tag] = (flags, open_h,
-    # close_h), built after the class body. Tags outside every set (span,
-    # font, ...) miss the dict entirely — the most common boilerplate
-    # events cost a single hash probe. Flag-order preserves the original
-    # semantics exactly: VOID wins before the implied check (so <hr>,
-    # though a _P_CLOSER, never closes an open <p> — html.rs parity), and
-    # capture/skip bookkeeping still runs before the skip_depth gate.
-
     def edge_starttag(self, tag: str, attrs: dict[str, str | None]) -> None:
-        info = _TAG_INFO.get(tag)
-        if info is None:
-            # unknown element: no void/implied/capture semantics, no
-            # open action — stack discipline only
-            self.stack.append(tag)
-            return
-        flags, open_h, _close_h = info
-        if flags & 1:  # void
+        # a void element never closes an open <p>, not even <hr>
+        # (html.rs parity)
+        if tag in VOID_ELEMENTS:
             self.handle_open(tag, attrs)
             self.handle_close(tag)
             return
-        if flags & 2 or (self._p_open and flags & 4):
-            self._close_implied_for(tag)
+        implied = _IMPLIED_END.get(tag)
+        if implied is not None:
+            self._close_up_to(*implied)
+        if tag in _P_CLOSERS:
+            self._close_p_for_block()
         self.stack.append(tag)
-        if flags & 16:  # <p>
-            self._p_open += 1
-        # handle_open, inlined (the hottest per-event call chain)
-        if flags & 8:  # title/h1 capture + skip bookkeeping
-            self.handle_open(tag, attrs)
-            return
-        if self.skip_depth > 0:
-            return
-        if open_h is not None:
-            open_h(self, tag, attrs)
+        self.handle_open(tag, attrs)
 
     def edge_endtag(self, tag: str) -> None:
-        info = _TAG_INFO.get(tag)
-        if info is not None and info[0] & 1:  # void
-            return
-        stack = self.stack
-        # fast path: well-formed HTML closes the top of the stack
-        if stack and stack[-1] == tag:
-            stack.pop()
-            if info is None:
-                return
-            flags = info[0]
-            if flags & 16:  # <p>
-                self._p_open -= 1
-            # handle_close, inlined
-            if flags & 8:
-                self.handle_close(tag)
-                return
-            if self.skip_depth > 0:
-                return
-            close_h = info[2]
-            if close_h is not None:
-                close_h(self, tag)
-            return
-        # scan from the top without building a reversed copy
-        for i in range(len(stack) - 1, -1, -1):
-            if stack[i] == tag:
-                while len(stack) > i:
-                    self._pop_close()
-                return
-        # stray end tag with no matching open: ignored
+        if tag not in VOID_ELEMENTS:
+            # a stray end tag with no matching open is ignored
+            self._close_up_to((tag,), ())
 
     def edge_text(self, data: str) -> None:
         # RCDATA decode: html.parser's cdata mode delivers title/textarea
@@ -656,54 +483,37 @@ class _Walker:
         self.handle_text(data)
 
     def edge_eof(self) -> None:
-        while self.stack:
-            self._pop_close()
+        self._close_to(0)
 
     # -- implied end-tag synthesis helpers --
 
-    def _close_implied_for(self, tag: str) -> None:
-        if tag in _IMPLIED_TRIGGERS:
-            if tag == "li":
-                self._close_up_to("li", stop_at=("ul", "ol"))
-            elif tag in ("dt", "dd"):
-                self._close_up_to_any(("dt", "dd"), stop_at=("dl",))
-            elif tag in ("td", "th"):
-                self._close_up_to_any(("td", "th"), stop_at=("tr", "table"))
-            elif tag == "tr":
-                self._close_up_to(
-                    "tr", stop_at=("table", "thead", "tbody", "tfoot")
-                )
-            else:  # thead / tbody / tfoot
-                self._close_up_to("tr", stop_at=("table",))
-        if self._p_open and tag in _P_CLOSERS:
-            stack = self.stack
-            for idx in range(len(stack) - 1, -1, -1):
-                if stack[idx] == "p":
-                    if all(t in _FORMATTING for t in stack[idx + 1:]):
-                        while len(stack) > idx:
-                            self._pop_close()
-                    break
+    def _close_p_for_block(self) -> None:
+        """Close the innermost <p> if only formatting elements are open
+        above it."""
+        stack = self.stack
+        for i in range(len(stack) - 1, -1, -1):
+            if stack[i] == "p":
+                self._close_to(i)
+                return
+            if stack[i] not in _FORMATTING:
+                return
 
-    def _close_up_to(self, target: str, stop_at: tuple[str, ...]) -> None:
-        self._close_up_to_any((target,), stop_at)
-
-    def _close_up_to_any(
+    def _close_up_to(
         self, targets: tuple[str, ...], stop_at: tuple[str, ...]
     ) -> None:
-        for i in range(len(self.stack) - 1, -1, -1):
-            t = self.stack[i]
-            if t in stop_at:
+        """Close down to and including the innermost open element in
+        ``targets``, unless one in ``stop_at`` is open above it."""
+        stack = self.stack
+        for i in range(len(stack) - 1, -1, -1):
+            if stack[i] in targets:
+                self._close_to(i)
                 return
-            if t in targets:
-                while len(self.stack) > i:
-                    self._pop_close()
+            if stack[i] in stop_at:
                 return
 
-    def _pop_close(self) -> None:
-        t = self.stack.pop()
-        if t == "p":
-            self._p_open -= 1
-        self.handle_close(t)
+    def _close_to(self, depth: int) -> None:
+        while len(self.stack) > depth:
+            self.handle_close(self.stack.pop())
 
 
 def _render_table(tc: dict, plain: bool) -> str:
@@ -717,31 +527,6 @@ def _render_table(tc: dict, plain: bool) -> str:
     if plain:
         return md.build_table_plain(headers, data_rows)
     return md.build_table(headers, data_rows)
-
-
-_EMPTY_ATTRS: dict = {}
-
-
-def _build_tag_info() -> dict[str, tuple]:
-    """tag -> (flags, open_handler, close_handler) for every tag any
-    walker edge treats specially; tags outside every set miss the dict.
-    Flag bits: 1=void, 2=implied-end trigger, 4=p-closer, 8=capture/skip
-    bookkeeping, 16=<p> itself (open-p counter)."""
-    tags = (VOID_ELEMENTS | _IMPLIED_TRIGGERS | _P_CLOSERS
-            | _CAPTURE_OR_SKIP | _OPEN_TAGS | _CLOSE_TAGS)
-    info = {}
-    for t in tags:
-        flags = ((1 if t in VOID_ELEMENTS else 0)
-                 | (2 if t in _IMPLIED_TRIGGERS else 0)
-                 | (4 if t in _P_CLOSERS else 0)
-                 | (8 if t in _CAPTURE_OR_SKIP else 0)
-                 | (16 if t == "p" else 0))
-        info[t] = (flags, _Walker._OPEN_DISPATCH.get(t),
-                   _Walker._CLOSE_DISPATCH.get(t))
-    return info
-
-
-_TAG_INFO = _build_tag_info()
 
 
 class _EdgeParser(HTMLParser):
@@ -765,22 +550,28 @@ class _EdgeParser(HTMLParser):
         self.walker = walker
 
     def handle_starttag(self, tag: str, attrs: list) -> None:
-        # walkers only read attrs; share one empty dict for the common case
-        self.walker.edge_starttag(
-            tag, dict(attrs) if attrs else _EMPTY_ATTRS
-        )
+        self.walker.edge_starttag(tag, dict(attrs))
 
     def handle_startendtag(self, tag: str, attrs: list) -> None:
-        w = self.walker
-        attrs_dict = dict(attrs) if attrs else _EMPTY_ATTRS
-        w.handle_open(tag, attrs_dict)
-        w.handle_close(tag)
+        self.walker.handle_open(tag, dict(attrs))
+        self.walker.handle_close(tag)
 
     def handle_endtag(self, tag: str) -> None:
         self.walker.edge_endtag(tag)
 
     def handle_data(self, data: str) -> None:
         self.walker.edge_text(data)
+
+    def parse_marked_section(self, i: int, report: int = 1) -> int:
+        # html.parser raises on a marked section with an unknown keyword
+        # or none ('<![foo[x]]>', '<![ x]]>'); html5ever reads it as a
+        # bogus comment, which ends at the next '>'. With no '>', -1
+        # leaves it to close(), which drops it.
+        try:
+            return super().parse_marked_section(i, report)
+        except AssertionError:
+            end = self.rawdata.find(">", i + 3)
+            return -1 if end < 0 else end + 1
 
     def close(self) -> None:
         # unterminated markup declaration at EOF ('<!...' / '<?...' with
@@ -808,15 +599,16 @@ class _EdgeParser(HTMLParser):
 def convert_html(data: bytes, fast: bool = True) -> dict:
     """Convert HTML bytes to (markdown, plain, title) per html.rs:22-40.
 
-    Two tiers: the native C walker (kernels/_html_fast.c) for documents
+    Two tiers. The native C walker (kernels/_html_fast.c) takes documents
     of any size inside its verified envelope (plain tag markup, every
-    character reference decoded exactly like ``html.unescape``; it BAILS
-    on anything else — deep lists or stack, non-ASCII bytes in tag
-    markup — so it can only be faster, never different: byte-parity
-    locked by tests/test_html_native.py over fixtures + fuzz + the bench
-    corpus + the entity sweep of scripts/html_parity_sweep.py), then the
-    stdlib html.parser walk, which is also the differential oracle
-    (``fast=False`` runs it alone)."""
+    character reference decoded exactly like ``html.unescape``). It
+    declines anything else — deep lists or stack, non-ASCII bytes in tag
+    markup, marked sections — and so can only be faster, never
+    different: byte parity is locked by tests/test_html_native.py over
+    fixtures, fuzz, the bench corpus and the entity sweep of
+    scripts/html_parity_sweep.py. The stdlib html.parser walk converts
+    what it declines and is the differential oracle (``fast=False`` runs
+    it alone)."""
     # html.rs:27 errors on invalid UTF-8; once the bytes are known valid,
     # C reads them as they are, with no decoded copy alive meanwhile
     data.decode("utf-8")
@@ -839,10 +631,9 @@ def convert_html(data: bytes, fast: bool = True) -> dict:
     plain = walker.plain.take().strip()
     if plain:
         plain += "\n"
-    title = walker.title_text or walker.first_h1_text
     return {
         "markdown": out,
         "plain_text": plain,
-        "title": title,
+        "title": walker.captured.get("title") or walker.captured.get("h1"),
         "warnings": [],
     }

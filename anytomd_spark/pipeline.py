@@ -300,16 +300,18 @@ def ordered_output(
     single-window path runs — fine when no conversation exceeds
     ~``seq_bucket`` turns.
 
-    Before committing to the two-level plan, one tiny aggregate over the
-    SLIM counts side computes the largest per-conversation row count;
-    when every conversation fits in a single bucket the legacy
-    single-window path runs instead — the common small-conversation case
-    skips the composite-key join + extra aggregate entirely (it paid
-    ~+50% on the sf0.1 bench for skew safety it didn't need), while any
-    conversation ≥ ``seq_bucket`` rows keeps the bounded-task guarantee.
-    The check itself is an eager driver-side scalar job on
-    (conv_id, turn_idx) only — payloads never move. A small
-    ``seq_bucket`` forces the two-level plan on small inputs.
+    Before committing to the two-level plan, one aggregate over the SLIM
+    ``turns`` side (rows per conv_id, then their max) finds the largest
+    conversation; when every conversation fits in a single bucket the
+    legacy single-window path runs instead — the common
+    small-conversation case skips the composite-key join + extra
+    aggregate entirely (it paid ~+50% on the sf0.1 bench for skew safety
+    it didn't need), while any conversation ≥ ``seq_bucket`` rows keeps
+    the bounded-task guarantee. The check itself is an eager driver-side
+    scalar job on conv_id only — payloads never move — and the
+    per-(conv, bucket) counts are built only when the two-level plan is
+    taken. A small ``seq_bucket`` forces the two-level plan on small
+    inputs.
 
     When ``converted`` carries a ``bucket`` column (see
     :func:`bucketed`), the single-window path shuffles on ``bucket`` so
@@ -317,6 +319,11 @@ def ordered_output(
     :func:`_single_window`); ``turn_seq`` is the same either way.
     """
     if turns is None:
+        return _single_window(converted)
+    biggest = (
+        turns.groupBy("conv_id").count().agg(F.max("count")).collect()[0][0]
+    )
+    if biggest is None or biggest < seq_bucket:
         return _single_window(converted)
     bkt = F.floor(
         F.coalesce(F.col("turn_idx"), F.lit(0)) / F.lit(seq_bucket)
@@ -326,14 +333,6 @@ def ordered_output(
         .groupBy("conv_id", "_seq_bkt")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
-    biggest = (
-        counts.groupBy("conv_id")
-        .agg(F.sum("_n").alias("_t"))
-        .agg(F.max("_t"))
-        .collect()[0][0]
-    )
-    if biggest is None or biggest < seq_bucket:
-        return _single_window(converted)
     w_off = Window.partitionBy("conv_id").orderBy("_seq_bkt")
     offsets = counts.select(
         "conv_id", "_seq_bkt",

@@ -117,6 +117,26 @@ class TestNativeDifferential:
         with pytest.raises(ValueError):
             convert_html(text.encode("utf-8"))
 
+    def test_marked_sections_outside_the_known_keywords_decline(self):
+        """A marked section whose keyword html.parser does not know, or
+        which has none, is a bogus comment up to the next '>' (to the end
+        of the input without one), as html5ever reads it: the native
+        walker declines it and the stdlib walk drops it."""
+        for text, markdown in (
+            ("<p>a<![foo[x]]>b", "ab\n"),
+            ("<p>a<![ x]]>b", "ab\n"),
+            ("<p>a<![foo[x>y]]>b</p>", "ay]]>b\n"),
+            ("<p>a<![foo[\n<b>x</b>]]>b", "ax]]>b\n"),
+            ("<p>a<![foo[x]]>b<![if x]>c<![endif]>d", "abcd\n"),
+            ("<p>a<![foo", "a\n"),
+            ("<p>a<![ x", "a\n"),
+        ):
+            assert convert_html_native(text) is None, text
+            data = text.encode("utf-8")
+            assert convert_html(data, fast=False)["markdown"] == markdown, text
+            assert convert_html(data, fast=True) == convert_html(
+                data, fast=False), text
+
     def test_tag_soup_reads_like_html_parser(self):
         """Where html.parser departs from a plain regex reading of tags,
         the native walker reads the markup as html.parser does, or
@@ -137,6 +157,34 @@ class TestNativeDifferential:
         for text in ("<p/ >x", "<p\x00>", "<![CDATA[x]]>", "<a b='x",
                      "</a,b>", "<b\u212a>x"):
             assert convert_html_native(text) is None, text
+
+    def test_shapes_the_native_walker_declines_are_pinned(self):
+        """Where the native walker declines, nothing independent checks
+        the stdlib walk, so its output on those shapes is pinned here:
+        nesting past MAX_STACK (256) elements or MAX_LISTS (64) lists, a
+        non-ASCII byte in tag markup outside names and quoted values, an
+        unclosed attribute quote, and marked sections."""
+        lists = "".join("  " * i + "- \n" for i in range(64)) + "  " * 64
+        cases = (
+            ("<div>" * 300 + "<p>deep <b>x</b></p>",
+             "deep **x**\n", "deep x\n", None),
+            ("<ul><li>" * 65 + "item", lists + "- item\n", "item\n", None),
+            ("<h1>T</h1><p>a <a href=x \u00e9>link</a> b</p>",
+             "# T\n\na [link](x) b\n", "T\n\na link b\n", "T"),
+            ("<p x=1\xa0y=2>nbsp</p>", "nbsp\n", "nbsp\n", None),
+            ("<p>a <a href='x>b</a> c</p>",
+             "a <a href='x>b c\n", "a <a href='x>b c\n", None),
+            ("<p>a<![CDATA[x < y]]>b</p>", "ab\n", "ab\n", None),
+            ("<p><![if !supportLists]>1.<![endif]>Item</p>",
+             "1.Item\n", "1.Item\n", None),
+        )
+        for text, markdown, plain, title in cases:
+            assert convert_html_native(text) is None, text[:40]
+            want = {"markdown": markdown, "plain_text": plain,
+                    "title": title, "warnings": []}
+            data = text.encode("utf-8")
+            assert convert_html(data, fast=False) == want, text[:40]
+            assert convert_html(data, fast=True) == want, text[:40]
 
     def test_charrefs_in_script_and_style_stay_raw(self):
         # script content inside the first <h1> reaches the title raw
