@@ -10,7 +10,10 @@ parquet shim with IDENTICAL semantics at the API surface:
   * lineage: append-only sidecar (Iceberg ``append()`` <-> parquet
     append mode)
   * reads: ``spark.read.table`` for Iceberg identifiers, with optional
-    snapshot pinning; ``spark.read.parquet`` for the shim
+    snapshot pinning; ``spark.read.parquet`` for the shim. The lineage
+    re-read (``read_buckets``) reads only the buckets a run wrote: a
+    partition filter on Iceberg, the named bucket directories with the
+    written schema on the shim
 
 ``probe_storage`` detects the Iceberg runtime on the session classpath
 at run time, so the same ``run_pipeline`` call upgrades to real Iceberg
@@ -21,6 +24,8 @@ lineage row (``storage`` column).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 ICEBERG_CLASS = "org.apache.iceberg.spark.source.IcebergSource"
 
@@ -110,6 +115,32 @@ def read_output(
     return spark.read.parquet(target)
 
 
+def read_buckets(
+    spark: SparkSession,
+    target: str,
+    storage: str,
+    buckets: list[int],
+    schema: StructType,
+) -> DataFrame:
+    """Read back only the given buckets of the output, with the schema
+    they were written with.
+
+    Parquet: the bucket directories are named, not discovered, so the
+    listing is O(len(buckets)) whatever else the output holds; ``basePath``
+    keeps ``bucket`` a column, and ``schema`` (which must include it)
+    skips the footer-inference job. Iceberg plans from table metadata, so
+    there a partition filter does the same.
+    """
+    if storage == "iceberg":
+        return spark.read.table(target).filter(F.col("bucket").isin(buckets))
+    base = target.rstrip("/")
+    return (
+        spark.read.schema(schema)
+        .option("basePath", base)
+        .parquet(*(f"{base}/bucket={b}" for b in buckets))
+    )
+
+
 def append_lineage(df: DataFrame, target: str, storage: str) -> None:
     if storage == "iceberg":
         if df.sparkSession.catalog.tableExists(target):
@@ -118,6 +149,16 @@ def append_lineage(df: DataFrame, target: str, storage: str) -> None:
             df.writeTo(target).create()
     else:
         df.write.mode("append").parquet(target)
+
+
+def lineage_exists(spark: SparkSession, target: str, storage: str) -> bool:
+    """Whether the lineage sidecar has been created: an explicit probe,
+    so the resume check can tell a first run from an unreadable sidecar."""
+    if storage == "iceberg":
+        return spark.catalog.tableExists(target)
+    path = spark._jvm.org.apache.hadoop.fs.Path(target)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(path))
 
 
 def read_lineage(spark: SparkSession, target: str, storage: str) -> DataFrame:

@@ -116,7 +116,8 @@ spark.stop()
 # Answers "how much of a sub-1.0 Spark efficiency is the SILICON, not the
 # framework?" in the same window as the Spark legs. Each worker runs the
 # identical stdlib-only work over the payloads of one deterministic
-# sample batch; per-core rate = work/wall with n busy cores. Nothing from
+# sample batch; per-core rate = work / the slowest worker's own elapsed
+# time with n busy cores (pool start-up and join excluded). Nothing from
 # anytomd_spark runs in the timed loop, so the rate moves with the
 # machine, never with the converters. Fork inherits the parent's warm
 # interpreter state (imports, the payload list) so workers start hot.
@@ -154,12 +155,11 @@ def host_control(n_procs: int, n_rows: int = 2000, reps: int = 6,
         _CONTROL_TEXTS = list(batch["text"])
         _control_task(1)  # parent warmup — forked workers inherit it
     ctx = mp.get_context("fork")
-    t0 = time.time()
     with ctx.Pool(n_procs) as pool:
-        pool.map(_control_task, [reps] * n_procs)
-    wall = time.time() - t0
-    # every worker does the same n_rows*reps; wall is the slowest worker
-    return n_rows * reps / wall
+        elapsed = pool.map(_control_task, [reps] * n_procs)
+    # every worker does the same n_rows*reps; time the slowest worker's
+    # work, not the pool's process start-up and join
+    return n_rows * reps / max(elapsed)
 
 
 def ensure_cache(n_convs: int) -> str:
