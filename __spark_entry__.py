@@ -244,7 +244,14 @@ def _markdown_union(fmts: tuple):
     mapInPandas, and without the pre-filter each union leg converted
     the other legs' rows just to throw them away (guide §4.1: filter
     before the Python boundary). The post-kernel fmt filter stays as
-    the semantic gate; results are identical."""
+    the semantic gate; results are identical.
+
+    The pre-filter trusts that dispatch agrees with FMT_BY_MOD. The
+    dispatch sentinel is ``convert_metrics`` and
+    ``convert_fmt_histogram``: both run unfiltered over the full corpus
+    and count rows per detected ``fmt``, so a payload dispatched to a
+    format outside its ``doc_id % 11`` bucket changes their counts even
+    where the filtered union legs never see it."""
     from anytomd_spark.derive import FMT_BY_MOD
 
     buckets = [m for m, f in enumerate(FMT_BY_MOD) if f in fmts]
@@ -618,13 +625,7 @@ def _q_corpus_decontaminate(spark, sf):
     """Benchmark decontamination: every doc_id % 97 == 0 document plays
     the benchmark set; the rest of the corpus is flagged when it shares
     a 5-gram with any probe. Probe shingles broadcast; the corpus never
-    shuffles on content. Stays on method='exact' — the round-6 Bloom
-    strategy (corpus.decontaminate(method='bloom'), value-identical by
-    construction) measured 6.8 s vs exact's 3.5 s at this shape and
-    lost at every sandbox-measurable scale; its win condition is
-    broadcast FEASIBILITY (constant-size bitmap vs a probe hash-set
-    that grows with the benchmark suite), not single-node wall time —
-    see PLANS.md round-6 session-6."""
+    shuffles on content."""
     docs = _docs(spark, sf)
     probes = docs.filter(F.col("doc_id") % 97 == 0).select("text")
     scanned = docs.filter(F.col("doc_id") % 97 != 0)

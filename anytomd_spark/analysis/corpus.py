@@ -1,7 +1,8 @@
 """Corpus-assembly operators for training-data pipelines: deterministic
-splits, token-budget sharding, benchmark decontamination.
+splits and rate/mixture sampling, token-budget sharding and sequence
+packing, benchmark decontamination.
 
-All three are pure built-in-function plans (no Python UDFs) and
+Every operator is a pure built-in-function plan (no Python UDFs) and
 engine-portable by construction, so every one has a value-level DuckDB
 oracle:
 
@@ -11,46 +12,17 @@ oracle:
 * sharding uses the same two-level skew-safe cumulative sum as
   ``pipeline.ordered_output`` (a naive global-window cumsum would put
   the whole corpus through one task);
-* decontamination broadcasts the (small) benchmark shingle set; its
-  optional ``method="bloom"`` variant (the one Arrow-UDF exception in
-  this module) trades that broadcast for a constant-size bitmap +
-  exact verify — value-identical, so the same oracle covers both.
+* decontamination broadcasts the (small) benchmark shingle set and
+  left-semi joins the corpus's map-side shingles against it.
 """
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from anytomd_spark.analysis.dedup import tokenize, word_shingles
 from anytomd_spark.analysis.text_quality import token_count
-
-
-def _word_shingles_udf_input(tokens_col, n: int = 3):
-    """Single-scope-lambda twin of :func:`word_shingles`, value-identical.
-
-    Kept ONLY for the one place a shingle expression becomes a Python
-    UDF's input (the Bloom decontaminate flag stage): predicate pushdown
-    inlines the expression into the UDF call, and Spark 4.1's Python-UDF
-    extraction cannot handle an input whose lambda bodies reference an
-    ENCLOSING lambda's variable (word_shingles' bound-token form) — the
-    UDF is left unextracted in the Filter and evaluation dies with an
-    INTERNAL_ERROR. This form re-evaluates ``tokens_col`` once per
-    shingle position when inlined (the pre-r7 behavior, quadratic in
-    words — acceptable on the non-default bloom path), but every lambda
-    only references its own variable, which extraction handles."""
-    return F.when(
-        F.size(tokens_col) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(tokens_col) - n),
-            lambda i: F.array_join(F.slice(tokens_col, i + 1, n), " "),
-        ),
-    ).otherwise(F.array(F.array_join(tokens_col, " ")))
 
 
 def split_thresholds(weights: dict[str, float]) -> list[tuple[str, str]]:
@@ -341,222 +313,36 @@ def _probe_shingles(probes: DataFrame, text_col: str, shingle_n: int) -> DataFra
     ).distinct()
 
 
-def bloom_parameters(n_items: int, fpp: float = 0.01, max_bits: int = 1 << 27):
-    """Standard Bloom sizing: ``m = -n ln p / (ln 2)^2`` bits,
-    ``k = (m/n) ln 2`` probes. ``m`` is clamped to [2^10, max_bits]
-    (16 MiB at the default cap — the broadcast stays constant-size no
-    matter how large the probe set grows) and ``k`` to [1, 16]."""
-    n = max(1, n_items)
-    m = int(-n * math.log(max(fpp, 1e-12)) / (math.log(2) ** 2))
-    m = max(1 << 10, min(m, max_bits))
-    k = max(1, min(16, round(m / n * math.log(2))))
-    return m, k
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    """SplitMix64 finalizer (Steele et al., the java.util.SplittableRandom
-    mixer) over a uint64 array — derives the second Bloom hash from the
-    first, so the JVM only ever computes ONE xxhash64 per shingle.
-    uint64 arithmetic wraps mod 2^64 by construction."""
-    x = x + np.uint64(0x9E3779B97F4A7C15)
-    x = (x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-    x = (x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-    return x ^ (x >> np.uint64(31))
-
-
-def _bloom_positions(h1: np.ndarray, k: int, m: int) -> np.ndarray:
-    """(n, k) bit positions via Kirsch-Mitzenmacher double hashing:
-    ``pos_i = (h1 + i * splitmix64(h1)) mod m``, reduced mod m before
-    combining (m <= 2^27, k <= 16 keeps every intermediate < 2^32).
-    This ONE function is the position authority for both the bitmap
-    builder and the membership probe — there is no second
-    implementation to drift from. ``h1`` is int64 (Spark's xxhash64);
-    reinterpreted two's-complement to uint64."""
-    u = np.ascontiguousarray(h1, dtype=np.int64).view(np.uint64)
-    r1 = u % np.uint64(m)
-    r2 = _splitmix64(u) % np.uint64(m)
-    ks = np.arange(k, dtype=np.uint64)
-    return ((r1[:, None] + ks[None, :] * r2[:, None]) % np.uint64(m)).astype(
-        np.int64
-    )
-
-
-def build_probe_bloom(probe_sh: DataFrame, m: int, k: int) -> np.ndarray:
-    """Aggregate the probe shingles into an m-bit Bloom bitmap: the JVM
-    hashes each shingle once (xxhash64), each Arrow batch folds its k
-    positions into a local partial bitmap (one numpy ``bitwise_or.at``
-    pass — never a per-shingle Python object), and only the NONZERO
-    words leave the worker as (word, bits) rows for a ``bit_or``
-    reduce. The driver collect is bounded by ``m/64`` longs — the
-    CHOSEN filter size — never by the probe count (1<<27 bits ->
-    2M longs max)."""
-    n_words = (m + 63) // 64
-
-    def partial_bitmaps(batches):
-        for pdf in batches:
-            h1 = pdf["h1"].to_numpy(np.int64)
-            if len(h1) == 0:
-                continue
-            pos = _bloom_positions(h1, k, m).ravel()
-            local = np.zeros(n_words, dtype=np.int64)
-            np.bitwise_or.at(local, pos >> 6, np.int64(1) << (pos & 63))
-            nz = np.flatnonzero(local)
-            yield pd.DataFrame({"word": nz, "bits": local[nz]})
-
-    words = (
-        probe_sh.select(F.xxhash64("shingle").alias("h1"))
-        .mapInPandas(partial_bitmaps, "word long, bits long")
-        .groupBy("word")
-        .agg(F.bit_or("bits").alias("bits"))
-        .collect()
-    )
-    bitmap = np.zeros(n_words, dtype=np.int64)
-    for row in words:
-        bitmap[row["word"]] = row["bits"]
-    return bitmap
-
-
-def _bloom_hit_batch(
-    hs1: pd.Series, bitmap: np.ndarray, k: int, m: int
-) -> pd.Series:
-    """Vectorized membership test for a batch of per-doc shingle-hash
-    arrays: True iff ANY shingle has all k bits set. Pure numpy — one
-    (total_shingles, k) position matrix per batch."""
-    lens = np.fromiter(
-        (0 if a is None else len(a) for a in hs1), dtype=np.int64, count=len(hs1)
-    )
-    out = np.zeros(len(hs1), dtype=bool)
-    if int(lens.sum()) == 0:
-        return pd.Series(out)
-    h1 = np.concatenate(
-        [np.asarray(a, dtype=np.int64) for a in hs1 if a is not None and len(a)]
-    )
-    pos = _bloom_positions(h1, k, m)
-    member = ((bitmap[pos >> 6] >> (pos & 63)) & 1).all(axis=1)
-    nonzero = lens > 0
-    starts = np.concatenate(([0], np.cumsum(lens)))[:-1][nonzero]
-    out[nonzero] = np.logical_or.reduceat(member, starts)
-    return pd.Series(out)
-
-
 def decontaminate(
     docs: DataFrame,
     probes: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     shingle_n: int = 5,
-    method: str = "exact",
-    fpp: float = 0.01,
-    bloom_max_bits: int = 1 << 27,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any
     ``shingle_n``-gram with a probe (benchmark/eval) document.
 
-    Two physical strategies, identical results:
-
-    * ``method="exact"``: the probe side's distinct shingles BROADCAST;
-      the corpus side explodes its shingles map-side and left-semi joins
-      against the broadcast, then re-aggregates to distinct contaminated
-      ids. The corpus never shuffles on content. Right when the probe
-      set is benchmarks — MBs, not TBs.
-    * ``method="bloom"``: the probe shingles aggregate into a
-      CONSTANT-SIZE Bloom bitmap (per-batch numpy partial bitmaps,
-      ``bit_or`` per 64-bit word, driver collect bounded by the chosen
-      filter size, broadcast once); the corpus side never explodes
-      shingle STRINGS except for hits — per doc, the JVM computes one
-      xxhash64 array over its shingles and an Arrow-batched numpy
-      kernel probes the bitmap (second hash derived via SplitMix64 in
-      the same kernel both sides share). Only Bloom HITS (true
-      positives + the fpp false positives) enter the exact string-level
-      verify join, so the final answer is bit-identical to ``exact``
-      while the broadcast stays ~10 bits/probe-shingle instead of a
-      whole string hash-set.
-
-    MEASURED VERDICT (round 6, PLANS.md session-6): at every
-    sandbox-measurable shape — bench probes (3.5 vs 6.8 s at sf0.1),
-    large in-corpus probes, and a zero-hit 2M-shingle disjoint probe
-    set at 10x — ``exact`` wins wall-clock; the codegen'd broadcast
-    semi join beats the Arrow hop + extra probe-side jobs whenever the
-    probe hash-set actually FITS as a broadcast. ``bloom`` is the
-    FEASIBILITY path: its broadcast is ~130x smaller at 2M probe
-    shingles (2.5 MB bitmap vs ~340 MB of shingle strings) and
-    constant-size under ``bloom_max_bits`` no matter how the benchmark
-    suite grows, so it is the shape that still runs when the probe set
-    reaches executor-memory scale. Default stays ``exact``.
+    The probe side's distinct shingles BROADCAST; the corpus side
+    explodes its shingles map-side and left-semi joins against the
+    broadcast, then re-aggregates to distinct contaminated ids. The
+    corpus never shuffles on content. Right when the probe set is
+    benchmarks — MBs, not TBs.
 
     ``probes`` needs a ``text`` column; returns (id, contaminated).
     """
-    if method not in ("exact", "bloom"):
-        raise ValueError(f"unknown decontaminate method: {method!r}")
-    probe_sh = _probe_shingles(probes, text_col, shingle_n)
-    if method == "exact":
-        doc_sh = docs.select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(word_shingles(tokenize(text_col), shingle_n))
-            ).alias("shingle"),
-        )
-        candidates = doc_sh.join(F.broadcast(probe_sh), "shingle", "left_semi")
-    else:
-        # persisted for its three uses (count, bitmap build, verify
-        # broadcast) and deliberately NOT unpersisted here: the verify
-        # join materializes only when the RETURNED lazy plan runs, so
-        # an eager unpersist would force a full third recomputation of
-        # the probe explode+distinct (measured ~10 s at a 2M-shingle
-        # probe set). The probe table is small by contract; Spark
-        # LRU-evicts it under memory pressure.
-        probe_sh = probe_sh.persist()
-        m, k = bloom_parameters(probe_sh.count(), fpp, bloom_max_bits)
-        bitmap = build_probe_bloom(probe_sh, m, k)
-        bc = docs.sparkSession.sparkContext.broadcast(bitmap)
-
-        @pandas_udf("boolean")
-        def bloom_any(hs1: pd.Series) -> pd.Series:
-            return _bloom_hit_batch(hs1, bc.value, k, m)
-
-        # NB deliberately NOT asNondeterministic: pushdown inlines
-        # the shingle expression into the UDF input, but with a
-        # SINGLE hash transform that is still exactly one
-        # evaluation per doc, and the post-filter _sh recompute
-        # runs on bloom HITS only. Measured: the nondeterministic
-        # fence costs ~2x on the flag stage (it blocks the
-        # efficient eval path), while the inline costs nothing.
-        #
-        # This branch uses _word_shingles_udf_input (the single-scope
-        # lambda form) rather than word_shingles: the r7 bound-token
-        # rewrite nests a lambda inside another lambda's scope, and
-        # Spark 4.1 fails to extract a Python UDF whose (pushdown-
-        # inlined) input contains such a cross-scope lambda — the raw
-        # PythonUDF is left in the Filter and the job dies with
-        # INTERNAL_ERROR "Cannot evaluate expression" at runtime
-        # (reproduced minimally; the nondeterministic fence does not
-        # stop the inline either). Values are identical; only this
-        # UDF-input site needs the extraction-safe shape.
-        shingled = docs.select(
-            F.col(id_col),
-            F.array_distinct(
-                _word_shingles_udf_input(tokenize(text_col), shingle_n)
-            ).alias("_sh"),
-        )
-        # _sh must be a bound column before the hash transform
-        # (HOF lambdas re-inline expressions — PLANS.md round-4).
-        hashed = shingled.select(
-            id_col,
-            "_sh",
-            F.transform("_sh", lambda s: F.xxhash64(s)).alias("_h1"),
-        )
-        flagged = hashed.filter(bloom_any("_h1"))
-        # exact verify on the (tiny) hit set only — removes Bloom
-        # false positives, so bloom == exact by construction.
-        # explode_OUTER: a plain explode lets the optimizer infer a
-        # size(_sh) > 0 constraint and push it below the UDF, where
-        # it recomputes the shingles over every doc; outer generate
-        # implies nothing, and the semi join drops its null rows.
-        candidates = flagged.select(
-            id_col, F.explode_outer("_sh").alias("shingle")
-        ).join(F.broadcast(probe_sh), "shingle", "left_semi")
+    doc_sh = docs.select(
+        F.col(id_col),
+        F.explode(
+            F.array_distinct(word_shingles(tokenize(text_col), shingle_n))
+        ).alias("shingle"),
+    )
     hits = (
-        candidates.select(id_col)
+        doc_sh.join(
+            F.broadcast(_probe_shingles(probes, text_col, shingle_n)),
+            "shingle", "left_semi",
+        )
+        .select(id_col)
         .distinct()
         .withColumn("contaminated", F.lit(True))
     )

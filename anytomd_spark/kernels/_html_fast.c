@@ -12,18 +12,18 @@
  * read (href, alt, src, type) and title/textarea content — never
  * script/style.  The whole html.unescape grammar decodes: numeric
  * references with or without ';' (remapped, dropped or U+FFFD where
- * html.unescape does so), named references matched exactly against
+ * html.unescape does so, and of any length, as html5ever reads them
+ * where int() refuses the digits), named references matched exactly against
  * html.entities.html5 and then by longest prefix, and a literal '&'
  * where nothing matches.  This file does not compile alone:
  * _html_native._c_source() prepends the tables the decode reads
- * (ENTITY_NAME / ENTITY_VALUE, CP_REMAP, CP_DROPPED, INT_MAX_STR_DIGITS),
+ * (ENTITY_NAME / ENTITY_VALUE, CP_REMAP, CP_DROPPED),
  * generated from the running interpreter's html module.
  *
  * Anything outside the verified envelope makes the walker BAIL
  * (return code 2) and the caller falls back to the stdlib parser walk,
  * so this file never has to be right about the long tail — only about
- * the narrow grammar it accepts.  Bails include: a decimal reference
- * longer than int() parses (html.unescape raises), non-ASCII bytes
+ * the narrow grammar it accepts.  Bails include: non-ASCII bytes
  * inside tag markup outside tag names and quoted attribute values
  * (Python's \s is Unicode-aware there), '/' used as an attribute
  * separator, an attribute without a separator, an unclosed attribute
@@ -616,16 +616,16 @@ static int ends_name_run(unsigned char c) {
            c == '&' || c == '#' || c == ';';
 }
 
-/* append html.unescape(s[0:n]) to dst.  Returns 1 ok, 0 bail (a decimal
- * reference longer than Python's int() accepts, which html.unescape
- * raises on), -1 allocation failure. */
+/* append html.unescape(s[0:n]) to dst, a decimal reference of any length
+ * read as html5ever reads it (past 0x10FFFF, U+FFFD).  Returns 1 ok, 0
+ * allocation failure. */
 static int unescape_into(buf_t *dst, const char *s, size_t n) {
     const unsigned char *u = (const unsigned char *)s;
     size_t i = 0;
     for (;;) {
         const char *amp = (const char *)memchr(s + i, '&', n - i);
         size_t lit = amp ? (size_t)(amp - s) - i : n - i;
-        if (!buf_push(dst, s + i, lit)) return -1;
+        if (!buf_push(dst, s + i, lit)) return 0;
         if (!amp) return 1;
         i += lit + 1;
         if (i < n && s[i] == '#') {
@@ -643,11 +643,8 @@ static int unescape_into(buf_t *dst, const char *s, size_t n) {
                 if (cp > 0x10FFFF) cp = 0x110000;
             }
             if (j > start) {
-                if (base == 10 && INT_MAX_STR_DIGITS &&
-                    j - start > INT_MAX_STR_DIGITS)
-                    return 0;
                 if (j < n && s[j] == ';') j++;
-                if (!push_numeric_ref(dst, cp)) return -1;
+                if (!push_numeric_ref(dst, cp)) return 0;
                 i = j;
                 continue;
             }
@@ -669,22 +666,21 @@ static int unescape_into(buf_t *dst, const char *s, size_t n) {
              * prefix of the match; the rest of the match stays literal */
             while (!v && m >= 2 && !(v = entity_value(s + i, m))) m--;
             if (v) {
-                if (!buf_push(dst, v, strlen(v))) return -1;
+                if (!buf_push(dst, v, strlen(v))) return 0;
                 i += m;
                 continue;
             }
         }
         /* no reference starts here: the '&' is literal */
-        if (!buf_pushc(dst, '&')) return -1;
+        if (!buf_pushc(dst, '&')) return 0;
     }
 }
 
 /* decode s[0:n] onto the end of w->ref; 0 when the walk must stop */
 static int w_unescape(walker_t *w, const char *s, size_t n) {
-    int r = unescape_into(&w->ref, s, n);
-    if (r < 0) w->oom = 1;
-    else if (r == 0) w->bail = 1;
-    return r > 0;
+    if (unescape_into(&w->ref, s, n)) return 1;
+    w->oom = 1;
+    return 0;
 }
 
 /* handle_text(html.unescape(raw)); a span without '&' is passed as is */

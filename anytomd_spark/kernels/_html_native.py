@@ -9,11 +9,10 @@ table never reuses a stale library.  :func:`convert_html_native` returns
 ``None`` whenever the native walker declines — build unavailable, an
 allocation failure, or the C side bailed on a construct outside its
 verified envelope (deep lists or stack, non-ASCII bytes in tag markup,
-marked sections; no character reference short of one ``int()`` refuses
-to parse).  The caller then runs the stdlib ``html.parser`` walk, so
-this module can only make conversion faster, never different:
-byte-parity on the accepted domain is locked by
-tests/test_html_native.py.
+marked sections; never a character reference).  The caller then runs
+the stdlib ``html.parser`` walk, so this module can only make
+conversion faster, never different: byte-parity on the accepted domain
+is locked by tests/test_html_native.py.
 """
 
 from __future__ import annotations
@@ -25,7 +24,6 @@ import html.entities
 import os
 import pkgutil
 import subprocess
-import sys
 import tempfile
 import threading
 
@@ -41,9 +39,7 @@ def _c_source() -> bytes:
     ``html.entities.html5`` (its ``;`` included, in byte order for binary
     search) and its UTF-8 value; ``CP_REMAP`` holds
     ``html._invalid_charrefs`` and ``CP_DROPPED`` the ranges of
-    ``html._invalid_codepoints`` it does not remap;
-    ``INT_MAX_STR_DIGITS`` is the longest decimal reference ``int()``
-    parses (0: no limit)."""
+    ``html._invalid_codepoints`` it does not remap."""
     entities = sorted(
         (name.encode("ascii"), value.encode("utf-8"))
         for name, value in html.entities.html5.items()
@@ -79,7 +75,6 @@ def _c_source() -> bytes:
         f"{rows([f'{{{cp:#x}, {to:#x}}}' for cp, to in remap], 4)}\n}};\n"
         "static const unsigned int CP_DROPPED[][2] = {\n"
         f"{rows([f'{{{lo:#x}, {hi:#x}}}' for lo, hi in ranges], 4)}\n}};\n"
-        f"#define INT_MAX_STR_DIGITS {sys.get_int_max_str_digits()}\n"
     )
     # through the package loader, so the source is found when the
     # package is imported from a zip (--py-files, the shipped zip)

@@ -16,8 +16,11 @@ declines, so it is written to be read, not to be fast.
 
 from __future__ import annotations
 
+import html
+import html.parser
 import re
-from html import unescape as _unescape
+import sys
+import types
 from html.parser import HTMLParser
 
 from anytomd_spark.kernels import markdown as md
@@ -54,6 +57,34 @@ _IMPLIED_END = {
 _SKIP_TAGS = frozenset(("script", "style", "head"))
 # first non-empty <title>, else first non-empty <h1> (html.rs:44-63)
 _CAPTURE_TAGS = ("title", "h1")
+
+_DECIMAL_REF = re.compile(r"&#([0-9]+)")
+
+
+def _unescape(s: str) -> str:
+    """``html.unescape(s)``, except where it raises: a decimal reference
+    with more digits than ``int()`` parses. Such a reference decodes as
+    html5ever reads it: leading zeros dropped, then U+FFFD when more than
+    ``sys.get_int_max_str_digits()`` digits are left, else the value."""
+    try:
+        return html.unescape(s)
+    except ValueError:
+        limit = sys.get_int_max_str_digits()
+
+        def shorten(m: re.Match) -> str:
+            digits = m[1].lstrip("0") or "0"
+            return "&#" + ("65533" if len(digits) > limit else digits)
+
+        return html.unescape(_DECIMAL_REF.sub(shorten, s))
+
+
+def _with_our_unescape(method):
+    """An ``html.parser.HTMLParser`` method whose calls to the module's
+    ``unescape`` reach :func:`_unescape` instead."""
+    return types.FunctionType(
+        method.__code__, {**vars(html.parser), "unescape": _unescape},
+        method.__name__, method.__defaults__, method.__closure__,
+    )
 
 
 class _StrBuf:
@@ -545,6 +576,10 @@ class _EdgeParser(HTMLParser):
     # unterminated titles).
     CDATA_CONTENT_ELEMENTS = ("script", "style", "title", "textarea")
 
+    # text runs and attribute values decode here, not in a handler
+    goahead = _with_our_unescape(HTMLParser.goahead)
+    parse_starttag = _with_our_unescape(HTMLParser.parse_starttag)
+
     def __init__(self, walker: _Walker) -> None:
         super().__init__(convert_charrefs=True)
         self.walker = walker
@@ -601,7 +636,7 @@ def convert_html(data: bytes, fast: bool = True) -> dict:
 
     Two tiers. The native C walker (kernels/_html_fast.c) takes documents
     of any size inside its verified envelope (plain tag markup, every
-    character reference decoded exactly like ``html.unescape``). It
+    character reference decoded exactly like :func:`_unescape`). It
     declines anything else — deep lists or stack, non-ASCII bytes in tag
     markup, marked sections — and so can only be faster, never
     different: byte parity is locked by tests/test_html_native.py over

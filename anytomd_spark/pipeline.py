@@ -287,17 +287,17 @@ def convert_transcripts(
 
 def ordered_output(
     converted: DataFrame,
-    turns: DataFrame | None = None,
+    turns: DataFrame,
     seq_bucket: int = 1 << 20,
 ) -> DataFrame:
     """Stable (conv_id, turn_idx) ordering (north rule: per-turn equality
     under stable turn ordering): assigns ``turn_seq`` = rank of turn_idx
     within its conversation.
 
-    Skew-safe two-level rank when ``turns`` is supplied: a plain
-    ``Window.partitionBy(conv_id)`` puts an ENTIRE conversation on one
-    task — a 10^8-turn mega-conversation at 100x scale lands on a single
-    executor core with its full payload width. Instead, turn_idx is
+    Skew-safe two-level rank: a plain ``Window.partitionBy(conv_id)``
+    puts an ENTIRE conversation on one task — a 10^8-turn
+    mega-conversation at 100x scale lands on a single executor core with
+    its full payload width. Instead, turn_idx is
     bucketed into ``seq_bucket``-wide ranges; per-(conv, bucket) counts
     aggregate on the SLIM pre-kernel ``turns`` side (conv_id, turn_idx
     only — never re-running the conversion kernel and never shuffling
@@ -307,9 +307,7 @@ def ordered_output(
     ``seq_bucket`` rows per task regardless of conversation size.
 
     ``turns`` must contain exactly the (conv_id, turn_idx) rows of
-    ``converted`` (i.e. the kernel's input). Without it the legacy
-    single-window path runs — fine when no conversation exceeds
-    ~``seq_bucket`` turns.
+    ``converted`` (i.e. the kernel's input).
 
     Before committing to the two-level plan, one aggregate over the SLIM
     ``turns`` side (rows per conv_id, then their max) finds the largest
@@ -329,8 +327,6 @@ def ordered_output(
     the ordering is also the partitioned write's clustering (see
     :func:`_single_window`); ``turn_seq`` is the same either way.
     """
-    if turns is None:
-        return _single_window(converted)
     biggest = (
         turns.groupBy("conv_id").count().agg(F.max("count")).collect()[0][0]
     )

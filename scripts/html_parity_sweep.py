@@ -43,6 +43,9 @@ _EDGE_CPS = (
     0xFDEF, 0xFDF0, 0xFFFD, 0xFFFE, 0xFFFF, 0x10000, 0x1FFFE, 0x10FFFD,
     0x10FFFE, 0x10FFFF, 0x110000, 1 << 32, 10 ** 40,
 )
+# one digit more than int() parses: html.unescape raises on such a
+# decimal reference, both walkers read it as html5ever does
+_PAST_LIMIT = sys.get_int_max_str_digits() + 1
 
 
 def _codepoint(rng: random.Random) -> int:
@@ -71,13 +74,17 @@ def _ref(rng: random.Random) -> str:
             ("{:x};", "{:X};", "{:06x};")).format(cp)
     if r < 0.96:
         return "&" + rng.choice((" ", "<", "&", "\t", "\n", "\x0c"))
-    # semicolon-less, unknown, partly known and over-long references
+    # semicolon-less, unknown, partly known and over-long references,
+    # and decimal ones past the digit limit, with and without leading
+    # zeros
     return rng.choice((
         "&" + rng.choice(_LEGACY), "&amp", "&ampx;", "&bogus;", "&;",
         "&#;", "&#x;", "&#65", "&#x41", "&#" + "9" * 40 + ";",
         "&" + "a" * 31 + ";", "&" + "a" * 32 + ";", "&" + "a" * 33 + ";",
         "&é;", "&a-b;", "&\r", "&#", "&" + rng.choice(_NAMED)[:-1],
         "&" + rng.choice(_NAMED)[:-1] + "x;",
+        "&#" + "1" * _PAST_LIMIT + ";", "&#" + "0" * _PAST_LIMIT + "65;",
+        "&#" + "0" * _PAST_LIMIT + "0;", "&#00" + "9" * _PAST_LIMIT,
     ))
 
 
@@ -100,7 +107,8 @@ def _attr_value(rng: random.Random) -> str:
 
 def entity_doc(seed: int) -> str:
     """An HTML document with character references in text, attribute
-    values, title/textarea content and script/style content."""
+    values, title/textarea content and script/style content, some of
+    them decimal references past ``int()``'s digit limit."""
     rng = random.Random(seed)
     parts = []
     if rng.random() < 0.5:

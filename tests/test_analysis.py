@@ -10,6 +10,7 @@ pyspark = pytest.importorskip("pyspark")
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from anytomd_spark.analysis import corpus as CORPUS  # noqa: E402
 from anytomd_spark.analysis import dedup as DD  # noqa: E402
 from anytomd_spark.analysis import similarity as SIM  # noqa: E402
 from anytomd_spark.analysis import text_quality as TQ  # noqa: E402
@@ -1067,146 +1068,53 @@ def _decon_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_decontaminate_bloom_matches_exact(spark):
-    """The Bloom path must be bit-identical to the exact path — the
-    string-level verify join removes every false positive, so method
-    choice is a physical-plan decision, not a semantic one."""
-    from anytomd_spark.analysis import corpus as CORPUS
-
+def test_decontaminate_mixed_corpus(spark):
+    """Every shape of _decon_corpus against two probes: a five-gram
+    overlap (1) and a verbatim probe (3) are flagged; clean docs, a
+    short doc (< n tokens), empty text, a four-gram-only overlap (6)
+    and the fillers are not."""
     probes = spark.createDataFrame(
         [("the secret benchmark question about unicorn arithmetic",),
          ("an entirely separate probe about sailing quantum turnips",)],
         "text string",
     )
-    docs = _decon_corpus(spark)
-    exact = sorted(
-        CORPUS.decontaminate(docs, probes, shingle_n=5,
-                             method="exact").collect())
-    bloom = sorted(
-        CORPUS.decontaminate(docs, probes, shingle_n=5,
-                             method="bloom").collect())
-    assert bloom == exact
-    got = {r.doc_id: r.contaminated for r in bloom}
-    assert got[1] and got[3]
-    assert not got[0] and not got[2] and not got[4] and not got[6]
+    out = CORPUS.decontaminate(_decon_corpus(spark), probes, shingle_n=5)
+    got = {r.doc_id: r.contaminated for r in out.collect()}
+    want = {i: i in (1, 3) for i in range(7)}
+    want.update({100 + i: False for i in range(60)})
+    assert got == want
 
 
-def test_decontaminate_bloom_false_positives_verified_away(spark):
-    """Clamp the filter to 2^10 bits so nearly every shingle collides:
-    the exact verify stage must still produce the exact answer."""
-    from anytomd_spark.analysis import corpus as CORPUS
-
-    probes = spark.createDataFrame(
-        [("the secret benchmark question about unicorn arithmetic",)],
-        "text string",
-    )
-    docs = _decon_corpus(spark)
-    exact = sorted(
-        CORPUS.decontaminate(docs, probes, shingle_n=5,
-                             method="exact").collect())
-    tiny = sorted(
-        CORPUS.decontaminate(docs, probes, shingle_n=5, method="bloom",
-                             bloom_max_bits=1 << 10).collect())
-    assert tiny == exact
+CORPUS_OPERATORS = {
+    "deterministic_split": lambda docs, probes: CORPUS.deterministic_split(docs),
+    "hash_sample": lambda docs, probes: CORPUS.hash_sample(docs, rate=0.5),
+    "pack_sequences": lambda docs, probes: CORPUS.pack_sequences(
+        docs, seq_len=8),
+    "temperature_mix": lambda docs, probes: CORPUS.temperature_mix(docs),
+    "token_shards": lambda docs, probes: CORPUS.token_shards(
+        docs, max_tokens_per_shard=16),
+    "decontaminate": lambda docs, probes: CORPUS.decontaminate(docs, probes),
+}
 
 
-def test_decontaminate_bloom_plan_shape(spark):
-    """The corpus side must reach the bitmap probe straight off the
-    scan — no shuffle, no join, and (the optimizer-fence regressions)
-    no pushed-down shingle recomputation below the UDF; the verify join
-    on the hit set must broadcast the probe shingles."""
+@pytest.mark.parametrize("name", sorted(CORPUS_OPERATORS))
+def test_corpus_operators_run_no_python(spark, name):
+    """corpus.py's operators are built-in-function plans: no Python UDF
+    or pandas map node anywhere in the physical plan."""
     import contextlib
     import io
 
-    from anytomd_spark.analysis import corpus as CORPUS
-
-    probes = spark.createDataFrame(
-        [("the secret benchmark question about unicorn arithmetic",)],
-        "text string",
-    )
-    out = CORPUS.decontaminate(_decon_corpus(spark), probes, shingle_n=5,
-                               method="bloom")
+    docs = _decon_corpus(spark).withColumn(
+        "source", F.when(F.col("doc_id") % 2 == 0, "a").otherwise("b"))
+    probes = spark.createDataFrame([("x y z w v u",)], "text string")
+    out = CORPUS_OPERATORS[name](docs, probes)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain()
     plan = buf.getvalue()
-    assert "ArrowEvalPython" in plan          # the bitmap probe UDF
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-    # below the UDF only trivial filters and the scan may appear:
-    # explode_outer keeps the optimizer from inferring a size(_sh)>0
-    # constraint and pushing the (expensive) shingle expression under
-    # the UDF, where it would re-evaluate over EVERY doc.
-    below_udf = plan.split("ArrowEvalPython", 1)[1].split("\n", 1)[1]
-    below_udf = below_udf.split("BroadcastExchange")[0]
-    for bad in ("array_distinct", "Generate", "Exchange"):
-        assert bad not in below_udf, (bad, below_udf)
-    # shingle expression EXECUTED at most 3x: UDF input, post-filter
-    # verify projection (hits only), probe side. The persisted probe
-    # table prints its cached plan twice (InMemoryRelation echoes its
-    # child), so the textual budget is 4; a 5th occurrence means a
-    # recompute regression below the UDF.
-    assert "InMemoryRelation" in plan  # probe side persisted
-    assert plan.count("array_distinct") <= 4, plan.count("array_distinct")
-
-
-def test_bloom_positions_pure_python_mirror():
-    """The single numpy position function is used by BOTH the bitmap
-    builder and the membership probe, so there is no cross-engine
-    parity to defend — but numpy's uint64 wrap semantics are: pin
-    _bloom_positions against an exact big-int mirror on adversarial
-    int64 inputs (MIN/MAX, negatives) plus a random sweep, and pin the
-    SplitMix64 finalizer to its published reference output."""
-    import numpy as np
-
-    from anytomd_spark.analysis.corpus import _bloom_positions, _splitmix64
-
-    MASK = (1 << 64) - 1
-
-    def mix_py(x: int) -> int:
-        x = (x + 0x9E3779B97F4A7C15) & MASK
-        x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & MASK
-        x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & MASK
-        return x ^ (x >> 31)
-
-    # SplitMix64 seeded with 1234567: first output of the reference
-    # generator (state += golden gamma, then finalize) equals mix(seed).
-    got0 = int(_splitmix64(np.array([1234567], dtype=np.uint64))[0])
-    assert got0 == mix_py(1234567)
-
-    m, k = (1 << 20) - 7, 5  # deliberately not a power of two
-    lo, hi = -(1 << 63), (1 << 63) - 1
-    rng = np.random.default_rng(42)
-    h1s = np.concatenate([
-        np.array([lo, hi, -1, 0, 1, lo + 1, hi - 1], dtype=np.int64),
-        rng.integers(lo, hi, 64, dtype=np.int64),
-    ])
-    got = _bloom_positions(h1s, k, m)
-    for row, h in zip(got, h1s):
-        u = int(h) & MASK  # two's-complement reinterpret
-        r1, r2 = u % m, mix_py(u) % m
-        want = [(r1 + i * r2) % m for i in range(k)]
-        assert list(row) == want
-    assert (got >= 0).all() and (got < m).all()
-
-
-def test_bloom_parameters():
-    from anytomd_spark.analysis.corpus import bloom_parameters
-
-    m, k = bloom_parameters(100_000, fpp=0.01)
-    assert 1 << 10 <= m <= 1 << 27 and 1 <= k <= 16
-    assert m >= 9 * 100_000  # ~9.6 bits/element at 1% fpp
-    m_cap, k_cap = bloom_parameters(10**12, fpp=0.01, max_bits=1 << 27)
-    assert m_cap == 1 << 27  # constant-size broadcast no matter the probes
-    m0, k0 = bloom_parameters(0)
-    assert m0 >= 1 << 10 and 1 <= k0 <= 16
-
-
-def test_decontaminate_bad_method(spark):
-    from anytomd_spark.analysis import corpus as CORPUS
-
-    probes = spark.createDataFrame([("x y z w v",)], "text string")
-    with pytest.raises(ValueError):
-        CORPUS.decontaminate(_decon_corpus(spark), probes, method="nope")
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                 "FlatMapGroupsInPandas"):
+        assert node not in plan, (node, plan)
 
 
 def test_redact_pii(spark):

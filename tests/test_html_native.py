@@ -107,15 +107,26 @@ class TestNativeDifferential:
                 assert _assert_native_matches(text), text
 
     def test_charrefs_outside_the_accepted_forms_decline(self):
-        """The one reference the walker does not decode is a decimal one
-        longer than int() parses: it declines, and both tiers raise as
-        html.unescape does."""
-        text = "<p>&#" + "1" * (sys.get_int_max_str_digits() + 1) + ";</p>"
-        assert convert_html_native(text) is None
-        with pytest.raises(ValueError):
-            convert_html(text.encode("utf-8"), fast=False)
-        with pytest.raises(ValueError):
-            convert_html(text.encode("utf-8"))
+        """No reference is outside the walker's forms, not even a decimal
+        one longer than int() parses, on which html.unescape raises:
+        both tiers read it as html5ever does, leading zeros dropped and
+        U+FFFD past the digit limit, in text, attribute values and
+        title/textarea content."""
+        long_ref = "&#" + "1" * (sys.get_int_max_str_digits() + 1) + ";"
+        zeros_ref = "&#" + "0" * (sys.get_int_max_str_digits() + 1) + "65;"
+        for text, markdown, title in (
+            (f"<p>a{long_ref}b</p>", "a\ufffdb\n", None),
+            (f"<a href='{long_ref}'>l</a>", "[l](\ufffd)\n", None),
+            (f"<title>t{long_ref}</title>", "t\ufffd\n", "t\ufffd"),
+            (f"<p>a{zeros_ref}b</p>", "aAb\n", None),
+            (f"<a href={zeros_ref}>l</a>", "[l](A)\n", None),
+            (f"<textarea>a{zeros_ref}b</textarea>", "aAb\n", None),
+        ):
+            data = text.encode("utf-8")
+            got = convert_html(data, fast=False)
+            assert (got["markdown"], got["title"]) == (markdown, title), text
+            assert convert_html_native(text) == got, text
+            assert convert_html(data) == got, text
 
     def test_marked_sections_outside_the_known_keywords_decline(self):
         """A marked section whose keyword html.parser does not know, or

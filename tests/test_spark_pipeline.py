@@ -105,7 +105,10 @@ def test_fixture_conversation_golden_equality(spark):
     window-based sort, not arrival order)."""
     shuffled = fixture_transcripts().sample(frac=1.0, random_state=7)
     df = spark.createDataFrame(shuffled)
-    converted = ordered_output(convert_transcripts(df, partitions=4))
+    converted = ordered_output(
+        convert_transcripts(df, partitions=4),
+        turns=df.select("conv_id", "turn_idx"),
+    )
     rows = converted.orderBy("conv_id", "turn_idx").collect()
     assert len(rows) == len(GOLDEN_NAMES)
     for row, name in zip(rows, GOLDEN_NAMES):
@@ -759,9 +762,10 @@ def test_ordered_output_sparse_turn_idx_matches_legacy(spark):
     pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx"])
     df = spark.createDataFrame(pdf).withColumn("payload", F.lit("p"))
     turns = df.select("conv_id", "turn_idx")
+    # at the default seq_bucket the probe picks the single window
     legacy = {
         (r.conv_id, r.turn_idx): r.turn_seq
-        for r in ordered_output(df).collect()
+        for r in ordered_output(df, turns=turns).collect()
     }
     # seq_bucket=2: conversation "a" has 4 rows, so the probe picks the
     # two-level plan
