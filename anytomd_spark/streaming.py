@@ -21,12 +21,10 @@ from anytomd_spark.pipeline import convert_transcripts
 from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
 
 
-def read_transcripts_stream(
-    spark: SparkSession, input_path: str, max_files_per_trigger: int = 8
-) -> DataFrame:
+def read_transcripts_stream(spark: SparkSession, input_path: str) -> DataFrame:
     return (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 8)
         .parquet(input_path)
     )
 
@@ -117,13 +115,12 @@ def stateful_turn_dedup(
     )
 
 
-def metrics_stream(converted: DataFrame, watermark: str = "10 minutes",
-                   window: str = "5 minutes") -> DataFrame:
-    """Watermarked per-window extraction metrics (late turns tolerated up
-    to the watermark; state is bounded)."""
+def metrics_stream(converted: DataFrame) -> DataFrame:
+    """Watermarked 5-minute-window extraction metrics (late turns tolerated
+    up to the 10-minute watermark; state is bounded)."""
     return (
-        converted.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "fmt")
+        converted.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "5 minutes").alias("w"), "fmt")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
             F.sum("bytes_in").alias("bytes_in"),

@@ -429,35 +429,3 @@ def generate_transcripts(spark, n_convs: int, seed: int = 42,
         spark.range(0, total_turns, 1, partitions)
         .mapInPandas(gen, schema=TRANSCRIPTS_SCHEMA)
     )
-
-
-def fixture_transcripts() -> pd.DataFrame:
-    """One conversation whose turns are exactly the reference fixtures
-    (used by the golden end-to-end Spark test)."""
-    import os
-
-    fixtures = "/root/reference/tests/fixtures"
-    names = [
-        "sample.html", "sample.csv", "sample.json", "sample.xml",
-        "sample.txt", "sample.py", "sample.ipynb", "sample.docx",
-        "sample.pptx", "sample.xlsx", "sample.xls", "sample_unicode.xls",
-    ]
-    binary = {"sample.docx", "sample.pptx", "sample.xlsx", "sample.xls",
-              "sample_unicode.xls"}
-    rows = []
-    for i, name in enumerate(names):
-        with open(os.path.join(fixtures, name), "rb") as f:
-            data = f.read()
-        if name in binary:
-            text = base64.b64encode(data).decode("ascii")
-            tool = ""
-        else:
-            text = data.decode("utf-8")
-            tool = name.rsplit(".", 1)[-1]
-        rows.append((
-            "conv-fixtures", i, ("user", "assistant")[i % 2], text, tool,
-            _BASE_TS + _dt.timedelta(seconds=i),
-        ))
-    return pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    )

@@ -6,6 +6,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 FIXTURES = "/root/reference/tests/fixtures"
+# the reference fixtures, in the turn order of fixture_transcripts()
+FIXTURE_NAMES = [
+    "sample.html", "sample.csv", "sample.json", "sample.xml",
+    "sample.txt", "sample.py", "sample.ipynb", "sample.docx",
+    "sample.pptx", "sample.xlsx", "sample.xls", "sample_unicode.xls",
+]
 
 
 def normalize(s: str) -> str:
@@ -21,3 +27,34 @@ def normalize(s: str) -> str:
         result.append(line)
         prev_blank = is_blank
     return "\n".join(result).rstrip()
+
+
+def fixture_transcripts():
+    """One conversation whose turns are exactly the reference fixtures
+    (used by the golden end-to-end Spark tests)."""
+    import base64
+    import datetime
+
+    import pandas as pd
+
+    from anytomd_spark.transcripts import _BASE_TS
+
+    binary = {"sample.docx", "sample.pptx", "sample.xlsx", "sample.xls",
+              "sample_unicode.xls"}
+    rows = []
+    for i, name in enumerate(FIXTURE_NAMES):
+        with open(os.path.join(FIXTURES, name), "rb") as f:
+            data = f.read()
+        if name in binary:
+            text = base64.b64encode(data).decode("ascii")
+            tool = ""
+        else:
+            text = data.decode("utf-8")
+            tool = name.rsplit(".", 1)[-1]
+        rows.append((
+            "conv-fixtures", i, ("user", "assistant")[i % 2], text, tool,
+            _BASE_TS + datetime.timedelta(seconds=i),
+        ))
+    return pd.DataFrame(
+        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    )

@@ -4,7 +4,10 @@ Each file is loaded as a module (``importlib.util.spec_from_file_location``)
 without running its ``main``, so a module-level import of a name the
 package no longer has fails here instead of on the next manual run.
 Imports made inside ``main()`` (or any other function) are not covered.
-The scripts' shared BENCH/BASELINE.md section writer is tested on strings.
+``scripts/run_scaling.py`` is a module, not a script: it is checked for
+the ``host_control`` that ``bench.py`` and ``perfbench/run.py`` import.
+The scripts' shared BENCH/BASELINE.md section writer is tested on strings,
+and ``bench_extra.py``'s leg names are validated without a JVM.
 """
 
 from __future__ import annotations
@@ -26,7 +29,9 @@ SCRIPTS = sorted(glob(os.path.join(REPO, "scripts", "*.py"))) + [
     "path", SCRIPTS, ids=[os.path.relpath(p, REPO) for p in SCRIPTS]
 )
 def test_script_imports(path, monkeypatch):
-    assert callable(_load(path, monkeypatch).main)
+    entry = {"run_scaling.py": "host_control"}.get(
+        os.path.basename(path), "main")
+    assert callable(getattr(_load(path, monkeypatch), entry))
 
 
 def _load(path, monkeypatch):
@@ -61,3 +66,32 @@ def test_baseline_section_rewrite_keeps_notes_below_the_table(monkeypatch):
     # no such section yet: appended
     assert replace("# Baseline\n", "## Peak memory", section) == (
         "# Baseline\n" + section)
+
+
+class _SessionStarted(Exception):
+    pass
+
+
+def test_bench_extra_validates_legs_before_the_session(monkeypatch):
+    """An unknown leg exits 2 before any JVM starts; the two convert legs
+    and every queries() name pass validation and reach the session."""
+    import __spark_entry__ as entrymod
+    from anytomd_spark import pipeline
+
+    def no_session(**_kw):
+        raise _SessionStarted
+
+    monkeypatch.setattr(pipeline, "build_session", no_session)
+    main = _load(os.path.join(REPO, "bench_extra.py"), monkeypatch).main
+
+    monkeypatch.setattr(sys, "argv", ["bench_extra.py", "dedup_exact",
+                                      "no_such_leg"])
+    with pytest.raises(SystemExit) as exc:
+        main()
+    assert exc.value.code == 2
+
+    legs = ["convert_pipeline", "convert_pipeline_salted",
+            *entrymod.queries()]
+    monkeypatch.setattr(sys, "argv", ["bench_extra.py", *legs])
+    with pytest.raises(_SessionStarted):
+        main()

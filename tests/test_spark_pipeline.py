@@ -9,7 +9,12 @@ import os
 
 import pytest
 
-from tests.conftest import FIXTURES, normalize
+from tests.conftest import (
+    FIXTURE_NAMES,
+    FIXTURES,
+    fixture_transcripts,
+    normalize,
+)
 
 pyspark = pytest.importorskip("pyspark")
 
@@ -25,7 +30,6 @@ from anytomd_spark.pipeline import (  # noqa: E402
 )
 from anytomd_spark.transcripts import (  # noqa: E402
     TRANSCRIPTS_SCHEMA,
-    fixture_transcripts,
     generate_transcripts,
 )
 
@@ -45,13 +49,6 @@ def _plan(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain(True)
     return buf.getvalue()
-
-
-GOLDEN_NAMES = [
-    "sample.html", "sample.csv", "sample.json", "sample.xml",
-    "sample.txt", "sample.py", "sample.ipynb", "sample.docx",
-    "sample.pptx", "sample.xlsx", "sample.xls", "sample_unicode.xls",
-]
 
 
 def test_driver_memory_follows_available_memory(tmp_path, monkeypatch):
@@ -110,8 +107,8 @@ def test_fixture_conversation_golden_equality(spark):
         turns=df.select("conv_id", "turn_idx"),
     )
     rows = converted.orderBy("conv_id", "turn_idx").collect()
-    assert len(rows) == len(GOLDEN_NAMES)
-    for row, name in zip(rows, GOLDEN_NAMES):
+    assert len(rows) == len(FIXTURE_NAMES)
+    for row, name in zip(rows, FIXTURE_NAMES):
         with open(os.path.join(FIXTURES, "expected", f"{name}.md")) as f:
             expected = f.read()
         assert row.error is None, f"{name}: {row.error}"
@@ -675,16 +672,20 @@ def test_run_pipeline_bucket_aligned_plan_matches_old_composition(
 def test_verify_against_expected(spark):
     from anytomd_spark.pipeline import verify_against_expected
 
-    df = spark.createDataFrame(fixture_transcripts())
+    df = generate_transcripts(spark, n_convs=8, seed=17, mega_every=0,
+                              partitions=2)
     converted = convert_transcripts(df)
     expected = converted.select("conv_id", "turn_idx", "markdown")
     assert verify_against_expected(converted, expected)["ok"]
 
+    first = df.select("conv_id", "turn_idx").first()
     tampered = expected.withColumn(
         "markdown",
-        F.when(F.col("turn_idx") == 0, F.lit("WRONG")).otherwise(
-            F.col("markdown")
-        ),
+        F.when(
+            (F.col("conv_id") == first.conv_id)
+            & (F.col("turn_idx") == first.turn_idx),
+            F.lit("WRONG"),
+        ).otherwise(F.col("markdown")),
     )
     report = verify_against_expected(converted, tampered)
     assert report["mismatched"] == 1 and not report["ok"]
@@ -780,11 +781,9 @@ def test_catalog_table_source(spark, tmp_path):
     catalog (saveAsTable -> spark.read.table) convert identically to the
     parquet-path source — the sandbox stand-in for an Iceberg catalog
     table (SURVEY §7.6: Iceberg resolves through spark.read.table)."""
-    from anytomd_spark.pipeline import run_pipeline
-    from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA, fixture_transcripts
-
-    pdf = fixture_transcripts()
-    df = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
+    df = generate_transcripts(spark, n_convs=12, seed=19, mega_every=0,
+                              partitions=2)
+    n_turns = df.count()
     # managed table in the session warehouse; dropped (with data) below
     df.write.mode("overwrite").saveAsTable("transcripts_tbl")
     try:
@@ -795,7 +794,7 @@ def test_catalog_table_source(spark, tmp_path):
             lineage_path=str(tmp_path / "lineage"),
             n_buckets=4,
         )
-        assert result["rows"] == len(pdf)
+        assert result["rows"] == n_turns
         assert result["failures"] == 0
         got = spark.read.parquet(str(tmp_path / "out"))
         assert got.filter("markdown is null").count() == 0

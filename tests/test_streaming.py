@@ -1,5 +1,6 @@
-"""Structured Streaming conversion: availableNow catch-up run over the
-fixture conversation, checkpointed parquet sink, incremental resume."""
+"""Structured Streaming conversion: availableNow catch-up runs over
+generated transcripts, checkpointed parquet sink, incremental resume, and
+golden equality of the reference fixture conversation."""
 
 from __future__ import annotations
 
@@ -11,8 +12,7 @@ pyspark = pytest.importorskip("pyspark")
 
 from anytomd_spark.pipeline import build_session  # noqa: E402
 from anytomd_spark.streaming import start_conversion_stream  # noqa: E402
-from anytomd_spark.transcripts import fixture_transcripts  # noqa: E402
-from tests.conftest import FIXTURES, normalize  # noqa: E402
+from tests.conftest import FIXTURES, fixture_transcripts, normalize  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -27,28 +27,49 @@ def test_streaming_conversion_and_resume(spark, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
-    from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
+    from anytomd_spark.transcripts import (
+        TRANSCRIPTS_SCHEMA,
+        generate_transcripts,
+    )
 
-    pdf = fixture_transcripts()
-    first = spark.createDataFrame(pdf.iloc[:6], schema=TRANSCRIPTS_SCHEMA)
+    pdf = generate_transcripts(
+        spark, n_convs=6, seed=23, mega_every=0, partitions=1
+    ).toPandas()
+    half = len(pdf) // 2
+    first = spark.createDataFrame(pdf.iloc[:half], schema=TRANSCRIPTS_SCHEMA)
     first.write.mode("append").parquet(inp)
 
     q = start_conversion_stream(spark, inp, out, ckpt, trigger_once=True)
     q.awaitTermination(120)
     got = spark.read.parquet(out)
-    assert got.count() == 6
+    assert got.count() == half
     assert got.filter("error is not null").count() == 0
 
     # append more turns -> a second availableNow pass picks up ONLY them
-    second = spark.createDataFrame(pdf.iloc[6:], schema=TRANSCRIPTS_SCHEMA)
+    second = spark.createDataFrame(pdf.iloc[half:], schema=TRANSCRIPTS_SCHEMA)
     second.write.mode("append").parquet(inp)
     q2 = start_conversion_stream(spark, inp, out, ckpt, trigger_once=True)
     q2.awaitTermination(120)
     got2 = spark.read.parquet(out)
     assert got2.count() == len(pdf)
+    keys = {(r.conv_id, r.turn_idx) for r in got2.collect()}
+    assert keys == set(zip(pdf["conv_id"], pdf["turn_idx"]))
 
-    # golden equality survives the streaming path
-    row = got2.filter("turn_idx = 0").collect()[0]
+
+def test_streaming_golden_equality(spark, tmp_path):
+    """Golden equality survives the streaming path."""
+    from anytomd_spark.transcripts import TRANSCRIPTS_SCHEMA
+
+    inp = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    spark.createDataFrame(
+        fixture_transcripts(), schema=TRANSCRIPTS_SCHEMA
+    ).write.parquet(inp)
+    q = start_conversion_stream(
+        spark, inp, out, str(tmp_path / "ckpt"), trigger_once=True
+    )
+    q.awaitTermination(120)
+    row = spark.read.parquet(out).filter("turn_idx = 0").collect()[0]
     with open(os.path.join(FIXTURES, "expected", "sample.html.md")) as f:
         assert normalize(row.markdown) == normalize(f.read())
 
