@@ -5,7 +5,7 @@
         --input  /data/transcripts \\
         --output /data/converted \\
         --lineage /data/converted_lineage \\
-        [--strict] [--salted] [--buckets 4096] [--max-input-bytes 8GiB]
+        [--strict] [--salted] [--buckets N] [--max-input-bytes 8GiB]
 
 (spark-submit has no ``-m`` module mode; scripts/submit_job.py is the
 thin submit target that imports this module from the --py-files zip.
@@ -22,6 +22,16 @@ Reads the transcripts table (parquet; an Iceberg table resolves through
 ``spark.read.table`` when a catalog is configured — pass --table instead
 of --input), converts every turn, writes bucket-partitioned output with
 a lineage sidecar, and resumes from completed buckets on re-run.
+
+Bucket count: the lineage records the count each bucket was written
+with, and a resume adopts it (a ``--buckets`` that differs raises before
+anything is written). A first run with no ``--buckets`` takes one bucket
+per ``pipeline.BUCKET_INPUT_BYTES`` (4 MiB) of input, 1 to 4,096, or 64
+when the input's size is unknown. Each bucket is one output file and
+costs about 10 ms of CPU a pass whatever its size; post-kernel
+parallelism is ``min(n_buckets, spark.sql.shuffle.partitions)``. The
+printed JSON line reports ``n_buckets`` and ``n_buckets_from``
+(``explicit``, ``lineage`` or ``input_bytes``).
 """
 
 from __future__ import annotations
@@ -42,8 +52,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--output", required=True)
     ap.add_argument("--lineage", required=True)
     ap.add_argument("--master", default=None)
-    ap.add_argument("--buckets", type=int, default=4096,
-                    help="output/lineage bucket count (resume granularity)")
+    ap.add_argument("--buckets", type=int, default=None,
+                    help="output/lineage bucket count (resume granularity); "
+                         "default: the count the lineage records, else one "
+                         "bucket per 4 MiB of input, 1 to 4096")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--salted", action="store_true",
                     help="salted repartition before the kernel (use when "

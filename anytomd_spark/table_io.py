@@ -8,7 +8,8 @@ parquet shim with IDENTICAL semantics at the API surface:
     (Iceberg ``overwritePartitions()`` <-> parquet dynamic partition
     overwrite)
   * lineage: append-only sidecar (Iceberg ``append()`` <-> parquet
-    append mode)
+    append mode), read with ``pipeline.LINEAGE_SCHEMA``'s columns; the
+    resume probe (``done_buckets``) is one Spark job
   * reads: ``spark.read.table`` for Iceberg identifiers, with optional
     snapshot pinning; ``spark.read.parquet`` for the shim. The lineage
     re-read (``read_buckets``) reads only the buckets a run wrote: a
@@ -162,6 +163,34 @@ def lineage_exists(spark: SparkSession, target: str, storage: str) -> bool:
 
 
 def read_lineage(spark: SparkSession, target: str, storage: str) -> DataFrame:
+    """The lineage sidecar with ``pipeline.LINEAGE_SCHEMA``'s columns.
+
+    Parquet reads with that schema rather than inferring one from a
+    footer (no inference job), so files written before a column existed
+    read it as null. An Iceberg table written before ``n_buckets``
+    existed reads it as null too.
+    """
+    from anytomd_spark.pipeline import LINEAGE_SCHEMA
+
     if storage == "iceberg":
-        return spark.read.table(target)
-    return spark.read.parquet(target)
+        df = spark.read.table(target)
+        if "n_buckets" not in df.columns:
+            df = df.withColumn("n_buckets", F.lit(None).cast("int"))
+        return df
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(target)
+
+
+def done_buckets(
+    spark: SparkSession, target: str, storage: str
+) -> set[tuple[int, int | None]]:
+    """The distinct ``(bucket, n_buckets)`` pairs of the sidecar's done
+    rows: the resume probe, one Spark job. The sidecar holds at most one
+    row per bucket per run, so the driver deduplicates; a ``distinct()``
+    would add a shuffle stage that adaptive execution runs as a job of
+    its own."""
+    return {
+        (r.bucket, r.n_buckets)
+        for r in read_lineage(spark, target, storage)
+        .filter(F.col("status") == "done")
+        .select("bucket", "n_buckets").collect()
+    }

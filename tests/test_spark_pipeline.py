@@ -348,9 +348,9 @@ def _lineage_inputs(monkeypatch) -> list:
     seen: list = []
     real = pipeline.compute_lineage
 
-    def spy(df, run_id):
+    def spy(df, *args):
         seen.append(df)
-        return real(df, run_id)
+        return real(df, *args)
 
     monkeypatch.setattr(pipeline, "compute_lineage", spy)
     return seen
@@ -812,7 +812,8 @@ def test_run_pipeline_empty_input(spark, tmp_path):
     res = run_pipeline(spark, empty, str(tmp_path / "out"),
                        str(tmp_path / "lin"), n_buckets=4)
     assert res == {"run_id": res["run_id"], "rows": 0, "failures": 0,
-                   "buckets": 0, "storage": "parquet"}
+                   "buckets": 0, "storage": "parquet", "n_buckets": 4,
+                   "n_buckets_from": "explicit"}
     assert not (tmp_path / "lin").exists()
 
 
@@ -904,7 +905,7 @@ def test_job_spark_submit_py_files(spark, tmp_path):
         "--py-files", zpath,
         os.path.join(repo, "scripts", "submit_job.py"),
         "--input", inp, "--output", out_dir, "--lineage", lin_dir,
-        "--buckets", "8", "--run-id", "submit-e2e",
+        "--run-id", "submit-e2e",
     ]
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYSPARK_PYTHON"] = sys.executable
@@ -921,9 +922,14 @@ def test_job_spark_submit_py_files(spark, tmp_path):
         import json as _json
         return _json.loads(summaries[-1])
 
+    from anytomd_spark.pipeline import input_bucket_count
+
     n_in = spark.read.parquet(inp).count()
     first = run_and_parse("first submit")
     assert first["rows"] == n_in and first["failures"] == 0
+    # no --buckets: the size rule picks the count
+    assert first["n_buckets_from"] == "input_bytes"
+    assert first["n_buckets"] == input_bucket_count(spark.read.parquet(inp))
 
     out = spark.read.parquet(out_dir)
     assert out.count() == n_in
@@ -931,6 +937,254 @@ def test_job_spark_submit_py_files(spark, tmp_path):
     lineage = spark.read.parquet(lin_dir)
     assert lineage.agg(F.sum("n_rows")).collect()[0][0] == n_in
 
-    # resume: every bucket already committed -> zero work, zero rewrites
+    # resume, again with no --buckets: the recorded count is adopted and
+    # every bucket is already committed -> zero work, zero rewrites
     second = run_and_parse("resume submit")
     assert second["rows"] == 0 and second["buckets"] == 0
+    assert (second["n_buckets"], second["n_buckets_from"]) == (
+        first["n_buckets"], "lineage")
+
+
+# bucket count: the size rule and the recorded count
+# --------------------------------------------------------------------------
+
+_ROW_KEY = ("conv_id", "turn_idx", "turn_seq", "markdown", "fmt", "error")
+
+
+def _out_rows(spark, out) -> list[tuple]:
+    return sorted(
+        (tuple(r) for r in spark.read.parquet(out).select(*_ROW_KEY).collect()),
+        key=lambda t: tuple("" if v is None else v for v in t),
+    )
+
+
+def _assert_each_key_once(spark, src, out, lin):
+    got = spark.read.parquet(out).select("conv_id", "turn_idx").collect()
+    want = src.select("conv_id", "turn_idx").collect()
+    assert len(got) == len(set(got)) == len(want)
+    assert set(got) == set(want)
+    lineage = spark.read.parquet(lin)
+    assert lineage.agg(F.sum("n_rows")).collect()[0][0] == len(want)
+
+
+def _file_bytes(*roots) -> dict:
+    from pathlib import Path
+
+    return {p: p.read_bytes() for root in roots
+            for p in Path(root).rglob("*") if p.is_file()}
+
+
+@pytest.fixture(scope="module")
+def bucket_src(spark, tmp_path_factory):
+    """A parquet transcripts input of 40 conversations, and the half of
+    them that falls in buckets 0-3 of 8."""
+    inp = str(tmp_path_factory.mktemp("bucket_src") / "in")
+    generate_transcripts(
+        spark, n_convs=40, seed=31, mega_every=0, partitions=2
+    ).write.parquet(inp)
+    src = spark.read.parquet(inp)
+    half = bucketed(src, 8).filter(F.col("bucket") < 4).drop("bucket")
+    assert 0 < half.count() < src.count()
+    return src, half
+
+
+def test_resolve_bucket_count_cases():
+    """The resume contract: a recorded count is adopted, or checked
+    against the caller's; pre-column rows need the caller's count; two
+    recorded counts never resume. Null rows beside one recorded count
+    come from a resume that named that count, so the count holds."""
+    from anytomd_spark.pipeline import resolve_bucket_count
+
+    assert resolve_bucket_count(None, {8}, None) == (8, "lineage")
+    assert resolve_bucket_count(8, {8}, None) == (8, "explicit")
+    assert resolve_bucket_count(None, {None, 8}, None) == (8, "lineage")
+    assert resolve_bucket_count(8, {None}, None) == (8, "explicit")
+    assert resolve_bucket_count(16, set(), None) == (16, "explicit")
+    with pytest.raises(ValueError, match="n_buckets=16 .* n_buckets=8"):
+        resolve_bucket_count(16, {8}, None)
+    with pytest.raises(ValueError, match="pass the n_buckets"):
+        resolve_bucket_count(None, {None}, None)
+    for requested in (None, 8):
+        with pytest.raises(ValueError, match=r"\[8, 16\]"):
+            resolve_bucket_count(requested, {8, 16, None}, None)
+    with pytest.raises(ValueError, match="at least 1"):
+        resolve_bucket_count(0, set(), None)
+
+
+def test_input_bucket_count_follows_file_bytes(spark, tmp_path, monkeypatch):
+    """On a parquet input the count is ceil(file bytes /
+    BUCKET_INPUT_BYTES), capped at MAX_BUCKETS, read from the plan with
+    no Spark job. An input whose plan does not read files (pandas, a
+    Python list, a range) gets UNSIZED_BUCKETS."""
+    import pandas as pd
+
+    from anytomd_spark import pipeline
+
+    inp = tmp_path / "in"
+    generate_transcripts(
+        spark, n_convs=20, seed=7, mega_every=0, partitions=3
+    ).write.parquet(str(inp))
+    size = sum(p.stat().st_size for p in inp.glob("*.parquet"))
+    src = spark.read.parquet(str(inp))
+
+    assert pipeline.input_bucket_count(src) == 1
+    for per_bucket in (size // 3 + 1, size // 7, 1):
+        monkeypatch.setattr(pipeline, "BUCKET_INPUT_BYTES", per_bucket)
+        got, jobs = _jobs_of(spark, f"size{per_bucket}",
+                             lambda: pipeline.input_bucket_count(src))
+        assert jobs == []
+        assert got == min(pipeline.MAX_BUCKETS, -(-size // per_bucket))
+    assert got == pipeline.MAX_BUCKETS == 4096
+
+    pdf = src.toPandas()
+    for unsized in (
+        spark.createDataFrame(pdf),
+        spark.createDataFrame(pd.DataFrame({"conv_id": ["a"]})),
+        spark.createDataFrame([("a", 0)], "conv_id string, turn_idx int"),
+        generate_transcripts(spark, n_convs=2, seed=7, mega_every=0),
+        src.unionByName(spark.createDataFrame(pdf, src.schema)),
+    ):
+        assert pipeline.input_bucket_count(unsized) == 64
+
+
+def test_rule_count_output_equals_64_buckets(spark, tmp_path, monkeypatch):
+    """A first run with no count takes the size rule's count, records it
+    in every lineage row and reports where it came from; its output rows
+    equal a 64-bucket run's."""
+    from anytomd_spark import pipeline
+
+    inp = tmp_path / "in"
+    generate_transcripts(
+        spark, n_convs=40, seed=37, mega_every=20, mega_size=150,
+        partitions=2,
+    ).write.parquet(str(inp))
+    size = sum(p.stat().st_size for p in inp.glob("*.parquet"))
+    monkeypatch.setattr(pipeline, "BUCKET_INPUT_BYTES", size // 3 + 1)
+    src = spark.read.parquet(str(inp))
+
+    fixed = run_pipeline(spark, src, str(tmp_path / "o64"),
+                         str(tmp_path / "l64"), n_buckets=64)
+    ruled = run_pipeline(spark, src, str(tmp_path / "o"), str(tmp_path / "l"))
+    assert (fixed["n_buckets"], fixed["n_buckets_from"]) == (64, "explicit")
+    assert (ruled["n_buckets"], ruled["n_buckets_from"]) == (3, "input_bytes")
+    assert ruled["rows"] == fixed["rows"] == src.count()
+    assert ruled["buckets"] == 3
+    assert _out_rows(spark, str(tmp_path / "o")) == _out_rows(
+        spark, str(tmp_path / "o64"))
+    for lin, n in (("l", 3), ("l64", 64)):
+        assert {r.n_buckets for r in spark.read.parquet(
+            str(tmp_path / lin)).collect()} == {n}
+
+
+def test_resume_probe_is_one_job(spark, tmp_path):
+    """The resume probe reads the sidecar with LINEAGE_SCHEMA: over a
+    64-bucket sidecar it runs exactly one Spark job, where a read that
+    infers the schema from footers runs a job of its own first."""
+    from anytomd_spark import table_io
+
+    lin = str(tmp_path / "lin")
+    df = generate_transcripts(spark, n_convs=400, seed=41, mega_every=0,
+                              partitions=2)
+    res = run_pipeline(spark, df, str(tmp_path / "out"), lin, n_buckets=64)
+    assert res["buckets"] == 64
+
+    done, jobs = _jobs_of(spark, "probe", lambda: table_io.done_buckets(
+        spark, lin, "parquet"))
+    assert len(jobs) == 1, jobs
+    assert done == {(b, 64) for b in range(64)}
+    _, infer = _jobs_of(spark, "infer", lambda: spark.read.parquet(lin))
+    assert len(infer) == 1, infer
+
+
+def test_resume_with_another_count_raises_and_adopts(spark, tmp_path,
+                                                     bucket_src):
+    """Half the conversations at n_buckets=8, then a resume over all of
+    them at 16: it raises, naming both counts, and leaves every output
+    and lineage file byte-unchanged (before, it wrote 294 duplicate rows
+    in this shape). A resume with no count adopts 8, and each input key
+    is in the output exactly once."""
+    src, half = bucket_src
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    first = run_pipeline(spark, half, out, lin, run_id="half", n_buckets=8)
+    assert first["rows"] == half.count()
+    before = _file_bytes(out, lin)
+
+    with pytest.raises(ValueError, match="n_buckets=16 .* n_buckets=8"):
+        run_pipeline(spark, src, out, lin, run_id="sixteen", n_buckets=16)
+    assert _file_bytes(out, lin) == before
+
+    rest = run_pipeline(spark, src, out, lin, run_id="rest")
+    assert (rest["n_buckets"], rest["n_buckets_from"]) == (8, "lineage")
+    assert rest["rows"] == src.count() - half.count()
+    _assert_each_key_once(spark, src, out, lin)
+
+
+def test_resume_over_a_sidecar_from_before_the_count(spark, tmp_path,
+                                                     bucket_src):
+    """A sidecar written before the n_buckets column existed reads the
+    column as null: a resume with no count raises before writing, one
+    with the count that wrote it proceeds and records it, and a later
+    resume with no count adopts it."""
+    src, half = bucket_src
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    new = str(tmp_path / "lin_new")
+    run_pipeline(spark, half, out, new, run_id="half", n_buckets=8)
+    spark.read.parquet(new).drop("n_buckets").write.parquet(lin)
+    assert "n_buckets" not in spark.read.parquet(lin).columns
+    before = _file_bytes(out, lin)
+
+    with pytest.raises(ValueError, match="pass the n_buckets"):
+        run_pipeline(spark, src, out, lin)
+    assert _file_bytes(out, lin) == before
+
+    rest = run_pipeline(spark, src, out, lin, run_id="rest", n_buckets=8)
+    assert rest["rows"] == src.count() - half.count()
+    _assert_each_key_once(spark, src, out, lin)
+    recorded = spark.read.schema(
+        "run_id string, n_buckets int").parquet(lin).collect()
+    assert {(r.run_id, r.n_buckets) for r in recorded} == {
+        ("half", None), ("rest", 8)}
+    again = run_pipeline(spark, src, out, lin)
+    assert (again["rows"], again["n_buckets"], again["n_buckets_from"]) == (
+        0, 8, "lineage")
+
+
+def test_crash_shaped_resumes_keep_each_key_once(spark, tmp_path,
+                                                 bucket_src, monkeypatch):
+    """Two crashes of a resume over half-done output, each followed by a
+    plain rerun with no count: (a) the output is committed but the
+    lineage append never happens; (b) a task raises inside the write
+    job. Each rerun leaves every input key in the output exactly once,
+    and the lineage counts every row once."""
+    from anytomd_spark import pipeline, table_io
+
+    src, half = bucket_src
+    victim = src.select("conv_id").orderBy("conv_id").first().conv_id
+
+    def lost_append(*_):
+        raise OSError("lineage append lost")
+
+    real_ordered = pipeline.ordered_output
+
+    def raising_ordered(*args, **kwargs):
+        return real_ordered(*args, **kwargs).withColumn(
+            "markdown",
+            F.when(F.col("conv_id") == victim, F.raise_error(F.lit("boom")))
+            .otherwise(F.col("markdown")),
+        )
+
+    for name, target, fake in (
+        ("append", table_io, ("append_lineage", lost_append)),
+        ("task", pipeline, ("ordered_output", raising_ordered)),
+    ):
+        out, lin = str(tmp_path / name / "out"), str(tmp_path / name / "lin")
+        run_pipeline(spark, half, out, lin, run_id="half", n_buckets=8)
+        with monkeypatch.context() as m:
+            m.setattr(target, *fake)
+            with pytest.raises(Exception):
+                run_pipeline(spark, src, out, lin, run_id="crash")
+        if name == "append":  # the crashed run's rows are committed
+            assert spark.read.parquet(out).count() == src.count()
+        rerun = run_pipeline(spark, src, out, lin, run_id="rerun")
+        assert rerun["n_buckets"] == 8, name
+        _assert_each_key_once(spark, src, out, lin)
