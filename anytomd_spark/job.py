@@ -29,9 +29,12 @@ anything is written). A first run with no ``--buckets`` takes one bucket
 per ``pipeline.BUCKET_INPUT_BYTES`` (4 MiB) of input, 1 to 4,096, or 64
 when the input's size is unknown. Each bucket is one output file and
 costs about 10 ms of CPU a pass whatever its size; post-kernel
-parallelism is ``min(n_buckets, spark.sql.shuffle.partitions)``. The
-printed JSON line reports ``n_buckets`` and ``n_buckets_from``
-(``explicit``, ``lineage`` or ``input_bytes``).
+parallelism is ``min(n_buckets, spark.sql.shuffle.partitions)``. That
+the rule's count costs no wall time against 64 buckets was measured at
+local[4] only; at cluster parallelism it is unverified. A
+``--no-resume`` rerun with no ``--buckets`` also runs at the recorded
+count. The printed JSON line reports ``n_buckets`` and
+``n_buckets_from`` (``explicit``, ``lineage`` or ``input_bytes``).
 """
 
 from __future__ import annotations

@@ -32,10 +32,14 @@ local[32]):
     system forks one per file or directory it creates when libhadoop is
     not loaded; a warm pass makes ~6.6 new pids a bucket). Too few
     buckets cost wall time instead, since the post-kernel sort and write
-    run one task per bucket. Warm passes on a 4-core VM, CPU s / wall s,
-    median of 4: 40k turns (7.8 MB) 2.25 / 1.13 at 1 bucket, 2.32 / 0.95
-    at 2, 2.42 / 0.95 at 4, 3.17 / 1.19 at 64; 200k turns (38.4 MB) 9.79
-    / 4.26 at 1, 9.56 / 2.77 at 8, 9.54 / 2.84 at 10, 10.57 / 3.17 at 64.
+    run one task per bucket. Warm passes on a 4-core VM (local[4]), CPU s
+    / wall s, median of 4: 40k turns (7.8 MB) 2.25 / 1.13 at 1 bucket,
+    2.32 / 0.95 at 2, 2.42 / 0.95 at 4, 3.17 / 1.19 at 64; 200k turns
+    (38.4 MB) 9.79 / 4.26 at 1, 9.56 / 2.77 at 8, 9.54 / 2.84 at 10,
+    10.57 / 3.17 at 64. The wall-time side was measured only at local[4]:
+    on a cluster with many more cores, an input of tens of MB gets a
+    handful of post-kernel tasks, and whether that costs wall time there
+    is unmeasured.
   * The one post-kernel payload shuffle is keyed on ``bucket`` (a pure
     function of conv_id, so the per-conversation window is unchanged):
     its sort ``(bucket, conv_id, turn_idx)`` is the partitioned write's
@@ -423,28 +427,16 @@ BUCKET_INPUT_BYTES = 4 << 20
 MAX_BUCKETS = 4096
 UNSIZED_BUCKETS = 64
 
-# plan leaves whose size estimate is the bytes of the files or table they
-# read. Others estimate from rows (a pandas- or list-built LocalRelation:
-# 20 bytes a string whatever its length, a Range) or not at all
-# (LogicalRDD: Long.MaxValue)
-_SIZED_LEAVES = frozenset({
-    "LogicalRelation", "HiveTableRelation",
-    "DataSourceV2Relation", "DataSourceV2ScanRelation",
-})
-
 
 def input_bucket_count(df: DataFrame) -> int:
     """``ceil(input bytes / BUCKET_INPUT_BYTES)`` in ``1..MAX_BUCKETS``,
     from the optimized plan's size estimate: for a parquet read, the file
     bytes Spark listed when it built the relation; for a catalog table,
-    its own estimate. No Spark job. ``UNSIZED_BUCKETS`` when a leaf of
-    the plan is not a file or table read."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    leaves = plan.collectLeaves()
-    if any(leaves.apply(i).getClass().getSimpleName() not in _SIZED_LEAVES
-           for i in range(leaves.size())):
-        return UNSIZED_BUCKETS
-    size = int(plan.stats().sizeInBytes())
+    its own estimate. No Spark job. ``UNSIZED_BUCKETS`` when the size is
+    unknown (Long.MaxValue: a DataFrame built from an RDD). Spark sizes a
+    DataFrame built on the driver (pandas, a list) from its rows, so such
+    an input gets few buckets; pass a count for it."""
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     if size >= 2**63 - 1:  # Spark's unknown size
         return UNSIZED_BUCKETS
     return min(MAX_BUCKETS, max(1, -(-size // BUCKET_INPUT_BYTES)))
@@ -588,13 +580,19 @@ def run_pipeline(
 
     ``n_buckets`` is recorded in every lineage row too (the column holds
     a value of the lineage, not a table property, on both backends). A
-    resume adopts the recorded count when ``n_buckets`` is None and
-    raises before writing anything when it differs
-    (``resolve_bucket_count`` has the cases); a first run with None takes
-    ``input_bucket_count``, one bucket per ``BUCKET_INPUT_BYTES`` of
-    input (the module docstring has the measured trade-off). The result
-    reports the count and where it came from (``n_buckets_from``:
-    ``explicit``, ``lineage`` or ``input_bytes``).
+    run with ``n_buckets`` None adopts the recorded count, with or
+    without ``resume`` (a rerun at another count would leave the old
+    count's bucket directories, holding the same keys, beside the new
+    ones); a resume raises before writing anything when ``n_buckets``
+    differs from it (``resolve_bucket_count`` has the cases). A first
+    run with None takes ``input_bucket_count``, one bucket per
+    ``BUCKET_INPUT_BYTES`` of input (the module docstring has the
+    trade-off, measured at local[4] only). An explicit count with
+    ``resume=False`` reads nothing from the sidecar. The result reports
+    the count and where it came from (``n_buckets_from``: ``explicit``,
+    ``lineage`` or ``input_bytes``). An Iceberg lineage table created
+    before a ``LINEAGE_SCHEMA`` column existed gains it before anything
+    is written (``table_io.upgrade_lineage``).
 
     I/O budget (the 100 TB design constraint): ONE read of the input
     (the conversion+write job — run/failure counts ride on it as an
@@ -631,12 +629,15 @@ def run_pipeline(
     # an absent sidecar is a first run; any other failure to read it
     # (corrupt file, permissions, catalog outage) raises rather than
     # silently reconverting every bucket
-    if resume and table_io.lineage_exists(spark, lineage_path, storage):
-        done = table_io.done_buckets(spark, lineage_path, storage)
+    if table_io.lineage_exists(spark, lineage_path, storage):
+        table_io.upgrade_lineage(spark, lineage_path, storage)
+        if resume or n_buckets is None:
+            done = table_io.done_buckets(spark, lineage_path, storage)
     n_buckets, n_buckets_from = resolve_bucket_count(
         n_buckets, {n for _, n in done}, transcripts
     )
-    done_buckets = {b for b, _ in done}
+    # resume=False read the sidecar for its count only
+    done_buckets = {b for b, _ in done} if resume else set()
     df = bucketed(transcripts, n_buckets)
     no_work = {"run_id": run_id, "rows": 0, "failures": 0, "buckets": 0,
                "storage": storage, "n_buckets": n_buckets,

@@ -8,8 +8,10 @@ parquet shim with IDENTICAL semantics at the API surface:
     (Iceberg ``overwritePartitions()`` <-> parquet dynamic partition
     overwrite)
   * lineage: append-only sidecar (Iceberg ``append()`` <-> parquet
-    append mode), read with ``pipeline.LINEAGE_SCHEMA``'s columns; the
-    resume probe (``done_buckets``) is one Spark job
+    append mode), read with ``pipeline.LINEAGE_SCHEMA``'s columns (an
+    Iceberg table gains missing ones by ``ALTER TABLE``:
+    ``upgrade_lineage``); the resume probe (``done_buckets``) is one
+    Spark job
   * reads: ``spark.read.table`` for Iceberg identifiers, with optional
     snapshot pinning; ``spark.read.parquet`` for the shim. The lineage
     re-read (``read_buckets``) reads only the buckets a run wrote: a
@@ -162,21 +164,39 @@ def lineage_exists(spark: SparkSession, target: str, storage: str) -> bool:
     return bool(fs.exists(path))
 
 
+def upgrade_lineage(spark: SparkSession, target: str, storage: str) -> None:
+    """Add to an existing Iceberg lineage table the ``LINEAGE_SCHEMA``
+    columns it lacks (``n_buckets``, on a table created before it), so
+    the run's ``append()`` does not fail after its output is committed.
+    Its old rows read the new columns as null. Parquet needs nothing:
+    each append writes its own files, and ``read_lineage`` reads them all
+    with ``LINEAGE_SCHEMA``."""
+    from anytomd_spark.pipeline import LINEAGE_SCHEMA
+
+    if storage != "iceberg":
+        return
+    have = set(spark.read.table(target).columns)
+    missing = [
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in StructType.fromDDL(LINEAGE_SCHEMA).fields
+        if f.name not in have
+    ]
+    if missing:
+        spark.sql(f"ALTER TABLE {target} ADD COLUMNS ({', '.join(missing)})")
+
+
 def read_lineage(spark: SparkSession, target: str, storage: str) -> DataFrame:
     """The lineage sidecar with ``pipeline.LINEAGE_SCHEMA``'s columns.
 
     Parquet reads with that schema rather than inferring one from a
     footer (no inference job), so files written before a column existed
-    read it as null. An Iceberg table written before ``n_buckets``
-    existed reads it as null too.
+    read it as null. An Iceberg table has them once ``upgrade_lineage``
+    has run.
     """
     from anytomd_spark.pipeline import LINEAGE_SCHEMA
 
     if storage == "iceberg":
-        df = spark.read.table(target)
-        if "n_buckets" not in df.columns:
-            df = df.withColumn("n_buckets", F.lit(None).cast("int"))
-        return df
+        return spark.read.table(target)
     return spark.read.schema(LINEAGE_SCHEMA).parquet(target)
 
 
@@ -184,13 +204,20 @@ def done_buckets(
     spark: SparkSession, target: str, storage: str
 ) -> set[tuple[int, int | None]]:
     """The distinct ``(bucket, n_buckets)`` pairs of the sidecar's done
-    rows: the resume probe, one Spark job. The sidecar holds at most one
-    row per bucket per run, so the driver deduplicates; a ``distinct()``
-    would add a shuffle stage that adaptive execution runs as a job of
-    its own."""
-    return {
-        (r.bucket, r.n_buckets)
-        for r in read_lineage(spark, target, storage)
+    rows: the resume probe, one Spark job. The sidecar gains a row per
+    written bucket per run, so the probe moves O(lineage rows) to the
+    driver, as two Arrow columns deduplicated there: over 409,600 rows
+    (100 runs at 4,096 buckets, local[4]) 0.13-0.22 s wall, against
+    1.1-1.3 s of driver CPU for ``collect()``'s Row objects and
+    0.18-0.67 s for a ``distinct()``, whose shuffle stage adaptive
+    execution runs as a second job."""
+    pairs = (
+        read_lineage(spark, target, storage)
         .filter(F.col("status") == "done")
-        .select("bucket", "n_buckets").collect()
-    }
+        .select("bucket", "n_buckets")
+        .toArrow()
+        .group_by(["bucket", "n_buckets"])
+        .aggregate([])
+    )
+    return set(zip(pairs.column("bucket").to_pylist(),
+                   pairs.column("n_buckets").to_pylist()))

@@ -1014,10 +1014,8 @@ def test_resolve_bucket_count_cases():
 def test_input_bucket_count_follows_file_bytes(spark, tmp_path, monkeypatch):
     """On a parquet input the count is ceil(file bytes /
     BUCKET_INPUT_BYTES), capped at MAX_BUCKETS, read from the plan with
-    no Spark job. An input whose plan does not read files (pandas, a
-    Python list, a range) gets UNSIZED_BUCKETS."""
-    import pandas as pd
-
+    no Spark job. An input of unknown size (built from an RDD, alone or
+    in a union) gets UNSIZED_BUCKETS."""
     from anytomd_spark import pipeline
 
     inp = tmp_path / "in"
@@ -1036,14 +1034,8 @@ def test_input_bucket_count_follows_file_bytes(spark, tmp_path, monkeypatch):
         assert got == min(pipeline.MAX_BUCKETS, -(-size // per_bucket))
     assert got == pipeline.MAX_BUCKETS == 4096
 
-    pdf = src.toPandas()
-    for unsized in (
-        spark.createDataFrame(pdf),
-        spark.createDataFrame(pd.DataFrame({"conv_id": ["a"]})),
-        spark.createDataFrame([("a", 0)], "conv_id string, turn_idx int"),
-        generate_transcripts(spark, n_convs=2, seed=7, mega_every=0),
-        src.unionByName(spark.createDataFrame(pdf, src.schema)),
-    ):
+    from_rdd = spark.createDataFrame(src.rdd, src.schema)
+    for unsized in (from_rdd, src.unionByName(from_rdd)):
         assert pipeline.input_bucket_count(unsized) == 64
 
 
@@ -1188,3 +1180,93 @@ def test_crash_shaped_resumes_keep_each_key_once(spark, tmp_path,
         rerun = run_pipeline(spark, src, out, lin, run_id="rerun")
         assert rerun["n_buckets"] == 8, name
         _assert_each_key_once(spark, src, out, lin)
+
+
+def test_no_resume_rerun_adopts_the_recorded_count(spark, tmp_path,
+                                                   bucket_src, monkeypatch):
+    """resume=False with no count, into an output and lineage written at
+    the size rule's count, over an input the rule sizes differently (a
+    larger one, then a smaller one): the rerun adopts the recorded count,
+    so it overwrites the same bucket directories and each key is in the
+    output exactly once. At the rule's own count, the smaller input would
+    leave the first count's other directories beside the new ones,
+    holding keys the new buckets hold too."""
+    from anytomd_spark import pipeline
+
+    src, half = bucket_src
+    small = tmp_path / "small"
+    half.write.parquet(str(small))
+    small_df = spark.read.parquet(str(small))
+    size = sum(p.stat().st_size for p in small.glob("*.parquet"))
+    monkeypatch.setattr(pipeline, "BUCKET_INPUT_BYTES", size // 2 + 1)
+    assert pipeline.input_bucket_count(small_df) == 2
+    assert pipeline.input_bucket_count(src) > 2
+
+    for name, first, second in (("grow", small_df, src),
+                                ("shrink", src, small_df)):
+        out, lin = str(tmp_path / name / "out"), str(tmp_path / name / "lin")
+        ran = run_pipeline(spark, first, out, lin, run_id="first")
+        assert ran["n_buckets_from"] == "input_bytes", name
+        again = run_pipeline(spark, second, out, lin, run_id="again",
+                             resume=False)
+        assert (again["n_buckets"], again["n_buckets_from"]) == (
+            ran["n_buckets"], "lineage"), name
+        assert again["rows"] == second.count(), name
+        # the rerun's buckets hold its own keys; the others keep the
+        # first run's
+        n = ran["n_buckets"]
+        keyed = {r.bucket: r for r in bucketed(second, n)
+                 .select("bucket").distinct().collect()}
+        want = set(second.select("conv_id", "turn_idx").collect()) | set(
+            bucketed(first, n).filter(~F.col("bucket").isin(list(keyed)))
+            .select("conv_id", "turn_idx").collect())
+        got = spark.read.parquet(out).select("conv_id", "turn_idx").collect()
+        assert len(got) == len(set(got)), name
+        assert set(got) == want, name
+        recorded = spark.read.parquet(lin).select("n_buckets").distinct()
+        assert [r.n_buckets for r in recorded.collect()] == [
+            ran["n_buckets"]], name
+
+
+def test_iceberg_lineage_gains_the_count_column_before_the_write(
+    spark, tmp_path, monkeypatch
+):
+    """A lineage table created before n_buckets existed gains the column
+    by ALTER TABLE (run here on a session-catalog table, the offline
+    stand-in for an Iceberg identifier); its old rows read it as null,
+    and a second upgrade changes nothing. run_pipeline upgrades before
+    it writes any output."""
+    from anytomd_spark import table_io
+    from anytomd_spark.pipeline import LINEAGE_SCHEMA
+
+    old = LINEAGE_SCHEMA.replace(" n_buckets int,", "")
+    assert old != LINEAGE_SCHEMA
+    spark.createDataFrame(
+        [(0, 1, 1, 1, 0, 0, {"html": 1}, "old", "done", 0.0, "parquet")], old
+    ).write.saveAsTable("lineage_before_count")
+    try:
+        for _ in range(2):
+            table_io.upgrade_lineage(spark, "lineage_before_count", "iceberg")
+            lineage = table_io.read_lineage(
+                spark, "lineage_before_count", "iceberg")
+            assert sorted(lineage.columns) == sorted(
+                spark.createDataFrame([], LINEAGE_SCHEMA).columns)
+            assert table_io.done_buckets(
+                spark, "lineage_before_count", "iceberg") == {(0, None)}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS lineage_before_count")
+
+    calls: list = []
+    for fn in ("upgrade_lineage", "write_output"):
+        real = getattr(table_io, fn)
+        monkeypatch.setattr(
+            table_io, fn,
+            lambda *a, _fn=fn, _real=real: (calls.append(_fn), _real(*a))[1])
+    df = generate_transcripts(spark, n_convs=4, seed=5, mega_every=0,
+                              partitions=1)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lin")
+    run_pipeline(spark, df, out, lin, n_buckets=2)
+    assert calls == ["write_output"]
+    calls.clear()
+    run_pipeline(spark, df, out, lin, n_buckets=2, resume=False)
+    assert calls == ["upgrade_lineage", "write_output"]
