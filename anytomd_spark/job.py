@@ -15,8 +15,8 @@ JIT mode: ``build_session`` makes the driver JVM C1-only
 (``pipeline.DRIVER_JAVA_OPTIONS``), which ``python -m anytomd_spark.job``
 gets on its own because that call starts the JVM. Under spark-submit the
 driver JVM already exists when ``build_session`` runs, so the default
-cannot apply; pass ``--driver-java-options "-XX:TieredStopAtLevel=1"``
-to get the same mode.
+cannot apply; pass ``--driver-java-options "-XX:TieredStopAtLevel=1
+-XX:ReservedCodeCacheSize=240m"`` to get the same mode.
 
 Reads the transcripts table (parquet; an Iceberg table resolves through
 ``spark.read.table`` when a catalog is configured — pass --table instead
@@ -59,7 +59,11 @@ def main(argv: list[str] | None = None) -> int:
                     help="output/lineage bucket count (resume granularity); "
                          "default: the count the lineage records, else one "
                          "bucket per 4 MiB of input, 1 to 4096")
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="pin the --salted shuffle to this many partitions "
+                         "(Python tasks); default: AQE sizes it by shuffle "
+                         "bytes, about one partition per core and none "
+                         "below 1 MiB. Ignored without --salted")
     ap.add_argument("--salted", action="store_true",
                     help="salted repartition before the kernel (use when "
                          "the source layout is conversation-clustered)")

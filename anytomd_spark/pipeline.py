@@ -18,6 +18,19 @@ local[32]):
     shuffle: the kernel is per-row, so rows of one conversation do not need
     to be co-located for conversion — only the final per-conversation
     ordering needs a shuffle, and that one is handled by the window sort.
+  * The salted shuffle is sized by bytes, not by
+    ``spark.sql.shuffle.partitions``: with no ``partitions`` it has no
+    fixed count, so AQE coalesces neighbouring partitions up to
+    ``min(64 MiB, shuffle bytes / defaultParallelism)`` each, never
+    below 1 MiB (Spark's defaults). A caller's ``partitions``
+    (``job.py --partitions``, ``bench.py``'s ``CPUS * 2``) pins it. Every
+    Python task has a fixed cost whatever its rows. On a 4-core VM, a
+    reused worker spent a median 31 ms of CPU between the end of one
+    conversion task and the start of the next. An identity
+    ``mapInPandas`` over 6k web turns cost 1.0-1.3 CPU-s in the workers
+    at 32 partitions and 0.14-0.32 at 4. A warm salted 6k-turn web pass
+    ran 32 conversion tasks at ``spark.sql.shuffle.partitions`` and runs
+    4 sized by bytes: worker CPU 1.45 -> 0.48 CPU-s, wall 1.16 -> 0.89 s.
   * Resume is bucket-granular: output is written partitioned by
     ``bucket = pmod(xxhash64(conv_id), n_buckets)`` with dynamic partition
     overwrite, so a re-run overwrites exactly the buckets it recomputes.
@@ -91,8 +104,11 @@ from anytomd_spark.batch import OUTPUT_SPARK_SCHEMA, convert_batch
 ARROW_BATCH_ROWS = 4096
 
 # JVM options of the driver, which in local mode is also the executor
-# (spark.driver.extraJavaOptions; extra_conf may override): C1 only
-DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
+# (spark.driver.extraJavaOptions; extra_conf may override): C1 only, with
+# the code cache C2's tiers would get (a C1-only JVM reserves 48 MB, and
+# a 34-pass session filled it: "CodeCache is full. Compiler has been
+# disabled.")
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 
 
 def driver_memory(meminfo: str = "/proc/meminfo") -> str | None:
@@ -276,17 +292,27 @@ def convert_transcripts(
     skew that AQE's row-count heuristics can miss. The per-conversation
     output ordering is ``ordered_output``'s job regardless (in
     ``run_pipeline`` its shuffle is keyed on ``bucket``).
+
+    With ``partitions`` None the salted shuffle has no fixed count, and
+    AQE's coalescing sizes the conversion stage by shuffle bytes: about
+    ``defaultParallelism`` tasks, fewer when that would make them
+    smaller than 1 MiB (``session_conf`` turns the coalescing on). It
+    merges neighbouring hash partitions, so a conversation's salt
+    values still reach several tasks once its bytes exceed a partition.
+    Each Python task costs a fixed amount of worker CPU whatever its
+    rows (module docstring), so fewer, larger tasks are cheaper. An
+    explicit ``partitions`` pins the count exactly (``job.py
+    --partitions``).
     """
     out = df
     if repartition:
-        n = partitions or df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions"
-        )
-        out = df.repartition(
-            int(n),
+        salt = (
             F.xxhash64("conv_id"),
             F.pmod(F.col("turn_idx"), F.lit(SALT_BUCKETS)),
         )
+        # no count: AQE may coalesce the shuffle; a count pins it
+        out = (df.repartition(*salt) if partitions is None
+               else df.repartition(partitions, *salt))
     # passthrough columns survive the kernel: output schema = input + outputs
     schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields

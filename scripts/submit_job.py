@@ -14,9 +14,9 @@ is importable from the zip on both the driver and the executors:
 
 The driver JVM already exists when the job calls ``build_session``, so
 its C1-only default (``pipeline.DRIVER_JAVA_OPTIONS``) cannot apply
-here; add ``--driver-java-options "-XX:TieredStopAtLevel=1"`` to the
-command for the same JIT mode (``python -m anytomd_spark.job`` gets it
-on its own).
+here; add ``--driver-java-options "-XX:TieredStopAtLevel=1
+-XX:ReservedCodeCacheSize=240m"`` to the command for the same JIT mode
+(``python -m anytomd_spark.job`` gets it on its own).
 
 On a real cluster replace ``--master`` with the cluster manager and size
 ``--num-executors`` / ``--executor-cores`` as usual; everything the job

@@ -194,6 +194,65 @@ class TestFastTokenizerDifferential:
             data = f.read()
         assert convert_html(data, fast=True) == convert_html(data, fast=False)
 
+    # a whole page built here, so the differential above also runs where
+    # the reference fixtures are absent: head/title, tables, nested lists,
+    # links, images and named, decimal and hex character references
+    _DOCUMENT = """<!DOCTYPE html>
+<html lang="en">
+<head>
+  <meta charset="utf-8">
+  <title>Quarterly report &mdash; caf&eacute; &amp; bar</title>
+  <style>p { color: red; }</style>
+  <script>var x = "<p>not markup</p>";</script>
+</head>
+<body>
+  <h1>Results for Q&#51; &#x2014; &quot;final&quot;</h1>
+  <p>Revenue rose <strong>12&nbsp;%</strong> over <em>Q2</em>;
+     see the <a href="https://example.com/report?id=7&amp;v=2"
+     title="Full &lt;report&gt;">full report</a>.</p>
+  <img src="chart.png" alt="Revenue chart &copy; 2024">
+  <table>
+    <thead><tr><th>Region</th><th>Sales &euro;</th><th>Note</th></tr></thead>
+    <tbody>
+      <tr><td>North</td><td>1&#44;200</td><td><a href="/n">details</a></td></tr>
+      <tr><td>S&uuml;d</td><td>980</td><td>a | b</td></tr>
+      <tr><td colspan="2">Total</td><td>2&#x2C;180</td></tr>
+    </tbody>
+  </table>
+  <ul>
+    <li>First &lt;item&gt;</li>
+    <li>Second with <code>x &gt; y</code>
+      <ol><li>nested one</li><li>nested &#8220;two&#8221;</li></ol>
+    </li>
+  </ul>
+  <blockquote><p>Quoted &hellip; text</p></blockquote>
+  <pre>line 1
+  line &lt;2&gt;</pre>
+  <h2>Links</h2>
+  <p><a href="mailto:a@example.com">mail</a> &middot;
+     <img src="logo.svg" alt=""> <a href="#top">top &uarr;</a></p>
+</body>
+</html>
+"""
+
+    def test_built_document_equivalence(self):
+        from anytomd_spark.kernels._html_native import (
+            _get_lib,
+            convert_html_native,
+        )
+
+        data = self._DOCUMENT.encode("utf-8")
+        fast = convert_html(data, fast=True)
+        assert fast == convert_html(data, fast=False)
+        # the native walker took the page: the check above compared two
+        # tiers, not the stdlib walk with itself
+        if _get_lib() is not None:
+            assert convert_html_native(data) is not None
+        assert fast["title"] == "Quarterly report — café & bar"
+        for part in ("| Region |", "Süd", "nested “two”",
+                     "[full report](", "![Revenue chart © 2024]("):
+            assert part in fast["markdown"], part
+
     @given(st.text(max_size=200))
     @settings(max_examples=150 * _FUZZ_MULT, deadline=2000)
     def test_fast_never_panics(self, s):

@@ -4,6 +4,7 @@ determinism. Runs on local[2] to keep CI fast."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime
 import os
 
@@ -93,6 +94,22 @@ def test_driver_jvm_runs_c1_only(spark):
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
     assert hotspot.getVMOption("TieredStopAtLevel").getValue() == "1"
+
+
+def test_driver_jvm_code_cache_is_240_mib(spark):
+    """A C1-only JVM reserves a 48 MiB code cache by default, which a
+    long session can fill ("CodeCache is full. Compiler has been
+    disabled."): the driver option reserves 240 MiB, and the running
+    JVM's code-cache pools add up to it."""
+    from anytomd_spark import pipeline
+
+    assert "-XX:ReservedCodeCacheSize=240m" in (
+        pipeline.DRIVER_JAVA_OPTIONS.split())
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    code = [p for p in mf.getMemoryPoolMXBeans()
+            if p.getName() == "CodeCache" or p.getName().startswith("CodeHeap")]
+    assert code
+    assert sum(p.getUsage().getMax() for p in code) == 240 << 20
 
 
 def test_fixture_conversation_golden_equality(spark):
@@ -693,20 +710,119 @@ def test_verify_against_expected(spark):
 
 def test_salted_equals_unsalted_on_skewed_input(spark):
     """Mega-conversation skew: the salted repartition path must produce
-    exactly the same converted rows as the shuffle-free path."""
+    exactly the same converted rows as the shuffle-free path, at a pinned
+    count and at the count AQE picks."""
     df = generate_transcripts(
         spark, n_convs=12, seed=13, mega_every=6, mega_size=120, partitions=3
     )
     plain = convert_transcripts(df, repartition=False)
-    salted = convert_transcripts(df, partitions=4, repartition=True)
     key = lambda r: (r.conv_id, r.turn_idx)  # noqa: E731
     rows_a = sorted(plain.collect(), key=key)
-    rows_b = sorted(salted.collect(), key=key)
-    assert rows_a == rows_b
+    for partitions in (4, None):
+        salted = convert_transcripts(
+            df, partitions=partitions, repartition=True
+        )
+        assert sorted(salted.collect(), key=key) == rows_a, partitions
     # skew actually present: one conversation dominates
     sizes = {r.conv_id: r.n for r in df.groupBy("conv_id").count()
              .withColumnRenamed("count", "n").collect()}
     assert max(sizes.values()) >= 100
+
+
+@contextlib.contextmanager
+def _sql_conf(spark, conf: dict):
+    """Set runtime SQL settings for the block; restore them after."""
+    before = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _task_ids(df, *cols):
+    """(spark_partition_id, *cols) of every row of ``df``: the tasks of
+    the stage that produced it."""
+    return df.select(F.spark_partition_id().alias("_task"), *cols).collect()
+
+
+def test_salted_shuffle_count_is_aqes_unless_pinned(spark):
+    """With no ``partitions`` the salted shuffle has no fixed count, so
+    AQE coalesces it by bytes: a small input converts in at most
+    ``defaultParallelism`` tasks, not ``spark.sql.shuffle.partitions``
+    (4 here, 32 in ``build_session``). An explicit count is kept
+    exactly."""
+    sc = spark.sparkContext
+    shuffle_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert shuffle_partitions > sc.defaultParallelism
+    df = generate_transcripts(
+        spark, n_convs=12, seed=13, mega_every=6, mega_size=120, partitions=3
+    )
+    sized = {r._task for r in _task_ids(
+        convert_transcripts(df, repartition=True))}
+    assert 1 <= len(sized) <= sc.defaultParallelism
+    pinned = {r._task for r in _task_ids(
+        convert_transcripts(df, partitions=3, repartition=True))}
+    assert pinned == {0, 1, 2}
+
+
+def test_salted_mega_conversation_spans_coalesced_tasks(spark):
+    """A conversation whose payload exceeds AQE's coalescing target still
+    lands on at least two conversion tasks with ``partitions=None``: the
+    salt spreads its turns over the hash partitions, and coalescing cuts
+    neighbouring partitions by bytes, so no task inherits the whole
+    conversation. Two targets: the session's own (``max(minPartitionSize,
+    shuffle bytes / defaultParallelism)``, about half the conversation on
+    local[2]) and the 1 MiB floor alone (a quarter of it), which is the
+    target once ``defaultParallelism`` is large, as on a cluster."""
+    import base64
+
+    import numpy as np
+    import pandas as pd
+
+    n_turns, turn_bytes = 64, 64 << 10
+    rng = np.random.default_rng(5)
+    # random base64, a plain-text tool result: the shuffle's lz4 cannot
+    # shrink it below the target
+    mega = pd.DataFrame({
+        "conv_id": "mega",
+        "turn_idx": np.arange(n_turns, dtype="int32"),
+        "role": "tool",
+        "text": [base64.b64encode(rng.bytes(turn_bytes * 3 // 4)).decode()
+                 for _ in range(n_turns)],
+        "tool": "txt",
+        "ts": pd.Timestamp("2024-01-01"),
+    })
+    df = spark.createDataFrame(mega, schema=TRANSCRIPTS_SCHEMA).unionByName(
+        generate_transcripts(spark, n_convs=6, seed=3, mega_every=0,
+                             partitions=1)
+    )
+    payload = n_turns * turn_bytes
+    floor = 1 << 20  # spark.sql.adaptive.coalescePartitions.minPartitionSize
+    total = df.agg(F.sum(F.length("text"))).collect()[0][0]
+    target = max(floor, total / spark.sparkContext.defaultParallelism)
+    assert payload > 1.5 * target and payload / total > 0.9
+
+    def mega_tasks():
+        rows = _task_ids(convert_transcripts(df, repartition=True),
+                         "conv_id", "error")
+        assert sum(r.conv_id == "mega" for r in rows) == n_turns
+        assert all(r.error is None for r in rows)
+        return {r._task for r in rows if r.conv_id == "mega"}
+
+    # build_session's shuffle width, so the salt has 32 partitions to use
+    with _sql_conf(spark, {"spark.sql.shuffle.partitions": "32"}):
+        assert len(mega_tasks()) >= 2
+        with _sql_conf(spark, {
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(floor),
+        }):
+            assert len(mega_tasks()) >= 3
 
 
 def test_ordered_output_mega_conversation_two_level(spark):
