@@ -59,6 +59,15 @@ local[32]):
     required ordering, so each bucket is written by one task into one
     file with no second sort. Post-kernel parallelism is therefore at
     most ``min(n_buckets, spark.sql.shuffle.partitions)``.
+  * The ordering's skew check is a metadata bound first and a Spark job
+    only when the bound declines (``ordered_output``): an input whose
+    parquet footers hold fewer rows than ``seq_bucket`` (2^20) cannot
+    hold a conversation that reaches it, so no probe runs. On a 4-core
+    VM a warm pass over a 16-file input of 40k turns (unsalted) or 6k
+    turns (salted) launches 5 Spark jobs instead of 8, or 6 instead of
+    9; the bound took a median 11-12 ms over 20 warm calls on either
+    input, and perfbench's warm-pass ``cpu_s`` fell 10% salted (lower
+    in 9 of 10 interleaved pairs) and 4% unsalted (7 of 10).
   * The driver JVM runs on the C1 JIT tier only (``DRIVER_JAVA_OPTIONS``
     = ``-XX:TieredStopAtLevel=1``). In local mode every task runs in that
     JVM, and a batch run lives for a few passes. CPU seconds on a 4-core
@@ -330,6 +339,90 @@ def convert_transcripts(
     )
 
 
+# files input_row_bound reads footers of at most; an input of more files
+# runs the skew probe's Spark job instead. On a 4-core VM, local files:
+# the bound over 1,024 files took 0.14-0.18 s (py4j's per-file list
+# included), less than the probe's 0.21-0.34 s over 16 files of the same
+# 40k rows and its 1.5-2.1 s over the 1,024
+ROW_BOUND_MAX_FILES = 1024
+
+# URI schemes whose footers input_row_bound reads on the driver: a local
+# file costs one open and one read. An object store or HDFS client built
+# on the driver would not share Hadoop's credentials and settings, and
+# its credential or region lookups can stall; those inputs run the probe
+FOOTER_SCHEMES = ("file",)
+
+
+def input_row_bound(df: DataFrame, stop_at: int | None = None) -> int | None:
+    """An upper bound on ``df``'s rows, from metadata: no Spark job.
+
+    Spark's own ``maxRows`` of the optimized plan when it is defined (a
+    local relation, ``range``, a limit, a union of those). Otherwise,
+    when the plan is only ``Project``/``Filter`` nodes over one parquet
+    file relation, the sum of the footers' ``num_rows`` over the files
+    Spark listed when it built the relation, read on the driver with
+    pyarrow; with ``stop_at``, the reading stops once the sum reaches it
+    and returns None. None too for any other plan (an RDD, an Iceberg
+    table, a partitioned catalog table, whose files Spark lists only when
+    a query runs, another file format, a join or ``explode`` above the
+    scan), a scheme outside ``FOOTER_SCHEMES``, more than
+    ``ROW_BOUND_MAX_FILES`` files, or any error (a footer that does not
+    read). On a 4-core VM a warm bound over 16 local files of 40k
+    two-column rows took 4-7 ms and the probe's 3 jobs 0.21-0.34 s wall;
+    on a busier host, 11-12 ms over perfbench's 16-file inputs."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        rows = plan.maxRows()
+        if rows.isDefined():
+            return int(rows.get())
+        files = _parquet_scan_files(plan)
+        return None if files is None else _footer_rows(files, stop_at)
+    except Exception:
+        return None
+
+
+def _parquet_scan_files(plan) -> list[str] | None:
+    """The already-listed files of the parquet relation under a chain of
+    ``Project``/``Filter`` nodes, which pass on at most their child's
+    rows; None for any other plan or past ``ROW_BOUND_MAX_FILES``."""
+    node = plan
+    while node.getClass().getSimpleName() in ("Project", "Filter"):
+        node = node.child()
+    if node.getClass().getSimpleName() != "LogicalRelation":
+        return None
+    rel = node.relation()
+    if (rel.getClass().getSimpleName() != "HadoopFsRelation"
+            or rel.fileFormat().getClass().getSimpleName()
+            != "ParquetFileFormat"
+            or rel.location().getClass().getSimpleName()
+            != "InMemoryFileIndex"):
+        return None
+    files = rel.location().inputFiles()
+    if len(files) > ROW_BOUND_MAX_FILES:
+        return None
+    return list(files)
+
+
+def _footer_rows(files: list[str], stop_at: int | None) -> int | None:
+    """The sum of the footers' ``num_rows``; None when a file's scheme
+    is not in ``FOOTER_SCHEMES`` or the sum reaches ``stop_at``."""
+    from urllib.parse import urlsplit
+
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    total = 0
+    for uri in files:
+        if urlsplit(uri).scheme not in FOOTER_SCHEMES:
+            return None
+        filesystem, path = fs.FileSystem.from_uri(uri)
+        with filesystem.open_input_file(path) as f:
+            total += pq.read_metadata(f).num_rows
+        if stop_at is not None and total >= stop_at:
+            return None
+    return total
+
+
 def ordered_output(
     converted: DataFrame,
     turns: DataFrame,
@@ -354,24 +447,32 @@ def ordered_output(
     ``turns`` must contain exactly the (conv_id, turn_idx) rows of
     ``converted`` (i.e. the kernel's input).
 
-    Before committing to the two-level plan, one aggregate over the SLIM
-    ``turns`` side (rows per conv_id, then their max) finds the largest
-    conversation; when every conversation fits in a single bucket the
-    legacy single-window path runs instead — the common
-    small-conversation case skips the composite-key join + extra
-    aggregate entirely (it paid ~+50% on the sf0.1 bench for skew safety
-    it didn't need), while any conversation ≥ ``seq_bucket`` rows keeps
-    the bounded-task guarantee. The check itself is an eager driver-side
-    scalar job on conv_id only — payloads never move — and the
-    per-(conv, bucket) counts are built only when the two-level plan is
-    taken. A small ``seq_bucket`` forces the two-level plan on small
-    inputs.
+    Before committing to the two-level plan, the largest conversation is
+    bounded; when every conversation fits in a single bucket the legacy
+    single-window path runs instead — the common small-conversation
+    case skips the composite-key join + extra aggregate entirely (it
+    paid ~+50% on the sf0.1 bench for skew safety it didn't need), while
+    any conversation ≥ ``seq_bucket`` rows keeps the bounded-task
+    guarantee. The bound is metadata first: when
+    :func:`input_row_bound` puts all of ``turns`` below ``seq_bucket``
+    rows, no conversation can reach it, and no Spark job runs. Only
+    when that bound declines does the probe run: one aggregate over the
+    SLIM ``turns`` side (rows per conv_id, then their max), an eager
+    driver-side scalar job (3 Spark jobs) on conv_id only — payloads
+    never move. Both pick the same plan whenever the metadata bound
+    applies, so the output and ``turn_seq`` do not depend on which one
+    ran. The per-(conv, bucket) counts are built only when the two-level
+    plan is taken. A small ``seq_bucket`` forces the two-level plan on
+    small inputs.
 
     When ``converted`` carries a ``bucket`` column (see
     :func:`bucketed`), the single-window path shuffles on ``bucket`` so
     the ordering is also the partitioned write's clustering (see
     :func:`_single_window`); ``turn_seq`` is the same either way.
     """
+    bound = input_row_bound(turns, stop_at=seq_bucket)
+    if bound is not None and bound < seq_bucket:
+        return _single_window(converted)
     biggest = (
         turns.groupBy("conv_id").count().agg(F.max("count")).collect()[0][0]
     )
@@ -632,7 +733,14 @@ def run_pipeline(
     names only the bucket directories this run wrote, so its listing is
     O(buckets written), runs on the driver (see ``session_conf``), and
     takes the schema just written instead of inferring it from footers:
-    no Spark job before the lineage aggregate.
+    no Spark job before the lineage aggregate. Nor does any Spark job
+    check the ordering for skew when the input's metadata bounds its
+    rows below ``seq_bucket`` (``input_row_bound``); the probe's 3 jobs
+    run only when that bound declines. A warm pass over a 16-file
+    parquet input into a fresh output runs 5 Spark jobs unsalted (2 for
+    the conversion+write, 3 for the lineage aggregate and append) and 6
+    salted, where it ran 8 and 9; a rerun over an existing sidecar adds
+    the resume probe's one.
 
     The conversion+write job shuffles the payload ONCE, keyed on
     ``bucket``; that shuffle's sort also satisfies the write, so every

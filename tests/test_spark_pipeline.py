@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime
+import itertools
 import os
 
 import pytest
@@ -981,6 +982,197 @@ def test_ordered_output_null_conv_id_not_dropped(spark):
     assert len(rows) == 3
     got = {(r.conv_id, r.turn_idx): r.turn_seq for r in rows}
     assert got[(None, 0)] == 1 and got[(None, 1)] == 2 and got[("c", 0)] == 1
+
+
+_probe_groups = itertools.count()
+
+
+def _probe_jobs(spark, turns, seq_bucket: int = 1 << 20) -> list:
+    """The Spark jobs building ``ordered_output`` over ``turns`` launches:
+    the skew probe's, or none when the metadata bound picks the plan."""
+    converted = turns.withColumn("payload", F.lit("p"))
+    _, jobs = _jobs_of(
+        spark, f"probe{next(_probe_groups)}",
+        lambda: ordered_output(converted, turns=turns, seq_bucket=seq_bucket),
+    )
+    return jobs
+
+
+@pytest.fixture(scope="module")
+def bounded_src(spark, tmp_path_factory):
+    """A 3-file parquet transcripts input with a 120-turn conversation."""
+    inp = str(tmp_path_factory.mktemp("bounded_src") / "in")
+    generate_transcripts(
+        spark, n_convs=40, seed=37, mega_every=20, mega_size=120,
+        partitions=3,
+    ).write.parquet(inp)
+    return inp
+
+
+def test_row_bound_skips_the_skew_probe(spark, tmp_path, monkeypatch,
+                                        bounded_src):
+    """A parquet input whose footers hold fewer rows than seq_bucket runs
+    no skew probe. ``input_row_bound`` itself launches no Spark job; the
+    pass launches exactly the probe's jobs fewer than the same pass with
+    the bound declining, and writes the same rows in every column
+    (``turn_seq`` included) and the same lineage rows (``ts`` and
+    ``run_id`` aside)."""
+    from anytomd_spark import pipeline
+
+    src = spark.read.parquet(bounded_src)
+    turns = src.select("conv_id", "turn_idx")
+    n = src.count()
+    bound, bound_jobs = _jobs_of(spark, "bound",
+                                 lambda: pipeline.input_row_bound(turns))
+    assert bound == n and bound_jobs == []
+    assert _probe_jobs(spark, turns) == []
+    _, probe = _jobs_of(spark, "probe_alone", lambda: turns.groupBy(
+        "conv_id").count().agg(F.max("count")).collect())
+    assert probe
+
+    def run(name):
+        source = spark.read.parquet(bounded_src)
+        return _jobs_of(spark, name, lambda: run_pipeline(
+            spark, source, str(tmp_path / name / "out"),
+            str(tmp_path / name / "lin"), run_id=name,
+        ))
+
+    bounded, bounded_jobs = run("bounded")
+    monkeypatch.setattr(pipeline, "input_row_bound", lambda *a, **k: None)
+    declined, declined_jobs = run("declined")
+    assert bounded["rows"] == declined["rows"] == n
+    assert len(declined_jobs) - len(bounded_jobs) == len(probe), (
+        declined_jobs, bounded_jobs)
+
+    def written(name):
+        out = spark.read.parquet(str(tmp_path / name / "out"))
+        assert "turn_seq" in out.columns
+        return out.dtypes, sorted(
+            (r.asDict() for r in out.collect()),
+            key=lambda d: (d["conv_id"], d["turn_idx"]))
+
+    def lineage(name):
+        lin = spark.read.parquet(str(tmp_path / name / "lin")).drop(
+            "ts", "run_id")
+        return lin.dtypes, sorted(
+            ({**r.asDict(), "fmt_hist": dict(r.fmt_hist)}
+             for r in lin.collect()),
+            key=lambda d: d["bucket"])
+
+    assert written("bounded") == written("declined")
+    assert lineage("bounded") == lineage("declined")
+
+
+def test_inputs_the_row_bound_cannot_bound_run_the_probe(
+    spark, tmp_path, monkeypatch, bounded_src
+):
+    """Every input with no metadata bound below seq_bucket still runs the
+    skew probe: an RDD, a JSON file source, a join or an ``explode``
+    above the parquet scan, a non-parquet file in the input directory,
+    files on a scheme outside FOOTER_SCHEMES, more files than
+    ROW_BOUND_MAX_FILES, and a footer sum that reaches seq_bucket."""
+    import shutil
+
+    from anytomd_spark import pipeline
+
+    src = spark.read.parquet(bounded_src)
+    turns = src.select("conv_id", "turn_idx")
+    n = src.count()
+
+    def declines(df, seq_bucket=1 << 20):
+        assert pipeline.input_row_bound(df, stop_at=seq_bucket) is None
+        assert _probe_jobs(spark, df, seq_bucket)
+
+    declines(spark.createDataFrame(
+        spark.sparkContext.parallelize([("a", 0), ("a", 1), ("b", 0)]),
+        "conv_id string, turn_idx int"))
+    json_dir = str(tmp_path / "json")
+    turns.write.json(json_dir)
+    declines(spark.read.json(json_dir).select(
+        "conv_id", F.col("turn_idx").cast("int")))
+    firsts = src.filter(F.col("turn_idx") == 0).select("conv_id")
+    declines(turns.join(firsts, "conv_id"))
+    declines(src.select(
+        "conv_id", F.explode(F.array("turn_idx")).alias("turn_idx")))
+
+    mixed = tmp_path / "mixed"
+    shutil.copytree(bounded_src, mixed)
+    (mixed / "notes.txt").write_text("not a parquet file")
+    mixed_turns = spark.read.schema(src.schema).parquet(str(mixed)).select(
+        "conv_id", "turn_idx")
+    assert any(f.endswith("notes.txt") for f in mixed_turns.inputFiles())
+    with _sql_conf(spark, {"spark.sql.files.ignoreCorruptFiles": "true"}):
+        declines(mixed_turns)
+
+    # the footer sum stops at seq_bucket, so its reads stop there too
+    import pyarrow.parquet as pq
+
+    reads: list = []
+    real_read = pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata",
+                        lambda f: (reads.append(f), real_read(f))[1])
+    assert len(src.inputFiles()) == 3
+    assert pipeline.input_row_bound(turns) == n and len(reads) == 3
+    reads.clear()
+    assert pipeline.input_row_bound(turns, stop_at=1) is None
+    assert len(reads) == 1
+    declines(turns, seq_bucket=n)
+
+    monkeypatch.setattr(pipeline, "ROW_BOUND_MAX_FILES", 2)
+    declines(turns)
+    monkeypatch.undo()
+
+    monkeypatch.setattr(
+        pipeline, "_parquet_scan_files",
+        lambda plan: ["s3a://bucket/in/part-00000.parquet"])
+    declines(turns)
+    monkeypatch.undo()
+    assert pipeline._footer_rows(["s3a://bucket/part-0.parquet"], None) is None
+    assert _probe_jobs(spark, turns) == []
+
+
+def test_parquet_input_below_the_bound_keeps_small_seq_buckets_two_level(
+    spark, bounded_src
+):
+    """A small ``seq_bucket`` still takes the two-level plan on a parquet
+    input whose row bound is below the default: the bound is compared
+    with the ``seq_bucket`` asked for, and ``turn_seq`` is unchanged."""
+    src = spark.read.parquet(bounded_src)
+    turns = src.select("conv_id", "turn_idx")
+    converted = turns.withColumn("payload", F.lit("p"))
+    legacy = ordered_output(converted, turns=turns)
+    assert "_seq_bkt" not in _plan(legacy)
+    out = ordered_output(converted, turns=turns, seq_bucket=2)
+    assert "_seq_bkt" in _plan(out)
+    seq = lambda df: {  # noqa: E731
+        (r.conv_id, r.turn_idx): r.turn_seq for r in df.collect()}
+    assert seq(out) == seq(legacy)
+
+
+def test_storage_mode_is_detected_once_per_session(spark, tmp_path,
+                                                   monkeypatch):
+    """The auto-detected storage mode is kept on the SparkContext: two
+    passes in one session look for the Iceberg runtime once. An explicit
+    request is checked on every call, as before."""
+    from anytomd_spark import table_io
+
+    calls: list = []
+    real = table_io.iceberg_available
+    monkeypatch.setattr(table_io, "iceberg_available",
+                        lambda s: (calls.append(s), real(s))[1])
+    monkeypatch.delattr(spark.sparkContext, "_anytomd_storage",
+                        raising=False)
+    df = generate_transcripts(spark, n_convs=4, seed=5, mega_every=0,
+                              partitions=1)
+    for name in ("a", "b"):
+        res = run_pipeline(spark, df, str(tmp_path / name / "out"),
+                           str(tmp_path / name / "lin"), n_buckets=2)
+        assert res["storage"] == "parquet"
+    assert len(calls) == 1
+    assert table_io.probe_storage(spark, "parquet") == "parquet"
+    with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
+        table_io.probe_storage(spark, "iceberg")
+    assert len(calls) == 2
 
 
 def test_job_spark_submit_py_files(spark, tmp_path):
